@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -158,14 +158,18 @@ object Dedup {
     * ultra-common single words stop flooding the posting lists. */
   private[operators] def shingleSet(df: DataFrame, idCol: String, normCol: String, n: Int): DataFrame = {
     require(n >= 1)
-    val toks = split(col(normCol), " ")
-    val shingles =
-      if (n == 1) array_distinct(toks)
-      else when(size(toks) >= n,
-          array_distinct(transform(sequence(lit(0), size(toks) - n),
-            i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
-        .otherwise(array(concat_ws(" ", toks)))
-    df.select(col(idCol), explode(shingles).as("t"))
+    df.select(col(idCol), explode(shingleArray(col(normCol), n)).as("t"))
+  }
+
+  /** The distinct word `n`-gram shingles of one normalized text, as an
+    * array (the short-document rule of [[shingleSet]]). */
+  private def shingleArray(norm: Column, n: Int): Column = {
+    val toks = split(norm, " ")
+    if (n == 1) array_distinct(toks)
+    else when(size(toks) >= n,
+        array_distinct(transform(sequence(lit(0), size(toks) - n),
+          i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
+      .otherwise(array(concat_ws(" ", toks)))
   }
 
   /** Exact token-set Jaccard similarity for all candidate pairs that
@@ -317,13 +321,7 @@ object Dedup {
                          minMatch: Int = 8): DataFrame = {
     require(k % 2 == 0 && k > 0)
     val P = 9007199254740881L
-    val toks = split(col(normCol), " ")
-    val shingles =
-      if (ngram == 1) array_distinct(toks)
-      else when(size(toks) >= ngram,
-          array_distinct(transform(sequence(lit(0), size(toks) - ngram),
-            i => concat_ws(" ", slice(toks, i + 1, lit(ngram))))))
-        .otherwise(array(concat_ws(" ", toks)))
+    val shingles = shingleArray(col(normCol), ngram)
     // shingle string → portable 48-bit int (md5 prefix, both engines
     // lowercase-hex); conv returns a decimal string, exact at 48 bits.
     // MATERIALIZE the int array in its own projection: the k minhash

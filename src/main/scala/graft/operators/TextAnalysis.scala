@@ -5,8 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data pipelines: normalization,
   * token statistics, quality scoring, language-ID heuristic, document
-  * fingerprinting. All pure column expressions (codegen'd, no UDFs) —
-  * they run as a single projection over the scan at any scale.
+  * fingerprinting. Every per-row operator is a column expression (no
+  * UDFs) and runs as a projection over the scan at any scale. Most are
+  * plain Catalyst; `langId`, `ngramArray`, `repetitionSignals` and the
+  * BPE merge fold use higher-order functions, which Spark interprets.
+  * The per-document token work of `qualityScore` and `chunks` runs in
+  * native kernels ([[graft.plans.TokenKernels]]), as do the BPE
+  * encoders ([[graft.plans.BpeFns]]); those need `GraftExtensions` on
+  * the session (see [[graft.plans.GraftExtensions]]).
   */
 object TextAnalysis {
 
@@ -16,19 +22,16 @@ object TextAnalysis {
 
   def tokens(norm: Column): Column = split(norm, " ")
 
-  val defaultStopwords: Seq[String] =
-    Seq("the", "a", "and", "of", "to", "is", "in", "it")
-
-  def stopwordCount(toks: Column, stops: Seq[String] = defaultStopwords): Column =
-    size(filter(toks, t => t.isInCollection(stops)))
-
   /** Deterministic [0,1] quality score from length, stopword ratio and
-    * type-token ratio — the classic cheap pre-filter for web corpora. */
+    * type-token ratio — the classic cheap pre-filter for web corpora.
+    * The counts over `tokens(norm)` come from one native pass
+    * (`graft_token_stats`, stopwords [[graft.plans.TokenKernels
+    * .DefaultStopwords]]); the arithmetic stays codegen'd Catalyst. */
   def qualityScore(norm: Column): Column = {
-    val toks  = tokens(norm)
-    val nTok  = size(toks).cast("double")
-    val nUniq = size(array_distinct(toks)).cast("double")
-    val stops = stopwordCount(toks).cast("double")
+    val stats = call_function("graft_token_stats", norm)
+    val nTok  = stats.getField("n_tok").cast("double")
+    val nUniq = stats.getField("n_uniq").cast("double")
+    val stops = stats.getField("n_stop").cast("double")
     round(least(nTok / 50.0, lit(1.0)) * 0.4 + (stops / nTok) * 0.3 + (nUniq / nTok) * 0.3, 6)
   }
 
@@ -88,19 +91,15 @@ object TextAnalysis {
 
   /** Fixed-size token chunking with overlap — the standard
     * training-data windowing (chunk i covers tokens
-    * [i·stride, i·stride+chunkLen), stride = chunkLen − overlap; the
-    * final partial chunk is kept iff it adds tokens). Pure array
-    * expressions: chunking is a per-row projection, so it scales as
-    * the scan does — no shuffle, no UDF. */
+    * [i·stride, i·stride+chunkLen) of `tokens(norm)`, stride =
+    * chunkLen − overlap; the final partial chunk is kept iff it adds
+    * tokens). One native pass per document (`graft_chunks`): each
+    * chunk is the space-joined token run, cut from the text by byte
+    * offset. A per-row projection, so it scales as the scan does — no
+    * shuffle. */
   def chunks(norm: Column, chunkLen: Int, overlap: Int): Column = {
     require(overlap >= 0 && overlap < chunkLen, "need 0 <= overlap < chunkLen")
-    val stride = chunkLen - overlap
-    val toks = tokens(norm)
-    val n = size(toks)
-    val nChunks = greatest(lit(1),
-      ceil((n.cast("double") - overlap) / stride).cast("int"))
-    transform(sequence(lit(0), nChunks - 1),
-      i => array_join(slice(toks, i * lit(stride) + 1, lit(chunkLen)), " "))
+    call_function("graft_chunks", norm, lit(chunkLen), lit(overlap))
   }
 
   /** Word n-gram array (space-joined windows); empty when the document
@@ -177,8 +176,10 @@ object TextAnalysis {
     * assignment reproducible across runs and engines, and co-locates
     * exact duplicates in one shard — dedup within a shard is then
     * global dedup. Nibbles compose: k hex chars give 16^k shards. */
-  def shardOf(text: Column): Column =
-    conv(substring(md5(normalize(text).cast("binary")), 1, 1), 16, 10).cast("int")
+  def shardOf(text: Column): Column = md5Nibble(normalize(text))
+
+  private def md5Nibble(norm: Column): Column =
+    conv(substring(md5(norm.cast("binary")), 1, 1), 16, 10).cast("int")
 
   /** Perplexity-proxy quality scoring: each document's mean unigram
     * log-probability under the corpus's own unigram LM — the cheap
@@ -316,25 +317,36 @@ object TextAnalysis {
     *
     * Shape at scale: ONE shuffle (the dedup window on the
     * fingerprint); normalization, scoring, chunking and sharding are
-    * all per-row projections fused into the surrounding stages. The
-    * shard column is the natural `repartition`/`partitionBy` key for
-    * the final write — duplicates co-locate by construction. */
+    * per-row work on either side of it. Scoring and chunking tokenize
+    * each surviving document once, in the native `graft_token_stats`
+    * and `graft_chunks` kernels (so the session needs
+    * `GraftExtensions`); normalization, the fingerprint and the shard
+    * hash are codegen'd Catalyst. A chunk of normalized text is
+    * already normalized, so its shard is the first md5 nibble of the
+    * chunk itself — the value [[shardOf]] gives for it. The shard
+    * column is the natural `repartition`/`partitionBy` key for the
+    * final write — duplicates co-locate by construction. */
   def curateChunks(docs: DataFrame, idCol: String, textCol: String,
                    minQuality: Double, chunkLen: Int, overlap: Int): DataFrame = {
     val normed = docs
       .withColumn("__norm", normalize(col(textCol)))
       .withColumn("__fp", md5(col("__norm").cast("binary")))
+      // scored in the projection, not in the filter after the dedup:
+      // the score reads the kernel's struct five times, and codegen
+      // shares that subexpression in a projection but not in a Filter
+      // (the optimizer would push a projected score into the filter)
+      .withColumn("__q", qualityScore(col("__norm")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__fp")).orderBy(col(idCol))
     val deduped = normed
       .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
     deduped
-      .where(qualityScore(col("__norm")) >= minQuality)
+      .where(col("__q") >= minQuality)
       .select(col(idCol), posexplode(chunks(col("__norm"), chunkLen, overlap)))
       .withColumnRenamed("pos", "chunk_idx")
       .withColumnRenamed("col", "chunk")
       .withColumn("n_tokens", size(split(col("chunk"), " ")))
-      .withColumn("shard", shardOf(col("chunk")))
+      .withColumn("shard", md5Nibble(col("chunk")))
   }
 
   /** BPE APPLY: tokenize `text` with the merge rules [[bpeTrain]]

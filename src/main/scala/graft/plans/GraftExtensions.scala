@@ -112,6 +112,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 2, "graft_shingle_hashes takes (text, w)")
         ShingleHashes(children.head, children(1))
       }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_token_stats"),
+      new ExpressionInfo(classOf[TokenStats].getName, "graft_token_stats"),
+      (children: Seq[Expression]) => {
+        require(children.length == 1, "graft_token_stats takes (text)")
+        TokenStats(children.head)
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_chunks"),
+      new ExpressionInfo(classOf[TokenChunks].getName, "graft_chunks"),
+      (children: Seq[Expression]) => {
+        require(children.length == 3, "graft_chunks takes (text, chunkLen, overlap)")
+        TokenChunks(children.head, children(1), children(2))
+      }))
     ChDialect.register(ext)
     // ClickHouse parametric-aggregate spelling (quantile(0.5)(x)) —
     // flattened pre-parse, resolved through the registrations above.

@@ -306,6 +306,20 @@ class DialectRound3Spec extends SparkSpec {
     val short = Seq("x y").toDF("t")
       .select(TextAnalysis.chunks($"t", 4, 1).as("c")).head().getSeq[String](0)
     assert(short == Seq("x y"))
+    // n <= overlap, n = chunkLen, and raw text: tokens are the fields
+    // of split(t, " "), so doubled/leading/trailing spaces give empty
+    // tokens and a tab is part of a token; multibyte text cuts cleanly
+    def chunksOf(t: String, len: Int, overlap: Int): Seq[String] =
+      Seq(t).toDF("t").select(TextAnalysis.chunks($"t", len, overlap)).head().getSeq[String](0)
+    assert(chunksOf("x", 4, 1) == Seq("x"))
+    assert(chunksOf("x y", 8, 7) == Seq("x y"))
+    assert(chunksOf("a b c d", 4, 1) == Seq("a b c d"))
+    assert(chunksOf("", 2, 0) == Seq(""))
+    assert(chunksOf(" a\tb  c ", 2, 0) == Seq(" a\tb", " c", ""))
+    assert(chunksOf("é 日本 🚀 x ü", 4, 1) == Seq("é 日本 🚀 x", "x ü"))
+    val nullDoc = Seq(Option.empty[String]).toDF("t")
+      .select(TextAnalysis.chunks($"t", 4, 1)).head().getSeq[String](0)
+    assert(nullDoc == Seq(null))
   }
 
   test("string/math/array long tail and numbers() table function") {
@@ -380,25 +394,52 @@ class DialectRound3Spec extends SparkSpec {
       (1L, good),              // survives
       (5L, good),              // exact dup of 1 → dropped
       (2L, "a a a a a a a a"), // degenerate TTR → low quality
-      (3L, good + " extra words here make it a different document entirely ok"))
+      (3L, good + " extra words here make it a different document entirely ok"),
+      (4L, null),              // no text → no score → filtered
+      (6L, "  The  café\tserves 日本語 tea and 🚀 cake to a crowd of the regulars  "),
+      (7L, "THE CAFÉ\tserves 日本語   tea and 🚀 cake to a crowd of the regulars"))
       .toDF("doc_id", "text")
     // quality scores: good ≈ 0.446, degenerate ≈ 0.4015 → 0.42 separates
     val out = TextAnalysis.curateChunks(docs, "doc_id", "text",
       minQuality = 0.42, chunkLen = 8, overlap = 2)
+    // the kernels and the higher-order-function pipeline agree row for row
+    val cols = Seq("doc_id", "chunk_idx", "chunk", "n_tokens", "shard")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).orderBy("doc_id", "chunk_idx").collect().toSeq
+    assert(rows(out) == rows(CurationReference.curateChunks(docs, "doc_id", "text", 0.42, 8, 2)))
+    // plan guard: no interpreted lambda anywhere, and the shard hashes
+    // the chunk as is (no re-normalizing regexp_replace over it)
+    val plan = out.queryExecution.executedPlan
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val exprs = aqe.flatMap(plan)(_.expressions)
+    assert(!exprs.exists(_.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.LambdaFunction])), plan.toString)
+    val chunkAttrs = aqe.collect(plan) {
+      case g: org.apache.spark.sql.execution.GenerateExec => g.generatorOutput
+    }.flatten.filter(_.dataType == org.apache.spark.sql.types.StringType)
+    assert(chunkAttrs.nonEmpty, plan.toString)
+    assert(!exprs.exists(_.exists {
+      case r: org.apache.spark.sql.catalyst.expressions.RegExpReplace =>
+        r.references.exists(a => chunkAttrs.exists(_.exprId == a.exprId))
+      case _ => false
+    }), plan.toString)
     val byDoc = out.groupBy("doc_id").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(byDoc.contains(1L) && !byDoc.contains(5L), "min-id dedup winner")
     assert(!byDoc.contains(2L), "low-quality doc filtered")
-    assert(byDoc.contains(3L))
+    assert(byDoc.contains(3L) && !byDoc.contains(4L))
+    assert(byDoc.contains(6L) && !byDoc.contains(7L), "dedup after normalization")
     // chunks reassemble the doc: stride tokens from each + full tail
     val chunks1 = out.where($"doc_id" === 1).orderBy("chunk_idx")
       .select("chunk").as[String].collect()
     val reassembled = (chunks1.init.map(_.split(" ").take(6).mkString(" ")) :+ chunks1.last)
       .mkString(" ")
     assert(reassembled == good.toLowerCase)
-    // identical chunk text → identical shard, always in range
+    // identical chunk text → identical shard, always in range, and the
+    // shard of a chunk is shardOf(chunk)
     val shards = out.select("shard").as[Int].collect()
     assert(shards.forall(s => s >= 0 && s < 16))
+    assert(out.where(!$"shard".eqNullSafe(TextAnalysis.shardOf($"chunk"))).isEmpty)
   }
 
   test("shardOf is deterministic and in [0, 16)") {
