@@ -14,10 +14,15 @@ import org.apache.spark.sql.functions._
   *  - applyCdc        ≈ ReplacingMergeTree + delete tombstones
   *  - scd2            ≈ slowly-changing-dimension materialization
   *
-  * Scale notes: latestByKey/applyCdc are one shuffle on the key
-  * (window partition). At 100 TB the key-partitioned window beats a
-  * self-join-on-max-version by avoiding a second shuffle; AQE handles
-  * key skew. scd2 reuses the same partitioning for both windows, so
+  * Scale notes: latestByKey/applyCdc are spelled as a `row_number() = 1`
+  * window, which [[graft.plans.TopKRewrite]] plans as an aggregate on
+  * the key: a flat codegen'd hash aggregate when every column is
+  * fixed-width (map-side partial aggregation, at most one row per key
+  * per task shuffled, nothing sorted), else the bounded-heap
+  * ObjectHashAggregate. Either way it is one shuffle on the key, where
+  * a self-join on max(version) needs two; AQE handles key skew. With
+  * the rewrite off it is a key-partitioned window that sorts its
+  * input. scd2 reuses the same partitioning for both windows, so
   * Catalyst plans a single Exchange.
   */
 object Replicate {
@@ -71,7 +76,8 @@ object Replicate {
 
   /** Latest row per key by a total version ordering (ReplacingMergeTree
     * FINAL semantics). `orderCols` must be a deterministic total order
-    * within each key (include a unique id as tiebreak). */
+    * within each key (include a unique id as tiebreak). Plans as the
+    * per-key aggregate described in the header. */
   def latestByKey(df: DataFrame, keyCols: Seq[String], orderCols: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(orderCols.map(_.desc): _*)
     df.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")

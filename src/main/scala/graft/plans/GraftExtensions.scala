@@ -134,7 +134,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectResolutionRule(session => DictGetRewrite(session))
     ext.injectOptimizerRule(session => ProjectionAutoUse(session))
     ext.injectOptimizerRule(session => SortProjectionUse(session))
-    // Filter(rn<=k, Window(row_number)) → bounded-heap top-k aggregate
+    // Filter(rn<=k, Window(row_number/rank/dense_rank)) → top-k aggregate
     ext.injectOptimizerRule(session => TopKRewrite(session))
   }
 }

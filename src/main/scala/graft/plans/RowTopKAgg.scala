@@ -4,16 +4,18 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, Expression, NullsFirst, NullsLast, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{And, Ascending, AttributeReference, BoundReference, Coalesce, CreateNamedStruct, Descending, Expression, GreaterThan, If, IsNotNull, IsNull, KnownNotNull, LessThan, Literal, Not, NullsFirst, NullsLast, Or, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{DeclarativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, StructField, StructType}
 import scala.collection.mutable
 
 /** Bounded-heap top-k ROWS per group, under an explicit multi-key sort
   * order — the aggregate kernel behind [[TopKRewrite]]'s automatic
-  * `Filter(rn <= k, Window(row_number))` → aggregate rewrite.
+  * `Filter(rn <= k, Window(row_number))` → aggregate rewrite, for k > 1
+  * and for k = 1 when [[GraftRowFirst]]'s flat buffer would not be
+  * fixed-width (a string, binary or nested sort key or payload column).
   *
   * [[GraftGroupArraySorted]] (the user-facing `groupArraySorted`)
   * orders by the VALUE's natural ascending order, which forced q16b to
@@ -24,12 +26,18 @@ import scala.collection.mutable
   * exact `SortOrder` semantics of the window spelling it replaces —
   * strings desc, NULLS LAST, anything `RowOrdering.isOrderable`.
   *
-  * Scale shape (the reason this exists): each map task keeps ≤ k rows
-  * per group, partial aggregation ships `groups × k` rows across the
-  * shuffle, the merge is heap-merge, and NOTHING is ever sorted except
-  * the k-element result arrays. Contrast the window plan, where even
-  * WindowGroupLimit's pushdown requires each task's FULL input sorted
-  * first (docs/AUDIT_q16_wgl_r17.md — the sf100 spill source).
+  * Scale shape: each map task keeps ≤ k rows per group, partial
+  * aggregation ships `groups × k` rows across the shuffle, and the
+  * merge is heap-merge. It plans as ObjectHashAggregate, which keeps a
+  * hash map of heaps only up to
+  * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` (128)
+  * groups per task; past that it sorts the task's remaining input by
+  * group key and aggregates sort-based, paying a serialize/deserialize
+  * round trip per heap. So per task it sorts nothing for a few groups
+  * and the whole input for many. The window plan instead sorts every
+  * task's full input on (partition, order) keys, even under
+  * WindowGroupLimit's pushdown (docs/AUDIT_q16_wgl_r17.md — the sf100
+  * spill source).
   *
   * Determinism: exactly row_number's — if the sort order is total the
   * result is the unique top-k; if not, ties keep an arbitrary winner,
@@ -178,4 +186,82 @@ case class GraftRowTopK(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): GraftRowTopK =
     copy(child = newLeft, kExpr = newRight)
+}
+
+/** The first row per group under an explicit multi-key sort order, in
+  * a flat buffer — [[TopKRewrite]]'s shape for `row_number() = 1` (the
+  * dedup, ReplacingMergeTree FINAL and `LIMIT 1 BY` spelling).
+  *
+  * The buffer is a `seen` flag, one slot per sort key and one slot per
+  * payload column. Update and merge take the incoming row only when it
+  * sorts STRICTLY before the buffered one under the window's exact
+  * `SortOrder`s (direction, NULLS FIRST/LAST, Catalyst's comparison of
+  * each key type), so every slot always comes from one input row, and
+  * a tie keeps an arbitrary single winner, as `row_number` does. Being
+  * declarative with fixed-width slots, it plans as a codegen'd
+  * HashAggregate with map-side partial aggregation: no sort, no
+  * per-key objects, no serialization. The rewrite picks it only when
+  * `Aggregate.supportsHashAggregate` holds for its buffer; otherwise
+  * Spark would plan a SortAggregate, and [[GraftRowTopK]] is used.
+  *
+  * The result is the payload as a struct `c0..cn`, each field as
+  * nullable as its payload column.
+  */
+case class GraftRowFirst(
+    sortKeys: Seq[Expression],
+    payload: Seq[Expression],
+    ascending: Seq[Boolean],
+    nullsFirst: Seq[Boolean])
+  extends DeclarativeAggregate {
+
+  override def children: Seq[Expression] = sortKeys ++ payload
+  override def nullable: Boolean = false
+  override def dataType: DataType = StructType(payload.zipWithIndex.map { case (e, i) =>
+    StructField(s"c$i", e.dataType, e.nullable)
+  })
+  override def prettyName: String = "graft_row_first"
+
+  private lazy val seen = AttributeReference("seen", BooleanType, nullable = false)()
+  private lazy val keySlots = sortKeys.indices.map(i => AttributeReference(s"k$i", sortKeys(i).dataType)())
+  private lazy val valueSlots = payload.indices.map(i => AttributeReference(s"c$i", payload(i).dataType)())
+  private lazy val slots = keySlots ++ valueSlots
+
+  override lazy val aggBufferAttributes: Seq[AttributeReference] = seen +: slots
+  override lazy val initialValues: Seq[Expression] =
+    Literal(false) +: slots.map(s => Literal.create(null, s.dataType))
+
+  override lazy val updateExpressions: Seq[Expression] = {
+    val take = Or(Not(seen), before(sortKeys, keySlots))
+    Literal(true) +: children.zip(slots).map { case (in, s) => If(take, in, s) }
+  }
+
+  override lazy val mergeExpressions: Seq[Expression] = {
+    val take = And(seen.right, Or(Not(seen.left), before(keySlots.map(_.right), keySlots.map(_.left))))
+    Or(seen.left, seen.right) +: slots.map(s => If(take, s.right, s.left))
+  }
+
+  // a group exists only once a row was taken, so a non-nullable
+  // payload column's slot is set
+  override lazy val evaluateExpression: Expression = CreateNamedStruct(
+    payload.zip(valueSlots).zipWithIndex.flatMap { case ((e, s), i) =>
+      Seq(Literal(s"c$i"), if (e.nullable) s else KnownNotNull(s))
+    })
+
+  /** `a` sorts strictly before `b`, lexicographically:
+    * a0 ≺ b0 ∨ (¬(b0 ≺ a0) ∧ (a1 ≺ b1 ∨ …)). Keys tie exactly when
+    * neither precedes the other, so -0.0/0.0 and NaN/NaN tie as they
+    * do in a sort. */
+  private def before(a: Seq[Expression], b: Seq[Expression]): Expression = {
+    val steps = a.indices.map(i => (precedes(i, a(i), b(i)), precedes(i, b(i), a(i))))
+    steps.init.foldRight(steps.last._1) { case ((ab, ba), rest) => Or(ab, And(Not(ba), rest)) }
+  }
+
+  private def precedes(i: Int, x: Expression, y: Expression): Expression = {
+    val byNull = if (nullsFirst(i)) And(IsNull(x), IsNotNull(y)) else And(IsNotNull(x), IsNull(y))
+    val byValue = if (ascending(i)) LessThan(x, y) else GreaterThan(x, y)
+    Or(byNull, Coalesce(Seq(byValue, Literal(false))))
+  }
+
+  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): GraftRowFirst =
+    copy(sortKeys = newChildren.take(sortKeys.length), payload = newChildren.drop(sortKeys.length))
 }

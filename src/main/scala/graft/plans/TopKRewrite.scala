@@ -7,30 +7,47 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, MapType, StructType}
 
-/** Automatic bounded-heap top-k-per-group (rounds 18–19): rewrites the
-  * spellings users actually write —
+/** Automatic top-k-per-group (rounds 18–19): rewrites the spellings
+  * users actually write —
   *
   * {{{ Filter(rn <= k, Window(row_number() OVER (PARTITION BY p ORDER BY o) AS rn, child)) }}}
   *
   * and (round 19) the tie-admitting siblings `rank() <= k` /
-  * `dense_rank() <= k` — into the plan q16b proved 5.5× faster at
-  * sf100 (docs/AUDIT_q16_wgl_r17.md):
+  * `dense_rank() <= k` — into aggregates that never sort a task's input
+  * on the window's (partition, order) keys. Three shapes:
   *
-  * {{{ Filter(rn <= k,                                    // residual, output-sized
-  *       Project(payload from struct, rank AS rn,
-  *         Generate(explode(top),
-  *           Aggregate(p, graft_row_topk/graft_rank_topk(struct(o…, payload…), k) AS top, child)))) }}}
+  *  - `row_number()` with implied k = 1 (dedup, ReplacingMergeTree
+  *    FINAL, `LIMIT 1 BY`) whose [[GraftRowFirst]] buffer is fixed-width
+  *    (`Aggregate.supportsHashAggregate` over its buffer and the
+  *    grouping keys): a flat hash aggregate, no Generate —
+  *    {{{ Filter(cond, Project(p…, payload from struct, 1 AS rn,
+  *          Aggregate(p, p…, graft_row_first(o…, payload…) AS first, child))) }}}
+  *    Partition-key columns come from the grouping output, except
+  *    floating-point ones: the planner normalizes float grouping keys
+  *    (NormalizeFloatingNumbers, -0.0 → 0.0), so those ride in the
+  *    buffer like any payload column. It plans as a codegen'd
+  *    HashAggregate with map-side partial aggregation.
+  *  - other `row_number()` bounds, and k = 1 when a sort key or
+  *    payload column is a string, binary or nested value: the
+  *    [[GraftRowTopK]] bounded heap —
+  *    {{{ Filter(cond, Project(payload from struct, pos+1 AS rn,
+  *          Generate(posexplode(top),
+  *            Aggregate(p, graft_row_topk(struct(o…, payload…), k) AS top, child)))) }}}
+  *  - `rank()`/`dense_rank()`: the same shape over [[GraftRankTopK]],
+  *    which keeps exactly the rank rule's output (k-1 rows + the
+  *    boundary tie group, or k distinct key values).
   *
   * Why: both WindowGroupLimit modes require their child SORTED, so the
   * window plan full-sorts every map task's input before the pushdown
-  * trims it — at 100 TB that map-side sort is the spiller. The
-  * [[GraftRowTopK]] aggregate keeps ≤ k rows per group per task in a
-  * bounded heap; [[GraftRankTopK]] keeps exactly the rank rule's
-  * output (k-1 rows + the boundary tie group, or k distinct key
-  * values) — both ship only result-sized data across the shuffle and
-  * sort nothing but the result arrays.
+  * trims it — at 100 TB that map-side sort is the spiller (q16b, 5.5×
+  * at sf100, docs/AUDIT_q16_wgl_r17.md). The aggregates ship only
+  * result-sized data across the shuffle. The heap ones plan as
+  * ObjectHashAggregate, which past 128 groups per task falls back to
+  * sorting that task's remaining input by group key (see
+  * [[GraftRowTopK]]); only the flat k = 1 shape sorts nothing at any
+  * group count.
   *
   * Conservative guards (anything else falls through untouched):
   *  - the Window computes EXACTLY ONE expression and it is
@@ -158,6 +175,13 @@ case class TopKRewrite(session: SparkSession) extends Rule[LogicalPlan] with Pre
     val payload = wchild.output
     if (payload.isEmpty) return None
 
+    val ascFlags  = orders.map(_.direction == Ascending)
+    val nullFlags = orders.map(_.nullOrdering == NullsFirst)
+    if (fn == RowNumber() && k == 1) {
+      val first = firstRow(sortKeys, ascFlags, nullFlags, cond, rnAttr, parts, payload, wchild)
+      if (first.isDefined) return first
+    }
+
     // struct [sort keys ++ payload]; names are positional (extraction
     // below is by ordinal) but must be unique within the struct
     val n = sortKeys.length
@@ -167,8 +191,6 @@ case class TopKRewrite(session: SparkSession) extends Rule[LogicalPlan] with Pre
       Seq(Literal(s"c$i"), a)
     }
     val struct = CreateNamedStruct(fields)
-    val ascFlags  = orders.map(_.direction == Ascending)
-    val nullFlags = orders.map(_.nullOrdering == NullsFirst)
 
     fn match {
       case RowNumber() =>
@@ -207,7 +229,7 @@ case class TopKRewrite(session: SparkSession) extends Rule[LogicalPlan] with Pre
             isDistinct = false), "__graft_topk")()
         val aggregate = Aggregate(parts, Seq(topAlias), wchild)
 
-        val elemType = agg.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
+        val elemType = agg.dataType.asInstanceOf[ArrayType]
           .elementType.asInstanceOf[StructType]
         val rowAttr = AttributeReference("__graft_rrow", elemType, nullable = false)()
         val generate = Generate(Explode(topAlias.toAttribute),
@@ -224,5 +246,38 @@ case class TopKRewrite(session: SparkSession) extends Rule[LogicalPlan] with Pre
           exprId = rnAttr.exprId, qualifier = rnAttr.qualifier)
         Some(Filter(cond, Project(projections, generate)))
     }
+  }
+
+  /** The flat k = 1 shape (see the class doc), or None when the
+    * [[GraftRowFirst]] buffer is not fixed-width. */
+  private def firstRow(sortKeys: Seq[Expression], ascFlags: Seq[Boolean], nullFlags: Seq[Boolean],
+                       cond: Expression, rnAttr: Attribute, parts: Seq[Expression],
+                       payload: Seq[Attribute], child: LogicalPlan): Option[LogicalPlan] = {
+    val fromGroup = payload.filter(a => parts.exists(_.semanticEquals(a)) &&
+      !hasFloat(a.dataType))
+    val carried = payload.filterNot(fromGroup.contains)
+    val first = GraftRowFirst(sortKeys, carried, ascFlags, nullFlags)
+    // a global aggregate would emit one row for empty input; grouping
+    // by a constant emits none, as the window does
+    val grouping = if (parts.isEmpty) Seq(Literal(0)) else parts
+    if (!Aggregate.supportsHashAggregate(first.aggBufferAttributes, grouping)) return None
+
+    val firstAlias = Alias(first.toAggregateExpression(), "__graft_first")()
+    val aggregate = Aggregate(grouping, fromGroup :+ firstAlias, child)
+    val projections = payload.map { a =>
+      val i = carried.indexOf(a)
+      if (i < 0) a
+      else Alias(GetStructField(firstAlias.toAttribute, i, Some(a.name)), a.name)(
+        exprId = a.exprId, qualifier = a.qualifier, explicitMetadata = Some(a.metadata))
+    } :+ Alias(Literal(1), rnAttr.name)(exprId = rnAttr.exprId, qualifier = rnAttr.qualifier)
+    Some(Filter(cond, Project(projections, aggregate)))
+  }
+
+  private def hasFloat(t: DataType): Boolean = t match {
+    case FloatType | DoubleType => true
+    case ArrayType(e, _)        => hasFloat(e)
+    case st: StructType         => st.fields.exists(f => hasFloat(f.dataType))
+    case MapType(k, v, _)       => hasFloat(k) || hasFloat(v)
+    case _                      => false
   }
 }

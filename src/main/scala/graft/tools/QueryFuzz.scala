@@ -51,6 +51,14 @@ object QueryFuzz {
     }
   }
 
+  /** The window family's `rn = 1` companions: one `window_first` shape
+    * per window slot among the first n, drawn from that slot's seed.
+    * Kept apart from [[shapes]] so the k > 1 window shapes stay as
+    * they are. */
+  def firstShapes(seed: Long, n: Int): Seq[Shape] = (0 until n).collect {
+    case i if i % 13 == 3 => windowFirst(i, new scala.util.Random(seed * 1000003L + i))
+  }
+
   /** WITH FILL … INTERPOLATE (v) — the carry semantics: each fill row
     * takes the previous OUTPUT row's value; before the first source
     * row the typed default (0) applies. The duck model replays the
@@ -220,6 +228,31 @@ object QueryFuzz {
     Shape(f"fz$i%03d_window_$fn", t, t)
   }
 
+  /** The dedup spelling `rn = 1` over numeric-only payloads, which
+    * TopKRewrite plans as the flat hash aggregate
+    * ([[graft.plans.GraftRowFirst]]): a leading key that is NULL on
+    * some rows, in either direction and null order, then mixed
+    * directions closed by b, unique per partition, so the order is
+    * total. The partition key is a string or a number. */
+  private def windowFirst(i: Int, r: scala.util.Random): Shape = {
+    val w = 20 + r.nextInt(60)
+    val e = 3000 + r.nextInt(20000)
+    val k1 = if (r.nextBoolean()) "event_type" else s"user_id % ${2 + r.nextInt(4)}"
+    val nm = 2 + r.nextInt(3)
+    def dir() = if (r.nextBoolean()) "DESC" else "ASC"
+    val nulls = if (r.nextBoolean()) "NULLS FIRST" else "NULLS LAST"
+    val order = s"nk ${dir()} $nulls, cnt ${dir()}, b ${dir()}"
+    val t =
+      s"""SELECT k1, b, cnt, mx, nk, rn FROM (
+         |  SELECT k1, b, cnt, mx, nk, row_number() OVER (PARTITION BY k1 ORDER BY $order) AS rn FROM (
+         |    SELECT $k1 AS k1, CAST(floor(value / $w) AS INT) AS b, count(*) AS cnt,
+         |           round(max(value), 2) AS mx,
+         |           CASE WHEN count(*) % $nm = 0 THEN NULL ELSE min(event_id) % 7 END AS nk
+         |    FROM events WHERE event_id <= $e GROUP BY 1, 2) t0
+         |) t1 WHERE rn = 1 ORDER BY k1""".stripMargin
+    Shape(f"fz$i%03d_window_first", t, t)
+  }
+
   private def withFill(i: Int, r: scala.util.Random): Shape = {
     val w = 20 + r.nextInt(60)
     val e = 3000 + r.nextInt(20000)
@@ -311,7 +344,7 @@ object QueryFuzz {
     t.customer.createOrReplaceTempView("customer")
     t.lineitem.createOrReplaceTempView("lineitem")
     new java.io.File(outDir).mkdirs()
-    val all = shapes(seed, n)
+    val all = shapes(seed, n) ++ firstShapes(seed, n)
     all.foreach { sh =>
       try sh.name.synchronized {
         spark.sql(sh.spark).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${sh.name}")

@@ -1,17 +1,24 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+
+import graft.operators.Replicate
+import graft.plans.GraftRowFirst
 
 /** Round 18: [[graft.plans.TopKRewrite]] makes the ENGINE plan the
   * bounded-heap top-k automatically from the spelling users actually
   * write — `Filter(rn <= k, Window(row_number))` — instead of only
   * when they ask for groupArraySorted by name (q16b). The window plan
   * full-sorts every map task's input even under WindowGroupLimit
-  * (docs/AUDIT_q16_wgl_r17.md); the rewritten plan sorts nothing but
-  * the k-row result arrays and shuffles groups × k rows. */
-class Round18TopKRewriteSpec extends SparkSpec {
+  * (docs/AUDIT_q16_wgl_r17.md); the rewritten plan shuffles groups × k
+  * rows. `rn = 1` with fixed-width columns plans the flat
+  * [[graft.plans.GraftRowFirst]] hash aggregate instead of the heap;
+  * the k = 1 tests below check it against the window row for row. */
+class Round18TopKRewriteSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def planOf(df: DataFrame): String = df.queryExecution.executedPlan.toString
@@ -77,11 +84,140 @@ class Round18TopKRewriteSpec extends SparkSpec {
 
   test("rn = 1 (the dedup spelling) rewrites with k=1") {
     val w = Window.partitionBy("g").orderBy(col("key"))
-    val df = base.select(col("g"), col("key"), row_number().over(w).as("rn"))
+    def q(d: DataFrame) = d.select(col("g"), col("key"), row_number().over(w).as("rn"))
       .where(col("rn") === 1).orderBy("g")
-    assert(planOf(df).contains("graft_row_topk"))
-    assert(df.select("g", "key").as[(String, Long)].collect().toSet ==
+    val plan = planOf(q(base))
+    assert(plan.contains("graft_row_first") && !plan.contains("graft_row_topk"), plan)
+    assert(q(base).select("g", "key").as[(String, Long)].collect().toSet ==
       Set(("a", 1L), ("b", 5L), ("c", 7L)))
+    assert(q(base).collect().toSeq.map(_.toString) ==
+      withRuleOff(q(base).collect().toSeq.map(_.toString)))
+  }
+
+  // ---- k = 1: the flat GraftRowFirst aggregate vs the window --------
+
+  /** 240 seeded rows: partition key g; sort-key candidates c (double
+    * with -0.0, 0.0 and NaN), a (int, 3 values, so ties) and b (long),
+    * all nullable; a unique id; and one nullable payload column per
+    * fixed-width type. */
+  private lazy val wide: DataFrame = {
+    val r = new scala.util.Random(18)
+    def opt[T](v: => T): Option[T] = if (r.nextInt(6) == 0) None else Some(v)
+    val cs = Array(-0.0, 0.0, 1.5, -2.0, Double.NaN)
+    (0 until 240).map { id =>
+      (opt(r.nextInt(6)), opt(cs(r.nextInt(cs.length))), opt(r.nextInt(3)), opt(r.nextLong() % 4),
+        id.toLong, opt(r.nextInt(1000)), opt(r.nextDouble()), opt(BigDecimal(r.nextInt(100000), 2)),
+        opt(java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(r.nextInt(900)))),
+        opt(new java.sql.Timestamp(1600000000000L + r.nextInt(1000000) * 1000L)), opt(r.nextBoolean()))
+    }.toDF("g", "c", "a", "b", "id", "pi", "pd", "pdec", "pdate", "pts", "pbool")
+      .withColumn("pdec", col("pdec").cast("decimal(12,2)"))
+      .repartition(3)
+  }
+
+  private def firstRows(w: WindowSpec, residual: Column = lit(true))(d: DataFrame): DataFrame =
+    d.withColumn("rn", row_number().over(w)).where(col("rn") === 1 && residual)
+
+  /** Renders values with -0.0 as 0.0: the sort order ties them. */
+  private def tieKey(vs: Seq[Any]): String =
+    vs.map {
+      case d: Double if d == 0.0 => "0.0"
+      case v => String.valueOf(v)
+    }.mkString("[", ",", "]")
+
+  /** Rule on (which must plan graft_row_first) vs rule off (the window).
+    * A total order gives the same rows. Otherwise each output row must
+    * be one whole input row of the window's winning tie group: the same
+    * `tieCols` values and present in the input. */
+  private def assertFirstParity(input: DataFrame, q: DataFrame => DataFrame,
+                                tieCols: Seq[String], total: Boolean): Unit = {
+    val on = q(input)
+    assert(planOf(on).contains("graft_row_first"), planOf(on))
+    val got = on.drop("rn").collect().toSeq
+    val want = withRuleOff(q(input).drop("rn").collect().toSeq)
+    if (total) assert(got.map(_.toString).sorted == want.map(_.toString).sorted)
+    else {
+      val cols = on.drop("rn").columns.toSeq
+      def ties(rows: Seq[Row]) = rows.map(r => tieKey(tieCols.map(c => r.get(cols.indexOf(c))))).sorted
+      assert(ties(got) == ties(want))
+      val inputRows = input.select(cols.map(col): _*).collect().map(_.toString).toSet
+      got.foreach(r => assert(inputRows.contains(r.toString), s"$r is not an input row"))
+    }
+  }
+
+  test("rn = 1 parity: ASC/DESC x NULLS FIRST/LAST on 1-3 keys, -0.0/0.0/NaN keys, null payloads") {
+    val combos = Seq[String => Column](
+      col(_).asc_nulls_first, col(_).asc_nulls_last, col(_).desc_nulls_first, col(_).desc_nulls_last)
+    val keys = Seq("c", "a", "b")
+    // key j of a case takes the combo after key j-1's, so multi-key
+    // orders mix directions
+    for (n <- 1 to 3; c0 <- combos.indices; total <- Seq(true, false)) {
+      val orders = keys.take(n).zipWithIndex.map { case (k, j) => combos((c0 + j) % combos.length)(k) }
+      val w = Window.partitionBy("g").orderBy((if (total) orders :+ col("id") else orders): _*)
+      assertFirstParity(wide, firstRows(w), "g" +: keys.take(n), total)
+    }
+  }
+
+  test("rn = 1 parity: residual conjuncts, on the payload and on the partition key") {
+    val w = Window.partitionBy("g").orderBy(col("a").desc_nulls_last, col("id"))
+    assertFirstParity(wide, firstRows(w, col("pi") > 300), Nil, total = true)
+    assertFirstParity(wide, firstRows(w, col("g") =!= 2 && col("pbool")), Nil, total = true)
+  }
+
+  test("global rn = 1 (empty PARTITION BY) plans the flat aggregate; empty input yields no row") {
+    val w = Window.orderBy(col("b").desc_nulls_first, col("id"))
+    assertFirstParity(wide, firstRows(w), Nil, total = true)
+    assert(firstRows(w)(wide).count() == 1)
+    // a range under a filter nothing passes: the optimizer cannot fold
+    // it away, so the empty input reaches the aggregate at run time
+    val empty = spark.range(50).select(col("id"), (col("id") % 4).as("b")).where(col("id") % 7 === 100)
+    assert(planOf(firstRows(w)(empty)).contains("graft_row_first"))
+    assert(firstRows(w)(empty).collect().isEmpty)
+  }
+
+  test("floating-point partition keys come from the winning row, not the normalized grouping key") {
+    val df = Seq((-0.0, 2L, 10), (0.0, 1L, 20), (Double.NaN, 3L, 30), (Double.NaN, 4L, 40), (1.0, 5L, 50))
+      .toDF("d", "id", "v").repartition(3)
+    val q = firstRows(Window.partitionBy("d").orderBy(col("id").desc)) _
+    assertFirstParity(df, q, Nil, total = true)
+    assert(q(df).collect().map(_.getDouble(0).toString).toSet == Set("-0.0", "NaN", "1.0"))
+  }
+
+  test("fixed-width rn = 1 plans a HashAggregate of graft_row_first: no ObjectHashAggregate, Window, Sort or heap") {
+    val plan = planOf(firstRows(Window.partitionBy("g").orderBy(col("c").desc, col("id")))(wide))
+    assert(plan.contains("HashAggregate") && plan.contains("graft_row_first"), plan)
+    Seq("ObjectHashAggregate", "Window", "Sort", "graft_row_topk").foreach { node =>
+      assert(!plan.contains(node), s"unexpected $node:\n$plan")
+    }
+  }
+
+  test("a string payload keeps rn = 1 on the graft_row_topk heap") {
+    val w = Window.partitionBy("g").orderBy(col("key"))
+    def q(d: DataFrame) = d.select(col("g"), col("key"), col("tag"), row_number().over(w).as("rn"))
+      .where(col("rn") === 1).orderBy("g")
+    val plan = planOf(q(base))
+    assert(plan.contains("graft_row_topk") && !plan.contains("graft_row_first"), plan)
+    assert(q(base).collect().toSeq.map(_.toString) ==
+      withRuleOff(q(base).collect().toSeq.map(_.toString)))
+  }
+
+  test("FROM t FINAL over a numeric ReplacingMergeTree is one hash aggregate keyed on the sorting key") {
+    dropWithLocation("topk_rmt")
+    try {
+      spark.sql("""CREATE TABLE topk_rmt (id UInt64, version UInt64, is_deleted UInt8, v Float64, p UInt32)
+                   ENGINE = ReplacingMergeTree(version, is_deleted) PARTITION BY p ORDER BY id""")
+      (0 until 400).map(i => (i % 97, i, if (i % 11 == 0) 1 else 0, i * 0.5, i % 3))
+        .toDF("id", "version", "is_deleted", "v", "p").createOrReplaceTempView("topk_rmt_batch")
+      spark.sql("INSERT INTO topk_rmt SELECT id, version, is_deleted, v, p FROM topk_rmt_batch")
+      Replicate.registerWithFinal(spark.table("topk_rmt"), "topk_rmt", Seq("p", "id"), Seq(col("version")))
+      def q = spark.sql("SELECT p, id, version, v FROM topk_rmt FINAL WHERE is_deleted = 0")
+      val aggs = collect(q.queryExecution.executedPlan) { case h: HashAggregateExec => h }
+      assert(aggs.nonEmpty && aggs.forall(_.groupingExpressions.map(_.name) == Seq("p", "id")),
+        planOf(q))
+      assert(aggs.forall(_.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[GraftRowFirst])))
+      val got = q.collect().map(_.toString).sorted.toSeq
+      assert(got.length > 100)
+      assert(got == withRuleOff(q.collect().map(_.toString).sorted.toSeq))
+    } finally dropWithLocation("topk_rmt")
   }
 
   test("rn < k and reversed literal-comparison spellings rewrite") {

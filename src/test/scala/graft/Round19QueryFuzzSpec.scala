@@ -18,8 +18,9 @@ import graft.tools.QueryFuzz
   * This spec keeps the Spark half locked in-suite: the generator is
   * deterministic, every generated text must parse and execute
   * non-vacuously, and the whole window family must be row-identical
-  * with TopKRewrite disabled — the rank/dense_rank rewrite cannot
-  * hide behind the fuzz passing only one plan.
+  * with TopKRewrite disabled — the rank/dense_rank rewrite and the
+  * flat `rn = 1` aggregate cannot hide behind the fuzz passing only
+  * one plan.
   */
 class Round19QueryFuzzSpec extends SparkSpec {
 
@@ -54,9 +55,19 @@ class Round19QueryFuzzSpec extends SparkSpec {
 
   test("the window family is row-identical with TopKRewrite off (rewrite parity under fuzz)") {
     views
-    val wins = QueryFuzz.shapes(7L, 132).filter(_.name.contains("_window_"))
-    assert(wins.nonEmpty)
-    wins.foreach { sh =>
+    val tops = QueryFuzz.shapes(7L, 132).filter(_.name.contains("_window_"))
+    assert(tops.length == 10)
+    Seq("row_number", "rank", "dense_rank").foreach { fn =>
+      assert(tops.exists(_.name.endsWith(s"_window_$fn")), s"no k > 1 $fn shape")
+    }
+    // the rn = 1 shapes must reach the flat k = 1 aggregate, not the heap
+    val firsts = QueryFuzz.firstShapes(7L, 132)
+    assert(firsts.length == 10 && firsts.forall(_.name.endsWith("_window_first")))
+    firsts.foreach { sh =>
+      val plan = spark.sql(sh.spark).queryExecution.executedPlan.toString
+      assert(plan.contains("graft_row_first"), s"${sh.name} missed the flat aggregate:\n$plan")
+    }
+    (tops ++ firsts).foreach { sh =>
       val on = spark.sql(sh.spark).collect().map(_.toString).toSeq
       spark.conf.set("spark.graft.topk.rewrite", "false")
       val off = try spark.sql(sh.spark).collect().map(_.toString).toSeq
