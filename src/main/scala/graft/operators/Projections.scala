@@ -88,24 +88,9 @@ object Projections {
     // scale dial (guide §5): at the sf100 rehearsal 32 range
     // partitions over an 18 GB-source layout put ~0.5-1 GB of
     // deserialized rows in each sort task and the build spilled 29 GB.
-    // Scale the count so each task sorts ≈128 MB of source bytes
-    // (deserialized ~2-3×, comfortably inside a task slot), capped so
-    // a huge table cannot explode into millions of files; output
-    // files stay in the 100 MB-1 GB band either way (guide §6).
-    def layoutPartitions(in: DataFrame): Int = {
-      val est = in.queryExecution.optimizedPlan.stats.sizeInBytes
-      // secondary bound: the planner's estimate can overrun by orders
-      // of magnitude above a join/aggregate (no CBO), which would hit
-      // the 32768 cap and emit tens of thousands of tiny files. The
-      // leaf scan bytes bound the true input from above for the
-      // leaf-rooted frames write() receives (a column-subset Project
-      // estimates BELOW its leaf, and min keeps that tighter figure).
-      val leaf = in.queryExecution.optimizedPlan.collectLeaves()
-        .map(_.stats.sizeInBytes).sum
-      val bytes = if (leaf > 0) est.min(leaf) else est
-      val target = (bytes / (128L << 20)).min(BigInt(32768)).toInt
-      math.max(filesPerLayout, target)
-    }
+    // The shared sizing rule scales the count with the source bytes.
+    def layoutPartitions(in: DataFrame): Int =
+      math.max(filesPerLayout, graft.sources.MergeTreeWrite.sourceBytesAndTasks(in)._2)
     def sorted(in: DataFrame, keys: Seq[String]) =
       in.repartitionByRange(layoutPartitions(in), keys.map(col): _*)
         .sortWithinPartitions(keys.map(col): _*)

@@ -18,12 +18,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * pipeline — analysis, partial aggregation, codegen — is stock
   * Catalyst. Injected by [[GraftExtensions]] via `injectParser`.
   *
-  * The rewrite is purely textual and scoped to the known parametric
-  * names; the parameter list of a parametric aggregate is literals by
-  * construction (ClickHouse requires constants there), so the
-  * non-nested `[^()]*` match is exact, and occurrences inside string
-  * literals are left alone by requiring a word boundary + the double
-  * call shape.
+  * The same textual front end lowers the rest of the ClickHouse
+  * dialect (`FINAL`, `PREWHERE`, CH type names, table functions, …).
+  * Its passes see code only: [[ChLexer]] masks the body of every
+  * string, quoted name and comment before the first pass and restores
+  * it after the last, so dialect syntax written inside a literal,
+  * quoted name or comment reaches Spark byte for byte. A pass that
+  * needs a literal's value — a file path, a regex, a structure string
+  * — reads it through the lexer, and nothing else scans quotes.
   */
 class ChSqlParser(delegate: ParserInterface) extends ParserInterface {
   import ChSqlParser.rewriteParametric
@@ -169,8 +171,7 @@ object ChSqlParser {
     * picks broadcast when the subquery result is small). The keyword
     * is semantically a no-op here, so it strips — only ahead of the
     * join/IN tokens it can legally prefix, never inside identifiers
-    * (word-boundary + lookahead) and never inside string literals
-    * ([[stripGlobalHints]] applies it outside quotes only). */
+    * (word-boundary + lookahead). */
   private val GlobalHint =
     """(?i)\bGLOBAL\s+(?=(?:NOT\s+)?IN\b|JOIN\b|INNER\b|LEFT\b|RIGHT\b|FULL\b|CROSS\b|ANY\b|ALL\b|SEMI\b|ANTI\b)""".r
 
@@ -244,8 +245,8 @@ object ChSqlParser {
     "distinct", "group", "order", "limit", "interval", "using", "if",
     "return", "totals", "prewhere", "qualify", "settings")
 
-  /** ClickHouse `[…]` array literals → `array(…)`. A quote-aware
-    * single pass; each `[` is classified by the token before it
+  /** ClickHouse `[…]` array literals → `array(…)`. A single pass;
+    * each `[` is classified by the token before it
     * (identifier/`)`/`]`/string → subscript, anything else including
     * the keyword set → literal) and its matching `]` rewrites with
     * it. Nested literals and mixed literal/subscript chains like
@@ -269,20 +270,8 @@ object ChSqlParser {
     if (!sql.contains('{')) return sql
     val sb = new java.lang.StringBuilder(sql.length + 16)
     var i = 0
-    def copyQuoted(q: Char): Unit = {
-      sb.append(q); i += 1
-      var closed = false
-      while (i < sql.length && !closed) {
-        val d = sql.charAt(i)
-        sb.append(d)
-        if (d == '\\' && q != '`' && i + 1 < sql.length) { i += 1; sb.append(sql.charAt(i)) }
-        else if (d == q) closed = true
-        i += 1
-      }
-    }
     while (i < sql.length) {
       sql.charAt(i) match {
-        case q @ ('\'' | '"' | '`') => copyQuoted(q)
         case '{' =>
           var k = i + 1
           while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
@@ -294,7 +283,6 @@ object ChSqlParser {
             var prevSig: Char = 0
             while (i < sql.length && depth > 0) {
               sql.charAt(i) match {
-                case q @ ('\'' | '"' | '`') => copyQuoted(q); prevSig = q
                 case '{' => depth += 1; sb.append('{'); i += 1; prevSig = '{'
                 case '}' =>
                   depth -= 1
@@ -323,19 +311,6 @@ object ChSqlParser {
     var i = 0
     while (i < sql.length) {
       sql.charAt(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          sb.append(q); i += 1
-          var closed = false
-          while (i < sql.length && !closed) {
-            val d = sql.charAt(i)
-            sb.append(d)
-            if (d == '\\' && q != '`' && i + 1 < sql.length) { i += 1; sb.append(sql.charAt(i)) }
-            else if (d == q) {
-              if (i + 1 < sql.length && sql.charAt(i + 1) == q) { sb.append(q); i += 1 }
-              else closed = true
-            }
-            i += 1
-          }
         case '[' =>
           // token before the bracket, read back from the output
           var j = sb.length - 1
@@ -460,34 +435,10 @@ object ChSqlParser {
     }
   }
 
-  /** True when `pos` falls inside a single-quoted SQL string literal
-    * (handling `''` and backslash escapes) — used to keep text-level
-    * table-function rewrites out of string literal contents. */
-  private def insideStringLiteral(sql: String, pos: Int): Boolean = {
-    var in = false
-    var i = 0
-    while (i < pos) {
-      val c = sql.charAt(i)
-      if (in && c == '\\') i += 1 // skip the escaped char
-      else if (c == '\'') {
-        if (in && i + 1 < sql.length && sql.charAt(i + 1) == '\'') i += 1 // '' escape
-        else in = !in
-      }
-      i += 1
-    }
-    in
-  }
-
-  private def rewriteFileTableFn(sql: String): String =
+  private def rewriteFileTableFn(sql: String, lx: ChLexer.Masked): String =
     FileTableFn.replaceAllIn(sql, m => {
-      // `FROM url(...)` appearing INSIDE a string literal is data, not
-      // syntax — rewriting it would fetch at parse time from text that
-      // never executes.
-      if (insideStringLiteral(sql, m.start))
-        scala.util.matching.Regex.quoteReplacement(m.matched)
-      else {
-      val (fn, path) = (m.group(1).toLowerCase, m.group(2))
-      val fmt = Option(m.group(3)).getOrElse {
+      val (fn, path) = (m.group(1).toLowerCase, lx.body(m.group(2)))
+      val fmt = Option(m.group(3)).map(lx.body).getOrElse {
         // infer from the extension, the CH default behavior
         val ext = path.substring(path.lastIndexOf('.') + 1).toLowerCase
         ext match {
@@ -510,8 +461,7 @@ object ChSqlParser {
       val p = if (fn == "s3" && path.startsWith("s3://")) s3aPath(path)
               else if (fn == "url") resolveUrl(path)
               else path
-      scala.util.matching.Regex.quoteReplacement(s"FROM $spark.`$p`")
-      }
+      scala.util.matching.Regex.quoteReplacement(s"FROM $spark.`${lx.hold(p)}`")
     })
 
   /** `FROM generateRandom('a UInt64, b String'[, seed…]) LIMIT n` —
@@ -541,9 +491,9 @@ object ChSqlParser {
       s"generateRandom: no generator for type $other; project it from a supported column")
   }
 
-  private def rewriteGenerateRandom(sql: String): String = {
+  private def rewriteGenerateRandom(sql: String, lx: ChLexer.Masked): String = {
     val out = GenerateRandomFn.replaceAllIn(sql, m => {
-      val cols = topLevelSplit(m.group(1)).map { entry =>
+      val cols = topLevelSplit(lx.body(m.group(1))).map { entry =>
         val t = entry.trim
         val sp = t.indexOf(' ')
         if (sp < 0) throw new IllegalArgumentException(
@@ -565,9 +515,9 @@ object ChSqlParser {
   private val NullTableFn =
     """(?i)\bFROM\s+null\s*\(\s*'([^']+)'\s*\)""".r
 
-  private def rewriteNullTableFn(sql: String): String =
+  private def rewriteNullTableFn(sql: String, lx: ChLexer.Masked): String =
     NullTableFn.replaceAllIn(sql, m => {
-      val cols = topLevelSplit(m.group(1)).map { entry =>
+      val cols = topLevelSplit(lx.body(m.group(1))).map { entry =>
         val t = entry.trim
         val sp = t.indexOf(' ')
         if (sp < 0) throw new IllegalArgumentException(
@@ -622,66 +572,56 @@ object ChSqlParser {
           "tables exist here — land the remote table locally first")
   }
 
-  private def rewriteMergeTableFn(sql: String): String =
+  private def rewriteMergeTableFn(sql: String, lx: ChLexer.Masked): String =
     MergeTableFn.replaceAllIn(sql, m => {
-      if (insideStringLiteral(sql, m.start))
-        scala.util.matching.Regex.quoteReplacement(m.matched)
-      else {
-        val args = topLevelSplit(m.group(1)).map(_.trim).filter(_.nonEmpty)
-        val rx = args match {
-          case Seq(one) => stripQuotes(one)
-          case Seq(db, r) => requireLocalDb(stripQuotes(db), "merge"); stripQuotes(r)
-          case _ => throw new IllegalArgumentException(
-            "merge() takes ('tables_regexp') or (db, 'tables_regexp')")
-        }
-        val spark = org.apache.spark.sql.SparkSession.active
-        val pat = java.util.regex.Pattern.compile(rx)
-        val names = spark.catalog.listTables().collect().map(_.name)
-          .filter(n => pat.matcher(n).find()).sorted.toSeq
-        if (names.isEmpty) throw new IllegalArgumentException(
-          s"merge(): no catalog table name matches '$rx'")
-        // CH's Merge engine takes the structure of the first table; a
-        // positional UNION ALL over drifted schemas would silently
-        // mis-bind columns, so require name-identical layouts upfront.
-        val colNames = names.map(n => n -> spark.table(n).schema.fieldNames.toSeq)
-        colNames.find(_._2 != colNames.head._2).foreach { case (n, cols) =>
-          throw new UnsupportedOperationException(
-            s"merge(): table '$n' columns ${cols.mkString("(", ", ", ")")} differ from " +
-              s"'${colNames.head._1}' ${colNames.head._2.mkString("(", ", ", ")")}; align the " +
-              "schemas or UNION the aligned projections explicitly")
-        }
-        // lazy virtual column: materialize _table only when the query
-        // SYNTAX references it — a '_table' inside a string literal
-        // must not change the output schema
-        val wantTable = TableVirtualColRef.findAllMatchIn(sql)
-          .exists(t => !insideStringLiteral(sql, t.start))
-        val branches = names.map { n =>
-          if (wantTable) s"SELECT *, '$n' AS _table FROM $n" else s"SELECT * FROM $n"
-        }
-        scala.util.matching.Regex.quoteReplacement(
-          s"FROM (${branches.mkString(" UNION ALL ")})")
+      val args = topLevelSplit(m.group(1)).map(a => lx.body(stripQuotes(a)))
+      val rx = args match {
+        case Seq(one) => one
+        case Seq(db, r) => requireLocalDb(db, "merge"); r
+        case _ => throw new IllegalArgumentException(
+          "merge() takes ('tables_regexp') or (db, 'tables_regexp')")
       }
+      val spark = org.apache.spark.sql.SparkSession.active
+      val pat = java.util.regex.Pattern.compile(rx)
+      val names = spark.catalog.listTables().collect().map(_.name)
+        .filter(n => pat.matcher(n).find()).sorted.toSeq
+      if (names.isEmpty) throw new IllegalArgumentException(
+        s"merge(): no catalog table name matches '$rx'")
+      // CH's Merge engine takes the structure of the first table; a
+      // positional UNION ALL over drifted schemas would silently
+      // mis-bind columns, so require name-identical layouts upfront.
+      val colNames = names.map(n => n -> spark.table(n).schema.fieldNames.toSeq)
+      colNames.find(_._2 != colNames.head._2).foreach { case (n, cols) =>
+        throw new UnsupportedOperationException(
+          s"merge(): table '$n' columns ${cols.mkString("(", ", ", ")")} differ from " +
+            s"'${colNames.head._1}' ${colNames.head._2.mkString("(", ", ", ")")}; align the " +
+            "schemas or UNION the aligned projections explicitly")
+      }
+      // lazy virtual column: materialize _table only when the query
+      // references it
+      val wantTable = TableVirtualColRef.findFirstIn(sql).isDefined
+      val branches = names.map { n =>
+        if (wantTable) s"SELECT *, '$n' AS _table FROM $n" else s"SELECT * FROM $n"
+      }
+      scala.util.matching.Regex.quoteReplacement(
+        s"FROM (${branches.mkString(" UNION ALL ")})")
     })
 
-  private def rewriteClusterFn(sql: String): String =
+  private def rewriteClusterFn(sql: String, lx: ChLexer.Masked): String =
     ClusterFn.replaceAllIn(sql, m => {
-      if (insideStringLiteral(sql, m.start))
-        scala.util.matching.Regex.quoteReplacement(m.matched)
-      else {
-        val fn = m.group(1)
-        val args = topLevelSplit(m.group(2)).map(a => stripQuotes(a).trim).filter(_.nonEmpty)
-        if (args.size < 2) throw new IllegalArgumentException(
-          s"$fn() takes ('cluster', db.table) or ('cluster', db, table)")
-        val table = args.drop(1) match {
-          case Seq(dbTable) =>
-            val parts = dbTable.split("\\.", 2)
-            if (parts.length == 2) { requireLocalDb(parts(0), fn); parts(1) } else dbTable
-          case Seq(db, t) => requireLocalDb(db, fn); t
-          case _ => throw new IllegalArgumentException(
-            s"$fn(): too many arguments — table functions as the target are not modeled")
-        }
-        scala.util.matching.Regex.quoteReplacement(s"FROM $table")
+      val fn = m.group(1)
+      val args = topLevelSplit(m.group(2)).map(a => lx.body(stripQuotes(a)).trim).filter(_.nonEmpty)
+      if (args.size < 2) throw new IllegalArgumentException(
+        s"$fn() takes ('cluster', db.table) or ('cluster', db, table)")
+      val table = args.drop(1) match {
+        case Seq(dbTable) =>
+          val parts = dbTable.split("\\.", 2)
+          if (parts.length == 2) { requireLocalDb(parts(0), fn); parts(1) } else dbTable
+        case Seq(db, t) => requireLocalDb(db, fn); t
+        case _ => throw new IllegalArgumentException(
+          s"$fn(): too many arguments — table functions as the target are not modeled")
       }
+      scala.util.matching.Regex.quoteReplacement(s"FROM $table")
     })
 
   /** `INSERT INTO [FUNCTION] file('p', 'Fmt') SELECT …` — the write
@@ -689,9 +629,10 @@ object ChSqlParser {
   private val InsertFileFn =
     """(?i)\bINSERT\s+INTO\s+(?:FUNCTION\s+)?(file|s3)\s*\(\s*'([^']+)'\s*,\s*'([^']+)'\s*\)""".r
 
-  private def rewriteInsertFileFn(sql: String): String =
+  private def rewriteInsertFileFn(sql: String, lx: ChLexer.Masked): String =
     InsertFileFn.replaceAllIn(sql, m => {
-      val fmt = m.group(3) match {
+      val path = lx.body(m.group(2))
+      val fmt = lx.body(m.group(3)) match {
         case "Parquet" => "parquet"
         case "ORC" => "orc"
         case "JSONEachRow" | "NDJSON" | "JSONLines" => "json"
@@ -699,10 +640,10 @@ object ChSqlParser {
         case other => throw new IllegalArgumentException(
           s"file() write: format '$other' has no directory writer; use graft.sources.Formats")
       }
-      val p = if (m.group(1).toLowerCase == "s3" && m.group(2).startsWith("s3://"))
-        s3aPath(m.group(2)) else m.group(2)
+      val p = if (m.group(1).toLowerCase == "s3" && path.startsWith("s3://"))
+        s3aPath(path) else path
       scala.util.matching.Regex.quoteReplacement(
-        s"INSERT OVERWRITE DIRECTORY '$p' USING $fmt")
+        s"INSERT OVERWRITE DIRECTORY '${lx.hold(p)}' USING $fmt")
     })
 
   /** s3:// → s3a:// (the Hadoop connector scheme). Credentials
@@ -816,7 +757,7 @@ object ChSqlParser {
     * [[ChColumnOp]]. ClickHouse's comma-chained multi-op ALTER is
     * refused (one op per statement keeps the swap atomic per op). */
   private def parseColumnOp(kind: String, rest0: String): ChColumnOp = {
-    if (splitTopLevel(rest0).length > 1) throw new UnsupportedOperationException(
+    if (topLevelSplit(rest0).length > 1) throw new UnsupportedOperationException(
       "one column operation per ALTER TABLE statement here — issue them sequentially")
     val rest = rest0.trim
     def stripIf(re: String, s: String): (Boolean, String) = {
@@ -891,7 +832,7 @@ object ChSqlParser {
     * UPDATE` and the lightweight `UPDATE … SET` spelling so the two
     * can never drift. */
   private def parseAssignments(setPart: String): Seq[(String, String)] =
-    splitTopLevel(setPart).map { a =>
+    topLevelSplit(setPart).map { a =>
       val m = """(?s)^\s*(`[^`]+`|[A-Za-z_]\w*)\s*=\s*(.*?)\s*$""".r.findFirstMatchIn(a)
         .getOrElse(throw new IllegalArgumentException(s"cannot parse assignment '$a'"))
       (m.group(1).stripPrefix("`").stripSuffix("`"), m.group(2))
@@ -1194,7 +1135,7 @@ object ChSqlParser {
           "OPTIMIZE … PARTITION: only the PARTITION '<value>' form executes here — " +
             "tuple(…)/parenthesized spellings would otherwise scope wrong; inline the value")
       val dedup = """(?is)\bDEDUPLICATE(\s+BY\s+(.*?))?\s*$""".r.findFirstMatchIn(tail2)
-        .map(m => Option(m.group(2)).map(g => splitTopLevel(g).map(_.trim)).getOrElse(Nil))
+        .map(m => Option(m.group(2)).map(g => topLevelSplit(g).map(_.trim)).getOrElse(Nil))
       Some(ChOptimizeCommand(table, dedup, partition))
     case _ => None
   }
@@ -1203,20 +1144,17 @@ object ChSqlParser {
     * string literals (assignment RHS may contain parenthesized
     * subqueries with their own WHERE). */
   private def splitAtTopLevelWhere(s: String): Option[(String, String)] = {
-    var depth = 0; var inStr = false; var i = 0
+    val code = ChLexer.blank(s)
+    var depth = 0; var i = 0
     def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') inStr = !inStr
-      else if (!inStr) {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && (c == 'w' || c == 'W') && i + 5 <= s.length &&
-                 s.substring(i, i + 5).equalsIgnoreCase("where") &&
-                 (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-                 (i + 5 == s.length || !isWordChar(s.charAt(i + 5))))
-          return Some((s.substring(0, i).trim, s.substring(i + 5).trim))
-      }
+    while (i < code.length) {
+      val c = code.charAt(i)
+      if (c == '(') depth += 1
+      else if (c == ')') depth -= 1
+      else if (depth == 0 && (c == 'w' || c == 'W') && code.regionMatches(true, i, "where", 0, 5) &&
+               (i == 0 || !isWordChar(code.charAt(i - 1))) &&
+               (i + 5 == code.length || !isWordChar(code.charAt(i + 5))))
+        return Some((s.substring(0, i).trim, s.substring(i + 5).trim))
       i += 1
     }
     None
@@ -1247,18 +1185,15 @@ object ChSqlParser {
     """(?is)^\s*CREATE\s+DICTIONARY\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.]+)\s*\(""".r
 
   /** Extract the balanced-paren body starting at `open` (which must
-    * index a '('), quote-aware; returns (inner text, close index). */
+    * index a '('), outside literals; returns (inner text, close index). */
   private def balancedParen(s: String, open: Int): (String, Int) = {
+    val code = ChLexer.blank(s)
     var depth = 0
     var i = open
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') inStr = !inStr
-      else if (!inStr) {
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) return (s.substring(open + 1, i), i) }
-      }
+    while (i < code.length) {
+      val c = code.charAt(i)
+      if (c == '(') depth += 1
+      else if (c == ')') { depth -= 1; if (depth == 0) return (s.substring(open + 1, i), i) }
       i += 1
     }
     throw new IllegalArgumentException("unbalanced parentheses in DDL")
@@ -1365,35 +1300,13 @@ object ChSqlParser {
   /** Engine text (name + optional args) of a CH CREATE statement. */
   private val EngineText = """(?is)\bENGINE\s*=\s*([A-Za-z]+(?:\([^)]*\))?)""".r
 
-  /** The FIRST `ENGINE = <Name>[(args)]` outside single-quoted /
-    * backtick-quoted payloads — a MergeTree CREATE whose COMMENT
-    * mentions 'ENGINE = Kafka' must not steer the Join/Kafka gates
-    * (a bare findFirstIn over the whole statement did). Returns the
+  /** The FIRST `ENGINE = <Name>[(args)]` outside literals, quoted
+    * names and comments — a MergeTree CREATE whose COMMENT mentions
+    * 'ENGINE = Kafka' must not steer the Join/Kafka gates. Returns the
     * engine text (name + optional args). */
-  private[plans] def engineOf(raw: String): Option[String] = {
-    var i = 0
-    while (i < raw.length) {
-      raw.charAt(i) match {
-        case '\'' =>
-          i += 1
-          while (i < raw.length && raw.charAt(i) != '\'') {
-            if (raw.charAt(i) == '\\' && i + 1 < raw.length) i += 1
-            i += 1
-          }
-          i += 1
-        case '`' =>
-          i += 1; while (i < raw.length && raw.charAt(i) != '`') i += 1; i += 1
-        case c if (c == 'E' || c == 'e') &&
-            (i == 0 || (!raw.charAt(i - 1).isLetterOrDigit && raw.charAt(i - 1) != '_')) =>
-          val m = EngineText.pattern.matcher(raw)
-          m.region(i, raw.length)
-          if (m.lookingAt()) return Some(m.group(1).trim)
-          i += 1
-        case _ => i += 1
-      }
-    }
-    None
-  }
+  private[plans] def engineOf(raw: String): Option[String] =
+    EngineText.findFirstMatchIn(ChLexer.blank(raw))
+      .map(m => raw.substring(m.start(1), m.end(1)).trim)
 
   /** Engine NAME (args stripped) from [[engineOf]], lowercased. */
   private[plans] def engineNameOf(raw: String): Option[String] =
@@ -1408,38 +1321,25 @@ object ChSqlParser {
       "(?is)" + k.replace(" ", "\\s+") + "(?![\\w])"))
 
   /** Split a CREATE tail (`ORDER BY k PARTITION BY p TTL …`) into its
-    * top-level clauses — paren- and quote-aware, so expression keys
-    * (`ORDER BY (a, cityHash64(b))`) stay whole. Keyword matching
-    * tolerates any whitespace between keyword words; the ORIGINAL
-    * text is scanned (no whitespace normalization — a quoted COMMENT
-    * payload keeps its literal spacing/newlines), and each returned
-    * clause BODY is whitespace-normalized OUTSIDE quotes only. */
+    * top-level clauses — paren-aware and blind to literals, quoted
+    * names and comments, so expression keys (`ORDER BY (a,
+    * cityHash64(b))`) stay whole and a keyword-looking word inside a
+    * COMMENT payload is never a clause. Keyword matching tolerates any
+    * whitespace between keyword words, and each returned clause BODY
+    * is single-spaced outside its literals, which keep their spacing. */
   private[graft] def splitEngineTail(tail: String): Map[String, String] = {
-    // EXPRESSION bodies read better single-spaced, but text inside
-    // single quotes is user payload and must survive verbatim
-    def normalizeOutsideQuotes(s: String): String = {
-      val sb = new StringBuilder(s.length)
-      var i = 0
-      var inQ = false
+    val code = ChLexer.blank(tail)
+    def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
+    def normalized(from: Int, to: Int): String = {
+      val sb = new StringBuilder(to - from)
       var pendingSpace = false
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (inQ) {
-          sb.append(c)
-          if (c == '\\' && i + 1 < s.length) { i += 1; sb.append(s.charAt(i)) }
-          else if (c == '\'') inQ = false
-        }
-        else if (c == '\'') {
-          if (pendingSpace && sb.nonEmpty) sb.append(' ')
-          pendingSpace = false; sb.append(c); inQ = true
-        }
-        else if (c.isWhitespace) pendingSpace = true
+      for (i <- from until to) {
+        if (code.charAt(i).isWhitespace) pendingSpace = true
         else {
           if (pendingSpace && sb.nonEmpty) sb.append(' ')
           pendingSpace = false
-          sb.append(c)
+          sb.append(tail.charAt(i))
         }
-        i += 1
       }
       sb.toString
     }
@@ -1447,35 +1347,16 @@ object ChSqlParser {
     val hits = scala.collection.mutable.ArrayBuffer.empty[Hit]
     var depth = 0
     var i = 0
-    while (i < tail.length) {
-      tail.charAt(i) match {
+    while (i < code.length) {
+      code.charAt(i) match {
         case '(' => depth += 1; i += 1
         case ')' => depth -= 1; i += 1
-        case '\'' =>
-          // backslash-escape-aware: \' inside the string must not
-          // close it (CH's default escaping), or a keyword-LOOKING
-          // word inside a COMMENT payload becomes a real clause
-          i += 1
-          while (i < tail.length && tail.charAt(i) != '\'') {
-            if (tail.charAt(i) == '\\' && i + 1 < tail.length) i += 1
-            i += 1
-          }
-          i += 1
-        case '`' =>
-          i += 1; while (i < tail.length && tail.charAt(i) != '`') i += 1; i += 1
-        case c if depth == 0 && c.isLetter &&
-            (i == 0 || (!tail.charAt(i - 1).isLetterOrDigit && tail.charAt(i - 1) != '_')) =>
-          EngineTailKwPatterns.collectFirst {
-            case (k, pat) if {
-              val m = pat.matcher(tail); m.region(i, tail.length).lookingAt()
-            } =>
-              val m = pat.matcher(tail); m.region(i, tail.length); m.lookingAt()
-              (k, m.end)
-          } match {
-            case Some((k, end)) => hits += Hit(k, i, end); i = end
-            case None =>
-              while (i < tail.length &&
-                (tail.charAt(i).isLetterOrDigit || tail.charAt(i) == '_')) i += 1
+        case c if depth == 0 && c.isLetter && (i == 0 || !isWordChar(code.charAt(i - 1))) =>
+          EngineTailKwPatterns.iterator
+            .map { case (k, pat) => (k, pat.matcher(code).region(i, code.length)) }
+            .find(_._2.lookingAt()) match {
+            case Some((k, m)) => hits += Hit(k, i, m.end); i = m.end
+            case None => while (i < code.length && isWordChar(code.charAt(i))) i += 1
           }
         case _ => i += 1
       }
@@ -1489,7 +1370,7 @@ object ChSqlParser {
         "ClickHouse rejects repeated clauses; merge them into one")
     hits.toSeq.zipWithIndex.map { case (h, idx) =>
       val end = if (idx + 1 < hits.length) hits(idx + 1).start else tail.length
-      h.kw -> normalizeOutsideQuotes(tail.substring(h.bodyStart, end).trim)
+      h.kw -> normalized(h.bodyStart, end)
     }.toMap
   }
 
@@ -1555,33 +1436,35 @@ object ChSqlParser {
       case None => ""
     }
 
+  // a Join engine survives both rewrites to interceptCommand →
+  // ChCreateJoinTableCommand
   private def rewriteChCreateTableAs(sql: String): String = sql match {
-    case _ if engineNameOf(sql).contains("join") =>
-      sql // survives to interceptCommand → ChCreateJoinTableCommand
-    case ChCreateTableAs(ifNot, name, tail, select) =>
-      if (engineNameOf(sql).contains("kafka"))
-        throw new UnsupportedOperationException(
-          "ENGINE = Kafka declares a streaming queue; drive it with graft.streaming.KafkaEngine")
-      val ine = if (ifNot == null) "" else "IF NOT EXISTS "
-      s"CREATE TABLE $ine$name USING parquet${partitionedByClause(tail)} AS $select"
+    case ChCreateTableAs(ifNot, name, tail, select) => engineNameOf(sql) match {
+      case Some("join") => sql
+      case Some("kafka") => throw new UnsupportedOperationException(
+        "ENGINE = Kafka declares a streaming queue; drive it with graft.streaming.KafkaEngine")
+      case _ =>
+        val ine = if (ifNot == null) "" else "IF NOT EXISTS "
+        s"CREATE TABLE $ine$name USING parquet${partitionedByClause(tail)} AS $select"
+    }
     case _ => sql
   }
 
   private def rewriteChCreateTable(sql: String): String = sql match {
-    case _ if engineNameOf(sql).contains("join") =>
-      sql // survives to interceptCommand → ChCreateJoinTableCommand
-    case ChCreateTable(ifNot, name, colsRaw, tail) =>
-      if (engineNameOf(sql).contains("kafka"))
-        throw new UnsupportedOperationException(
-          "ENGINE = Kafka declares a streaming queue, not a batch table; drive it with " +
-            "graft.streaming.KafkaEngine.fromDdl (readStream source + MV chain — " +
-            "file-directory stand-in locally, kafka connector format on a cluster)")
-      val cols = chColumnsToSpark(colsRaw).map { case (n, t) => s"$n $t" }
-      // only bare columns translate; expression keys (toYYYYMM…)
-      // need the MergeTreeWrite path and strip here
-      val partitioned = partitionedByClause(tail)
-      val ine = if (ifNot == null) "" else "IF NOT EXISTS "
-      s"CREATE TABLE $ine$name (${cols.mkString(", ")}) USING parquet$partitioned"
+    case ChCreateTable(ifNot, name, colsRaw, tail) => engineNameOf(sql) match {
+      case Some("join") => sql
+      case Some("kafka") => throw new UnsupportedOperationException(
+        "ENGINE = Kafka declares a streaming queue, not a batch table; drive it with " +
+          "graft.streaming.KafkaEngine.fromDdl (readStream source + MV chain — " +
+          "file-directory stand-in locally, kafka connector format on a cluster)")
+      case _ =>
+        val cols = chColumnsToSpark(colsRaw).map { case (n, t) => s"$n $t" }
+        // only bare columns translate; expression keys (toYYYYMM…)
+        // need the MergeTreeWrite path and strip here
+        val partitioned = partitionedByClause(tail)
+        val ine = if (ifNot == null) "" else "IF NOT EXISTS "
+        s"CREATE TABLE $ine$name (${cols.mkString(", ")}) USING parquet$partitioned"
+    }
     case _ => sql
   }
 
@@ -1651,32 +1534,18 @@ object ChSqlParser {
     }
   }
 
-  /** Split on top-level commas (paren- and quote-aware; inside a
-    * single-quoted string, backslash escapes — CH's default string
-    * escaping — are skipped so an escaped quote can't end the scan). */
+  /** Split on commas outside parentheses, literals, quoted names and
+    * comments; blank pieces drop. */
   private[plans] def topLevelSplit(s: String): Seq[String] = {
+    val code = ChLexer.blank(s)
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var depth = 0
     var start = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case '\'' =>
-          i += 1
-          while (i < s.length && s.charAt(i) != '\'') {
-            if (s.charAt(i) == '\\' && i + 1 < s.length) i += 1
-            i += 1
-          }
-        case '`' =>
-          i += 1
-          while (i < s.length && s.charAt(i) != '`') i += 1
-        case ',' if depth == 0 =>
-          out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
+    for (i <- 0 until code.length) code.charAt(i) match {
+      case '(' => depth += 1
+      case ')' => depth -= 1
+      case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
+      case _ =>
     }
     out += s.substring(start)
     out.filter(_.trim.nonEmpty).toSeq
@@ -1709,9 +1578,6 @@ object ChSqlParser {
           if (depth == 0) { args += sql.substring(argStart, i).trim }
         case ',' if depth == 1 =>
           args += sql.substring(argStart, i).trim; argStart = i + 1
-        case '\'' => // skip string literal
-          i += 1
-          while (i < sql.length && sql.charAt(i) != '\'') i += 1
         case _ =>
       }
       i += 1
@@ -1753,96 +1619,39 @@ object ChSqlParser {
   /** ClickHouse scalar WITH: `WITH <expr> AS <ident>, … SELECT …`
     * names a per-query constant (not a CTE — those parenthesize a
     * SELECT). Spark has no equivalent form, so each ident substitutes
-    * as `(expr)` throughout the SELECT body — word-bounded and
-    * outside string literals. Applies ONLY when no definition
-    * contains a SELECT: real CTEs (and the unsupported scalar-
-    * subquery WITH) pass through untouched and parse on their own
-    * merits, never silently wrong. Caveat: a BARE ident as a select
-    * item surfaces under the substituted expression's derived name,
-    * not the ident (ClickHouse keeps the ident) — alias explicitly
-    * when the output name matters, as migrated queries do. */
+    * as `(expr)` throughout the SELECT body, word-bounded. Applies
+    * ONLY when no definition contains a SELECT: real CTEs (and the
+    * unsupported scalar-subquery WITH) pass through untouched and
+    * parse on their own merits, never silently wrong. Caveat: a BARE
+    * ident as a select item surfaces under the substituted
+    * expression's derived name, not the ident (ClickHouse keeps the
+    * ident) — alias explicitly when the output name matters, as
+    * migrated queries do. */
   private val WithConstant = """(?is)^\s*WITH\s+(.+?)\s+(SELECT\b.*)$""".r
 
   private def rewriteWithConstants(sql: String): String = sql match {
     case WithConstant(defs, rest) if !defs.toUpperCase.contains("SELECT") =>
-      val pairs = splitTopLevel(defs).map {
+      val pairs = topLevelSplit(defs).map {
         case ArrayJoinPair(e, a) => Some((e.trim, a))
         case _                   => None
       }
       if (pairs.exists(_.isEmpty)) sql
       else pairs.flatten.foldLeft(rest) { case (acc, (expr, ident)) =>
-        val pat = ("""\b""" + ident + """\b""").r
-        acc.split("'", -1).zipWithIndex.map { case (seg, i) =>
-          if (i % 2 == 0)
-            pat.replaceAllIn(seg, scala.util.matching.Regex.quoteReplacement(s"($expr)"))
-          else seg
-        }.mkString("'")
+        ("""\b""" + ident + """\b""").r
+          .replaceAllIn(acc, scala.util.matching.Regex.quoteReplacement(s"($expr)"))
       }
     case _ => sql
   }
 
-  /** Strip an end-anchored trailing clause (FORMAT / SETTINGS / INTO
-    * OUTFILE) only when the match starts OUTSIDE a string literal —
-    * a literal ending in `… SETTINGS a = 1'` would otherwise lose its
-    * tail including the closing quote. Quote parity before the match
-    * start decides: even = code, odd = inside a literal. The latest
-    * even-parity match wins (the clause is end-anchored, so at most
-    * one real occurrence exists). */
-  private def stripTrailingClause(sql: String, re: scala.util.matching.Regex): String =
-    re.findAllMatchIn(sql).toSeq.reverseIterator
-      .find(m => sql.substring(0, m.start).count(_ == '\'') % 2 == 0)
-      .map(m => sql.substring(0, m.start))
-      .getOrElse(sql)
-
-  /** Apply the GLOBAL strip on the segments OUTSIDE single-quoted
-    * string literals (split preserves quote parity: even indexes are
-    * code, odd are literal bodies). */
-  /** Apply `f` to the segments of sql OUTSIDE any quoted literal —
-    * single- and double-quoted strings (Spark's default treats both
-    * as strings) and backtick identifiers, with backslash escapes
-    * respected inside string quotes. The one quote-skipping
-    * implementation every outside-literal rewrite shares. */
-  private def mapOutsideQuotes(sql: String)(f: String => String): String = {
-    val sb = new java.lang.StringBuilder(sql.length + 16)
-    val seg = new java.lang.StringBuilder
-    var i = 0
-    def flush(): Unit = { sb.append(f(seg.toString)); seg.setLength(0) }
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        flush()
-        sb.append(c); i += 1
-        var closed = false
-        while (i < sql.length && !closed) {
-          val d = sql.charAt(i)
-          sb.append(d)
-          if (d == '\\' && c != '`' && i + 1 < sql.length) { i += 1; sb.append(sql.charAt(i)) }
-          else if (d == c) closed = true
-          i += 1
-        }
-      } else { seg.append(c); i += 1 }
-    }
-    flush()
-    sb.toString
-  }
-
-  private def stripGlobalHints(sql: String): String =
-    mapOutsideQuotes(sql)(GlobalHint.replaceAllIn(_, ""))
-
   /** ClickHouse positional tuple access `t.1` → `.col1` (the default
     * field names of tuple()/`(a, b)` structs). Guarded to follow a
     * letter/underscore/`)`/`]` so decimal literals (digit before the
-    * dot) never match, and applied outside quoted literals only —
-    * 'file.1', "file.1" and `a.1` (incl. file()-rewritten backtick
-    * paths) stay text. */
+    * dot) never match. Whole chains (`.2.1`) match at once — each
+    * index becomes a default-named struct field step. */
   private val TupleDotAccess = """(?<=[A-Za-z_)\]])((?:\.\d+)+)(?!\d)""".r
   private def rewriteTupleDot(sql: String): String =
-    mapOutsideQuotes(sql) { p =>
-      // whole chains (`.2.1`) match at once — each index becomes a
-      // default-named struct field step
-      TupleDotAccess.replaceAllIn(p, m =>
-        m.group(1).split("\\.").filter(_.nonEmpty).map("col" + _).mkString(".", ".", ""))
-    }
+    TupleDotAccess.replaceAllIn(sql, m =>
+      m.group(1).split("\\.").filter(_.nonEmpty).map("col" + _).mkString(".", ".", ""))
 
   /** ClickHouse named query parameters — `{start_date:String}`,
     * `{n:UInt64}`, `{xs:Array(String)}` (the corpus' client-side
@@ -2164,7 +1973,7 @@ object ChSqlParser {
     * int | date | ts. Date-shaped literals are validated
     * (`yyyy-MM-dd[ HH:mm:ss[.f…]]`) so a typo refuses at parse via
     * pass-through rather than landing a NULL axis. */
-  private def fillBound(raw: String): Option[(String, String)] = {
+  private def fillBound(raw: String, lx: ChLexer.Masked): Option[(String, String)] = {
     val t = raw.trim
     val DateLit = """^\d{4}-\d{2}-\d{2}$""".r
     val TsLit = """^\d{4}-\d{2}-\d{2}[ T]\d{2}:\d{2}:\d{2}(?:\.\d+)?$""".r
@@ -2182,11 +1991,11 @@ object ChSqlParser {
       val AnsiTs = """(?is)^TIMESTAMP\s+'([^']*)'$""".r
       val Bare = """(?s)^'([^']*)'$""".r
       t match {
-        case ToDateFn(l)     => lit(l, wantTs = false)
-        case ToDateTimeFn(l) => lit(l, wantTs = true)
-        case AnsiDate(l)     => lit(l, wantTs = false)
-        case AnsiTs(l)       => lit(l, wantTs = true)
-        case Bare(l)         => lit(l, wantTs = l.contains(":"))
+        case ToDateFn(l)     => lit(lx.body(l), wantTs = false)
+        case ToDateTimeFn(l) => lit(lx.body(l), wantTs = true)
+        case AnsiDate(l)     => lit(lx.body(l), wantTs = false)
+        case AnsiTs(l)       => lit(lx.body(l), wantTs = true)
+        case Bare(l)         => val v = lx.body(l); lit(v, wantTs = v.contains(":"))
         case _               => None
       }
     }
@@ -2312,7 +2121,6 @@ object ChSqlParser {
       scala.util.matching.Regex.quoteReplacement(rewritten.getOrElse(m.matched))
     })
 
-  /** Index of the top-level FROM keyword (outside parens/strings). */
   /** PASTE JOIN — CH zips two result sets row-by-row in BLOCK order,
     * which a distributed engine does not define. The engine EXECUTES
     * the deterministic form: both sides are parenthesized subqueries
@@ -2321,8 +2129,8 @@ object ChSqlParser {
     * sides zip on it — an inner join, so the result truncates to the
     * shorter side. Any other shape (bare tables, no ORDER BY, ordinal
     * ORDER BY, which a window cannot re-read) refuses with this
-    * contract in the message. Paren- and quote-aware throughout;
-    * recursion handles several PASTE JOINs in one statement.
+    * contract in the message. Paren-aware throughout; recursion
+    * handles several PASTE JOINs in one statement.
     *
     * A CHAIN — `(A) PASTE JOIN (B) PASTE JOIN (C) …` — is consumed
     * in ONE pass into a single multi-way zip: every side gets its
@@ -2333,26 +2141,11 @@ object ChSqlParser {
     * inner join reproduces), without the intermediate zip result
     * needing a textual ORDER BY of its own. */
   private def rewritePasteJoin(sql: String): String = {
-    val m = """(?i)\bPASTE\s+JOIN\b""".r.findAllMatchIn(sql)
-      .find(mm => !insideStringLiteral(sql, mm.start)).getOrElse(return sql)
+    val m = """(?i)\bPASTE\s+JOIN\b""".r.findFirstMatchIn(sql).getOrElse(return sql)
     def refuse(why: String): Nothing = throw new UnsupportedOperationException(
       "PASTE JOIN zips rows by physical block order, which a distributed engine does " +
         "not define. Executable deterministic form: (SELECT … ORDER BY …) PASTE JOIN " +
         s"(SELECT … ORDER BY …) — row_number over each side's ORDER BY zips the rows. $why")
-    // one forward pass marks every position inside a '…'/`…` literal,
-    // so the boundary scans below never count a quoted paren (a
-    // ':-)' in a SELECT literal must not unbalance the subquery)
-    val inStr = new Array[Boolean](sql.length)
-    locally {
-      var q: Char = 0
-      var p = 0
-      while (p < sql.length) {
-        val c = sql.charAt(p)
-        if (q == 0) { if (c == '\'' || c == '`') { q = c; inStr(p) = true } }
-        else { inStr(p) = true; if (c == q) q = 0 }
-        p += 1
-      }
-    }
     var i = m.start - 1
     while (i >= 0 && sql.charAt(i).isWhitespace) i -= 1
     if (i < 0 || sql.charAt(i) != ')') refuse("(left side is not a parenthesized subquery)")
@@ -2361,10 +2154,8 @@ object ChSqlParser {
       var depth = 0; var k = leftEnd; var found = -1
       while (k >= 0 && found < 0) {
         val c = sql.charAt(k)
-        if (!inStr(k)) {
-          if (c == ')') depth += 1
-          else if (c == '(') { depth -= 1; if (depth == 0) found = k }
-        }
+        if (c == ')') depth += 1
+        else if (c == '(') { depth -= 1; if (depth == 0) found = k }
         k -= 1
       }
       if (found < 0) refuse("(unbalanced parentheses before PASTE JOIN)")
@@ -2377,10 +2168,8 @@ object ChSqlParser {
       var depth = 0; var k = j; var found = -1
       while (k < sql.length && found < 0) {
         val c = sql.charAt(k)
-        if (!inStr(k)) {
-          if (c == '(') depth += 1
-          else if (c == ')') { depth -= 1; if (depth == 0) found = k }
-        }
+        if (c == '(') depth += 1
+        else if (c == ')') { depth -= 1; if (depth == 0) found = k }
         k += 1
       }
       if (found < 0) refuse("(unbalanced parentheses after PASTE JOIN)")
@@ -2397,7 +2186,7 @@ object ChSqlParser {
     while (more) {
       var p = chainEnd + 1
       while (p < sql.length && sql.charAt(p).isWhitespace) p += 1
-      more = p < sql.length && !inStr(p) &&
+      more = p < sql.length &&
         sql.regionMatches(true, p, "PASTE", 0, 5) &&
         (p + 5 >= sql.length || !sql.charAt(p + 5).isLetterOrDigit)
       if (more) {
@@ -2418,8 +2207,6 @@ object ChSqlParser {
       var depth = 0; var p = 0; var found = -1
       while (p < s.length) {
         s.charAt(p) match {
-          case '\'' => p += 1; while (p < s.length && s.charAt(p) != '\'') p += 1
-          case '`'  => p += 1; while (p < s.length && s.charAt(p) != '`') p += 1
           case '('  => depth += 1
           case ')'  => depth -= 1
           case 'o' | 'O' if depth == 0 &&
@@ -2443,7 +2230,6 @@ object ChSqlParser {
       var depth = 0; var p = 0; var cut = -1
       while (p < ob.length && cut < 0) {
         ob.charAt(p) match {
-          case '\'' => p += 1; while (p < ob.length && ob.charAt(p) != '\'') p += 1
           case '('  => depth += 1
           case ')'  => depth -= 1
           case c if depth == 0 && (c == 'l' || c == 'L' || c == 'o' || c == 'O') &&
@@ -2487,12 +2273,10 @@ object ChSqlParser {
   private val ColumnsSel =
     """(?is)\bCOLUMNS\s*\(\s*'([^']*)'\s*\)(?:\s+APPLY\s*\(\s*([A-Za-z_]\w*)\s*\))?""".r
 
-  private def rewriteColumnMatchers(sql: String): String = {
-    // ALL matches considered, not just the first — a literal mention
-    // before a real matcher must not mask it
-    val hasStar = StarApply.findAllMatchIn(sql).exists(m => !insideStringLiteral(sql, m.start))
-    val hasCols = ColumnsSel.findAllMatchIn(sql).exists(m => !insideStringLiteral(sql, m.start))
-    if (!hasStar && !hasCols) return sql
+  private def rewriteColumnMatchers(sql: String, lx: ChLexer.Masked): String = {
+    def hasMatcher(s: String) =
+      StarApply.findFirstIn(s).isDefined || ColumnsSel.findFirstIn(s).isDefined
+    if (!hasMatcher(sql)) return sql
     def refuse(why: String): Nothing = throw new UnsupportedOperationException(
       "* APPLY(fn) / COLUMNS('re') expand from the FROM table's schema at parse time; " +
         s"the executable subset is SELECT … FROM <one table/view>. $why — " +
@@ -2517,59 +2301,46 @@ object ChSqlParser {
     // a matcher AFTER the select list (subquery in WHERE, ORDER BY)
     // would survive the head-only rewrite and die as a raw parse
     // error — refuse with the guidance instead
-    if (StarApply.findAllMatchIn(tail).exists(m => !insideStringLiteral(tail, m.start)) ||
-        ColumnsSel.findAllMatchIn(tail).exists(m => !insideStringLiteral(tail, m.start)))
-      refuse("(a matcher appears after the top-level select list)")
+    if (hasMatcher(tail)) refuse("(a matcher appears after the top-level select list)")
     val spark = org.apache.spark.sql.SparkSession.active
     val fields =
       try spark.table(target).schema.fieldNames.toSeq
       catch { case _: Exception => refuse(s"(cannot resolve table '$target')") }
-    head = StarApply.replaceAllIn(head, m => {
-      if (insideStringLiteral(head, m.start))
-        scala.util.matching.Regex.quoteReplacement(m.matched)
-      else {
-        val fn = m.group(1)
-        scala.util.matching.Regex.quoteReplacement(
-          fields.map(c => s"$fn(`$c`) AS `$fn($c)`").mkString(", "))
-      }
-    })
+    def quoted(name: String) = s"`${lx.hold(name)}`"
+    def applied(fn: String, c: String) = s"$fn(${quoted(c)}) AS ${quoted(s"$fn($c)")}"
+    head = StarApply.replaceAllIn(head, m =>
+      scala.util.matching.Regex.quoteReplacement(fields.map(applied(m.group(1), _)).mkString(", ")))
     head = ColumnsSel.replaceAllIn(head, m => {
-      if (insideStringLiteral(head, m.start))
-        scala.util.matching.Regex.quoteReplacement(m.matched)
-      else {
+      val re = lx.body(m.group(1))
       val pat =
-        try java.util.regex.Pattern.compile(m.group(1))
+        try java.util.regex.Pattern.compile(re)
         catch { case e: java.util.regex.PatternSyntaxException =>
-          refuse(s"(COLUMNS regex '${m.group(1)}' does not compile: ${e.getDescription})") }
+          refuse(s"(COLUMNS regex '$re' does not compile: ${e.getDescription})") }
       val matched = fields.filter(c => pat.matcher(c).find())
-      if (matched.isEmpty) refuse(s"(COLUMNS('${m.group(1)}') matches no column of '$target')")
+      if (matched.isEmpty) refuse(s"(COLUMNS('$re') matches no column of '$target')")
       val expansion = Option(m.group(2)) match {
-        case Some(fn) => matched.map(c => s"$fn(`$c`) AS `$fn($c)`").mkString(", ")
-        case None => matched.map(c => s"`$c`").mkString(", ")
+        case Some(fn) => matched.map(applied(fn, _)).mkString(", ")
+        case None => matched.map(quoted).mkString(", ")
       }
       scala.util.matching.Regex.quoteReplacement(expansion)
-      }
     })
     head + tail
   }
 
+  /** Index of the top-level FROM keyword (outside parens) of masked
+    * text, or -1. */
   private def topLevelFromIndex(s: String): Int = {
     var depth = 0
-    var inStr = false
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (c == '\'') inStr = !inStr
-      else if (!inStr) {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && (c == 'f' || c == 'F') && i + 4 <= s.length &&
-                 s.substring(i, i + 4).equalsIgnoreCase("from") &&
-                 // '_' is a word char: `id_from` must not read as FROM
-                 (i == 0 || (!Character.isLetterOrDigit(s.charAt(i - 1)) && s.charAt(i - 1) != '_')) &&
-                 (i + 4 == s.length || (!Character.isLetterOrDigit(s.charAt(i + 4)) && s.charAt(i + 4) != '_')))
-          return i
-      }
+      if (c == '(') depth += 1
+      else if (c == ')') depth -= 1
+      else if (depth == 0 && (c == 'f' || c == 'F') && s.regionMatches(true, i, "from", 0, 4) &&
+               // '_' is a word char: `id_from` must not read as FROM
+               (i == 0 || (!Character.isLetterOrDigit(s.charAt(i - 1)) && s.charAt(i - 1) != '_')) &&
+               (i + 4 == s.length || (!Character.isLetterOrDigit(s.charAt(i + 4)) && s.charAt(i + 4) != '_')))
+        return i
       i += 1
     }
     -1
@@ -2624,7 +2395,8 @@ object ChSqlParser {
     * when tiny single-host runs pass. Ordering ties by the inner fill
     * keys makes the recurrence base the (outer, inner…)-max row, CH's
     * previous-OUTPUT-row semantics, deterministically. */
-  private def rewriteWithFill(sql: String, winTiebreak: Seq[String] = Nil): String = sql match {
+  private def rewriteWithFill(sql: String, lx: ChLexer.Masked,
+                              winTiebreak: Seq[String] = Nil): String = sql match {
     case WithFill(body, prefixRaw, fillCol, dirOrNull, fromRaw, toRaw, stepOrNull, staleOrNull, interpOrNull) =>
       // grouped form: plain named sort keys BEFORE the fill column —
       // the fill restarts per distinct prefix value
@@ -2712,7 +2484,7 @@ object ChSqlParser {
           blStep = s.get
         }
       } else if (fromOnly || toOnly) {
-        val b = fillBound(if (fromOnly) fromRaw else toRaw)
+        val b = fillBound(if (fromOnly) fromRaw else toRaw, lx)
         if (b.isEmpty) return sql
         kind = b.get._2
         if (fromOnly) from = b.get._1 else to = b.get._1
@@ -2727,7 +2499,7 @@ object ChSqlParser {
           step = stepOpt.get
         }
       } else {
-        val (fromB, toB) = (fillBound(fromRaw), fillBound(toRaw))
+        val (fromB, toB) = (fillBound(fromRaw, lx), fillBound(toRaw, lx))
         if (fromB.isEmpty || toB.isEmpty || fromB.get._2 != toB.get._2) return sql
         from = fromB.get._1; kind = fromB.get._2
         to = toB.get._1
@@ -2761,7 +2533,7 @@ object ChSqlParser {
       val fromIdx = topLevelFromIndex(body)
       if (fromIdx < 0) sql
       else {
-        val names = splitTopLevel(body.substring(0, fromIdx)).map {
+        val names = topLevelSplit(body.substring(0, fromIdx)).map {
           case AliasedItem(a) => Some(a)
           case BareItem(a)    => Some(a)
           case _              => None
@@ -3043,7 +2815,7 @@ object ChSqlParser {
     val fromIdx = topLevelFromIndex(body)
     if (fromIdx < 0) None
     else {
-      val names = splitTopLevel(body.substring(0, fromIdx)).map {
+      val names = topLevelSplit(body.substring(0, fromIdx)).map {
         case AliasedItem(a) => Some(a)
         case BareItem(a)    => Some(a)
         case _              => None
@@ -3075,11 +2847,11 @@ object ChSqlParser {
   private val MultiFillItem = """(?is)^(\w+)\s+WITH\s+FILL\b(.*)$""".r
   private val MultiPlainItem = """(?s)^(\w+)$""".r
 
-  private def rewriteMultiFill(sql: String): String = sql match {
+  private def rewriteMultiFill(sql: String, lx: ChLexer.Masked): String = sql match {
     case MultiFillOuter(body, orderTail, interpOrNull) =>
       // fast path: fewer than two WITH FILL keys → not this form
       if ("""(?i)WITH\s+FILL""".r.findAllMatchIn(orderTail).size < 2) return sql
-      val items = splitTopLevel(orderTail).map(_.trim)
+      val items = topLevelSplit(orderTail).map(_.trim)
       // plain named keys first, then only fill items; anything else
       // (ASC/DESC modifiers, expression keys) refuses by pass-through
       val (plainItems, rest) = items.span(MultiPlainItem.findFirstIn(_).isDefined)
@@ -3112,7 +2884,7 @@ object ChSqlParser {
         // inner fill keys so the carry/recurrence base is the
         // (outer, inner…)-max row (CH's previous-output-row), not
         // whichever row the partitioning happened to order last
-        val rw = rewriteWithFill(stage, winTiebreak = fills.drop(i + 1).map(_._1))
+        val rw = rewriteWithFill(stage, lx, winTiebreak = fills.drop(i + 1).map(_._1))
         if (rw == stage) return sql
         current = rw
       }
@@ -3140,22 +2912,17 @@ object ChSqlParser {
 
   private def rewriteQualify(sql: String): String =
     QualifyClause.findFirstMatchIn(sql).flatMap { m =>
-      // quote parity at the keyword: odd = the match strays into a
-      // string literal, leave the text alone
-      if (sql.substring(0, m.end(2)).count(_ == '\'') % 2 != 0) None
+      val distinct = Option(m.group(1)).map(_ => "DISTINCT ").getOrElse("")
+      val head     = "SELECT " + m.group(2)
+      val fromIdx  = topLevelFromIndex(head)
+      if (fromIdx < 0) None
       else {
-        val distinct = Option(m.group(1)).map(_ => "DISTINCT ").getOrElse("")
-        val head     = "SELECT " + m.group(2)
-        val fromIdx  = topLevelFromIndex(head)
-        if (fromIdx < 0) None
-        else {
-          val pred = m.group(3)
-          val ord  = Option(m.group(4)).getOrElse("")
-          val lim  = Option(m.group(5)).getOrElse("")
-          val injected =
-            head.substring(0, fromIdx).trim + s", ($pred) AS gr_qf__ " + head.substring(fromIdx)
-          Some(s"SELECT $distinct* EXCEPT (gr_qf__) FROM ($injected) WHERE gr_qf__$ord$lim")
-        }
+        val pred = m.group(3)
+        val ord  = Option(m.group(4)).getOrElse("")
+        val lim  = Option(m.group(5)).getOrElse("")
+        val injected =
+          head.substring(0, fromIdx).trim + s", ($pred) AS gr_qf__ " + head.substring(fromIdx)
+        Some(s"SELECT $distinct* EXCEPT (gr_qf__) FROM ($injected) WHERE gr_qf__$ord$lim")
       }
     }.getOrElse(sql)
 
@@ -3176,7 +2943,7 @@ object ChSqlParser {
 
   private def rewriteNonNegDeriv(sql: String): String =
     NonNegDeriv.replaceAllIn(sql, m => {
-      val parts = splitTopLevel(m.group(1)).map(_.trim)
+      val parts = topLevelSplit(m.group(1)).map(_.trim)
       val over  = m.group(2)
       val scale = parts.drop(2) match {
         case Seq(IntervalArg(n, unit)) => (n.toLong * IntervalSeconds(unit.toLowerCase)).toString
@@ -3193,25 +2960,6 @@ object ChSqlParser {
           s" / nullif((unix_micros(CAST($tx AS TIMESTAMP)) - lag(unix_micros(CAST($tx AS TIMESTAMP))) OVER $over) / 1000000.0D, CAST(0 AS DOUBLE)))")
     })
 
-  /** Split on commas not nested inside parentheses. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out   = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur   = new StringBuilder
-    var depth = 0
-    var inStr = false
-    s.foreach { c =>
-      if (c == '\'') inStr = !inStr
-      if (!inStr) {
-        if (c == '(') depth += 1
-        if (c == ')') depth -= 1
-      }
-      if (c == ',' && depth == 0 && !inStr) { out += cur.toString; cur.clear() }
-      else cur += c
-    }
-    out += cur.toString
-    out.toSeq
-  }
-
   private def rewriteArrayJoin(sql: String): String =
     ArrayJoinClause.replaceAllIn(sql, m => {
       val (table, left) = (m.group(1), m.group(2) != null)
@@ -3222,7 +2970,7 @@ object ChSqlParser {
       // this way too). Alias-less EXPRESSIONS (CH names the output
       // after the expression text — no Spark analog) leave the whole
       // clause untouched → loud parse failure, never silently wrong.
-      val classified = splitTopLevel(m.group(3)).map(_.trim).map {
+      val classified = topLevelSplit(m.group(3)).map(_.trim).map {
         case ArrayJoinPair(e, a) => Some((e.trim, a, false))
         case BareItem(n)         => Some((n, n, true))
         case _                   => None
@@ -3263,14 +3011,28 @@ object ChSqlParser {
       }
     })
 
+  /** ClickHouse dialect text → Spark SQL: the passes below run over
+    * [[ChLexer.mask]]'s text and the result is unmasked, so literals,
+    * quoted names and comments come back byte for byte. */
   def rewriteParametric(sql: String): String = {
+    // ANN probe over a vector_similarity-indexed table (round 19):
+    // `SELECT … FROM t ORDER BY cosineDistance(col, [q…]) LIMIT k`
+    // rewrites onto the cell-pruned IVF layout; the emitted SQL keeps
+    // the [vector] literal and flows through the rewrites below like
+    // any dialect text. Non-indexed / stale / non-matching shapes
+    // fall through untouched — the exact scan.
+    val lx = ChLexer.mask(VectorIndex.probeRewrite(sql).getOrElse(sql))
+    lx.unmask(rewriteCode(lx))
+  }
+
+  private def rewriteCode(lx: ChLexer.Masked): String = {
     // `ON CLUSTER name` on DDL strips — on a single engine the
     // statement IS cluster-wide. Guarded three ways so a join
     // predicate on a column named `cluster` can't be eaten: only on
     // DDL-verb statements, only the first occurrence, and only when
     // it appears before any SELECT (i.e. in the DDL head, not inside
     // a CTAS body).
-    var sql0 = sql
+    var sql0 = lx.text
     if ("""(?is)^\s*(CREATE|DROP|ALTER|RENAME|TRUNCATE|OPTIMIZE|EXCHANGE|SYSTEM)\b""".r
           .findFirstIn(sql0).isDefined)
       """(?i)\s+ON\s+CLUSTER\s+(?:'[^']*'|`[^`]+`|[\w-]+)""".r.findFirstMatchIn(sql0).foreach { m =>
@@ -3282,17 +3044,10 @@ object ChSqlParser {
     // would mangle its type names and clause parens
     if (CreateDictionary.findFirstIn(sql0).isDefined ||
         DropDictionary.findFirstIn(sql0).isDefined) return sql0
-    // ANN probe over a vector_similarity-indexed table (round 19):
-    // `SELECT … FROM t ORDER BY cosineDistance(col, [q…]) LIMIT k`
-    // rewrites onto the cell-pruned IVF layout; the emitted SQL keeps
-    // the [vector] literal and flows through the rewrites below like
-    // any dialect text. Non-indexed / stale / non-matching shapes
-    // fall through untouched — the exact scan.
-    VectorIndex.probeRewrite(sql0).foreach(r => sql0 = r)
     // client-side trailing clauses unwind first (right to left), so
     // the end-anchored rewrites below (LIMIT BY, WITH FILL) still see
     // their clause at the end of the text
-    var out = stripTrailingClause(sql0, FormatClause)
+    var out = FormatClause.replaceFirstIn(sql0, "")
     // Any OUTFILE tail still present here escaped interceptOutfile —
     // an unsupported statement shape (e.g. CREATE TABLE … AS SELECT …
     // INTO OUTFILE). The clause used to strip silently (query ran, no
@@ -3302,7 +3057,7 @@ object ChSqlParser {
         "INTO OUTFILE executes only as a top-level SELECT/WITH statement " +
           "(parenthesized prefixes included): write the export as its own " +
           "`SELECT … INTO OUTFILE 'path' [FORMAT f]` statement")
-    out = stripTrailingClause(out, SettingsClause)
+    out = SettingsClause.replaceFirstIn(out, "")
     out = rewriteChCreateTable(out)
     out = rewriteChCreateTableAs(out)
     out = ChCreateMatView.replaceAllIn(out, m => {
@@ -3336,7 +3091,7 @@ object ChSqlParser {
     // Bounded frames keep failing loudly (their CH semantics differ).
     out = """(?is)\b((?:leadInFrame|lagInFrame)\s*\((?:[^()]|\([^()]*\))*\)\s+OVER\s*\([^()]*?)\s+ROWS\s+BETWEEN\s+UNBOUNDED\s+PRECEDING\s+AND\s+UNBOUNDED\s+FOLLOWING\s*\)""".r
       .replaceAllIn(out, m => scala.util.matching.Regex.quoteReplacement(s"${m.group(1)})"))
-    out = rewriteColumnMatchers(out)
+    out = rewriteColumnMatchers(out, lx)
     // ALTER TABLE … DELETE/UPDATE and OPTIMIZE TABLE execute — they
     // become RunnableCommands in interceptCommand (called by
     // parsePlan on the rewritten text), not string rewrites.
@@ -3368,23 +3123,22 @@ object ChSqlParser {
     out = QuotedDateAdd.replaceAllIn(out, "graft_dateAdd('")
     out = QuotedDateSub.replaceAllIn(out, "graft_dateSub('")
     out = BareCount.replaceAllIn(out, "count(*)")
-    out = rewriteGenerateRandom(out)
-    out = rewriteNullTableFn(out)
+    out = rewriteGenerateRandom(out, lx)
+    out = rewriteNullTableFn(out, lx)
     RemoteTableFn.findFirstMatchIn(out).foreach { m =>
-      if (!insideStringLiteral(out, m.start))
-        throw new UnsupportedOperationException(
-          s"${m.group(1)}() addresses a different ClickHouse server and needs live egress; " +
-            "land the remote table locally (file()/s3()/url()) and read it directly")
+      throw new UnsupportedOperationException(
+        s"${m.group(1)}() addresses a different ClickHouse server and needs live egress; " +
+          "land the remote table locally (file()/s3()/url()) and read it directly")
     }
-    out = rewriteMergeTableFn(out)
-    out = rewriteClusterFn(out)
-    out = rewriteInsertFileFn(out)
+    out = rewriteMergeTableFn(out, lx)
+    out = rewriteClusterFn(out, lx)
+    out = rewriteInsertFileFn(out, lx)
     FileTableFnLong.findFirstMatchIn(out).foreach { m =>
       throw new UnsupportedOperationException(
         s"${m.group(1)}() with more than (path, format) arguments is not modeled: " +
           "pass credentials via Hadoop conf and explicit schemas via graft.sources.Formats")
     }
-    out = rewriteFileTableFn(out)
+    out = rewriteFileTableFn(out, lx)
     out = BareStarExcept.replaceAllIn(out, m =>
       scala.util.matching.Regex.quoteReplacement(s"* EXCEPT (${m.group(1)})"))
     out = rewriteStarReplace(out)
@@ -3393,7 +3147,7 @@ object ChSqlParser {
     out = PrewhereCombined.replaceAllIn(out, m =>
       scala.util.matching.Regex.quoteReplacement(s"WHERE (${m.group(1)}) AND "))
     out = Prewhere.replaceAllIn(out, "WHERE")
-    out = stripGlobalHints(out)
+    out = GlobalHint.replaceAllIn(out, "")
     out = rewriteTupleDot(out)
     out = NamedParam.replaceAllIn(out, m =>
       scala.util.matching.Regex.quoteReplacement(s":${m.group(1)}"))
@@ -3402,8 +3156,8 @@ object ChSqlParser {
       scala.util.matching.Regex.quoteReplacement(s"FROM ${m.group(1)}_final"))
     out = rewriteArrayJoin(out)
     out = rewriteAsofJoin(out)
-    out = rewriteMultiFill(out)
-    out = rewriteWithFill(out)
+    out = rewriteMultiFill(out, lx)
+    out = rewriteWithFill(out, lx)
     out = SystemNumbersOffset.replaceAllIn(out, m => {
       val (n, off) = (m.group(1).toLong, m.group(2).toLong)
       s"FROM (SELECT id AS number FROM range($off, ${off + n}))"

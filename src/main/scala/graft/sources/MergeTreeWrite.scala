@@ -59,15 +59,30 @@ object MergeTreeWrite {
       .partitionBy(partCols: _*).parquet(path)
   }
 
-  /** Task count for a clustered landing: ~128 MB of source bytes per
-    * sort task (bounded per-task memory at any scale, guide §5),
-    * capped so a huge table cannot explode into millions of files,
-    * floored at the session parallelism only while that keeps files
-    * ≥ ~16 MB (guide §6 — no small-file storm at small SF). Bytes come
-    * from plan statistics: a metadata read for parquet scans, no job. */
+  /** The write-sizing rule every sorted landing shares: (source
+    * bytes, task target). The target puts ~128 MB of source bytes in
+    * each sort task (bounded per-task memory at any scale, guide §5),
+    * capped so a huge table cannot explode into millions of files.
+    * Bytes come from plan statistics — a metadata read for parquet
+    * scans, no job — bounded by the leaf-scan bytes: without CBO the
+    * planner's estimate above a join or aggregate can overrun by
+    * orders of magnitude (an equi-join estimates as the product of
+    * its sides), which would hit the cap and emit tens of thousands of
+    * tiny files. A column-subset Project estimates below its leaf, and
+    * min keeps that tighter figure. */
+  private[graft] def sourceBytesAndTasks(in: DataFrame): (BigInt, Int) = {
+    val plan = in.queryExecution.optimizedPlan
+    val est = plan.stats.sizeInBytes
+    val leaf = plan.collectLeaves().map(_.stats.sizeInBytes).sum
+    val bytes = if (leaf > 0) est.min(leaf) else est
+    (bytes, (bytes / (128L << 20)).min(BigInt(32768)).toInt)
+  }
+
+  /** Task count for a clustered landing: [[sourceBytesAndTasks]]'
+    * target, floored at the session parallelism only while that keeps
+    * files ≥ ~16 MB (guide §6 — no small-file storm at small SF). */
   private def writeTasks(in: DataFrame): Int = {
-    val bytes = in.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target = (bytes / (128L << 20)).min(BigInt(32768)).toInt
+    val (bytes, target) = sourceBytesAndTasks(in)
     val par = in.sparkSession.sparkContext.defaultParallelism
     val floor = math.min(par, (bytes / (16L << 20)).max(BigInt(1)).min(BigInt(par)).toInt)
     math.max(floor, target)

@@ -104,6 +104,21 @@ class Round20OptSpec extends SparkSpec {
     }
   }
 
+  test("write sizing: a join-rooted frame's tasks are bounded by its leaf bytes, not the cap") {
+    // without CBO the equi-join estimates as the product of its sides
+    // (8 MB × 8 MB here): sized by the estimate alone it would get the
+    // 32768-task cap. Asserted on the rule, not a write, so no run
+    // ever launches those tasks.
+    val left = spark.range(1000000L).toDF()
+    val joined = left.join(spark.range(1000000L).withColumnRenamed("id", "k"), col("id") === col("k"))
+    val est = joined.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(est / (128L << 20) >= 32768, s"expected a product estimate, got $est")
+    val (bytes, tasks) = MergeTreeWrite.sourceBytesAndTasks(joined)
+    assert(bytes == BigInt(16000000L) && tasks == 0)
+    // a leaf-rooted frame keeps its own estimate
+    assert(MergeTreeWrite.sourceBytesAndTasks(left) == ((BigInt(8000000L), 0)))
+  }
+
   // --- Mutate: NULL partition keys and the stats-collect guard ---------
 
   test("delete with a NULL partition key: never rewritten, and the report says so") {

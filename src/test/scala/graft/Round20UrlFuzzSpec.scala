@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** Differential fuzz net for the round-20 one-pass
   * [[graft.plans.UrlHierarchy]] kernel: the retired expression-forest
-  * formulation (ChDialect.urlHierarchyExpr — kept as the reference)
+  * formulation (UrlHierarchyReference — kept as the reference)
   * and the new kernel must agree on EVERY input before the rewrite is
   * trusted, per the round-19 verdict's "build the semantics fuzz net
   * first" instruction. Shapes covered: the doc examples, separator
@@ -23,7 +23,7 @@ class Round20UrlFuzzSpec extends SparkSpec {
     }
     val lit = Literal.create(s, org.apache.spark.sql.types.StringType)
     (run(graft.plans.UrlHierarchy(lit, pathOnly)),
-      run(graft.plans.ChDialect.urlHierarchyExpr(lit, pathOnly)))
+      run(UrlHierarchyReference.urlHierarchyExpr(lit, pathOnly)))
   }
 
   private def check(s: String): Unit = {
