@@ -46,6 +46,21 @@ object GraftSession {
       math.min(math.max(heap / 16, 64L << 20), 512L << 20)
     }
 
+  /** Parquet reader settings, passed to Hadoop as `spark.hadoop.*`.
+    *
+    * Row groups are pruned by min/max statistics only: the sparse
+    * primary index graft's sorted layouts are written for
+    * (`MergeTreeWrite`). Parquet's dictionary-level filter is off. It
+    * decodes and boxes every dictionary entry of a predicate column
+    * into a `HashSet` (`DictionaryFilter.expandDictionary`), per task
+    * and per predicate, to prove a value absent — a proof that min/max
+    * already gives for the range predicates of the scanner family. In
+    * a JFR profile of one benchmark `dashboard` run (date-range scans
+    * of a 600k-row lineitem, 4 cores), 39% of the executor threads'
+    * samples were in that call, for `l_shipdate`. */
+  private[graft] val parquetReadConf: Map[String, String] =
+    Map("parquet.filter.dictionary.enabled" -> "false")
+
   def builder(appName: String = "graft",
               master: Option[String] = None,
               shufflePartitions: Option[Int] = None): SparkSession.Builder = {
@@ -116,6 +131,7 @@ object GraftSession {
       // SPARK_GRAFT_IO_CODEC=zstd is the deploy-time dial.
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
+      .config(parquetReadConf.map { case (k, v) => s"spark.hadoop.$k" -> v })
     master.orElse(Some(s"local[$cores]")).foldLeft(b)(_ master _)
   }
 

@@ -255,9 +255,12 @@ object Dedup {
     // parallel, racing ahead of block persistence (measured ≈ no
     // checkpoint). A one-join fetch-both-sides pivot variant also
     // measured slower than the two plain joins (33.1 vs 16.2 s warm).
-    val sig = df.select(col(idCol),
+    //
+    // Null text is dropped BEFORE the kernel: a filter on the kernel's
+    // output is pushed below the projection and runs the kernel a
+    // second time per read. The kernel is null only for null text.
+    val sig = df.where(col(normCol).isNotNull).select(col(idCol),
         call_function("graft_minhash_sig", col(normCol), lit(ngram), lit(numHashes)).as("sig"))
-      .where(col("sig").isNotNull)
     val bandCols = (0 until bands).map { j =>
       struct(lit(j).as("band"), xxhash64(slice(col("sig"), j * rows + 1, rows)).as("bh"))
     }
@@ -473,10 +476,10 @@ object Dedup {
     require(blocks <= 32, s"blocks ($blocks) > 32: combination blowup exceeds any bucketing win")
     // one map-side expression per document ([[graft.plans.SimHash64]]):
     // majority vote over shingle-hash bits computed in a tight loop,
-    // replacing the explode + 64-aggregate-buffer shuffle
-    val hashed = df.select(col(idCol),
+    // replacing the explode + 64-aggregate-buffer shuffle; null text
+    // drops before the kernel, as in minHashLshStages
+    val hashed = df.where(col(normCol).isNotNull).select(col(idCol),
         call_function("graft_simhash64", col(normCol), lit(ngram)).as("simhash"))
-      .where(col("simhash").isNotNull)
     // block b covers widths(b) bits starting at offsets(b); widths
     // differ by ≤1 so no block is a degenerate narrow key
     val widths = (0 until blocks).map(b => 64 / blocks + (if (b < 64 % blocks) 1 else 0))

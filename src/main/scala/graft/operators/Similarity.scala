@@ -153,7 +153,7 @@ object Similarity {
 
   /** The metadata fast path of [[corpusCount]]: Some(rowCount) when
     * `df` is row-count-equivalent to a raw parquet scan (only
-    * row-preserving Project/SubqueryAlias nodes above the relation —
+    * row-preserving Project/SubqueryAlias/View nodes above the relation —
     * a Filter/Join/Generate/Limit anywhere disqualifies), computed by
     * summing row-group counts from the parquet footers (a bounded
     * driver-side thread pool; tables past 4096 files fall through to
@@ -161,12 +161,13 @@ object Similarity {
     * at lake scale would be slower than the job they avoid). Runs no
     * Spark job — the spec asserts it with a job listener. */
   private[graft] def statsRowCount(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias, View}
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     @scala.annotation.tailrec
     def strip(p: LogicalPlan): LogicalPlan = p match {
       case Project(_, child)       => strip(child) // per-row map: row-count-preserving
       case SubqueryAlias(_, child) => strip(child)
+      case v: View                 => strip(v.child) // spark.table(tempView)
       case other => other
     }
     strip(df.queryExecution.analyzed) match {

@@ -841,16 +841,20 @@ object ChSqlParser {
   /** `SELECT … INTO OUTFILE 'path' [FORMAT f]` EXECUTES as an export
     * command (round 10; previously the clause stripped): the inner
     * query re-enters the full dialect at run time and its result
-    * lands at the path in the named format. Captured on the RAW text
-    * because the rewrite chain would otherwise strip the clause. */
+    * lands at the path in the named format. Captured before the
+    * rewrite chain, which would otherwise strip the clause, on the
+    * lexer's masked text: a clause inside a comment or a literal is
+    * not one, and the path and codec are read through the lexer. */
   private val IntoOutfileStmt =
-    """(?is)^\s*((?:\(\s*)*(?:SELECT|WITH)\b.*\S)\s+INTO\s+OUTFILE\s+'([^']+)'(?:\s+COMPRESSION\s+'(\w+)'(?:\s+LEVEL\s+(\d+))?)?(?:\s+FORMAT\s+(\w+))?\s*;?\s*$""".r
+    """(?is)^\s*((?:\(\s*)*(?:SELECT|WITH)\b.*\S)\s+INTO\s+OUTFILE\s+'([^']+)'(?:\s+COMPRESSION\s+'([^']+)'(?:\s+LEVEL\s+(\d+))?)?(?:\s+FORMAT\s+(\w+))?\s*;?\s*$""".r
 
-  private[plans] def interceptOutfile(sql: String): Option[LogicalPlan] =
-    IntoOutfileStmt.findFirstMatchIn(sql).map { m =>
-      ChIntoOutfileCommand(m.group(1), m.group(2), Option(m.group(5)),
-        Option(m.group(3)), Option(m.group(4)).map(_.toInt))
+  private[plans] def interceptOutfile(sql: String): Option[LogicalPlan] = {
+    val lx = ChLexer.mask(sql)
+    IntoOutfileStmt.findFirstMatchIn(lx.text).map { m =>
+      ChIntoOutfileCommand(lx.unmask(m.group(1)), lx.body(m.group(2)), Option(m.group(5)),
+        Option(m.group(3)).map(lx.body), Option(m.group(4)).map(_.toInt))
     }
+  }
 
   /** `INSERT INTO t [(cols)] FROM INFILE 'path' [COMPRESSION 'c']
     * [FORMAT f]` — the ingestion twin of INTO OUTFILE (round 16): the
@@ -859,7 +863,7 @@ object ChSqlParser {
     * [[graft.sources.Formats]]' name mapping (FORMAT omitted → the
     * file extension infers it, CH's own rule). */
   private val InsertFromInfileStmt =
-    """(?is)^\s*INSERT\s+INTO\s+(?:TABLE\s+)?([A-Za-z_][\w.]*)\s*(?:\(([^()]*)\))?\s*FROM\s+INFILE\s+'([^']+)'(?:\s+COMPRESSION\s+'(\w+)')?(?:\s+FORMAT\s+(\w+))?\s*;?\s*$""".r
+    """(?is)^\s*INSERT\s+INTO\s+(?:TABLE\s+)?([A-Za-z_][\w.]*)\s*(?:\(([^()]*)\))?\s*FROM\s+INFILE\s+'([^']+)'(?:\s+COMPRESSION\s+'([^']+)')?(?:\s+FORMAT\s+(\w+))?\s*;?\s*$""".r
 
   /** `INSERT INTO t [(cols)] FORMAT f⏎<rows…>` — the client-script
     * spelling where the payload follows the statement (CH's native /
@@ -871,18 +875,26 @@ object ChSqlParser {
   private val InsertInlineFormatStmt =
     """(?is)^\s*INSERT\s+INTO\s+(?:TABLE\s+)?([A-Za-z_][\w.]*)\s*(?:\(([^()]*)\))?\s*FORMAT\s+(\w+)(?:[ \t]*\r?\n([\s\S]*\S))?\s*$""".r
 
-  private def splitColList(colsOrNull: String): Seq[String] =
-    Option(colsOrNull).map(_.split(",").map(_.trim.stripPrefix("`").stripSuffix("`"))
+  private def splitColList(cols: Option[String]): Seq[String] =
+    cols.map(_.split(",").map(_.trim.stripPrefix("`").stripSuffix("`"))
       .filter(_.nonEmpty).toSeq).getOrElse(Nil)
 
-  private[plans] def interceptInfile(sql: String): Option[LogicalPlan] = sql match {
-    case InsertFromInfileStmt(table, cols, path, compression, format) =>
-      Some(ChInsertFromInfileCommand(table, splitColList(cols), path,
-        Option(format), Option(compression)))
-    case InsertInlineFormatStmt(table, cols, format, payload)
-        if !table.equalsIgnoreCase("FUNCTION") =>
-      Some(ChInsertInlineFormatCommand(table, splitColList(cols), format, Option(payload)))
-    case _ => None
+  /** Both INSERT forms above, matched on the lexer's masked text like
+    * [[interceptOutfile]]. An inline payload comes back byte for byte
+    * (an unpaired quote in it masks to the end of the text) and then
+    * loses its trailing whitespace, as the pattern's `\S` end does. */
+  private[plans] def interceptInfile(sql: String): Option[LogicalPlan] = {
+    val lx = ChLexer.mask(sql)
+    lx.text match {
+      case InsertFromInfileStmt(table, cols, path, compression, format) =>
+        Some(ChInsertFromInfileCommand(table, splitColList(Option(cols).map(lx.unmask)),
+          lx.body(path), Option(format), Option(compression).map(lx.body)))
+      case InsertInlineFormatStmt(table, cols, format, payload)
+          if !table.equalsIgnoreCase("FUNCTION") =>
+        Some(ChInsertInlineFormatCommand(table, splitColList(Option(cols).map(lx.unmask)),
+          format, Option(payload).map(lx.unmask(_).stripTrailing())))
+      case _ => None
+    }
   }
 
   /** `ENGINE = Join(strictness, kind, keys…)` — the two CREATE forms

@@ -136,5 +136,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(session => SortProjectionUse(session))
     // Filter(rn<=k, Window(row_number/rank/dense_rank)) → top-k aggregate
     ext.injectOptimizerRule(session => TopKRewrite(session))
+    // small GROUP BY … ORDER BY: sort in the final task, no range shuffle
+    ext.injectQueryStagePrepRule(session => SmallSortCoalesce(session))
   }
 }

@@ -124,4 +124,48 @@ class ChLexerSpec extends SparkSpec {
     val r = spark.sql(sql).head()
     assert(r.getString(0) == "" && r.getLong(1) == 2L)
   }
+
+  test("INTO OUTFILE inside a comment or a literal exports nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lex_outfile")
+    val p = dir.resolve("out").toString
+    assert(spark.sql(s"SELECT 1 AS x -- INTO OUTFILE '$p'").head().getInt(0) == 1)
+    assert(spark.sql(s"SELECT 1 AS x -- INTO OUTFILE '$p' FORMAT CSV").columns.toSeq == Seq("x"))
+    assert(spark.sql(s"SELECT 'a INTO OUTFILE ''$p''' AS s").head().getString(0) ==
+      s"a INTO OUTFILE '$p'")
+    assert(!new java.io.File(p).exists(), "a commented-out export wrote files")
+    // in code position the clause still exports; the path and the
+    // codec are read through the lexer
+    val q = dir.resolve("a--b").toString
+    assert(spark.sql(s"SELECT 1 AS x INTO OUTFILE '$q' COMPRESSION 'gzip' FORMAT CSV")
+      .head().getLong(0) == 1L)
+    val gz = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(q))
+    assert(gz(0) == 0x1f.toByte && gz(1) == 0x8b.toByte, "the export is not gzip")
+  }
+
+  test("FROM INFILE inside a comment or a literal reads no file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lex_infile")
+    val p = dir.resolve("missing.csv").toString
+    spark.sql("DROP TABLE IF EXISTS lex_inf")
+    spark.sql("DROP TABLE IF EXISTS lex_inf2")
+    spark.sql("CREATE TABLE lex_inf (s STRING) USING parquet")
+    try {
+      spark.sql(s"INSERT INTO lex_inf SELECT 'a' -- FROM INFILE '$p'")
+      spark.sql(s"INSERT INTO lex_inf SELECT 'FROM INFILE ''$p'''")
+      spark.sql(s"INSERT INTO lex_inf /* FROM INFILE '$p' */ SELECT 'b'")
+      // an inline payload is data: an unpaired quote in it is kept
+      spark.sql("INSERT INTO lex_inf FORMAT TSV\nO'Brien  \n")
+      assert(spark.table("lex_inf").collect().map(_.getString(0)).sorted.toSeq ==
+        Seq(s"FROM INFILE '$p'", "O'Brien", "a", "b"))
+      // in code position: a quoted column name holding a paren is one
+      // name, not the end of the column list
+      val csv = dir.resolve("in.csv")
+      java.nio.file.Files.writeString(csv, "a)\n7\n")
+      spark.sql("CREATE TABLE lex_inf2 (`a)` STRING) USING parquet")
+      spark.sql(s"INSERT INTO lex_inf2 (`a)`) FROM INFILE '$csv' FORMAT CSVWithNames")
+      assert(spark.table("lex_inf2").head().getString(0) == "7")
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS lex_inf")
+      spark.sql("DROP TABLE IF EXISTS lex_inf2")
+    }
+  }
 }

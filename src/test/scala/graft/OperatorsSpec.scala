@@ -204,6 +204,35 @@ class OperatorsSpec extends SparkSpec {
     assert(sh.forall(r => r.getLong(0) < 10 && r.getLong(1) < 10))
   }
 
+  test("minhash and simhash run their kernel once per read of the corpus") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import graft.plans.{MinHashSignature, SimHash64}
+    object H extends AdaptiveSparkPlanHelper
+    val dir = java.nio.file.Files.createTempDirectory("graft_kernel_reads").toString
+    Seq((1L, "the quick brown fox jumps over the lazy dog"),
+        (2L, "the quick brown fox jumps over the lazy dog"),
+        (3L, null), (4L, "lorem ipsum dolor sit amet consectetur"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+    val corpus = spark.read.parquet(dir).withColumn("norm", TextAnalysis.normalize(col("text")))
+    val cases: Seq[(String, org.apache.spark.sql.DataFrame, Expression => Boolean)] = Seq(
+      ("minhash", Dedup.minHashLshPairs(corpus, "doc_id", "norm", numHashes = 16, bands = 4,
+        minEstJaccard = 0.5), _.isInstanceOf[MinHashSignature]),
+      ("simhash", Dedup.simHashPairs(corpus, "doc_id", "norm", maxHamming = 3),
+        _.isInstanceOf[SimHash64]))
+    for ((name, df, isKernel) <- cases) {
+      assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L)), name)
+      val plan = df.queryExecution.executedPlan
+      // a filter on the kernel's output would be pushed below the
+      // projection and run the kernel a second time per scan
+      val calls = H.collect(plan) { case p => p.expressions.map(_.collect { case e if isKernel(e) => e }) }
+        .flatten.flatten.size
+      val scans = H.collect(plan) { case s: FileSourceScanExec => s }.size
+      assert(scans > 0 && calls == scans, s"$name: $calls kernel calls over $scans scans\n$plan")
+    }
+  }
+
   test("Similarity IVF finds the planted near-duplicate with a partial scan") {
     val rnd = new scala.util.Random(99L)
     val base = Seq.tabulate(200) { i =>

@@ -40,8 +40,12 @@ class Round13DialSpec extends SparkSpec {
       settle()
       val baseline = jobs
       val counted = Similarity.statsRowCount(df)
+      // a temp view over the same files (spark.table keeps a View node)
+      df.createOrReplaceTempView("r13_statcount_view")
+      val viaView = Similarity.statsRowCount(spark.table("r13_statcount_view"))
       settle() // any job statsRowCount ran would be ordered before the marker
       assert(counted.contains(n.toLong))
+      assert(viaView.contains(n.toLong))
       assert(jobs == baseline + 1,
         s"footer path must run no Spark job, saw ${jobs - baseline - 1} extra")
       // row-preserving nodes above the scan keep the fast path
