@@ -61,6 +61,30 @@ object GraftSession {
   private[graft] val parquetReadConf: Map[String, String] =
     Map("parquet.filter.dictionary.enabled" -> "false")
 
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`; static, so the first
+    * session of a JVM fixes it) — POLICY: well above graft's measured
+    * working set.
+    *
+    * Spark caches a compiled class under its Java source, 100 entries
+    * by default (evicted per hash segment, so it thrashes before it is
+    * full). Measured on the benchmark inputs, 4 cores: one `pipeline`
+    * pass (exact, minhash, simhash, LSH ANN, curate over 4.5k docs and
+    * 2.2k vectors) compiles 112 classes when cold, and at 100 entries
+    * every later pass recompiled 63–77 of them (about 1 s of Janino
+    * per pass, plus C2 warming the new classes); the ten `dashboard`
+    * templates compile 71. At 1000 a steady-state pipeline pass
+    * compiles none. A cached entry is about 5–6 K chars of source and
+    * 2.3 KB of bytecode per class on average (12 KB at most), so a
+    * full cache is on the order of 10–15 MB. */
+  private[graft] val codegenCacheEntries: Int = 1000
+
+  /** The parquet reader and codegen cache settings as session config;
+    * the test session applies the same map. */
+  private[graft] def readAndCodegenConf: Map[String, String] =
+    parquetReadConf.map { case (k, v) => s"spark.hadoop.$k" -> v } +
+      ("spark.sql.codegen.cache.maxEntries" -> codegenCacheEntries.toString)
+
   def builder(appName: String = "graft",
               master: Option[String] = None,
               shufflePartitions: Option[Int] = None): SparkSession.Builder = {
@@ -131,7 +155,7 @@ object GraftSession {
       // SPARK_GRAFT_IO_CODEC=zstd is the deploy-time dial.
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config(parquetReadConf.map { case (k, v) => s"spark.hadoop.$k" -> v })
+      .config(readAndCodegenConf)
     master.orElse(Some(s"local[$cores]")).foldLeft(b)(_ master _)
   }
 

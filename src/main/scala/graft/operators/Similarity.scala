@@ -50,11 +50,19 @@ object Similarity {
     val base = withNorm(df, vecCol)
     val a = base.select(col(idCol).as("id_a"), col(vecCol).as("va"), col("__norm").as("na"))
     val b = base.select(col(idCol).as("id_b"), col(vecCol).as("vb"), col("__norm").as("nb"))
+    val cos = vec.cosineWithNorms(vec.dot(col("va"), col("vb")), col("na"), col("nb"))
     a.join(broadcast(b), col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(vec.cosineWithNorms(vec.dot(col("va"), col("vb")), col("na"), col("nb")), 4).as("cos"))
-      .where(col("cos") >= minCos)
+      .where(roundedCosAtLeast(cos, minCos))
+      .select(col("id_a"), col("id_b"), round(cos, 4).as("cos"))
   }
+
+  /** `round(cos, 4) >= minCos`, rounding only the pairs near the bound.
+    * `round` on a double goes through `BigDecimal.valueOf` (a
+    * `Double.toString`) per row, and it moves a value by at most 5e-5,
+    * so a raw cosine below `minCos - 1e-4` cannot round up to the bound
+    * and is dropped before it. */
+  private def roundedCosAtLeast(cos: Column, minCos: Double): Column =
+    cos >= minCos - 1e-4 && round(cos, 4) >= minCos
 
   /** Max embedding dimensionality the pre-generated hyperplanes cover.
     * [[graft.plans.DotProduct]] scores the common prefix, so planes are
@@ -289,8 +297,8 @@ object Similarity {
       col(vecCol).as("vb"), col("__norm").as("nb"))
     val cand = a.join(b, col("__bucket") === col("__bb") && col("id_a") < col("id_b"))
     val verified = cand
-      .where(round(vec.cosineWithNorms(vec.dot(col("va"), col("vb")), col("na"), col("nb")), 4)
-        >= minCos)
+      .where(roundedCosAtLeast(vec.cosineWithNorms(vec.dot(col("va"), col("vb")), col("na"), col("nb")),
+        minCos))
     (coded, graft.operators.LshStages(reps, cand, verified))
   }
 
@@ -434,11 +442,10 @@ object Similarity {
       col("__v").as("va"), col("__norm").as("na"))
     val b = keyed.select(col(idCol).as("id_b"), col("tbl"), col("bk"),
       col("__v").as("vb"), col("__norm").as("nb"))
+    val cos = vec.cosineWithNorms(vec.dot(col("va"), col("vb")), col("na"), col("nb"))
     val verified = a.join(b.hint("shuffle_hash"), Seq("tbl", "bk"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(vec.cosineWithNorms(vec.dot(col("va"), col("vb")), col("na"), col("nb")), 4).as("cos"))
-      .where(col("cos") >= minCos)
+      .where(col("id_a") < col("id_b") && roundedCosAtLeast(cos, minCos))
+      .select(col("id_a"), col("id_b"), round(cos, 4).as("cos"))
       .dropDuplicates("id_a", "id_b")
     graft.operators.LshStages(keyedSlim, cand, verified)
   }

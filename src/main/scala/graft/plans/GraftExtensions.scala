@@ -8,6 +8,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * names so they resolve through the normal Catalyst function registry
   * (`functions.call_function("graft_dot", …)` or SQL `graft_dot(a,b)`).
   *
+  * It also installs the dialect parser and graft's plan rules:
+  * resolution (dictGet), optimizer (projection use, top-k, the
+  * null-filter rewrite [[NotNullOfInput]]) and AQE query-stage prep
+  * ([[SmallSortCoalesce]], and [[ParamLiterals]], which keeps
+  * comparison constants out of generated source so a plan shape
+  * compiles once for any constants).
+  *
   * Activate with `.config("spark.sql.extensions",
   * "graft.plans.GraftExtensions")` — done by [[graft.GraftSession]],
   * `Verify` and `Bench`.
@@ -136,7 +143,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(session => SortProjectionUse(session))
     // Filter(rn<=k, Window(row_number/rank/dense_rank)) → top-k aggregate
     ext.injectOptimizerRule(session => TopKRewrite(session))
+    // isnotnull(lower(trim(regexp_replace(x, …)))) → isnotnull(x), so a
+    // null filter on normalized text does not normalize it a second time
+    ext.injectOptimizerRule(_ => NotNullOfInput)
     // small GROUP BY … ORDER BY: sort in the final task, no range shuffle
     ext.injectQueryStagePrepRule(session => SmallSortCoalesce(session))
+    // comparison constants read from `references`, not written into the
+    // generated source: one compiled class per plan shape, not per
+    // statement (a generated class is cached by its source text)
+    ext.injectQueryStagePrepRule(_ => ParamLiterals)
   }
 }

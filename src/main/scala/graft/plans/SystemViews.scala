@@ -47,7 +47,12 @@ object SystemViews {
       StructField("database", StringType), StructField("table", StringType),
       StructField("name", StringType), StructField("type", StringType),
       StructField("expr", StringType),
-      StructField("data_compressed_bytes", LongType))))
+      StructField("data_compressed_bytes", LongType))),
+    // CH's cumulative ProfileEvents counters, for what graft counts
+    // (see `events`)
+    "events" -> StructType(Seq(
+      StructField("event", StringType), StructField("value", LongType),
+      StructField("description", StringType))))
 
   /** Optional pruning hints from pushed-down EqualTo filters on the
     * (database, table) columns — Spark re-applies every filter above
@@ -68,6 +73,7 @@ object SystemViews {
     case "parts"        => parts(spark, r)
     case "columns"      => columns(spark, r)
     case "data_skipping_indices" => dataSkippingIndices(spark, r)
+    case "events"       => events()
     case other => throw new IllegalArgumentException(s"unknown system view '$other'")
   }
 
@@ -141,6 +147,19 @@ object SystemViews {
     ChDialect.functions.map(_._1).distinct.sorted.map { n =>
       Seq(n, if (aggregateFnNames.contains(n)) 1 else 0, "graft")
     }
+
+  /** system.events — cumulative counters since the JVM started, under
+    * ClickHouse's ProfileEvents names. Janino compiles of generated
+    * classes (Spark's codegen cache misses) stand for CH's compiled
+    * expressions: the count from `CodegenMetrics`, the time from
+    * `CodeGenerator.compileTime`. */
+  private def events(): Seq[Seq[Any]] = Seq(
+    Seq("CompileFunction",
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      "Number of generated classes compiled (codegen cache misses)."),
+    Seq("CompileExpressionsMicroseconds",
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1000,
+      "Total time spent compiling generated classes, in microseconds."))
 
   private def dictionaries(): Seq[Seq[Any]] =
     graft.operators.Dictionaries.list.map { case (n, k, h) =>

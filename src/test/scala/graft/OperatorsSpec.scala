@@ -205,7 +205,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("minhash and simhash run their kernel once per read of the corpus") {
-    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpReplace}
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import graft.plans.{MinHashSignature, SimHash64}
@@ -226,11 +226,31 @@ class OperatorsSpec extends SparkSpec {
       val plan = df.queryExecution.executedPlan
       // a filter on the kernel's output would be pushed below the
       // projection and run the kernel a second time per scan
-      val calls = H.collect(plan) { case p => p.expressions.map(_.collect { case e if isKernel(e) => e }) }
-        .flatten.flatten.size
+      def count(f: Expression => Boolean): Int =
+        H.collect(plan) { case p => p.expressions.map(_.collect { case e if f(e) => e }) }.flatten.flatten.size
+      val calls = count(isKernel)
       val scans = H.collect(plan) { case s: FileSourceScanExec => s }.size
       assert(scans > 0 && calls == scans, s"$name: $calls kernel calls over $scans scans\n$plan")
+      // the null filter on the normalized text tests the raw text, so
+      // neither the filter nor the scan's data filters normalize again
+      val regex = count(_.isInstanceOf[RegExpReplace])
+      assert(regex == scans, s"$name: $regex regexp_replace calls over $scans scans\n$plan")
     }
+  }
+
+  test("isnotnull over lower/trim/regexp_replace tests the raw column when that is exact") {
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val df = spark.range(3).selectExpr("CASE id WHEN 0 THEN ' A  b ' WHEN 2 THEN '' END AS t")
+    def regexIn(c: org.apache.spark.sql.Column): Int = {
+      val q = df.where(c)
+      assert(q.count() == 2)
+      q.queryExecution.optimizedPlan.collect { case f: Filter =>
+        f.condition.collect { case r: RegExpReplace => r }.size }.sum
+    }
+    assert(regexIn(TextAnalysis.normalize(col("t")).isNotNull) == 0)
+    // a group reference in the replacement can fail at run time: kept
+    assert(regexIn(regexp_replace(col("t"), "(b)", "$1$1").isNotNull) == 1)
   }
 
   test("Similarity IVF finds the planted near-duplicate with a partial scan") {

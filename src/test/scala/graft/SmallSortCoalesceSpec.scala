@@ -17,13 +17,6 @@ class SmallSortCoalesceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val MinPartitionSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
   /** Runs `sql` with the rule on (the default bound) and off (a
     * one-byte bound, under which no non-empty stage fits). */
   private def onAndOff(sql: String): ((Seq[Row], SparkPlan), (Seq[Row], SparkPlan)) = {

@@ -5,9 +5,19 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session —
-  * getOrCreate — so suites don't pay repeated startup). */
+  * getOrCreate — so suites don't pay repeated startup): local[4] with
+  * 4 shuffle partitions, and `GraftSession`'s parquet and codegen
+  * cache settings. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Runs `body` with the session confs `kv` set, then restores them. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 
   /** DROP TABLE plus managed-location (and sibling-dir) cleanup: a
     * killed prior run can leave the warehouse directory behind a
@@ -39,6 +49,9 @@ object SparkSpec {
       .config("spark.sql.catalog.system", "graft.plans.GraftSystemCatalog")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the engine's parquet reader and codegen cache settings; the
+      // cache size is static, so this first session fixes it per JVM
+      .config(GraftSession.readAndCodegenConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
