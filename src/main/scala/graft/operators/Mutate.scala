@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 
 /** Copy-on-write mutations — ClickHouse `ALTER TABLE … DELETE/UPDATE`
@@ -57,119 +59,46 @@ object Mutate {
     * `transform` applied to their rows; everything else stays on disk
     * untouched. Core of delete/update.
     *
-    * One stats pass replaces the previous four discovery jobs
-    * (distinct-partition count, affected discovery, changed count,
-    * and a full RE-EXECUTION of `transform` just to find emptied
-    * partitions): a single narrow aggregate over (partition column,
-    * predicate) yields per-partition row/match/keep counts, from
-    * which total, affected, changed and emptied all follow — so a
-    * mutation is now exactly two jobs, stats + write (guide §1.2:
-    * remove passes before tuning anything else). The stats scan reads
-    * only the partition column and the predicate's input columns; the
-    * trade against the old pushed-filter discovery scan is one
-    * row-group-skip opportunity lost in exchange for three whole
-    * passes (two of them over full data rows) removed.
+    * A mutation is exactly two jobs, stats + write (guide §1.2: remove
+    * passes before tuning anything else). One narrow aggregate over
+    * (partition column, predicate) yields per-partition match/keep
+    * counts, from which affected, changed and emptied all follow; it
+    * reads only the partition column and the predicate's input
+    * columns. Only partitions with a TRUE match reach the driver, so
+    * the collect is bounded by the AFFECTED partitions on every table,
+    * however many partitions it has. `partitionsTotal` is the
+    * partition count the scan's file index already lists — driver
+    * metadata, zero jobs.
     *
-    * NULL-predicate semantics are replicated exactly: a partition is
-    * affected only by pred = TRUE rows (matching the old
-    * `where(pred)` discovery); `changed` counts TRUE rows only; and
-    * within an affected partition, emptiness after a delete means no
-    * row keeps (`NOT pred` not TRUE — `where(!pred)` drops NULLs
-    * too), which `keeps == 0` captures. */
-  /** Stats-pass driver-collect guard (round 20, verdict item 10): the
-    * per-partition stats aggregate collects ONE slim row per distinct
-    * partition value — fine at catalog-realistic cardinality (dates:
-    * thousands), a driver-side liability at pathological cardinality.
-    * Past this many partitions the mutation fails over to the
-    * pre-round-19 discovery shape, whose collect is bounded by the
-    * AFFECTED partitions only. */
-  private val MaxStatsPartitions = 65536
-
+    * NULL-predicate semantics: a partition is affected only by
+    * pred = TRUE rows; `changed` counts TRUE rows only; and within an
+    * affected partition, emptiness after a delete means no row keeps
+    * (`NOT pred` not TRUE — `where(!pred)` drops NULLs too), which
+    * `keeps == 0` captures. A NULL partition value never matches
+    * isInCollection below, so its rows are NEVER rewritten
+    * (documented); it is excluded from affected/changed so the report
+    * never counts work that won't happen. */
   private[graft] def rewriteAffected(spark: SparkSession, path: String, partitionCol: String,
                               pred: Column, transform: DataFrame => DataFrame,
                               removesNonKeepers: Boolean,
-                              schema: Option[org.apache.spark.sql.types.StructType],
-                              maxStatsPartitions: Int = MaxStatsPartitions): Report = {
+                              schema: Option[org.apache.spark.sql.types.StructType]): Report = {
     // an explicit schema (the catalog's, when the caller has one)
     // skips the per-mutation footer-inference pass
     val table = schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
-    // Guard decision from the scan's FILE INDEX — driver metadata the
-    // read already materialized, zero jobs (an earlier cut used
-    // .limit(n+1) on the stats aggregate, which turned the one-job
-    // collect into CollectLimit's incremental executeTake waves and
-    // cost every mutation an extra job — measured as a 1.5× q100
-    // cell). Unknown layout shapes leave the guard disengaged.
-    val partitionCount: Long = scala.util.Try {
-      table.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location match {
-                case p: org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =>
-                  p.partitionSpec().partitions.size.toLong
-                case _ => 0L
-              }
-            case _ => 0L
-          }
-      }.getOrElse(0L)
-    }.getOrElse(0L)
-    if (partitionCount > maxStatsPartitions)
-      return rewriteAffectedDiscovery(spark, table, path, partitionCol, pred, transform,
-        removesNonKeepers)
-    val stats = table.groupBy(col(partitionCol)).agg(
+    val total = table.queryExecution.analyzed.collectFirst { case lr: LogicalRelation => lr.relation }
+      .collect { case fs: HadoopFsRelation => fs.location }
+      .collect { case p: PartitioningAwareFileIndex => p.partitionSpec().partitions.size.toLong }
+      .getOrElse(0L)
+    val affectedStats = table.groupBy(col(partitionCol)).agg(
       sum(when(pred, 1L).otherwise(0L)).as("gr_matches"),
       sum(when(!pred, 1L).otherwise(0L)).as("gr_keeps"))
+      .where(col("gr_matches") > 0 && col(partitionCol).isNotNull)
       .collect()
-    val total = stats.length.toLong
-    // A NULL partition value never matches isInCollection below, so
-    // its rows are NEVER rewritten (pre-existing, documented): keep
-    // the report consistent with the action by excluding the NULL key
-    // from affected/changed instead of counting work that won't
-    // happen (round-19 advice item 3).
-    val affectedStats = stats.filter(r => r.getLong(1) > 0 && r.get(0) != null)
-    val affected: Array[Any] = affectedStats.map(_.get(0))
-    if (affected.isEmpty) return Report(total, 0, 0)
+    if (affectedStats.isEmpty) return Report(total, 0, 0)
     val changed = affectedStats.map(_.getLong(1)).sum
-    val slice = table.where(col(partitionCol).isInCollection(affected.toSeq))
-    rewriteSlice(spark, path, partitionCol, transform, removesNonKeepers,
-      slice, total, affectedStats, changed)
-  }
-
-  /** Failover discovery shape for pathological partition cardinality:
-    * the driver never holds one row per partition — `total` is a
-    * count, `affected` a collect bounded by partitions actually
-    * holding pred=TRUE rows, and the per-partition match/keep stats
-    * run over the affected slice only. Same semantics as the stats
-    * path (NULL partition keys excluded from affected — they are
-    * never rewritten). */
-  private def rewriteAffectedDiscovery(spark: SparkSession, table: DataFrame, path: String,
-                              partitionCol: String, pred: Column,
-                              transform: DataFrame => DataFrame,
-                              removesNonKeepers: Boolean): Report = {
-    val total = table.select(col(partitionCol)).distinct().count()
-    val affected: Array[Any] = table.where(pred).select(col(partitionCol)).distinct()
-      .collect().map(_.get(0)).filter(_ != null)
-    if (affected.isEmpty) return Report(total, 0, 0)
-    val slice = table.where(col(partitionCol).isInCollection(affected.toSeq))
-    val affectedStats = slice.groupBy(col(partitionCol)).agg(
-      sum(when(pred, 1L).otherwise(0L)).as("gr_matches"),
-      sum(when(!pred, 1L).otherwise(0L)).as("gr_keeps"))
-      .collect()
-    val changed = affectedStats.map(_.getLong(1)).sum
-    rewriteSlice(spark, path, partitionCol, transform, removesNonKeepers,
-      slice, total, affectedStats, changed)
-  }
-
-  /** Shared tail of both discovery shapes: rewrite the affected slice
-    * through dynamic overwrite, then drop emptied directories. */
-  private def rewriteSlice(spark: SparkSession, path: String, partitionCol: String,
-                           transform: DataFrame => DataFrame, removesNonKeepers: Boolean,
-                           slice: DataFrame, total: Long,
-                           affectedStats: Array[org.apache.spark.sql.Row],
-                           changed: Long): Report = {
-    val rewritten = transform(slice)
+    val slice = table.where(col(partitionCol).isInCollection(affectedStats.map(_.get(0)).toSeq))
     withDynamicOverwrite(spark) {
-      rewritten.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
+      transform(slice).write.mode("overwrite").partitionBy(partitionCol).parquet(path)
     }
     // Dynamic overwrite only replaces partitions PRESENT in the output:
     // a partition whose every row is deleted produces no output rows and

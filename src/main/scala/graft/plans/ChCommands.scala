@@ -51,58 +51,31 @@ object ChCommands {
     try spark.read.schema(spark.table(table).schema).parquet(path)
     catch { case _: org.apache.spark.sql.AnalysisException => spark.table(table) }
 
-  /** Where a table's TTL rule persists (beside the data, like the
-    * projections manifest — survives session restarts with the table). */
-  private[plans] def ttlManifest(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(path, "_graft_ttl.txt")
-
   private[plans] def ttlPredicateSql(ttl: String, whereCond: Option[String]): String =
     whereCond match {
       case Some(c) => s"(($ttl) <= current_timestamp()) AND ($c)"
       case None    => s"($ttl) <= current_timestamp()"
     }
 
-  // TTL rule manifest: line 1 = the expiry expression; optional
-  // tagged lines carry the WHERE scope and GROUP BY/SET rollup
-  // (U+0001/U+0002 separators cannot occur in SQL text). Every field
-  // is newline-normalized first: clause text captured from
-  // triple-quoted multi-line DDL can itself contain \n, and a raw
-  // newline inside a field would bleed continuation lines into
-  // exprLines on parse. SQL whitespace is insignificant, so
-  // collapsing whitespace runs containing a newline to one space is
-  // lossless for the expression.
-  private[plans] def ttlField(s: String): String =
-    if (s.indexOf('\n') < 0 && s.indexOf('\r') < 0) s
-    else s.replaceAll("[ \\t]*[\\r\\n]+[ \\t]*", " ").trim
+  /** The TTL rule's keys in the [[TableRecord]]: the expiry
+    * expression, its WHERE scope, and a GROUP BY rollup's keys and
+    * SET (column, aggregate) pairs. */
+  private[plans] val TtlKeys = Seq("ttl", "ttl_where", "ttl_group_by", "ttl_set")
 
-  private[plans] def ttlRuleSerialize(ttl: String, whereCond: Option[String],
-      keys: Seq[String], sets: Seq[(String, String)]): String = {
-    val sb = new StringBuilder(ttlField(ttl))
-    whereCond.foreach(c => sb.append("\nWHERE\t").append(ttlField(c)))
-    if (keys.nonEmpty) sb.append("\nGROUPBY\t").append(keys.map(ttlField).mkString(","))
-    if (sets.nonEmpty) sb.append("\nSET\t").append(
-      sets.map { case (c, e) => s"${ttlField(c)}\u0001${ttlField(e)}" }.mkString("\u0002"))
-    sb.toString
-  }
+  private[plans] def ttlEntries(ttl: String, whereCond: Option[String],
+      keys: Seq[String], sets: Seq[(String, String)]): Seq[(String, String)] =
+    Seq("ttl" -> ttl) ++ whereCond.map("ttl_where" -> _) ++
+      Seq("ttl_group_by" -> TableRecord.fields(keys),
+        "ttl_set" -> TableRecord.fields(sets.flatMap { case (c, e) => Seq(c, e) }))
+        .filter(_._2.nonEmpty)
 
-  private[plans] def ttlRuleParse(raw: String)
-      : (String, Option[String], Seq[String], Seq[(String, String)]) = {
-    var where: Option[String] = None
-    var keys: Seq[String] = Nil
-    var sets: Seq[(String, String)] = Nil
-    val exprLines = scala.collection.mutable.ArrayBuffer[String]()
-    raw.split("\n").foreach {
-      case l if l.startsWith("WHERE\t")   => where = Some(l.stripPrefix("WHERE\t"))
-      case l if l.startsWith("GROUPBY\t") =>
-        keys = l.stripPrefix("GROUPBY\t").split(",").toSeq
-      case l if l.startsWith("SET\t") =>
-        sets = l.stripPrefix("SET\t").split('\u0002').toSeq.filter(_.nonEmpty).map { s =>
-          val i = s.indexOf('\u0001'); (s.substring(0, i), s.substring(i + 1))
-        }
-      case l => exprLines += l
+  private[plans] def ttlRule(record: TableRecord.Record)
+      : Option[(String, Option[String], Seq[String], Seq[(String, String)])] =
+    record.get("ttl").map { ttl =>
+      val sets = TableRecord.unfields(record.getOrElse("ttl_set", "")).grouped(2)
+        .map { case Seq(c, e) => (c, e) }.toSeq
+      (ttl, record.get("ttl_where"), TableRecord.unfields(record.getOrElse("ttl_group_by", "")), sets)
     }
-    (exprLines.mkString("\n").trim, where, keys, sets)
-  }
 
   /** The TTL GROUP BY rollup of `expired`: one row per group — SET
     * columns by their declared aggregates, every other non-key column
@@ -183,17 +156,9 @@ object ChCommands {
       if (fs.exists(dst)) require(fs.delete(backup, true), s"swap failed clearing stale $backup")
       else require(fs.rename(backup, dst), s"swap recovery failed renaming $backup -> $dst")
     }
-    // the TTL rule and the CH-DDL record are table METADATA living
-    // inside the table dir — a data rewrite must not clear them
-    // (materializing a TTL, or an ALTER DELETE on a table that also
-    // has one, swaps the dir)
-    for (metaFile <- Seq("_graft_ttl.txt", "_graft_engine.txt")) {
-      val oldMeta = new org.apache.hadoop.fs.Path(dst, metaFile)
-      val newMeta = new org.apache.hadoop.fs.Path(src, metaFile)
-      if (fs.exists(oldMeta) && !fs.exists(newMeta))
-        org.apache.hadoop.fs.FileUtil.copy(fs, oldMeta, fs, newMeta, false,
-          spark.sparkContext.hadoopConfiguration)
-    }
+    // the table's definition lives inside the table dir — a data
+    // rewrite must carry it, whatever it declares
+    TableRecord.carry(spark, dstPath, tmp)
     require(fs.rename(dst, backup), s"swap failed renaming $dst -> $backup")
     if (!fs.rename(src, dst)) {
       fs.rename(backup, dst) // restore so the table location always exists
@@ -215,9 +180,6 @@ object ChCommands {
       states: Seq[(String, String, String)], dataPath: String,
       fingerprint: String, fingerprintOk: Boolean,
       cols: Seq[String] = Nil)
-
-  private def projManifest(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(path, "_graft_table_projections.txt")
 
   /** Projection data lives in a SIBLING of the table directory (like
     * swapInPlace's backup), not inside it: a leading-underscore child
@@ -243,17 +205,6 @@ object ChCommands {
       throw new UnsupportedOperationException(
         s"$stmt: comma-combined multi-action ALTER is not supported here — " +
           "issue each action as its own ALTER TABLE statement")
-  }
-
-  /** Read a small metadata file (manifests) fully as UTF-8. */
-  private[plans] def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-      new String(bos.toByteArray, "UTF-8")
-    } finally in.close()
   }
 
   /** Content fingerprint of the BASE data under `path`: every visible
@@ -322,47 +273,35 @@ object ChCommands {
     fp
   }
 
-  // manifest parse results cached per (path, manifest mtime) — the
-  // optimizer rule consults this on every candidate aggregate
-  private val projCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Seq[ProjSpec])]()
-
   private[plans] def invalidateProjectionCache(path: String): Unit = {
-    projCache.remove(path)
+    TableRecord.invalidate(path)
     fpCache.remove(path) // external writes may be invisible to the shallow signature
   }
 
+  /** A projection's [[TableRecord]] entry: `projection.<name>` → its
+    * keys, flattened (stateCol, func, srcCol) states, base fingerprint
+    * and stored column subset. */
+  private def projEntry(sp: ProjSpec): (String, String) =
+    s"projection.${sp.name}" -> TableRecord.fields(Seq(TableRecord.fields(sp.keys),
+      TableRecord.fields(sp.states.flatMap { case (c, f, src) => Seq(c, f, src) }),
+      sp.fingerprint, TableRecord.fields(sp.cols)))
+
   /** The declared projections of the table at `path` (empty when none).
     * `fingerprintOk` is evaluated fresh on every call — it's the
-    * correctness gate; only the manifest PARSE is cached. */
+    * correctness gate; only the record read is cached. */
   private[plans] def tableProjections(spark: SparkSession, path: String): Seq[ProjSpec] = {
-    val fs = fsOf(spark, path)
-    val mp = projManifest(path)
-    val mtime = try {
-      if (!fs.exists(mp)) return Nil
-      fs.getFileStatus(mp).getModificationTime
-    } catch { case _: Exception => return Nil }
-    val cached = projCache.get(path)
-    val parsed = if (cached != null && cached._1 == mtime) cached._2 else {
-      val text = readSmallFile(fs, mp)
-      val specs = text.split("\n").toSeq.filter(_.nonEmpty).map { line =>
-        // 4 fields = pre-subset manifest (full-row sort / aggregate);
-        // 5th field = stored column subset of a sort projection
-        val parts = line.split("\\|", -1)
-        val Array(name, keys, states, fp) = parts.take(4)
-        val cols = if (parts.length >= 5) parts(4).split(",").toSeq.filter(_.nonEmpty) else Nil
-        ProjSpec(name, keys.split(",").toSeq.filter(_.nonEmpty),
-          states.split(",").toSeq.filter(_.nonEmpty).map { s =>
-            val Array(c, f, src) = s.split(":", -1); (c, f, src)
-          },
-          projDataPath(path, name), fp,
-          fingerprintOk = false, cols = cols)
-      }
-      projCache.put(path, (mtime, specs))
-      specs
+    val declared = TableRecord.read(spark, path).toSeq.collect {
+      case (k, v) if k.startsWith("projection.") =>
+        val Seq(keys, states, fp, cols) = TableRecord.unfields(v)
+        val name = k.stripPrefix("projection.")
+        ProjSpec(name, TableRecord.unfields(keys),
+          TableRecord.unfields(states).grouped(3).map { case Seq(c, f, src) => (c, f, src) }.toSeq,
+          projDataPath(path, name), fp, fingerprintOk = false, cols = TableRecord.unfields(cols))
     }
+    if (declared.isEmpty) return Nil
+    val fs = fsOf(spark, path)
     lazy val currentFp = contentFingerprint(spark, path)
-    parsed.map { sp =>
+    declared.map { sp =>
       val dataOk = try fs.exists(new org.apache.hadoop.fs.Path(sp.dataPath)) catch {
         case _: Exception => false
       }
@@ -370,7 +309,7 @@ object ChCommands {
     }
   }
 
-  /** Materialize one projection's data + upsert its manifest line with
+  /** Materialize one projection's data + upsert its record entry with
     * the fingerprint of the base it was built from. Empty `states`
     * marks a SORT projection: the same rows range-partitioned +
     * sorted on `keys` (row-group min/max pruning layout) — storing
@@ -395,9 +334,10 @@ object ChCommands {
     val tmp = projDataPath(path, name) + "__building"
     if (states.isEmpty) {
       // sort layout: file count is the pruning granularity (≈ one
-      // row-group per file); scale with data volume on a cluster
-      val files = math.max(8, spark.sparkContext.defaultParallelism / 4)
+      // row-group per file), floored at 8 and scaled with the source
+      // bytes by the shared sizing rule (as operators.Projections does)
       val stored = if (cols.isEmpty) base else base.select(cols.map(col): _*)
+      val files = math.max(8, graft.sources.MergeTreeWrite.sourceBytesAndTasks(stored)._2)
       stored.repartitionByRange(files, keys.map(col): _*)
         .sortWithinPartitions(keys.map(col): _*)
         .write.mode("overwrite").parquet(tmp)
@@ -416,44 +356,18 @@ object ChCommands {
     val dst = new org.apache.hadoop.fs.Path(projDataPath(path, name))
     fs.delete(dst, true)
     require(fs.rename(new org.apache.hadoop.fs.Path(tmp), dst), s"projection build rename failed: $dst")
-    val others = tableProjections(spark, path).filterNot(_.name == name)
-    writeProjectionManifest(spark, path,
-      others :+ ProjSpec(name, keys, states, dst.toString, fp, fingerprintOk = true, cols = cols))
-  }
-
-  private[plans] def writeProjectionManifest(spark: SparkSession, path: String,
-      specs: Seq[ProjSpec]): Unit = {
-    val fs = fsOf(spark, path)
-    val text = specs.map { sp =>
-      s"${sp.name}|${sp.keys.mkString(",")}|${sp.states.map { case (c, f, s) => s"$c:$f:$s" }.mkString(",")}|${sp.fingerprint}|${sp.cols.mkString(",")}"
-    }.mkString("\n")
-    val out = fs.create(projManifest(path), true)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-    invalidateProjectionCache(path)
+    TableRecord.update(spark, path)(
+      _ + projEntry(ProjSpec(name, keys, states, dst.toString, fp, fingerprintOk = true, cols = cols)))
   }
 
   // ------------------------------------------------------------------
   // SHOW CREATE TABLE (round 15): the ClickHouse DDL record. The
   // CREATE front-end strips ORDER BY / SAMPLE BY / SETTINGS toward
-  // physical layout; `_graft_engine.txt` (written by
-  // ChCreateChTableCommand beside the data, like the TTL and
-  // projection manifests) preserves the declared text so the first
-  // thing a migrating user types — SHOW CREATE TABLE t — answers with
-  // the table's CH shape: engine, partition key, ORDER BY, live TTL
-  // rule and projections.
-
-  private[plans] def engineManifest(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(path, "_graft_engine.txt")
-
-  private[plans] def writeEngineManifest(spark: SparkSession, path: String,
-      fields: Seq[(String, String)]): Unit = {
-    val fs = fsOf(spark, path)
-    val text = fields.map { case (k, v) =>
-      s"$k=${v.replace("\\", "\\\\").replace("\n", "\\n")}"
-    }.mkString("\n")
-    val out = fs.create(engineManifest(path), true)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-  }
+  // physical layout; the table's [[TableRecord]] (written by
+  // ChCreateChTableCommand and kept current by every ALTER) preserves
+  // the declared text so the first thing a migrating user types —
+  // SHOW CREATE TABLE t — answers with the table's CH shape: engine,
+  // partition key, ORDER BY, live TTL rule, projections and indexes.
 
   /** Identifier-shaped elements of a PARTITION BY / ORDER BY clause —
     * the columns system.columns/DESCRIBE mark as key members.
@@ -464,34 +378,6 @@ object ChCommands {
     ChSqlParser.topLevelSplit(expr.trim.stripPrefix("(").stripSuffix(")"))
       .map(_.trim).filter(_.matches("`[^`]+`|[A-Za-z_]\\w*"))
       .map(_.stripPrefix("`").stripSuffix("`")).toSet
-
-  private[plans] def readEngineManifest(spark: SparkSession, path: String): Map[String, String] = {
-    val fs = fsOf(spark, path)
-    val p = engineManifest(path)
-    if (!(try fs.exists(p) catch { case _: Exception => false })) return Map.empty
-    // left-to-right unescape: naive sequential .replace calls corrupt
-    // values containing a literal backslash followed by 'n' (the
-    // write escaped '\\' first, so the read must decode pairwise)
-    def unescape(v: String): String = {
-      val sb = new StringBuilder(v.length)
-      var i = 0
-      while (i < v.length) {
-        val c = v.charAt(i)
-        if (c == '\\' && i + 1 < v.length) {
-          v.charAt(i + 1) match {
-            case 'n'  => sb.append('\n'); i += 2
-            case '\\' => sb.append('\\'); i += 2
-            case o    => sb.append(c).append(o); i += 2
-          }
-        } else { sb.append(c); i += 1 }
-      }
-      sb.toString
-    }
-    readSmallFile(fs, p).split("\n").toSeq.filter(_.contains("=")).map { line =>
-      val i = line.indexOf('=')
-      line.substring(0, i) -> unescape(line.substring(i + 1))
-    }.toMap
-  }
 
   /** Spark type → ClickHouse type text (the SHOW CREATE direction;
     * the inverse of the parser's chDdlType, lossy where the mapping
@@ -521,8 +407,7 @@ object ChCommands {
   }
 
   /** Parse-time fallthrough probe for SHOW CREATE TABLE: does the
-    * table carry ANY graft metadata (engine manifest, TTL rule, or a
-    * projection)? Only this existence check runs at parse — the DDL
+    * table carry a [[TableRecord]]? Only this check runs at parse — the DDL
     * itself is composed at execution by [[ChShowCreateTableCommand]],
     * so a plan parsed before a later ALTER answers the table's
     * CURRENT state (ClickHouse resolves at execution too) and parsing
@@ -530,14 +415,11 @@ object ChCommands {
   private[plans] def hasChTableMetadata(spark: SparkSession, table: String): Boolean = {
     if (!(try spark.catalog.tableExists(table) catch { case _: Exception => false })) return false
     val info = try resolve(spark, table) catch { case _: Exception => return false }
-    val fs = fsOf(spark, info.path)
-    val hasTtl = try fs.exists(ttlManifest(info.path)) catch { case _: Exception => false }
-    readEngineManifest(spark, info.path).nonEmpty || hasTtl ||
-      tableProjections(spark, info.path).nonEmpty
+    TableRecord.read(spark, info.path).nonEmpty
   }
 
-  /** The table's catalog fields in DECLARED order: the manifest's
-    * `columns` record restores the CH declaration order (Spark floats
+  /** The table's catalog fields in DECLARED order: the record's
+    * `columns` entry restores the CH declaration order (Spark floats
     * partition columns to the end; columns added later append). */
   private[plans] def declaredOrderedFields(spark: SparkSession, table: String,
       meta: Map[String, String]): Seq[org.apache.spark.sql.types.StructField] = {
@@ -550,23 +432,20 @@ object ChCommands {
   }
 
   /** The reconstructed CH CREATE statement of `table`, or None when
-    * the table carries no graft metadata at all (plain Spark tables
-    * fall through to Spark's native SHOW CREATE TABLE). Composes the
-    * engine manifest (engine, ORDER BY, PARTITION BY, PRIMARY KEY,
-    * SAMPLE BY, SETTINGS), the catalog schema (types reverse-mapped),
-    * the LIVE TTL rule (`_graft_ttl.txt` — which ALTER MODIFY/REMOVE
-    * TTL keeps current, so the answer tracks the table, not its
-    * creation text), and the declared projections. */
+    * the table carries no [[TableRecord]] (plain Spark tables fall
+    * through to Spark's native SHOW CREATE TABLE). Composes the
+    * record's engine clauses (engine, ORDER BY, PARTITION BY, PRIMARY
+    * KEY, SAMPLE BY, SETTINGS), the catalog schema (types
+    * reverse-mapped), the LIVE TTL rule (which ALTER MODIFY/REMOVE TTL
+    * keeps current, so the answer tracks the table, not its creation
+    * text), the declared vector indexes and the declared projections. */
   private[plans] def showCreateChTable(spark: SparkSession, table: String): Option[String] = {
     if (!(try spark.catalog.tableExists(table) catch { case _: Exception => false })) return None
     val info = try resolve(spark, table) catch { case _: Exception => return None }
-    val meta = readEngineManifest(spark, info.path)
-    val fs = fsOf(spark, info.path)
-    val ttlP = ttlManifest(info.path)
-    val hasTtl = try fs.exists(ttlP) catch { case _: Exception => false }
+    val meta = TableRecord.read(spark, info.path)
+    if (meta.isEmpty) return None
     val projs = tableProjections(spark, info.path)
-    val vecIdx = try VectorIndex.indexes(spark, info.path) catch { case _: Exception => Nil }
-    if (meta.isEmpty && !hasTtl && projs.isEmpty && vecIdx.isEmpty) return None
+    val vecIdx = VectorIndex.indexes(spark, info.path)
     val ordered = declaredOrderedFields(spark, table, meta)
     val colLines = ordered.map(f => s"`${f.name}` ${chTypeName(f.dataType)}")
     // vector indexes re-emit in the CREATE body (CH's own SHOW CREATE
@@ -597,9 +476,7 @@ object ChCommands {
     sb.append(s"\nORDER BY ${meta.getOrElse("order_by", "tuple()")}")
     meta.get("primary_key").foreach(p => sb.append(s"\nPRIMARY KEY $p"))
     meta.get("sample_by").foreach(p => sb.append(s"\nSAMPLE BY $p"))
-    if (hasTtl) {
-      val raw = readSmallFile(fs, ttlP)
-      val (ttl, whereCond, groupKeys, sets) = ttlRuleParse(raw)
+    ttlRule(meta).foreach { case (ttl, whereCond, groupKeys, sets) =>
       val tail =
         if (groupKeys.nonEmpty)
           s" GROUP BY ${groupKeys.mkString(", ")} SET ${sets.map { case (c, e) => s"$c = $e" }.mkString(", ")}"
@@ -1006,24 +883,24 @@ case class ChCreateDictionaryCommand(
 /** A ClickHouse `CREATE TABLE … ENGINE = …` (column-list or CTAS
   * form): executes the rewritten Spark DDL, then records the declared
   * physical-layout clauses — which the rewrite strips from the Spark
-  * statement — in `_graft_engine.txt` beside the data so
+  * statement — in the table's [[TableRecord]] beside the data so
   * `SHOW CREATE TABLE` can answer with the table's CH shape after any
   * session restart. A declared table TTL routes through
-  * `ALTER TABLE … MODIFY TTL` (full validation + the live
-  * `_graft_ttl.txt` manifest), making CREATE-declared TTLs
-  * first-class rather than silently stripped. `IF NOT EXISTS` on an
-  * existing table leaves the existing record untouched.
+  * `ALTER TABLE … MODIFY TTL` (full validation + the live TTL rule in
+  * the same record), making CREATE-declared TTLs first-class rather
+  * than silently stripped. `IF NOT EXISTS` on an existing table leaves
+  * the existing record untouched.
   *
   * Atomicity (round 16): if a post-create sub-statement throws (an
   * invalid TTL expression, a bad projection body), the just-created
-  * table, its manifests and any projection sibling dirs are dropped
+  * table, its record and any projection sibling dirs are dropped
   * before rethrowing — a failed CREATE leaves no partial table, like
   * ClickHouse's atomic CREATE (only when the table did not already
   * exist; an IF NOT EXISTS hit on an existing table is untouched).
   *
   * CTAS column order (round 16): the CTAS form carries its SELECT
   * (`ctasSelect`) and records the analyzed output field order as the
-  * manifest's `columns` — without it a partitioned CTAS's SHOW CREATE
+  * record's `columns` — without it a partitioned CTAS's SHOW CREATE
   * emitted Spark's partition-columns-floated order instead of the
   * declared SELECT order the column-list path restores. Analysis is
   * lazy (schema only, no execution). */
@@ -1036,7 +913,7 @@ case class ChCreateChTableCommand(name: String, innerSql: String, engine: String
   override def run(spark: SparkSession): Seq[Row] = {
     val existed = spark.catalog.tableExists(name)
     // CTAS declares its column order via the SELECT; analyze before
-    // creating so the manifest records the declared order
+    // creating so the record keeps the declared order
     val cols =
       if (declaredCols.nonEmpty || ctasSelect.isEmpty) declaredCols
       else spark.sql(ctasSelect.get).schema.fieldNames.toSeq
@@ -1052,7 +929,7 @@ case class ChCreateChTableCommand(name: String, innerSql: String, engine: String
           clauses.get("SAMPLE BY").map("sample_by" -> _) ++
           clauses.get("SETTINGS").map("settings" -> _) ++
           clauses.get("COMMENT").map("comment" -> _)
-        ChCommands.writeEngineManifest(spark, info.path, fields)
+        TableRecord.update(spark, info.path)(_ => scala.collection.immutable.VectorMap.from(fields))
         clauses.get("TTL").foreach(t => spark.sql(s"ALTER TABLE $name MODIFY TTL $t"))
         // CREATE-declared projections (CH allows them in the body, and
         // SHOW CREATE emits them there) — same path as ALTER ADD
@@ -1089,7 +966,7 @@ case class ChCreateChTableCommand(name: String, innerSql: String, engine: String
 }
 
 /** `ALTER TABLE t MODIFY ORDER BY expr` — updates the table's
-  * declared sort key in the engine record (`_graft_engine.txt`), the
+  * declared sort key in the table's [[TableRecord]], the
   * clause SHOW CREATE TABLE answers with. ClickHouse's own MODIFY
   * ORDER BY is metadata too (existing parts keep their order) — here
   * it is metadata-only as well: no data rewrite, and a relayout that
@@ -1102,11 +979,11 @@ case class ChModifyEngineClauseCommand(table: String, field: String,
   override val output: Seq[Attribute] = Nil
   override def run(spark: SparkSession): Seq[Row] = {
     val info = ChCommands.resolve(spark, table)
-    val meta = ChCommands.readEngineManifest(spark, info.path)
+    val meta = TableRecord.read(spark, info.path)
     // no engine record = the table was not created through CH DDL;
     // fabricating one would flip SHOW CREATE from Spark-native output
     // to invented MergeTree DDL (ClickHouse rejects the ALTER too)
-    if (meta.isEmpty) throw new IllegalArgumentException(
+    if (!meta.contains("engine")) throw new IllegalArgumentException(
       s"table '$table' has no ClickHouse engine record (not created through CH DDL); " +
         "re-create it with CREATE TABLE … ENGINE = MergeTree … first")
     if (field == "order_by") value.foreach { v =>
@@ -1125,8 +1002,7 @@ case class ChModifyEngineClauseCommand(table: String, field: String,
           s"MODIFY ORDER BY references missing column(s): ${missing.mkString(", ")}")
       }
     }
-    val updated = (meta - field) ++ value.map(field -> _)
-    ChCommands.writeEngineManifest(spark, info.path, updated.toSeq.sortBy(_._1))
+    TableRecord.update(spark, info.path)(m => (m - field) ++ value.map(field -> _))
     Seq.empty
   }
 }
@@ -1141,8 +1017,8 @@ case class ChModifySettingsCommand(table: String, text: String,
   override val output: Seq[Attribute] = Nil
   override def run(spark: SparkSession): Seq[Row] = {
     val info = ChCommands.resolve(spark, table)
-    val meta = ChCommands.readEngineManifest(spark, info.path)
-    if (meta.isEmpty) throw new IllegalArgumentException(
+    val meta = TableRecord.read(spark, info.path)
+    if (!meta.contains("engine")) throw new IllegalArgumentException(
       s"table '$table' has no ClickHouse engine record (not created through CH DDL); " +
         "re-create it with CREATE TABLE … ENGINE = MergeTree … first")
     ChCommands.refuseMultiAction(text, if (reset) "RESET SETTING" else "MODIFY SETTING")
@@ -1173,16 +1049,15 @@ case class ChModifySettingsCommand(table: String, text: String,
       }
     val settingsText = next.map { case (k, v) => if (v.isEmpty) k else s"$k = $v" }
       .mkString(", ")
-    val updated = (meta - "settings") ++
-      (if (settingsText.nonEmpty) Seq("settings" -> settingsText) else Nil)
-    ChCommands.writeEngineManifest(spark, info.path, updated.toSeq.sortBy(_._1))
+    TableRecord.update(spark, info.path)(m =>
+      (m - "settings") ++ (if (settingsText.nonEmpty) Seq("settings" -> settingsText) else Nil))
     Seq.empty
   }
 }
 
 /** `SHOW CREATE TABLE` / `SHOW CREATE DICTIONARY` answer. For tables
   * (`ddl = None`) the DDL is composed AT EXECUTION from the live
-  * manifests, so a plan parsed before a later ALTER answers the
+  * table record, so a plan parsed before a later ALTER answers the
   * table's current state — ClickHouse's own resolution point — and
   * EXPLAIN does not bake a stale statement into the plan; parse time
   * only probed metadata existence ([[ChCommands.hasChTableMetadata]]).
@@ -1228,7 +1103,7 @@ case class ChDescribeTableCommand(table: String) extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
     val info = ChCommands.resolve(spark, table)
-    val meta = ChCommands.readEngineManifest(spark, info.path)
+    val meta = TableRecord.read(spark, info.path)
     val partKeys = meta.get("partition_by").map(ChCommands.keyIdents)
       .getOrElse(info.partCols.toSet)
     val sortKeys = meta.get("order_by").map(ChCommands.keyIdents).getOrElse(Set.empty)
@@ -1377,8 +1252,8 @@ case class ChDropDictionaryCommand(name: String, ifExists: Boolean) extends Leaf
 /** `ALTER TABLE t MODIFY TTL <expr> [DELETE]` — sets the table's
   * row-expiry rule (ClickHouse metadata semantics: rows where
   * `expr <= now()` are eligible for removal). The expression is
-  * validated against the table NOW (fail at DDL time), persisted in a
-  * `_graft_ttl.txt` manifest beside the data, and applied by
+  * validated against the table NOW (fail at DDL time), persisted in
+  * the table's [[TableRecord]], and applied by
   * `ALTER TABLE t MATERIALIZE TTL` — which delegates to the same
   * partition-pruned mutate path as ALTER DELETE, so wholly-expired
   * partitions rewrite as units and untouched ones stay byte-identical.
@@ -1398,11 +1273,8 @@ case class ChModifyTtlCommand(table: String, ttlExpr: String,
       .queryExecution.analyzed
     if (groupKeys.nonEmpty) // the rollup must build too
       ChCommands.ttlRollup(data, groupKeys, sets, info.partCols).queryExecution.analyzed
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(info.path), sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(ChCommands.ttlManifest(info.path), true)
-    try out.write(ChCommands.ttlRuleSerialize(ttlExpr, whereCond, groupKeys, sets)
-      .getBytes("UTF-8")) finally out.close()
+    TableRecord.update(sparkSession, info.path)(
+      _ -- ChCommands.TtlKeys ++ ChCommands.ttlEntries(ttlExpr, whereCond, groupKeys, sets))
     Seq.empty
   }
 }
@@ -1412,9 +1284,7 @@ case class ChRemoveTtlCommand(table: String) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Nil
   override def run(sparkSession: SparkSession): Seq[Row] = {
     val info = ChCommands.resolve(sparkSession, table)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(info.path), sparkSession.sparkContext.hadoopConfiguration)
-    fs.delete(ChCommands.ttlManifest(info.path), false)
+    TableRecord.update(sparkSession, info.path)(_ -- ChCommands.TtlKeys)
     Seq.empty
   }
 }
@@ -1430,13 +1300,10 @@ case class ChMaterializeTtlCommand(table: String) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = ChCommands.reportSchema
   override def run(sparkSession: SparkSession): Seq[Row] = {
     val info = ChCommands.resolve(sparkSession, table)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(info.path), sparkSession.sparkContext.hadoopConfiguration)
-    val p = ChCommands.ttlManifest(info.path)
-    if (!fs.exists(p)) throw new IllegalArgumentException(
-      s"table '$table' has no TTL; set one with ALTER TABLE $table MODIFY TTL <expr>")
-    val raw = ChCommands.readSmallFile(fs, p)
-    val (ttl, whereCond, groupKeys, sets) = ChCommands.ttlRuleParse(raw)
+    val (ttl, whereCond, groupKeys, sets) =
+      ChCommands.ttlRule(TableRecord.read(sparkSession, info.path)).getOrElse(
+        throw new IllegalArgumentException(
+          s"table '$table' has no TTL; set one with ALTER TABLE $table MODIFY TTL <expr>"))
     val predSql = ChCommands.ttlPredicateSql(ttl, whereCond)
     if (groupKeys.isEmpty)
       ChAlterMutateCommand(table, predSql, Nil).run(sparkSession)
@@ -1481,7 +1348,7 @@ case class ChMaterializeTtlCommand(table: String) extends LeafRunnableCommand {
   * a recompute engine's eager build is the deterministic equivalent).
   * The projection lands in a SIBLING directory
   * `<table>__graft_proj_<name>/` (outside the base table's own
-  * parquet walk) with a manifest line binding (name, keys, states) to a
+  * parquet walk) with a record entry binding (name, keys, states) to a
   * CONTENT FINGERPRINT of the base data; [[ProjectionAutoUse]] swaps
   * matching aggregates onto the projection only while the
   * fingerprint holds, so later inserts/mutations silently fall back
@@ -1578,7 +1445,7 @@ case class ChMaterializeProjectionCommand(table: String, name: String) extends L
 }
 
 /** `ALTER TABLE t DROP PROJECTION [IF EXISTS] p` / `CLEAR PROJECTION p`
-  * — DROP removes data + manifest entry; CLEAR removes only the data
+  * — DROP removes data + record entry; CLEAR removes only the data
   * (the declaration stays; auto-use skips until re-MATERIALIZE). */
 case class ChDropProjectionCommand(table: String, name: String, ifExists: Boolean,
                                    clearOnly: Boolean) extends LeafRunnableCommand {
@@ -1593,8 +1460,7 @@ case class ChDropProjectionCommand(table: String, name: String, ifExists: Boolea
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(info.path), sparkSession.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(ChCommands.projDataPath(info.path, name)), true)
-    if (!clearOnly)
-      ChCommands.writeProjectionManifest(sparkSession, info.path, specs.filterNot(_.name == name))
+    if (!clearOnly) TableRecord.update(sparkSession, info.path)(_ - s"projection.$name")
     ChCommands.invalidateProjectionCache(info.path)
     Seq.empty
   }

@@ -918,7 +918,7 @@ object ChSqlParser {
   }
 
   /** `SHOW CREATE TABLE t` — one `statement` row with the
-    * reconstructed ClickHouse DDL (engine manifest + catalog schema +
+    * reconstructed ClickHouse DDL (table record + catalog schema +
     * live TTL rule + projections), CH's own output shape. Evaluated
     * at parse time (the CHECK TABLE / EXISTS discipline) as a command
     * so later textual rewrites can't touch the DDL string; tables
@@ -1391,16 +1391,16 @@ object ChSqlParser {
     * rewritten Spark DDL still does the creating, and the clauses the
     * rewrite strips (ENGINE, ORDER BY, SAMPLE BY, SETTINGS, the
     * original PARTITION BY spelling, a declared TTL) persist to the
-    * `_graft_engine.txt` manifest for SHOW CREATE TABLE. Join/Kafka
+    * table's [[TableRecord]] for SHOW CREATE TABLE. Join/Kafka
     * engines keep their dedicated paths. */
   private[plans] def interceptChCreate(raw: String, rewritten: String): Option[LogicalPlan] = {
     // gate on the ACTUAL engine (first ENGINE= outside quotes), not a
     // scan of the whole statement — a COMMENT payload mentioning
-    // 'ENGINE = Kafka' must not skip manifest persistence
+    // 'ENGINE = Kafka' must not skip the table record
     if (engineNameOf(raw).exists(e => e == "join" || e == "kafka")) return None
     val nameTailCols = raw match {
       // CTAS: carry the SELECT so the command records its analyzed
-      // output order as the manifest's declared columns
+      // output order as the record's declared columns
       case ChCreateTableAs(_, name, tail, select) =>
         Some((name, tail, Nil, Nil, Nil, Some(select)))
       case ChCreateTable(_, name, colsRaw, tail) =>

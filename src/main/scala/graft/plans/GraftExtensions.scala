@@ -20,119 +20,36 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `Verify` and `Bench`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  /** The native kernels: SQL name -> (arity, usage in the arity
+    * error, builder). Registered here rather than in
+    * [[ChDialect.functions]], so they stay out of `system.functions`. */
+  private val kernels: Seq[(String, (Int, String, Seq[Expression] => Expression))] = Seq(
+    "graft_dot" -> ((2, "exactly 2 arguments", c => DotProduct(c(0), c(1)))),
+    "graft_array_eq_count" -> ((2, "exactly 2 arguments", c => ArrayEqCount(c(0), c(1)))),
+    "graft_minhash_sig" -> ((3, "(text, nGram, numHashes)", c => MinHashSignature(c(0), c(1), c(2)))),
+    "graft_lsh_buckets" -> ((3, "(vec, numPlanes, numTables)", c => LshBucketIds(c(0), c(1), c(2)))),
+    "graft_pack_ids" -> ((2, "(tokCounts, maxTokens)", c => PackIds(c(0), c(1)))),
+    "graft_bpe_encode" -> ((2, "(text, mergesTable)", c => BpeEncodeExpr(c(0), c(1)))),
+    "graft_bpe_byte_pretokens" -> ((1, "(text)", c => BpeBytePretokensExpr(c(0)))),
+    "graft_bpe_byte_encode" -> ((2, "(text, mergesTable)", c => BpeByteEncodeExpr(c(0), c(1)))),
+    "graft_bpe_byte_decode" -> ((1, "(tokens)", c => BpeByteDecodeExpr(c(0)))),
+    "graft_fill_default" -> ((1, "exactly 1 argument", c => FillDefault(c(0)))),
+    "graft_pg_text_array" -> ((1, "exactly 1 argument", c => PgTextArray(c(0)))),
+    "graft_nearest_cell" -> ((2, "(vec, centroids)", c => NearestCentroid(c(0), c(1)))),
+    "graft_simhash64" -> ((2, "(text, nGram)", c => SimHash64(c(0), c(1)))),
+    "graft_shingle_hashes" -> ((2, "(text, w)", c => ShingleHashes(c(0), c(1)))),
+    "graft_token_stats" -> ((1, "(text)", c => TokenStats(c(0)))),
+    "graft_chunks" -> ((3, "(text, chunkLen, overlap)", c => TokenChunks(c(0), c(1), c(2)))))
+
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_dot takes exactly 2 arguments")
-        DotProduct(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_array_eq_count"),
-      new ExpressionInfo(classOf[ArrayEqCount].getName, "graft_array_eq_count"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_array_eq_count takes exactly 2 arguments")
-        ArrayEqCount(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash_sig"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3, "graft_minhash_sig takes (text, nGram, numHashes)")
-        MinHashSignature(children.head, children(1), children(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_lsh_buckets"),
-      new ExpressionInfo(classOf[LshBucketIds].getName, "graft_lsh_buckets"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3, "graft_lsh_buckets takes (vec, numPlanes, numTables)")
-        LshBucketIds(children.head, children(1), children(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pack_ids"),
-      new ExpressionInfo(classOf[PackIds].getName, "graft_pack_ids"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_pack_ids takes (tokCounts, maxTokens)")
-        PackIds(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bpe_encode"),
-      new ExpressionInfo(classOf[BpeEncodeExpr].getName, "graft_bpe_encode"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_bpe_encode takes (text, mergesTable)")
-        BpeEncodeExpr(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bpe_byte_pretokens"),
-      new ExpressionInfo(classOf[BpeBytePretokensExpr].getName, "graft_bpe_byte_pretokens"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_bpe_byte_pretokens takes (text)")
-        BpeBytePretokensExpr(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bpe_byte_encode"),
-      new ExpressionInfo(classOf[BpeByteEncodeExpr].getName, "graft_bpe_byte_encode"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_bpe_byte_encode takes (text, mergesTable)")
-        BpeByteEncodeExpr(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bpe_byte_decode"),
-      new ExpressionInfo(classOf[BpeByteDecodeExpr].getName, "graft_bpe_byte_decode"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_bpe_byte_decode takes (tokens)")
-        BpeByteDecodeExpr(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_fill_default"),
-      new ExpressionInfo(classOf[FillDefault].getName, "graft_fill_default"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_fill_default takes exactly 1 argument")
-        FillDefault(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pg_text_array"),
-      new ExpressionInfo(classOf[PgTextArray].getName, "graft_pg_text_array"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_pg_text_array takes exactly 1 argument")
-        PgTextArray(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nearest_cell"),
-      new ExpressionInfo(classOf[NearestCentroid].getName, "graft_nearest_cell"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_nearest_cell takes (vec, centroids)")
-        NearestCentroid(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_simhash64 takes (text, nGram)")
-        SimHash64(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_shingle_hashes takes (text, w)")
-        ShingleHashes(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_token_stats"),
-      new ExpressionInfo(classOf[TokenStats].getName, "graft_token_stats"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_token_stats takes (text)")
-        TokenStats(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_chunks"),
-      new ExpressionInfo(classOf[TokenChunks].getName, "graft_chunks"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3, "graft_chunks takes (text, chunkLen, overlap)")
-        TokenChunks(children.head, children(1), children(2))
-      }))
+    for ((name, (arity, usage, build)) <- kernels)
+      ext.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == arity, s"$name takes $usage")
+          build(children)
+        }))
     ChDialect.register(ext)
     // ClickHouse parametric-aggregate spelling (quantile(0.5)(x)) —
     // flattened pre-parse, resolved through the registrations above.

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions.{col, max, min, sum}
   * the write half (maintenance) is eager rebuild on
   * ADD/MATERIALIZE.
   *
-  * Correctness guard: the projection manifest records a content
+  * Correctness guard: the projection's table-record entry holds a content
   * fingerprint of the base data at materialize time; the rule uses
   * the projection ONLY while the base still matches (any
   * INSERT/mutation/OPTIMIZE changes the fingerprint and silently

@@ -78,9 +78,9 @@ object SystemViews {
   }
 
   /** system.data_skipping_indices — one row per declared vector index
-    * (round 19): read from each MergeTree table's `_vector_indexes.txt`
-    * manifest; bytes from the sibling IVF layout when built. The
-    * (database, table) Restrict prunes the manifest walk like
+    * (round 19): read from each MergeTree table's record
+    * ([[TableRecord]]); bytes from the sibling IVF layout when built.
+    * The (database, table) Restrict prunes the record walk like
     * parts/columns. */
   private def dataSkippingIndices(spark: SparkSession, r: Restrict): Seq[Seq[Any]] =
     catalogTables(spark)
@@ -275,8 +275,8 @@ object SystemViews {
     }
 
   /** system.columns with CH's key-membership flags, resolved from the
-    * same engine manifests DESCRIBE TABLE reads; engine tables report
-    * their columns in DECLARED order (the manifest's `columns` record
+    * same table record DESCRIBE TABLE reads; engine tables report
+    * their columns in DECLARED order (the record's `columns` entry
     * — Spark floats partition columns to the end; DESCRIBE and
     * system.columns agree). Plain tables and views carry 0 flags. */
   private def columns(spark: SparkSession, r: Restrict): Seq[Seq[Any]] =
@@ -289,7 +289,7 @@ object SystemViews {
           (Set.empty[String], Set.empty[String], Seq.empty[(String, String)])
         else try {
           val info = ChCommands.resolve(spark, qualified)
-          val meta = ChCommands.readEngineManifest(spark, info.path)
+          val meta = TableRecord.read(spark, info.path)
           val fields = ChCommands.declaredOrderedFields(spark, qualified, meta)
             .map(f => f.name -> f.dataType.simpleString)
           (meta.get("partition_by").map(ChCommands.keyIdents).getOrElse(info.partCols.toSet),

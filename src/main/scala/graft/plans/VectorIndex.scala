@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.LongType
   * (`graft.operators.Similarity.ivfWrite` / `ivfTopKStored`):
   *
   *  - the DDL (in a CREATE TABLE body or `ALTER TABLE … ADD INDEX`)
-  *    DECLARES the index: name, vector column, distance, recorded in
-  *    a `_vector_indexes.txt` manifest beside the table data;
+  *    DECLARES the index: name, vector column, distance, recorded as
+  *    an `index.<name>` entry of the table's [[TableRecord]];
   *  - `ALTER TABLE t MATERIALIZE INDEX n` BUILDS it: kmeans-fit
   *    centroids (nlist = autoNlist(count) ≈ √N, driver-side Lloyd on
   *    a bounded sample), the table landed cell-partitioned in a
@@ -85,36 +85,22 @@ object VectorIndex {
     Some((name, col, distance))
   }
 
-  // ------------------------------------------------------- manifest
+  // ------------------------------------------------------- record
 
-  private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_vector_indexes.txt")
   private[plans] def siblingPath(path: String, name: String): String =
     s"${path.stripSuffix("/")}__graft_vecidx_$name"
-  private def fsOf(spark: SparkSession, path: String) =
-    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
 
-  def indexes(spark: SparkSession, path: String): Seq[Spec] = {
-    val fs = fsOf(spark, path)
-    val mp = manifestPath(path)
-    if (!fs.exists(mp)) return Nil
-    val is = fs.open(mp)
-    val text = try new String(is.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-               finally is.close()
-    text.linesIterator.filter(_.nonEmpty).map { l =>
-      val p = l.split("\\|", -1)
-      Spec(p(0), p(1), p(2), p(3).toInt, p(4))
-    }.toSeq
-  }
+  /** An index's record entry: `index.<name>` → column, distance,
+    * nlist (0 until built) and the base fingerprint it was built on. */
+  private def entry(s: Spec): (String, String) =
+    s"index.${s.name}" -> TableRecord.fields(Seq(s.column, s.distance, s.nlist.toString, s.fingerprint))
 
-  private def writeManifest(spark: SparkSession, path: String, specs: Seq[Spec]): Unit = {
-    val fs = fsOf(spark, path)
-    val os = fs.create(manifestPath(path), true)
-    try os.write(specs.map(s => s"${s.name}|${s.column}|${s.distance}|${s.nlist}|${s.fingerprint}")
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-  }
+  def indexes(spark: SparkSession, path: String): Seq[Spec] =
+    TableRecord.read(spark, path).toSeq.collect {
+      case (k, v) if k.startsWith("index.") =>
+        val Seq(column, distance, nlist, fp) = TableRecord.unfields(v)
+        Spec(k.stripPrefix("index."), column, distance, nlist.toInt, fp)
+    }
 
   def declare(spark: SparkSession, table: String, name: String, column: String,
               distance: String, ifNotExists: Boolean): Unit = {
@@ -135,7 +121,7 @@ object VectorIndex {
       case other => throw new IllegalArgumentException(
         s"vector index '$name': column '$column' must be Array(Float32/Float64), got ${other.sql}")
     }
-    writeManifest(spark, info.path, existing :+ Spec(name, column, distance, 0, ""))
+    TableRecord.update(spark, info.path)(_ + entry(Spec(name, column, distance, 0, "")))
   }
 
   // ------------------------------------------------------ build
@@ -143,7 +129,7 @@ object VectorIndex {
   private def centersPath(sib: String) = new org.apache.hadoop.fs.Path(sib, "_centers.txt")
 
   private[plans] def readCenters(spark: SparkSession, sib: String): Array[Array[Double]] = {
-    val fs = fsOf(spark, sib)
+    val fs = ChCommands.fsOf(spark, sib)
     val is = fs.open(centersPath(sib))
     val text = try new String(is.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
                finally is.close()
@@ -160,8 +146,7 @@ object VectorIndex {
   def materializeOne(spark: SparkSession, table: String, name: String): Long = {
     import graft.operators.Similarity
     val info = ChCommands.resolve(spark, table)
-    val specs = indexes(spark, info.path)
-    val spec = specs.find(_.name == name).getOrElse(
+    val spec = indexes(spark, info.path).find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"vector index '$name' does not exist on $table"))
     val df = ChCommands.readData(spark, table, info.path)
     val n = df.count()
@@ -171,27 +156,25 @@ object VectorIndex {
     val centers = Similarity.ivfFit(df, spec.column, nlist)
     val sib = siblingPath(info.path, name)
     Similarity.ivfWrite(df, spec.column, centers, s"$sib/data")
-    val fs = fsOf(spark, sib)
+    val fs = ChCommands.fsOf(spark, sib)
     val os = fs.create(centersPath(sib), true)
     try os.write(centers.map(_.mkString(",")).mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally os.close()
     val fp = ChCommands.contentFingerprint(spark, info.path)
-    writeManifest(spark, info.path, specs.filterNot(_.name == name) :+
-      spec.copy(nlist = centers.length, fingerprint = fp))
+    TableRecord.update(spark, info.path)(_ + entry(spec.copy(nlist = centers.length, fingerprint = fp)))
     n
   }
 
   def drop(spark: SparkSession, table: String, name: String, ifExists: Boolean): Unit = {
     val info = ChCommands.resolve(spark, table)
-    val specs = indexes(spark, info.path)
-    if (!specs.exists(_.name == name)) {
+    if (!indexes(spark, info.path).exists(_.name == name)) {
       if (ifExists) return
       throw new IllegalArgumentException(s"vector index '$name' does not exist on $table")
     }
-    val fs = fsOf(spark, info.path)
+    val fs = ChCommands.fsOf(spark, info.path)
     fs.delete(new org.apache.hadoop.fs.Path(siblingPath(info.path, name)), true)
-    writeManifest(spark, info.path, specs.filterNot(_.name == name))
+    TableRecord.update(spark, info.path)(_ - s"index.$name")
   }
 
   // ------------------------------------------------------ probe rewrite

@@ -2099,9 +2099,9 @@ object ChFunctions {
   /** `SHOW CREATE TABLE` (round 15) — the migration-UX introspection
     * statement: the first thing a migrating user types to verify a
     * landed table. The engine reconstructs the ClickHouse DDL from
-    * the manifests the DDL front-end persists (`_graft_engine.txt`:
-    * engine/ORDER BY/PARTITION BY spelling/SETTINGS; `_graft_ttl.txt`:
-    * the LIVE TTL rule; the projections manifest) plus the catalog
+    * the table record the DDL front-end persists (`_graft_table.txt`:
+    * engine/ORDER BY/PARTITION BY spelling/SETTINGS, the LIVE TTL
+    * rule, the projections and vector indexes) plus the catalog
     * schema reverse-mapped to CH types. The oracle pins the EXACT
     * statement text, so any drift in the reconstruction — a dropped
     * clause, a reordered column, a lost TTL — is a hash mismatch. */
@@ -2134,7 +2134,7 @@ object ChFunctions {
     * satisfied: dashboards enumerate system.columns, ops scripts read
     * system.parts for part/byte/row counts. system.columns carries
     * CH's is_in_partition_key/is_in_sorting_key flags resolved from
-    * the same engine manifests DESCRIBE uses; system.parts carries
+    * the same table record DESCRIBE uses; system.parts carries
     * per-partition part_count/bytes_on_disk/rows with rows read from
     * parquet FOOTERS (a metadata read, CH's own system.parts promise
     * — never a data scan). The oracle pins the exact column shape,

@@ -119,7 +119,7 @@ class Round20OptSpec extends SparkSpec {
     assert(MergeTreeWrite.sourceBytesAndTasks(left) == ((BigInt(8000000L), 0)))
   }
 
-  // --- Mutate: NULL partition keys and the stats-collect guard ---------
+  // --- Mutate: NULL partition keys and the one stats shape -------------
 
   test("delete with a NULL partition key: never rewritten, and the report says so") {
     val path = java.nio.file.Files.createTempDirectory("graft_r20_nullpart").resolve("t").toString
@@ -139,24 +139,17 @@ class Round20OptSpec extends SparkSpec {
     assert(back.where($"p" === 0).select("id").collect().map(_.getLong(0)).toSeq == Seq(3L))
   }
 
-  test("stats-collect guard: the discovery failover matches the stats path exactly") {
-    import graft.operators.Mutate
-    def land(tag: String): String = {
-      val p = java.nio.file.Files.createTempDirectory(s"graft_r20_guard_$tag").resolve("t").toString
-      (1L to 60L).map(i => (i, (i % 6).toInt, i % 4 == 0))
-        .toDF("id", "p", "flag").write.partitionBy("p").parquet(p)
-      p
-    }
-    val (statsPath, discPath) = (land("stats"), land("disc"))
-    val viaStats = Mutate.rewriteAffected(spark, statsPath, "p", $"flag",
+  test("mutation stats: 6 partitions, 3 affected, total from the file index") {
+    val path = java.nio.file.Files.createTempDirectory("graft_r20_stats").resolve("t").toString
+    (1L to 60L).map(i => (i, (i % 6).toInt, i % 4 == 0))
+      .toDF("id", "p", "flag").write.partitionBy("p").parquet(path)
+    // flag = id % 4 == 0 holds only for even ids: p = 0, 2, 4 each hold
+    // 5 matching rows and 5 keepers; p = 1, 3, 5 hold no match
+    val rep = graft.operators.Mutate.rewriteAffected(spark, path, "p", $"flag",
       _.where(!$"flag"), removesNonKeepers = true, schema = None)
-    val viaDisc = Mutate.rewriteAffected(spark, discPath, "p", $"flag",
-      _.where(!$"flag"), removesNonKeepers = true, schema = None,
-      maxStatsPartitions = 2) // 6 partitions > 2 → forces the failover
-    assert(viaStats == viaDisc, s"$viaStats vs $viaDisc")
-    val a = spark.read.parquet(statsPath).orderBy("id").collect().toSeq
-    val b = spark.read.parquet(discPath).orderBy("id").collect().toSeq
-    assert(a == b)
+    assert(rep == graft.operators.Mutate.Report(6, 3, 15, 0), s"got $rep")
+    val ids = spark.read.parquet(path).select("id").as[Long].collect().sorted.toSeq
+    assert(ids == (1L to 60L).filterNot(_ % 4 == 0))
   }
 
   // --- TTL GROUP BY: NULL-pred partitions don't go catalog-stale -------

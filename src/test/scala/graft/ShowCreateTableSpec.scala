@@ -2,9 +2,10 @@ package graft
 
 /** Round-15: `SHOW CREATE TABLE` reconstructs the ClickHouse DDL of a
   * migrated table — engine, partition key, ORDER BY (persisted by the
-  * CREATE front-end in `_graft_engine.txt`), the LIVE TTL rule and
-  * the declared projections — CH's one-row `statement` shape. Plain
-  * Spark tables keep Spark's native SHOW CREATE TABLE. */
+  * CREATE front-end in the table record `_graft_table.txt`), the LIVE
+  * TTL rule, the declared projections and vector indexes — CH's
+  * one-row `statement` shape. Every whole-table rewrite carries the
+  * record. Plain Spark tables keep Spark's native SHOW CREATE TABLE. */
 class ShowCreateTableSpec extends SparkSpec {
 
   private def showCreate(t: String): String =
@@ -53,18 +54,81 @@ class ShowCreateTableSpec extends SparkSpec {
 
   test("CREATE-declared TTL is live (not stripped) and survives a mutation swap") {
     dropWithLocation("sct_ttl")
-    spark.sql("""CREATE TABLE sct_ttl (d DateTime, v Int64)
+    spark.sql("""CREATE TABLE sct_ttl (d DateTime, v Int64, k String, emb Array(Float64),
+                   INDEX vi emb TYPE vector_similarity('hnsw', 'cosineDistance'),
+                   PROJECTION pk (SELECT k, count(), sum(v) GROUP BY k))
                  ENGINE = MergeTree ORDER BY d
                  TTL d + INTERVAL 1 DAY""")
-    // the TTL landed in the live manifest: MATERIALIZE TTL finds it
-    spark.sql("INSERT INTO sct_ttl VALUES (now() - INTERVAL 10 DAY, 1), (now() + INTERVAL 1 DAY, 2)")
+    // every whole-table rewrite swaps the table directory: the TTL,
+    // the projection and the index must all come through each one
+    def assertDeclared(after: String, ttl: String = "TTL d + INTERVAL 1 DAY"): Unit = {
+      val ddl = showCreate("sct_ttl")
+      for (part <- Seq("ORDER BY d", ttl,
+          "PROJECTION pk (SELECT k, count(), sum(v) GROUP BY k)",
+          "INDEX vi emb TYPE vector_similarity('hnsw', 'cosineDistance')"))
+        assert(ddl.contains(part), s"after $after, SHOW CREATE lost '$part':\n$ddl")
+    }
+    spark.sql("""INSERT INTO sct_ttl VALUES
+                 (now() - INTERVAL 10 DAY, 1, 'a', array(1.0, 0.0)),
+                 (now() + INTERVAL 1 DAY, 2, 'a', array(0.0, 1.0)),
+                 (now() + INTERVAL 1 DAY, 99, 'b', array(1.0, 1.0)),
+                 (now() + INTERVAL 2 DAY, 3, 'b', array(0.5, 0.5))""")
+    // the TTL landed in the live record: MATERIALIZE TTL finds it
     spark.sql("ALTER TABLE sct_ttl MATERIALIZE TTL")
-    assert(spark.table("sct_ttl").count() == 1)
-    // the engine record survives the mutate swap (directory rewrite)
+    assert(spark.table("sct_ttl").count() == 3)
+    assertDeclared("MATERIALIZE TTL")
+    spark.sql("OPTIMIZE TABLE sct_ttl FINAL")
+    assertDeclared("OPTIMIZE FINAL")
+    spark.sql("ALTER TABLE sct_ttl ADD COLUMN x Int64")
+    assertDeclared("ADD COLUMN")
+    spark.sql("ALTER TABLE sct_ttl MODIFY COLUMN x String")
+    assertDeclared("MODIFY COLUMN")
+    spark.sql("ALTER TABLE sct_ttl DROP COLUMN x")
+    assertDeclared("DROP COLUMN")
     spark.sql("ALTER TABLE sct_ttl DELETE WHERE v = 99")
-    val ddl = showCreate("sct_ttl")
-    assert(ddl.contains("ORDER BY d") && ddl.contains("TTL d + INTERVAL 1 DAY"), ddl)
+    assertDeclared("ALTER DELETE")
+    spark.sql("ALTER TABLE sct_ttl UPDATE v = v * 10 WHERE k = 'b'")
+    assertDeclared("ALTER UPDATE")
+    spark.sql("ALTER TABLE sct_ttl MODIFY TTL d + INTERVAL 1 DAY GROUP BY k SET v = sum(v)")
+    spark.sql("""INSERT INTO sct_ttl VALUES
+                 (now() - INTERVAL 5 DAY, 4, 'a', array(1.0, 0.0)),
+                 (now() - INTERVAL 6 DAY, 5, 'a', array(0.0, 1.0))""")
+    spark.sql("ALTER TABLE sct_ttl MATERIALIZE TTL")
+    assertDeclared("TTL GROUP BY", "TTL d + INTERVAL 1 DAY GROUP BY k SET v = sum(v)")
+    // still declared, so MATERIALIZE rebuilds it and auto-use serves it
+    spark.sql("ALTER TABLE sct_ttl MATERIALIZE PROJECTION pk")
+    val agg = spark.sql("SELECT k, count(*) AS c, sum(v) AS s FROM sct_ttl GROUP BY k ORDER BY k")
+    assert(agg.queryExecution.executedPlan.toString.contains("_graft_proj_pk"),
+      agg.queryExecution.executedPlan.toString)
+    assert(agg.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq ==
+      Seq(("a", 2L, 11L), ("b", 1L, 30L)))
     spark.sql("DROP TABLE sct_ttl")
+  }
+
+  test("OPTIMIZE FINAL keeps a ReplacingMergeTree's projection and index declared") {
+    dropWithLocation("mp_t")
+    spark.sql("""CREATE TABLE mp_t (id UInt64, ver UInt64, k String, emb Array(Float64), d DateTime)
+                 ENGINE = ReplacingMergeTree(ver) ORDER BY id
+                 TTL d + INTERVAL 30 DAY""")
+    spark.sql("""INSERT INTO mp_t VALUES
+                 (1, 1, 'a', array(1.0, 0.0), now()), (1, 2, 'a', array(0.0, 1.0), now()),
+                 (2, 1, 'b', array(0.5, 0.5), now())""")
+    spark.sql("ALTER TABLE mp_t ADD PROJECTION pk (SELECT k, count() GROUP BY k)")
+    spark.sql("ALTER TABLE mp_t MATERIALIZE PROJECTION pk")
+    spark.sql("ALTER TABLE mp_t ADD INDEX vi emb TYPE vector_similarity('hnsw', 'cosineDistance')")
+    spark.sql("OPTIMIZE TABLE mp_t FINAL")
+    val ddl = showCreate("mp_t")
+    assert(ddl.contains("PROJECTION pk") && ddl.contains("INDEX vi") &&
+      ddl.contains("TTL d + INTERVAL 30 DAY"), ddl)
+    spark.sql("ALTER TABLE mp_t MATERIALIZE PROJECTION pk")
+    // the only sibling directory is the declared projection's layout
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("mp_t")).location)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val sibs = fs.globStatus(new org.apache.hadoop.fs.Path(loc.getParent, loc.getName + "__graft_*"))
+      .map(_.getPath.getName).toSeq
+    assert(sibs == Seq("mp_t__graft_proj_pk"), s"siblings: $sibs")
+    spark.sql("DROP TABLE mp_t")
   }
 
   test("CTAS form records its clauses; plain Spark tables keep native output") {

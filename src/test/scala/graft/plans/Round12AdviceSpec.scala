@@ -1,24 +1,24 @@
 package graft.plans
 
-/** Round-12 advisor items: TTL manifest fields must survive
+/** Round-12 advisor items: TTL rule fields must survive
   * newline-bearing clause text (triple-quoted DDL is the repo's own
   * house style), and a RENAME TABLE chain must reject source-reuse
   * and target collisions UPFRONT — the documented "a typo aborts
   * with nothing moved" contract covers mid-chain states too. */
 class Round12AdviceSpec extends graft.SparkSpec {
 
-  test("ttlRuleSerialize round-trips fields containing newlines") {
-    val ttl = "d +\n  INTERVAL 30 DAY"
-    val where = "kind IN (\n  'tmp',\n  'scratch'\n)"
-    val sets = Seq("v" -> "sum(\n  v\n)")
-    val raw = ChCommands.ttlRuleSerialize(ttl, Some(where), Seq("k"), sets)
-    val (t2, w2, k2, s2) = ChCommands.ttlRuleParse(raw)
-    // newline runs collapse to one space — SQL-equivalent text, and
-    // nothing bleeds into the expression lines
-    assert(t2 == "d + INTERVAL 30 DAY")
-    assert(w2.contains("kind IN ( 'tmp', 'scratch' )"))
-    assert(k2 == Seq("k"))
-    assert(s2 == Seq("v" -> "sum( v )"))
+  test("TTL rule round-trips newline-bearing fields through the table record") {
+    val dir = s"/tmp/graft_r12_record_${System.nanoTime()}"
+    new java.io.File(dir).mkdirs()
+    try {
+      val ttl = "d +\n  INTERVAL 30 DAY"
+      val where = "kind IN (\n  'tmp',\n  'scratch'\n)"
+      val sets = Seq("v" -> "sum(\n  v\n)")
+      TableRecord.update(spark, dir)(_ ++ ChCommands.ttlEntries(ttl, Some(where), Seq("k"), sets))
+      // the record escapes newlines, so every field comes back exactly
+      assert(ChCommands.ttlRule(TableRecord.read(spark, dir)) ==
+        Some((ttl, Some(where), Seq("k"), sets)))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("MODIFY TTL with multi-line WHERE survives to MATERIALIZE") {

@@ -3,7 +3,7 @@ package graft.plans
 import graft.SparkSpec
 
 /** Round-15 self-review fixes, pinned:
-  *  - engine-manifest escaping decodes left-to-right (a literal
+  *  - table-record escaping decodes left-to-right (a literal
   *    backslash-n in a clause survives the round trip);
   *  - INTERPOLATE guards: the fill axis itself, an empty list, and
   *    duplicate entries all fail loudly instead of rewriting;
@@ -11,7 +11,7 @@ import graft.SparkSpec
   *  - a Scala-API re-registration clears a recorded dictionary DDL. */
 class Round15ReviewSpec extends SparkSpec {
 
-  test("engine manifest round-trips values containing literal backslash-n") {
+  test("table record round-trips values containing literal backslash-n") {
     val dir = s"/tmp/graft_r15_manifest_${System.nanoTime()}"
     new java.io.File(dir).mkdirs()
     try {
@@ -21,9 +21,9 @@ class Round15ReviewSpec extends SparkSpec {
         "order_by" -> """extractAll(s, '\n')[1]""",
         "settings" -> "a\\b",
         "partition_by" -> "x\ny")
-      ChCommands.writeEngineManifest(spark, dir, tricky)
-      val back = ChCommands.readEngineManifest(spark, dir)
-      assert(back == tricky.toMap, s"got $back")
+      TableRecord.update(spark, dir)(_ ++ tricky)
+      val back = TableRecord.read(spark, dir)
+      assert(back.toSeq == tricky, s"got $back")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
