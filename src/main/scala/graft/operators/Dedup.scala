@@ -4,6 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** The real intermediate frames of a bucketed candidate-pair
+  * pipeline: `buckets` = membership rows entering the self-join,
+  * `candidates` = deduplicated id pairs before verification,
+  * `verified` = pairs surviving the exact check. Returned by the
+  * `*Stages` variants so `graft.LshAudit` can count the actual plan
+  * stages at each rehearsal SF (scaling attribution, not a
+  * re-derivation that could drift from the operator). */
+private[graft] final case class LshStages(
+    buckets: DataFrame, candidates: DataFrame, verified: DataFrame)
+
 /** Deduplication operators for training-data pipelines, in increasing
   * sophistication: exact hash, n-gram Jaccard, MinHash+LSH, SimHash.
   * (Embedding-cosine near-dup lives in [[Similarity]].)
@@ -18,24 +28,14 @@ import org.apache.spark.sql.functions._
   *    cap is what keeps the candidate join bounded (the dropped
   *    ultra-common shingles carry ~no signal for near-dup anyway,
   *    and MinHash/LSH is the intended path at that scale).
-  *  - minHashLsh: k minhashes in ONE pass over exploded tokens (k agg
-  *    expressions, map-side combined), then band-bucket self-join —
-  *    candidates only collide within a band bucket.
+  *  - minHashLsh: the whole k-minhash signature is one map-side
+  *    `graft_minhash_sig` kernel call per document, then band-bucket
+  *    self-join — candidates only collide within a band bucket.
   *  - simHash: one codegen'd fingerprint expression per doc, Manku
   *    block-combination bucketing for candidates (exact at any block
   *    count; block count is the auto-dialed scale knob), popcount
   *    verify.
   */
-/** The real intermediate frames of a bucketed candidate-pair
-  * pipeline: `buckets` = membership rows entering the self-join,
-  * `candidates` = deduplicated id pairs before verification,
-  * `verified` = pairs surviving the exact check. Returned by the
-  * `*Stages` variants so `graft.LshAudit` can count the actual plan
-  * stages at each rehearsal SF (scaling attribution, not a
-  * re-derivation that could drift from the operator). */
-private[graft] final case class LshStages(
-    buckets: DataFrame, candidates: DataFrame, verified: DataFrame)
-
 object Dedup {
 
   /** Exact dedup: keep the smallest id per fingerprint group. */
@@ -44,13 +44,24 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("group_size"))
 
   /** Apply step: rows that survive exact dedup (id == group winner).
-    * One shuffle on the fingerprint; the winner is the min-id row via a
-    * row_number window over that partitioning, so the whole row
+    * One shuffle on the fingerprint; the winner is the min-id row, a
+    * [[capBuckets]] of 1 over that partitioning, so the whole row
     * survives without a second join against the input. */
-  def dropExactDuplicates(df: DataFrame, idCol: String, fpCol: String): DataFrame = {
-    val w = Window.partitionBy(col(fpCol)).orderBy(col(idCol))
-    df.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
-  }
+  def dropExactDuplicates(df: DataFrame, idCol: String, fpCol: String): DataFrame =
+    capBuckets(df, Seq(fpCol), idCol, 1)
+
+  /** The whale-bucket cap of the bucketed candidate-pair operators
+    * (MinHash, SimHash, LSH ANN): in each `keys` bucket only the `k`
+    * lowest-`idCol` rows survive, deterministically. Without it one
+    * mass-duplicated bucket turns the bucket self-join quadratic.
+    * A `k` within `spark.graft.topk.rewrite.maxK` plans as a
+    * [[graft.plans.TopKRewrite]] aggregate; the operators' default
+    * 4096 stays a window that sorts the bucket rows. */
+  private[graft] def capBuckets(rows: DataFrame, keys: Seq[String], idCol: String,
+                                k: Int): DataFrame =
+    rows.withColumn("__rn", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col(idCol))))
+      .where(col("__rn") <= k).drop("__rn")
 
   /** Incremental dedup — the corpus-building loop: a NEW batch
     * arrives, anything whose fingerprint is already in the persisted
@@ -264,17 +275,13 @@ object Dedup {
     val bandCols = (0 until bands).map { j =>
       struct(lit(j).as("band"), xxhash64(slice(col("sig"), j * rows + 1, rows)).as("bh"))
     }
-    val buckets0 = sig.select(col(idCol), explode(array(bandCols: _*)).as("b"))
-      .select(col(idCol), col("b.band").as("band"), col("b.bh").as("bh"))
-    // whale-bucket cap (same discipline as lshAnnPairs/ngram
-    // maxPostings): a mass-duplicated document — web boilerplate,
-    // license pages — puts every copy in one band bucket and the
-    // self-join goes quadratic. Lowest ids win deterministically;
-    // run EXACT dedup first so verbatim copies never reach here.
-    val buckets = buckets0
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("band"), col("bh")).orderBy(col(idCol))))
-      .where(col("__rn") <= maxBucket).drop("__rn")
+    // whale-bucket cap: a mass-duplicated document — web boilerplate,
+    // license pages — puts every copy in one band bucket; run EXACT
+    // dedup first so verbatim copies never reach here
+    val buckets = capBuckets(
+      sig.select(col(idCol), explode(array(bandCols: _*)).as("b"))
+        .select(col(idCol), col("b.band").as("band"), col("b.bh").as("bh")),
+      Seq("band", "bh"), idCol, maxBucket)
     val cand = buckets.toDF("id_a", "band", "bh")
       .join(buckets.toDF("id_b", "band", "bh"), Seq("band", "bh"))
       .where(col("id_a") < col("id_b"))
@@ -290,17 +297,6 @@ object Dedup {
     LshStages(buckets, cand, verified)
   }
 
-  /** Connected components over near-dup pairs → dedup clusters: every
-    * node labeled with the min id reachable through the pair graph
-    * (the canonical representative a dedup pipeline keeps).
-    *
-    * Min-label propagation: each round pushes labels across edges and
-    * keeps the min per node; converges in O(graph diameter) rounds —
-    * near-dup graphs are unions of small cliques, so typically 2-3.
-    * Each round is one shuffle; `localCheckpoint` truncates the plan
-    * so lineage doesn't grow exponentially (on a cluster use
-    * `checkpoint` to HDFS for fault tolerance). Returns (id, cluster_rep)
-    * for every node that appears in `pairs`. */
   /** MinHash + banded LSH with ORACLE-ABLE hashes (round 10) — the
     * cross-engine-verifiable variant of [[minHashLshPairs]] (whose
     * seeded-xxhash chains no SQL engine replays). Shingle → 48-bit
@@ -356,17 +352,6 @@ object Dedup {
         round(col("n_match") / lit(k.toDouble), 6).as("est_jaccard"))
   }
 
-  /** SimHash with ORACLE-ABLE hashes (round 10) — the cross-engine
-    * variant of [[simHashPairs]]. Per-shingle 60-bit ints from md5
-    * prefixes (60 not 64: stays positive in signed i64 on every
-    * engine); fingerprint bit j is the sign of Σ(±1) over shingles'
-    * bit j; candidates must agree on one of four 15-bit chunks
-    * (pigeonhole: hamming ≤ 6 < 4 chunks ⇒ some chunk is untouched…
-    * not guaranteed for 6 > 3, so the chunk filter is the standard
-    * recall/cost trade at this radius); verification is exact
-    * `bit_count(fp_a XOR fp_b)`. The per-(doc,bit) grid explode is
-    * gate-scale only — [[simHashPairs]] computes the 64 sums in one
-    * pass for production. */
   /** The PORTABLE 60-bit SimHash fingerprint per document — the
     * cross-engine hash family behind [[simhashOraclePairs]] and the
     * streaming near-dedup gate: per-shingle 60-bit ints from md5
@@ -394,6 +379,17 @@ object Dedup {
         .otherwise(lit(0L))).as("fp"))
   }
 
+  /** SimHash with ORACLE-ABLE hashes (round 10) — the cross-engine
+    * variant of [[simHashPairs]]. Per-shingle 60-bit ints from md5
+    * prefixes (60 not 64: stays positive in signed i64 on every
+    * engine); fingerprint bit j is the sign of Σ(±1) over shingles'
+    * bit j; candidates must agree on one of four 15-bit chunks
+    * (pigeonhole: hamming ≤ 6 < 4 chunks ⇒ some chunk is untouched…
+    * not guaranteed for 6 > 3, so the chunk filter is the standard
+    * recall/cost trade at this radius); verification is exact
+    * `bit_count(fp_a XOR fp_b)`. The per-(doc,bit) grid explode is
+    * gate-scale only — [[simHashPairs]] computes the 64 sums in one
+    * pass for production. */
   def simhashOraclePairs(df: DataFrame, idCol: String, normCol: String,
                          ngram: Int = 3, maxHamming: Int = 6): DataFrame = {
     val fp = simhashOracleFp(df, idCol, normCol, ngram)
@@ -412,6 +408,17 @@ object Dedup {
       .select("id_a", "id_b", "hamming")
   }
 
+  /** Connected components over near-dup pairs → dedup clusters: every
+    * node labeled with the min id reachable through the pair graph
+    * (the canonical representative a dedup pipeline keeps).
+    *
+    * Min-label propagation: each round pushes labels across edges and
+    * keeps the min per node; converges in O(graph diameter) rounds —
+    * near-dup graphs are unions of small cliques, so typically 2-3.
+    * Each round is one shuffle; `localCheckpoint` truncates the plan
+    * so lineage doesn't grow exponentially (on a cluster use
+    * `checkpoint` to HDFS for fault tolerance). Returns (id, cluster_rep)
+    * for every node that appears in `pairs`. */
   def clusters(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
                maxIters: Int = 20): DataFrame = {
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
@@ -495,15 +502,12 @@ object Dedup {
       }
       struct(lit(i).as("c"), packed.as("v"))
     }
-    val chunks0 = hashed.select(col(idCol), col("simhash"),
-        explode(array(keyCols: _*)).as("ch"))
-      .select(col(idCol), col("simhash"), col("ch.c").as("c"), col("ch.v").as("v"))
-    // same whale-bucket cap as minHashLshPairs: identical simhashes
-    // collapse to one (combo, key) bucket per combo
-    val chunks = chunks0
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("c"), col("v")).orderBy(col(idCol))))
-      .where(col("__rn") <= maxBucket).drop("__rn")
+    // whale-bucket cap: identical simhashes collapse to one
+    // (combo, key) bucket per combo
+    val chunks = capBuckets(
+      hashed.select(col(idCol), col("simhash"), explode(array(keyCols: _*)).as("ch"))
+        .select(col(idCol), col("simhash"), col("ch.c").as("c"), col("ch.v").as("v")),
+      Seq("c", "v"), idCol, maxBucket)
     val l = chunks.toDF("id_a", "sim_a", "c", "v")
     val r = chunks.toDF("id_b", "sim_b", "c", "v")
     val cand = l.join(r, Seq("c", "v")).where(col("id_a") < col("id_b"))

@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   *    TakeOrderedAndProject (no shuffle of the scored rows).
   *  - embeddingDupPairs: all-pairs near-dup above a cosine threshold.
   *    Exact; the LSH variant is the 100 TB path.
-  *  - lshBuckets / lshAnnPairs: random-hyperplane LSH. Hyperplane
-  *    components are derived from a seeded hash of (plane, dim) — fully
-  *    deterministic, no RNG state to ship to executors.
+  *  - lshAnnPairs: multi-table random-hyperplane LSH
+  *    (`graft_lsh_buckets`). Hyperplane components come from a seeded
+  *    generator per plane — fully deterministic, no RNG state to ship
+  *    to executors.
   *  - knnJoin: k nearest neighbors for each probe row against a
   *    candidate set, bounded by broadcasting the (small) probe side.
   */
@@ -69,27 +70,6 @@ object Similarity {
     * generated once at this width and work for any dim ≤ MaxDim. */
   val MaxDim: Int = graft.plans.Hyperplanes.MaxDim
 
-  /** Deterministic ±1 hyperplane for plane index `p` (shared with the
-    * batched [[graft.plans.LshBucketIds]] expression, so both
-    * formulations bucket identically). */
-  private def plane(p: Int): Array[Double] = graft.plans.Hyperplanes.plane(p)
-
-  /** Random-hyperplane LSH bucket id: `numPlanes` sign bits, planes
-    * `planeOffset until planeOffset + numPlanes` (offset gives each
-    * hash table an independent plane set). Pass the embedding `dim`
-    * when known: the plane literals embedded in the plan shrink from
-    * MaxDim to dim doubles each — same bucket ids (the dot scores the
-    * common prefix either way), dramatically lighter plan analysis /
-    * serialization when dim ≪ MaxDim. */
-  def lshBucket(vecCol: Column, numPlanes: Int, planeOffset: Int = 0,
-                dim: Int = MaxDim): Column = {
-    val d = math.min(dim, MaxDim)
-    val bits = (0 until numPlanes).map { p =>
-      when(vec.dot(vecCol, lit(plane(planeOffset + p).take(d))) >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
   /** Formula hyperplane `j` over `dim` components:
     * w(j,i) = ((i² + i·(7j+3) + 5j) mod 23) − 11 — small integers a
     * SQL engine regenerates exactly from the same closed form, which
@@ -104,50 +84,6 @@ object Similarity {
   def formulaPlane(j: Int, dim: Int): Array[Double] =
     Array.tabulate(dim)(i => (((i * i + i * (7 * j + 3) + 5 * j) % 23) - 11).toDouble)
 
-  /** SemDeDup-style bucketed semantic dedup — the 100 TB
-    * embedding-dedup path. One map-side pass assigns each vector a
-    * `numPlanes`-bit hyperplane-sign bucket; candidate pairs form
-    * only WITHIN a bucket (the one shuffle); a vector is dropped when
-    * a lower-id bucket-mate sits at cosine ≥ `minCos`. Returns every
-    * vector annotated (bucket, id, survived) so callers can both
-    * filter the corpus and report per-bucket stats.
-    *
-    * Scale dial: bucket occupancy ∝ N / 2^numPlanes — grow
-    * `numPlanes` with the corpus so within-bucket pair work stays
-    * bounded (the standard single-table LSH recall/cost trade;
-    * [[embeddingDupPairs]] is the exact bounded-anchor counterpart,
-    * [[lshAnnPairs]] the multi-table recall path).
-    *
-    * Whale-bucket guard: only the `maxBucket` LOWEST-id rows of a
-    * bucket act as dedup REPRESENTATIVES (the lower-id comparison
-    * side); every row is still checked against them. This caps the
-    * within-bucket join at maxBucket × occupancy — linear in bucket
-    * size, ≤ maxBucket cosine checks per row — where the uncapped
-    * self-join goes quadratic on exactly the input this operator
-    * exists for (mass-duplicated embeddings all landing in one
-    * bucket). Deliberately ASYMMETRIC, unlike [[lshAnnPairs]]'
-    * symmetric truncation: there a truncated row merely costs
-    * recall; here a row past a symmetric cap would survive
-    * UNCHECKED, letting a duplicate flood through untouched. With
-    * the asymmetric cap a flood of copies still dedups — the
-    * lowest-id representative drops them all. Semantics are exact
-    * while occupancy ≤ maxBucket (so the DuckDB oracle stays
-    * hash-green); past it, the only divergence is a row whose every
-    * ≥ minCos lower-id mate is itself past the cap — it survives
-    * where the uncapped rule would drop it. Truncation is
-    * observable via the `graft_semdedup_cap` [[DataFrame.observe]]
-    * metric (`truncated_reps` > 0 ⇒ the cap engaged). */
-  /** Scale-aware default for the hyperplane-count dial: the smallest
-    * plane count whose EXPECTED bucket occupancy N / 2^planes lands
-    * at or under `targetOccupancy` — planes = ceil(log₂(N / target)).
-    * This is the knob the sf0.1/sf1/sf10 candidate audit proved
-    * matters: at FIXED planes, within-bucket candidate pairs grow
-    * quadratically in the scale factor (measured 97.7×/100.3× pairs
-    * for 10× data), while growing planes with log₂(N) restores
-    * ~linear total work (docs/AUDIT_lsh_r11.md). Clamped to [4, 30]:
-    * ≥4 keeps toy corpora from collapsing into a handful of buckets,
-    * ≤30 (a billion buckets) is past any realistic occupancy need
-    * and keeps multi-table ids comfortably inside the packed Long. */
   /** Corpus row count for dial computation ([[autoPlanes]] /
     * [[autoNlist]]): prefers a METADATA-ONLY read when the input is a
     * bare (projected/aliased, unfiltered) scan of a parquet relation
@@ -230,6 +166,17 @@ object Similarity {
     }
   }
 
+  /** Scale-aware default for the hyperplane-count dial: the smallest
+    * plane count whose EXPECTED bucket occupancy N / 2^planes lands
+    * at or under `targetOccupancy` — planes = ceil(log₂(N / target)).
+    * This is the knob the sf0.1/sf1/sf10 candidate audit proved
+    * matters: at FIXED planes, within-bucket candidate pairs grow
+    * quadratically in the scale factor (measured 97.7×/100.3× pairs
+    * for 10× data), while growing planes with log₂(N) restores
+    * ~linear total work (docs/AUDIT_lsh_r11.md). Clamped to [4, 30]:
+    * ≥4 keeps toy corpora from collapsing into a handful of buckets,
+    * ≤30 (a billion buckets) is past any realistic occupancy need
+    * and keeps multi-table ids comfortably inside the packed Long. */
   def autoPlanes(n: Long, targetOccupancy: Int = 64): Int = {
     require(targetOccupancy > 0, "targetOccupancy must be positive")
     val ratio = math.max(n, 1L).toDouble / targetOccupancy
@@ -260,6 +207,39 @@ object Similarity {
         approx_count_distinct(col("bucket")).as("buckets"))
   }
 
+  /** SemDeDup-style bucketed semantic dedup — the 100 TB
+    * embedding-dedup path. One map-side pass assigns each vector a
+    * `numPlanes`-bit hyperplane-sign bucket; candidate pairs form
+    * only WITHIN a bucket (the one shuffle); a vector is dropped when
+    * a lower-id bucket-mate sits at cosine ≥ `minCos`. Returns every
+    * vector annotated (bucket, id, survived) so callers can both
+    * filter the corpus and report per-bucket stats.
+    *
+    * Scale dial: bucket occupancy ∝ N / 2^numPlanes — grow
+    * `numPlanes` with the corpus so within-bucket pair work stays
+    * bounded (the standard single-table LSH recall/cost trade;
+    * [[embeddingDupPairs]] is the exact bounded-anchor counterpart,
+    * [[lshAnnPairs]] the multi-table recall path).
+    *
+    * Whale-bucket guard: only the `maxBucket` LOWEST-id rows of a
+    * bucket act as dedup REPRESENTATIVES (the lower-id comparison
+    * side); every row is still checked against them. This caps the
+    * within-bucket join at maxBucket × occupancy — linear in bucket
+    * size, ≤ maxBucket cosine checks per row — where the uncapped
+    * self-join goes quadratic on exactly the input this operator
+    * exists for (mass-duplicated embeddings all landing in one
+    * bucket). Deliberately ASYMMETRIC, unlike [[lshAnnPairs]]'
+    * symmetric truncation: there a truncated row merely costs
+    * recall; here a row past a symmetric cap would survive
+    * UNCHECKED, letting a duplicate flood through untouched. With
+    * the asymmetric cap a flood of copies still dedups — the
+    * lowest-id representative drops them all. Semantics are exact
+    * while occupancy ≤ maxBucket (so the DuckDB oracle stays
+    * hash-green); past it, the only divergence is a row whose every
+    * ≥ minCos lower-id mate is itself past the cap — it survives
+    * where the uncapped rule would drop it. Truncation is
+    * observable via the `graft_semdedup_cap` [[DataFrame.observe]]
+    * metric (`truncated_reps` > 0 ⇒ the cap engaged). */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     numPlanes: Int, dim: Int, minCos: Double,
                     maxBucket: Int = 4096): DataFrame = {
@@ -308,14 +288,15 @@ object Similarity {
     * gets the exact cosine exactly once. Recall/cost dial: more
     * tables → higher recall, more candidates; more planes → fewer,
     * more-similar candidates per bucket. The (table, bucket) join is
-    * the only shuffle and is bounded by bucket occupancy — which
-    * `maxBucket` CAPS (lowest ids win, deterministically): without
-    * it one degenerate hot bucket (mass-duplicated rows, all-zero
-    * embeddings) turns the self-join quadratic at 100 TB, the same
-    * whale-bucket failure q41's posting-list cap guards against.
-    * Normal buckets sit far below the cap (sf1 rehearsal: ~80 rows
-    * vs 4096), so recall is untouched except inside a degenerate
-    * bucket, where truncating is the point. */
+    * bounded by bucket occupancy — which `maxBucket` CAPS with
+    * [[Dedup.capBuckets]] (lowest ids win, deterministically, as in
+    * MinHash and SimHash): without it one degenerate hot bucket
+    * (mass-duplicated rows, all-zero embeddings) turns the self-join
+    * quadratic at 100 TB, the same whale-bucket failure q41's
+    * posting-list cap guards against. Normal buckets sit far below
+    * the cap (sf1 rehearsal: ~80 rows vs 4096), so recall is
+    * untouched except inside a degenerate bucket, where truncating is
+    * the point. */
   def lshAnnPairs(df: DataFrame, idCol: String, vecCol: String,
                   numPlanes: Int = 8, numTables: Int = 4,
                   minCos: Double = 0.3, dim: Int = MaxDim,
@@ -340,86 +321,26 @@ object Similarity {
 
   /** Stage frames for `graft.LshAudit` (capped bucket rows, candidate
     * pairs, cosine-verified pairs) — the actual plan stages, so
-    * rehearsal scaling attributes to the stage that grew. */
-  /** How many whale buckets the split path below will handle before
-    * falling back to the global-window shape — 4096×10⁴ capped rows
-    * is already a corpus-scale degeneracy, not a hot-spot. */
-  private val MaxHotBuckets = 10000
-
+    * rehearsal scaling attributes to the stage that grew. Building
+    * them runs no Spark job. */
   private[graft] def lshAnnStages(df: DataFrame, idCol: String, vecCol: String,
                   numPlanes: Int = 8, numTables: Int = 4,
                   minCos: Double = 0.3, dim: Int = MaxDim,
-                  maxBucket: Int = 4096,
-                  hotBucketLimit: Int = MaxHotBuckets): graft.operators.LshStages = {
-    val spark = df.sparkSession
+                  maxBucket: Int = 4096): graft.operators.LshStages = {
     // All table bucket ids in ONE batched expression
     // ([[graft.plans.LshBucketIds]]): the candidate-join stage sees a
     // single cheap expression per side instead of numTables×numPlanes
     // inlined dot loops (which blew past codegen size limits and fell
     // back to per-element interpreted eval).
-    def bucketIds = call_function("graft_lsh_buckets", col(vecCol), lit(numPlanes), lit(numTables))
-    // Whale-bucket cap, restructured round 20 (guide §8: decide with
-    // small rows, move the heavy rows once). The old shape windowed
-    // EVERY (id, tbl, bk) row (one full exchange + sort of 8N slim
-    // rows) and then attached vectors with an id-join (one more
-    // exchange of the slim rows AND one of the N vector rows) before
-    // the bucket self-join — three exchanges spent entirely on a cap
-    // that, on a realistic corpus, caps NOTHING (sf1 rehearsal: ~80
-    // rows/bucket vs the 4096 cap; sf100 isolated: 10 exchanges,
-    // 32 s). Now one cheap slim aggregate finds the buckets actually
-    // over the cap — almost always NONE, in which case the vectors
-    // ride the posexplode straight from the scan and the self-join's
-    // two exchanges are the only ones carrying payload. Rare hot
-    // buckets take a bounded split path; a corpus degenerate enough
-    // to blow past MaxHotBuckets falls back to the old global-window
-    // shape wholesale. Pair semantics are identical in all three
-    // paths (lowest maxBucket ids per (tbl, bk) survive — pinned by
-    // OperatorsSpec's flood tests and Round20OptSpec).
-    val slim = df
-      .select(col(idCol), posexplode(bucketIds))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bk")
-    val hotRows = slim.groupBy(col("tbl"), col("bk"))
-      .agg(count(lit(1)).as("__cnt")).where(col("__cnt") > maxBucket)
-      .select(col("tbl"), col("bk"))
-      .limit(hotBucketLimit + 1).collect()
-    val base = withNorm(df, vecCol)
-      .select(col(idCol), col(vecCol).as("__v"), col("__norm"))
-    // vectors attach at the SCAN (posexplode carries them) — no
-    // id-join; norms are computed in the same projection
-    val keyedAll = withNorm(df, vecCol)
-      .select(col(idCol), col("__norm"), col(vecCol).as("__v"), posexplode(bucketIds))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bk")
-      .select(col(idCol), col("tbl"), col("bk"), col("__v"), col("__norm"))
-    val keyed: DataFrame =
-      if (hotRows.isEmpty) keyedAll
-      else if (hotRows.length <= hotBucketLimit) {
-        // bounded split: hot buckets are windowed SLIM (the whale
-        // rows never carry vectors into the sort) and re-attach
-        // vectors for just the ≤ maxBucket×hot survivors
-        val hotDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(hotRows.toIndexedSeq, 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("tbl",
-              slim.schema("tbl").dataType, nullable = false),
-            org.apache.spark.sql.types.StructField("bk",
-              slim.schema("bk").dataType, nullable = false))))
-        val cold = keyedAll.join(broadcast(hotDf), Seq("tbl", "bk"), "left_anti")
-        val capped = slim.join(broadcast(hotDf), Seq("tbl", "bk"), "left_semi")
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy(col("tbl"), col("bk")).orderBy(col(idCol))))
-          .where(col("__rn") <= maxBucket).drop("__rn")
-        val hotKeyed = capped.join(base.hint("shuffle_hash"), Seq(idCol))
-          .select(col(idCol), col("tbl"), col("bk"), col("__v"), col("__norm"))
-        cold.unionByName(hotKeyed)
-      } else {
-        // degenerate corpus: the old global-window cap, verbatim
-        val cappedAll = slim
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy(col("tbl"), col("bk")).orderBy(col(idCol))))
-          .where(col("__rn") <= maxBucket).drop("__rn")
-        cappedAll.join(base.hint("shuffle_hash"), Seq(idCol))
-          .select(col(idCol), col("tbl"), col("bk"), col("__v"), col("__norm"))
-      }
+    val bucketIds = call_function("graft_lsh_buckets", col(vecCol), lit(numPlanes), lit(numTables))
+    // Vectors and norms ride the posexplode from the scan. The cap
+    // windows these rows on (tbl, bk), the key the self-join below
+    // partitions on, so both share one exchange; the window's sort is
+    // what the cap costs.
+    val keyed = Dedup.capBuckets(
+      withNorm(df, vecCol).select(col(idCol), posexplode(bucketIds).as(Seq("tbl", "bk")),
+        col(vecCol).as("__v"), col("__norm")),
+      Seq("tbl", "bk"), idCol, maxBucket)
     val keyedSlim = keyed.select(col(idCol), col("tbl"), col("bk"))
     // audit-only frame: distinct candidate pairs (not on the
     // verified path — materializing all-table pair occurrences just
@@ -450,26 +371,6 @@ object Similarity {
     graft.operators.LshStages(keyedSlim, cand, verified)
   }
 
-  /** IVF (inverted-file) ANN: coarse k-means quantization assigns
-    * every vector to one of `nlist` cells; a probe scores only the
-    * vectors in its `nprobe` nearest cells. The classic trade: scan
-    * cost drops to ~nprobe/nlist of brute force, recall controlled by
-    * nprobe.
-    *
-    * The 100 TB shape of each stage:
-    *  - [[ivfFit]] trains the coarse quantizer driver-side on ONE
-    *    collected sample capped at `maxSample` rows — centroid
-    *    geometry converges at a tiny fraction of the corpus, and an
-    *    in-process Lloyd fit on a bounded sample beats a distributed
-    *    trainer's job round-trips by orders of magnitude (swap in a
-    *    distributed fit only for huge nlist × dim codebooks);
-    *  - [[nearestCell]] assigns in ONE map-side pass of `nlist`
-    *    codegen'd dot products (no MLlib transform, no shuffle, no
-    *    vector-type conversion of the stored rows);
-    *  - [[ivfWrite]] lands the table partitioned by `cell`, so a
-    *    probe's scan prunes to `nprobe` directories at the file index
-    *    — the inverted file IS the storage layout.
-    */
   /** Scale-aware default for the IVF cell count: nlist ≈ √N — the
     * classic probe-cost balance (a probe scores nlist centroids plus
     * ~nprobe·N/nlist candidates; the sum minimizes near √N for small
@@ -493,6 +394,26 @@ object Similarity {
                    seed: Long = 42L): (DataFrame, Array[Array[Double]]) =
     ivfIndex(df, idCol, vecCol, autoNlist(corpusCount(df)), seed)
 
+  /** IVF (inverted-file) ANN: coarse k-means quantization assigns
+    * every vector to one of `nlist` cells; a probe scores only the
+    * vectors in its `nprobe` nearest cells. The classic trade: scan
+    * cost drops to ~nprobe/nlist of brute force, recall controlled by
+    * nprobe.
+    *
+    * The 100 TB shape of each stage:
+    *  - [[ivfFit]] trains the coarse quantizer driver-side on ONE
+    *    collected sample capped at `maxSample` rows — centroid
+    *    geometry converges at a tiny fraction of the corpus, and an
+    *    in-process Lloyd fit on a bounded sample beats a distributed
+    *    trainer's job round-trips by orders of magnitude (swap in a
+    *    distributed fit only for huge nlist × dim codebooks);
+    *  - [[nearestCell]] assigns in ONE map-side pass of `nlist`
+    *    codegen'd dot products (no MLlib transform, no shuffle, no
+    *    vector-type conversion of the stored rows);
+    *  - [[ivfWrite]] lands the table partitioned by `cell`, so a
+    *    probe's scan prunes to `nprobe` directories at the file index
+    *    — the inverted file IS the storage layout.
+    */
   def ivfFit(df: DataFrame, vecCol: String, nlist: Int,
              sampleFraction: Double = 1.0, seed: Long = 42L,
              maxSample: Int = 50000): Array[Array[Double]] = {

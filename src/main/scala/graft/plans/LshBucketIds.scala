@@ -22,9 +22,8 @@ import org.apache.spark.sql.types._
   * code stays small and the sweep itself is a memory-bandwidth loop.
   *
   * Plane p is the deterministic ±1 vector from a seeded LCG
-  * ([[Hyperplanes.plane]]) — identical on every JVM, and the same
-  * family [[graft.operators.Similarity.lshBucket]] uses, so single-
-  * plane and batched formulations bucket identically.
+  * ([[Hyperplanes.plane]]) — identical on every JVM, so every
+  * executor buckets identically.
   */
 object Hyperplanes {
   /** Max vector dimensionality the plane family covers. */

@@ -185,6 +185,28 @@ class OperatorsSpec extends SparkSpec {
     assert(normal.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
   }
 
+  test("Dedup.capBuckets keeps the k lowest ids of every bucket") {
+    val rnd = new scala.util.Random(20261019L)
+    val k = 5
+    // occupancies straddle k (k-1, k, k+1, each twice) beside
+    // singletons and whales; ids recur across buckets as they do
+    // across LSH tables, but never within one
+    val occ = Seq(1, k - 1, k - 1, k, k, k + 1, k + 1, 3 * k, 40)
+    val rows = occ.zipWithIndex.flatMap { case (n, b) =>
+      rnd.shuffle((0L until 100L).toList).take(n).map(id => (b % 3, b * 7919L, id, s"p$id"))
+    }
+    val df = rnd.shuffle(rows).toDF("tbl", "bk", "id", "payload")
+    // both plan shapes: the TopKRewrite aggregate and the bare window
+    for (cap <- Seq(1, k); rewrite <- Seq("true", "false")) withConf("spark.graft.topk.rewrite" -> rewrite) {
+      val capped = Dedup.capBuckets(df, Seq("tbl", "bk"), "id", cap)
+      assert(capped.columns.toSeq == df.columns.toSeq)
+      val got = capped.collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq.sorted
+      val want = rows.groupBy(r => (r._1, r._2)).values.flatMap(_.sortBy(_._3).take(cap)).toSeq.sorted
+      assert(got == want, s"cap $cap, rewrite $rewrite")
+    }
+  }
+
   test("minHashLshPairs and simHashPairs whale-bucket caps bound duplicate floods") {
     import graft.operators.Dedup
     // 200 verbatim copies (identical signatures → one bucket per

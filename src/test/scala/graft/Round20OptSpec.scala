@@ -6,13 +6,11 @@ import org.apache.spark.sql.functions._
 
 /** Round-20 optimization pins.
   *
-  *  - lshAnnPairs' whale-bucket cap was restructured from a global
-  *    window (one exchange+sort of every bucket row, plus an id-join
-  *    to re-attach vectors) into a slim hot-bucket census with three
-  *    paths: no-hot (vectors ride the scan, zero cap machinery), a
-  *    bounded hot/cold split, and a degenerate-corpus fallback to the
-  *    old global-window shape. All three must produce IDENTICAL
-  *    pairs.
+  *  - lshAnnPairs' whale-bucket cap is one `Dedup.capBuckets` window
+  *    over the vector-carrying bucket rows the scan's posexplode
+  *    produces, so building the operator runs no Spark job. The
+  *    lowest ids of a hot bucket survive, and cold buckets beside it
+  *    are untouched.
   *  - MergeTreeWrite.write moved from hash-clustering on the
   *    partition value (parallelism = #distinct values — the 275 s
   *    one-task sf100 q96 landing) to byte-sized range clustering on
@@ -27,53 +25,43 @@ import org.apache.spark.sql.functions._
 class Round20OptSpec extends SparkSpec {
   import spark.implicits._
 
-  // --- lshAnnPairs cap paths ------------------------------------------
+  // --- lshAnnPairs whale-bucket cap ------------------------------------
 
-  /** Mixed corpus: a 400-copy flood (hot in every table), one
-    * high-cosine pair, one orthogonal singleton. */
-  private def mixedCorpus = {
+  private def pairSet(st: graft.operators.LshStages): Set[(Long, Long)] =
+    st.verified.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("lshAnnPairs: flood capped to the 20 lowest ids, cold pair survives beside it") {
+    // a 400-copy flood (hot in every table), one high-cosine pair,
+    // one orthogonal singleton
     val flood = (0L until 400L).map(i => (i, Array(0.6f, 0.8f, 0.0f)))
     val rest = Seq(
       (5000L, Array(1.0f, 0.02f, 0.0f)),
       (5001L, Array(1.0f, 0.03f, 0.0f)), // cos(5000, 5001) ≈ 0.9999
       (6000L, Array(0.0f, 0.0f, 1.0f)))
-    (flood ++ rest).toDF("vec_id", "embedding")
-  }
-
-  private def pairSet(st: graft.operators.LshStages): Set[(Long, Long)] =
-    st.verified.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-  test("lshAnnPairs hot/cold split equals the global-window fallback on a mixed corpus") {
-    val df = mixedCorpus
-    val split = pairSet(Similarity.lshAnnStages(df, "vec_id", "embedding",
-      numPlanes = 4, numTables = 6, minCos = 0.9, maxBucket = 20))
-    val fallback = pairSet(Similarity.lshAnnStages(df, "vec_id", "embedding",
-      numPlanes = 4, numTables = 6, minCos = 0.9, maxBucket = 20,
-      hotBucketLimit = 0)) // force the degenerate-corpus path
-    assert(split == fallback, s"split ${split.size} vs fallback ${fallback.size}")
-    // the flood capped to the 20 lowest ids (pinned cap semantics)
-    val floodPairs = split.filter(_._1 < 400L)
+    val pairs = pairSet(Similarity.lshAnnStages((flood ++ rest).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", numPlanes = 4, numTables = 6, minCos = 0.9, maxBucket = 20))
+    val floodPairs = pairs.filter(_._1 < 400L)
     assert(floodPairs.size == 20 * 19 / 2, s"flood pairs ${floodPairs.size}")
     assert(floodPairs.forall(p => p._1 < 20 && p._2 < 20))
-    // the cold-path pair survives untouched beside the hot bucket
-    assert(split.contains((5000L, 5001L)))
+    // the cold-bucket pair survives untouched beside the hot bucket
+    assert(pairs == floodPairs + ((5000L, 5001L)), s"got ${pairs -- floodPairs}")
   }
 
-  test("lshAnnPairs no-hot path needs no cap machinery and keeps recall") {
+  test("building lshAnnStages runs 0 Spark jobs; the pairs keep recall") {
     val vecs = Seq(
       (1L, Array(1.0f, 0.0f, 0.0f)),
       (2L, Array(0.99f, 0.1f, 0.0f)),
       (3L, Array(0.0f, 1.0f, 0.0f)),
       (4L, Array(-1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    val st = Similarity.lshAnnStages(vecs, "vec_id", "embedding",
-      numPlanes = 4, numTables = 6, minCos = 0.9)
+    var st: graft.operators.LshStages = null
+    val jobs = jobsOf {
+      st = Similarity.lshAnnStages(vecs, "vec_id", "embedding",
+        numPlanes = 4, numTables = 6, minCos = 0.9)
+    }
+    assert(jobs == 0, s"building the operator ran $jobs Spark jobs")
     val pairs = pairSet(st)
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.contains((1L, 4L)))
-    // no hot buckets ⇒ the verified plan carries no Window (the cap
-    // engaged nothing) — the restructure's whole point
-    val plan = st.verified.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"unexpected window in no-hot plan:\n$plan")
   }
 
   // --- MergeTreeWrite.write range clustering ---------------------------

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
@@ -66,35 +65,6 @@ class SmallSortCoalesceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         assert(rangeExchanges(offPlan).nonEmpty, s"off, $q should keep its range exchange:\n$offPlan")
       }
     }
-  }
-
-  /** Jobs started by `body`, counted by job group; a marker job after
-    * it drains the listener queue up to that point. */
-  private def jobsOf(body: => Unit): Int = {
-    val group = s"sso-${System.nanoTime()}"
-    val marker = group + "-marker"
-    @volatile var jobs = 0
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs += 1
-          case Some(`marker`) => markerSeen = true
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30_000_000_000L
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "marker job event never arrived")
-      jobs
-    } finally sc.removeSparkListener(listener)
   }
 
   test("a small ordered aggregate runs in two jobs, with no range exchange") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,6 +18,35 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     kv.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Jobs started by `body`, counted by job group; a marker job after
+    * it drains the listener queue up to that point. */
+  def jobsOf(body: => Unit): Int = {
+    val group = s"jobs-${System.nanoTime()}"
+    val marker = group + "-marker"
+    @volatile var jobs = 0
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs += 1
+          case Some(`marker`) => markerSeen = true
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30_000_000_000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen, "marker job event never arrived")
+      jobs
+    } finally sc.removeSparkListener(listener)
   }
 
   /** DROP TABLE plus managed-location (and sibling-dir) cleanup: a
