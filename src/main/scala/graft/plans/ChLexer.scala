@@ -13,8 +13,10 @@ package graft.plans
   *
   * An unterminated token runs to the end of the text. The rewrite
   * passes of [[ChSqlParser]] see [[mask]]'s text, where each token
-  * body is a placeholder, and its index scans (top-level commas,
-  * parens, keywords) read [[blank]]'s same-length copy.
+  * body is a placeholder, and every question about paren structure —
+  * a matching paren, a top-level comma or keyword, a query block and
+  * its clauses — is answered by [[tree]], one scan of [[blank]]'s
+  * same-length copy.
   */
 private[plans] object ChLexer {
 
@@ -131,5 +133,127 @@ private[plans] object ChLexer {
       }
       if (k < bodies.length) k else -1
     }
+  }
+
+  /** A clause keyword at one paren level: its canonical spelling
+    * (`ORDER BY`, `WITH TIES`, …), where it starts, and where the
+    * clause body after it starts. */
+  final case class Clause(kw: String, start: Int, bodyStart: Int)
+
+  /** One query block: from its head — the first SELECT at its paren
+    * level, or the paren that opens the level's leading parenthesized
+    * query term — to the end of the enclosing parens (`enclosed`) or
+    * of the statement, trailing blanks and a statement's `;` excluded.
+    * A CTE prefix lies before the head. `clauses` are the clause
+    * keywords at the block's own level, in text order. A set operation
+    * is one block whose branches' clauses follow each other, so a
+    * trailing clause after the last branch covers all the text before
+    * it. */
+  final case class Block(head: Int, end: Int, enclosed: Boolean, clauses: IndexedSeq[Clause]) {
+    /** Where clause `i`'s body ends: at the next clause or the block end. */
+    def bodyEnd(i: Int): Int = if (i + 1 < clauses.length) clauses(i + 1).start else end
+    def indexOf(kw: String): Int = clauses.indexWhere(_.kw == kw)
+    def lastIndexOf(kw: String): Int = clauses.lastIndexWhere(_.kw == kw)
+    /** The keywords of the clauses after clause `i`. */
+    def kwsAfter(i: Int): Seq[String] = clauses.view.drop(i + 1).map(_.kw).toSeq
+  }
+
+  /** The paren structure of one text, [[tree]]'s result. `code` is
+    * the text's [[blank]] copy; `top` and `commas` are the clause
+    * keywords and the commas outside every paren. */
+  final class Tree private[ChLexer] (val code: String, partner: Array[Int],
+      val blocks: IndexedSeq[Block], val top: IndexedSeq[Clause], val commas: IndexedSeq[Int]) {
+    /** The index of the paren matching the one at `i`; -1 when `i` is
+      * not a paren or its partner is missing. */
+    def partnerOf(i: Int): Int = partner(i)
+    /** Where the first clause keyword `kw` outside every paren starts,
+      * or -1. */
+    def keyword(kw: String): Int = top.find(_.kw == kw).fold(-1)(_.start)
+  }
+
+  private val ClauseWords =
+    Set("SELECT", "FROM", "PREWHERE", "WHERE", "HAVING", "QUALIFY", "LIMIT", "OFFSET", "FETCH")
+  // the two-word clause keywords, by first word
+  private val SecondWords = Map("GROUP" -> Seq("BY"), "ORDER" -> Seq("BY"), "WITH" -> Seq("TOTALS", "TIES"))
+
+  /** The paren structure of `s` in one scan of its [[blank]] copy: the
+    * matching paren of every paren, the top-level commas, the query
+    * blocks, and the clause keywords of each paren level — SELECT, FROM, PREWHERE, WHERE,
+    * GROUP BY, WITH TOTALS, HAVING, QUALIFY, ORDER BY, LIMIT, the BY of
+    * `LIMIT n BY`, OFFSET, FETCH and WITH TIES. A word after a `.` is
+    * a name, not a keyword. An unmatched `)` is skipped and an
+    * unmatched `(` runs to the end of the text. */
+  def tree(s: String): Tree = {
+    val code = blank(s)
+    val n = code.length
+    val partner = Array.fill(n)(-1)
+    final class Level(val open: Int) {
+      var leadParen = -1
+      var sawCode = false
+      val clauses = scala.collection.mutable.ArrayBuffer.empty[Clause]
+    }
+    val blocks = scala.collection.mutable.ArrayBuffer.empty[Block]
+    def finish(l: Level, close: Int): Unit = {
+      val head =
+        if (l.leadParen >= 0) (if (l.clauses.nonEmpty) l.leadParen else -1)
+        else l.clauses.find(_.kw == "SELECT").fold(-1)(_.start)
+      val body = code.substring(l.open + 1, close).stripTrailing
+      val end = l.open + 1 +
+        (if (l.open < 0 && body.endsWith(";")) body.dropRight(1).stripTrailing.length else body.length)
+      if (head >= 0 && head < end)
+        blocks += Block(head, end, l.open >= 0, l.clauses.filter(_.start >= head).toIndexedSeq)
+    }
+    def isWord(c: Char) = Character.isLetterOrDigit(c) || c == '_'
+    def wordEnd(i: Int) = { var j = i; while (j < n && isWord(code.charAt(j))) j += 1; j }
+    // the end of the word after `from` when it is `w`, else -1
+    def next(from: Int, w: String): Int = {
+      var a = from
+      while (a < n && code.charAt(a).isWhitespace) a += 1
+      val b = wordEnd(a)
+      if (b - a == w.length && code.regionMatches(true, a, w, 0, w.length)) b else -1
+    }
+    val stack = scala.collection.mutable.ArrayBuffer(new Level(-1))
+    val top = stack.head
+    val commas = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var i = 0
+    while (i < n) {
+      val c = code.charAt(i)
+      val lv = stack.last
+      if (c == '(') {
+        if (!lv.sawCode) lv.leadParen = i
+        lv.sawCode = true
+        stack += new Level(i)
+        i += 1
+      } else if (c == ')') {
+        if (stack.length > 1) {
+          val inner = stack.remove(stack.length - 1)
+          partner(inner.open) = i; partner(i) = inner.open
+          finish(inner, i)
+        }
+        i += 1
+      } else if (Character.isLetter(c) && (i == 0 || !isWord(code.charAt(i - 1)) && code.charAt(i - 1) != '.')) {
+        lv.sawCode = true
+        var e = wordEnd(i)
+        if (e - i <= 8) {
+          val w = code.substring(i, e).toUpperCase
+          def add(kw: String, bodyStart: Int): Unit = { lv.clauses += Clause(kw, i, bodyStart); e = bodyStart }
+          SecondWords.get(w) match {
+            case Some(seconds) =>
+              seconds.iterator.map(x => x -> next(e, x)).find(_._2 > 0).foreach { case (x, b) => add(s"$w $x", b) }
+            case None =>
+              if (ClauseWords.contains(w) ||
+                  w == "BY" && lv.clauses.lastOption.exists(l => l.kw == "LIMIT" || l.kw == "OFFSET")) add(w, e)
+          }
+        }
+        i = e
+      } else {
+        if (c == ',' && (lv eq top)) commas += i
+        if (!c.isWhitespace) lv.sawCode = true
+        i += 1
+      }
+    }
+    while (stack.length > 1) finish(stack.remove(stack.length - 1), n)
+    finish(top, n)
+    new Tree(code, partner, blocks.toIndexedSeq, top.clauses.toIndexedSeq, commas.toIndexedSeq)
   }
 }

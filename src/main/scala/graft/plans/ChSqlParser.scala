@@ -139,32 +139,6 @@ object ChSqlParser {
   private val QuotedDateAdd = """\b(?:dateAdd|timestampAdd)\s*\(\s*'""".r
   private val QuotedDateSub = """\b(?:dateSub|timestampSub)\s*\(\s*'""".r
 
-  /** ClickHouse PREWHERE is a storage-layer filter hint; under Spark
-    * the parquet scan already gets every pushable predicate, so the
-    * keyword maps to plain WHERE. Only the lone-PREWHERE form is
-    * rewritten blindly — `PREWHERE a WHERE b` would produce two WHERE
-    * clauses and fail to parse (loud, never silently wrong), matching
-    * the rarity of the combined form in migrated code. */
-  private val Prewhere = """(?i)\bPREWHERE\b""".r
-
-  /** The combined `PREWHERE a WHERE b` form folds both predicates
-    * into one WHERE (the storage-layer split is a no-op under
-    * pushdown); runs before the lone-PREWHERE rewrite. The predicate
-    * capture allows one paren level — deeper nesting falls through to
-    * the lone rewrite and fails loudly at parse. */
-  private val PrewhereCombined =
-    """(?is)\bPREWHERE\s+((?:'[^']*'|\((?:'[^']*'|[^()])*\)|[^()])+?)\s+WHERE\s+""".r
-
-  /** `GROUP BY k WITH TOTALS` → `GROUP BY GROUPING SETS ((k), ())`:
-    * the totals row lands inline with NULL group keys (Spark's
-    * grouping-sets convention) rather than ClickHouse's separate
-    * defaults-filled block — the aggregates themselves are identical.
-    * The `[^()]+?` key capture cannot cross parentheses, so a GROUP BY
-    * inside a subquery is never miscaptured; a WITH TOTALS whose keys
-    * contain calls simply doesn't match and fails at parse (loud,
-    * never silently wrong). */
-  private val WithTotals = """(?i)\bGROUP\s+BY\s+([^()]+?)\s+WITH\s+TOTALS\b""".r
-
   /** ClickHouse `GLOBAL IN` / `GLOBAL JOIN`: a distributed-execution
     * hint that ships the right side to every shard — which is exactly
     * what Spark's broadcast/shuffle planning already decides (AQE
@@ -196,16 +170,6 @@ object ChSqlParser {
     * wherever asked), so the clause strips; runs after the FORMAT
     * strip, which CH orders after it. */
   private val IntoOutfile = """(?is)\s+INTO\s+OUTFILE\s+'[^']*'\s*;?\s*$""".r
-
-  /** `ORDER BY … LIMIT n WITH TIES` → a rank() window wrap: every row
-    * tying with the n-th row's sort key survives. Same supported
-    * subset and loud-failure contract as LIMIT BY: SELECT prefix,
-    * paren-free ORDER list. The final ORDER BY is the ties key — a
-    * caller needing a total output order selects exactly the ORDER BY
-    * columns (ties are duplicates of the key, so that order IS
-    * total). */
-  private val LimitWithTies =
-    """(?is)^\s*(SELECT\b.*\S)\s+ORDER\s+BY\s+([^()]+?)\s+LIMIT\s+(\d+)\s+WITH\s+TIES\s*;?\s*$""".r
 
   /** ClickHouse type names inside `CAST(x AS <T>)` that Spark's
     * grammar rejects: Nullable(T) unwraps (every Spark type is
@@ -491,17 +455,20 @@ object ChSqlParser {
       s"generateRandom: no generator for type $other; project it from a supported column")
   }
 
+  /** A table function's `'name Type, …'` structure, one select item
+    * per entry: `item(name, Spark type)`. */
+  private def structureItems(fn: String, structure: String)(item: (String, String) => String): String =
+    topLevelSplit(structure).map { entry =>
+      val t = entry.trim
+      val sp = t.indexOf(' ')
+      if (sp < 0) throw new IllegalArgumentException(s"$fn structure entry '$t' needs 'name Type'")
+      item(t.substring(0, sp), chDdlType(t.substring(sp + 1).trim))
+    }.mkString(", ")
+
   private def rewriteGenerateRandom(sql: String, lx: ChLexer.Masked): String = {
     val out = GenerateRandomFn.replaceAllIn(sql, m => {
-      val cols = topLevelSplit(lx.body(m.group(1))).map { entry =>
-        val t = entry.trim
-        val sp = t.indexOf(' ')
-        if (sp < 0) throw new IllegalArgumentException(
-          s"generateRandom structure entry '$t' needs 'name Type'")
-        randomExprFor(chDdlType(t.substring(sp + 1).trim), t.substring(0, sp))
-      }
-      scala.util.matching.Regex.quoteReplacement(
-        s"FROM (SELECT ${cols.mkString(", ")} FROM range(${m.group(2)}))")
+      val cols = structureItems("generateRandom", lx.body(m.group(1)))((n, t) => randomExprFor(t, n))
+      scala.util.matching.Regex.quoteReplacement(s"FROM (SELECT $cols FROM range(${m.group(2)}))")
     })
     if (GenerateRandomNoLimit.findFirstIn(out).isDefined)
       throw new UnsupportedOperationException(
@@ -517,15 +484,8 @@ object ChSqlParser {
 
   private def rewriteNullTableFn(sql: String, lx: ChLexer.Masked): String =
     NullTableFn.replaceAllIn(sql, m => {
-      val cols = topLevelSplit(lx.body(m.group(1))).map { entry =>
-        val t = entry.trim
-        val sp = t.indexOf(' ')
-        if (sp < 0) throw new IllegalArgumentException(
-          s"null() structure entry '$t' needs 'name Type'")
-        s"CAST(NULL AS ${chDdlType(t.substring(sp + 1).trim)}) AS ${t.substring(0, sp)}"
-      }
-      scala.util.matching.Regex.quoteReplacement(
-        s"FROM (SELECT ${cols.mkString(", ")} FROM range(0))")
+      val cols = structureItems("null()", lx.body(m.group(1)))((n, t) => s"CAST(NULL AS $t) AS $n")
+      scala.util.matching.Regex.quoteReplacement(s"FROM (SELECT $cols FROM range(0))")
     })
 
   /** remote()/remoteSecure() address a DIFFERENT server — that needs
@@ -1152,24 +1112,15 @@ object ChSqlParser {
     case _ => None
   }
 
-  /** Split at the first WHERE keyword at paren depth 0 outside
-    * string literals (assignment RHS may contain parenthesized
-    * subqueries with their own WHERE). */
+  /** Where the first clause keyword `kw` (`FROM`, `WHERE`, …) outside
+    * every paren of `s` starts, or -1 — see [[ChLexer.tree]]. */
+  private def topLevel(s: String, kw: String): Int = ChLexer.tree(s).keyword(kw)
+
+  /** Split at the top-level WHERE (assignment RHS may contain
+    * parenthesized subqueries with their own WHERE). */
   private def splitAtTopLevelWhere(s: String): Option[(String, String)] = {
-    val code = ChLexer.blank(s)
-    var depth = 0; var i = 0
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    while (i < code.length) {
-      val c = code.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0 && (c == 'w' || c == 'W') && code.regionMatches(true, i, "where", 0, 5) &&
-               (i == 0 || !isWordChar(code.charAt(i - 1))) &&
-               (i + 5 == code.length || !isWordChar(code.charAt(i + 5))))
-        return Some((s.substring(0, i).trim, s.substring(i + 5).trim))
-      i += 1
-    }
-    None
+    val i = topLevel(s, "WHERE")
+    if (i < 0) None else Some((s.substring(0, i).trim, s.substring(i + 5).trim))
   }
   private val AddProjectionStmt =
     """(?is)^\s*ALTER\s+TABLE\s+([\w.]+)\s+ADD\s+PROJECTION\s+(?:(IF\s+NOT\s+EXISTS)\s+)?(`[^`]+`|\w+)\s*\((.*)\)\s*;?\s*$""".r
@@ -1196,19 +1147,12 @@ object ChSqlParser {
   private val CreateDictionaryHead =
     """(?is)^\s*CREATE\s+DICTIONARY\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.]+)\s*\(""".r
 
-  /** Extract the balanced-paren body starting at `open` (which must
-    * index a '('), outside literals; returns (inner text, close index). */
+  /** The body of the paren opening at `open`, outside literals;
+    * returns (inner text, close index). */
   private def balancedParen(s: String, open: Int): (String, Int) = {
-    val code = ChLexer.blank(s)
-    var depth = 0
-    var i = open
-    while (i < code.length) {
-      val c = code.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return (s.substring(open + 1, i), i) }
-      i += 1
-    }
-    throw new IllegalArgumentException("unbalanced parentheses in DDL")
+    val close = ChLexer.tree(s).partnerOf(open)
+    if (close < 0) throw new IllegalArgumentException("unbalanced parentheses in DDL")
+    (s.substring(open + 1, close), close)
   }
 
   /** `CREATE DICTIONARY name (attrs…) PRIMARY KEY k SOURCE(KIND(k 'v' …))
@@ -1340,7 +1284,8 @@ object ChSqlParser {
     * whitespace between keyword words, and each returned clause BODY
     * is single-spaced outside its literals, which keep their spacing. */
   private[graft] def splitEngineTail(tail: String): Map[String, String] = {
-    val code = ChLexer.blank(tail)
+    val tree = ChLexer.tree(tail)
+    val code = tree.code
     def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
     def normalized(from: Int, to: Int): String = {
       val sb = new StringBuilder(to - from)
@@ -1357,13 +1302,11 @@ object ChSqlParser {
     }
     final case class Hit(kw: String, start: Int, bodyStart: Int)
     val hits = scala.collection.mutable.ArrayBuffer.empty[Hit]
-    var depth = 0
     var i = 0
     while (i < code.length) {
       code.charAt(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case c if depth == 0 && c.isLetter && (i == 0 || !isWordChar(code.charAt(i - 1))) =>
+        case '(' => val p = tree.partnerOf(i); i = if (p < 0) code.length else p + 1
+        case c if c.isLetter && (i == 0 || !isWordChar(code.charAt(i - 1))) =>
           EngineTailKwPatterns.iterator
             .map { case (k, pat) => (k, pat.matcher(code).region(i, code.length)) }
             .find(_._2.lookingAt()) match {
@@ -1549,18 +1492,8 @@ object ChSqlParser {
   /** Split on commas outside parentheses, literals, quoted names and
     * comments; blank pieces drop. */
   private[plans] def topLevelSplit(s: String): Seq[String] = {
-    val code = ChLexer.blank(s)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var start = 0
-    for (i <- 0 until code.length) code.charAt(i) match {
-      case '(' => depth += 1
-      case ')' => depth -= 1
-      case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-      case _ =>
-    }
-    out += s.substring(start)
-    out.filter(_.trim.nonEmpty).toSeq
+    val cuts = -1 +: ChLexer.tree(s).commas :+ s.length
+    cuts.indices.tail.map(k => s.substring(cuts(k - 1) + 1, cuts(k))).filter(_.trim.nonEmpty)
   }
 
   /** `* EXCEPT col` (the paren-free single-column CH spelling) →
@@ -1578,32 +1511,17 @@ object ChSqlParser {
   private val StarReplace = """(?is)\*\s+REPLACE\s*\(""".r
   private def rewriteStarReplace(sql: String): String = {
     val m = StarReplace.findFirstMatchIn(sql).getOrElse(return sql)
-    val start = m.end // first char after '('
-    var depth = 1
-    var i = start
-    val args = scala.collection.mutable.ArrayBuffer.empty[String]
-    var argStart = start
-    while (i < sql.length && depth > 0) {
-      sql.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-          if (depth == 0) { args += sql.substring(argStart, i).trim }
-        case ',' if depth == 1 =>
-          args += sql.substring(argStart, i).trim; argStart = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    if (depth != 0) return sql
+    val close = ChLexer.tree(sql).partnerOf(m.end - 1)
+    if (close < 0) return sql
     val AsCol = """(?is)^(.*\S)\s+AS\s+([A-Za-z_]\w*)\s*$""".r
-    val pairs = args.map {
+    val pairs = topLevelSplit(sql.substring(m.end, close)).map(_.trim).map {
       case AsCol(expr, col) => (expr, col)
       case other => throw new IllegalArgumentException(
         s"* REPLACE entries must be 'expr AS col', got '$other'")
     }
     val cols = pairs.map(_._2).mkString(", ")
     val repl = pairs.map { case (e, c) => s"$e AS $c" }.mkString(", ")
-    val rewritten = sql.substring(0, m.start) + s"* EXCEPT ($cols), $repl" + sql.substring(i)
+    val rewritten = sql.substring(0, m.start) + s"* EXCEPT ($cols), $repl" + sql.substring(close + 1)
     rewriteStarReplace(rewritten) // handle further occurrences
   }
 
@@ -1724,16 +1642,6 @@ object ChSqlParser {
     SampleClause.replaceAllIn(keyed, m =>
       s"TABLESAMPLE (${m.group(1).toDouble * 100} PERCENT)")
   }
-
-  /** ClickHouse `ORDER BY … LIMIT n BY cols [LIMIT m]` → a row_number
-    * window wrap: first n rows per cols-group in the given order.
-    * Constraints (all fail loudly at parse when violated, never
-    * silently wrong): the query must start with SELECT (no CTE
-    * prefix), and the ORDER BY / BY expression lists must be
-    * parenthesis-free — LIMIT BY inside a subquery does not match the
-    * end-anchored pattern and passes through unchanged. */
-  private val LimitBy =
-    """(?is)^\s*(SELECT\b.*\S)\s+ORDER\s+BY\s+([^()]+?)\s+LIMIT\s+(?:(\d+)\s*,\s*)?(\d+)(?:\s+OFFSET\s+(\d+))?\s+BY\s+([^()]+?)\s*(?:LIMIT\s+(\d+))?\s*;?\s*$""".r
 
   /** ClickHouse `FROM numbers(N)` / `numbers(start, count)` (the
     * system.numbers table function) → Spark's `range`, aliased to
@@ -2152,40 +2060,28 @@ object ChSqlParser {
     * chain truncates to the SHORTEST side — which the all-equal
     * inner join reproduces), without the intermediate zip result
     * needing a textual ORDER BY of its own. */
+  private val PasteJoin = """(?i)\s*\bPASTE\s+JOIN\b""".r
+
   private def rewritePasteJoin(sql: String): String = {
-    val m = """(?i)\bPASTE\s+JOIN\b""".r.findFirstMatchIn(sql).getOrElse(return sql)
+    val m = PasteJoin.findFirstMatchIn(sql).getOrElse(return sql)
     def refuse(why: String): Nothing = throw new UnsupportedOperationException(
       "PASTE JOIN zips rows by physical block order, which a distributed engine does " +
         "not define. Executable deterministic form: (SELECT … ORDER BY …) PASTE JOIN " +
         s"(SELECT … ORDER BY …) — row_number over each side's ORDER BY zips the rows. $why")
+    val tree = ChLexer.tree(sql)
     var i = m.start - 1
     while (i >= 0 && sql.charAt(i).isWhitespace) i -= 1
     if (i < 0 || sql.charAt(i) != ')') refuse("(left side is not a parenthesized subquery)")
     val leftEnd = i
-    val leftStart = {
-      var depth = 0; var k = leftEnd; var found = -1
-      while (k >= 0 && found < 0) {
-        val c = sql.charAt(k)
-        if (c == ')') depth += 1
-        else if (c == '(') { depth -= 1; if (depth == 0) found = k }
-        k -= 1
-      }
-      if (found < 0) refuse("(unbalanced parentheses before PASTE JOIN)")
-      found
-    }
+    val leftStart = tree.partnerOf(leftEnd)
+    if (leftStart < 0) refuse("(unbalanced parentheses before PASTE JOIN)")
     def parseSide(from: Int): (Int, Int) = { // (openParen, closeParen)
       var j = from
       while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
       if (j >= sql.length || sql.charAt(j) != '(') refuse("(right side is not a parenthesized subquery)")
-      var depth = 0; var k = j; var found = -1
-      while (k < sql.length && found < 0) {
-        val c = sql.charAt(k)
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) found = k }
-        k += 1
-      }
-      if (found < 0) refuse("(unbalanced parentheses after PASTE JOIN)")
-      (j, found)
+      val close = tree.partnerOf(j)
+      if (close < 0) refuse("(unbalanced parentheses after PASTE JOIN)")
+      (j, close)
     }
     val (rs0, re0) = parseSide(m.end)
     val sides = scala.collection.mutable.ArrayBuffer(
@@ -2194,65 +2090,20 @@ object ChSqlParser {
     // zips in ONE multi-way join, so the intermediate zip needs no
     // textual ORDER BY of its own
     var chainEnd = re0
-    var more = true
-    while (more) {
-      var p = chainEnd + 1
-      while (p < sql.length && sql.charAt(p).isWhitespace) p += 1
-      more = p < sql.length &&
-        sql.regionMatches(true, p, "PASTE", 0, 5) &&
-        (p + 5 >= sql.length || !sql.charAt(p + 5).isLetterOrDigit)
-      if (more) {
-        var q2 = p + 5
-        while (q2 < sql.length && sql.charAt(q2).isWhitespace) q2 += 1
-        more = sql.regionMatches(true, q2, "JOIN", 0, 4) &&
-          (q2 + 4 >= sql.length || !sql.charAt(q2 + 4).isLetterOrDigit)
-        if (more) {
-          val (s2, e2) = parseSide(q2 + 4)
-          sides += sql.substring(s2 + 1, e2)
-          chainEnd = e2
-        }
-      }
+    var next = PasteJoin.findPrefixMatchOf(sql.substring(chainEnd + 1))
+    while (next.nonEmpty) {
+      val (s2, e2) = parseSide(chainEnd + 1 + next.get.end)
+      sides += sql.substring(s2 + 1, e2)
+      chainEnd = e2
+      next = PasteJoin.findPrefixMatchOf(sql.substring(chainEnd + 1))
     }
-    val rightEnd = chainEnd
-    // index just past a top-level "ORDER BY" (last one wins), or -1
-    def afterLastTopLevelOrderBy(s: String): Int = {
-      var depth = 0; var p = 0; var found = -1
-      while (p < s.length) {
-        s.charAt(p) match {
-          case '('  => depth += 1
-          case ')'  => depth -= 1
-          case 'o' | 'O' if depth == 0 &&
-              s.regionMatches(true, p, "ORDER", 0, 5) &&
-              (p == 0 || !s.charAt(p - 1).isLetterOrDigit) =>
-            var k = p + 5
-            while (k < s.length && s.charAt(k).isWhitespace) k += 1
-            if (s.regionMatches(true, k, "BY", 0, 2)) { found = k + 2; p = k + 1 }
-          case _ =>
-        }
-        p += 1
-      }
-      found
-    }
-    // the ORDER BY expression list: after "ORDER BY", before any
-    // top-level LIMIT/OFFSET tail
+    // the last top-level ORDER BY's expression list, before any
+    // LIMIT/OFFSET/FETCH tail
     def orderOf(sub: String, side: String): String = {
-      val at = afterLastTopLevelOrderBy(sub)
-      if (at < 0) refuse(s"($side side needs a top-level ORDER BY)")
-      var ob = sub.substring(at)
-      var depth = 0; var p = 0; var cut = -1
-      while (p < ob.length && cut < 0) {
-        ob.charAt(p) match {
-          case '('  => depth += 1
-          case ')'  => depth -= 1
-          case c if depth == 0 && (c == 'l' || c == 'L' || c == 'o' || c == 'O') &&
-              (ob.regionMatches(true, p, "LIMIT", 0, 5) || ob.regionMatches(true, p, "OFFSET", 0, 6)) &&
-              (p == 0 || !ob.charAt(p - 1).isLetterOrDigit) => cut = p
-          case _ =>
-        }
-        p += 1
-      }
-      if (cut >= 0) ob = ob.substring(0, cut)
-      val t = ob.trim
+      val top = ChLexer.tree(sub).top
+      val o = top.lastIndexWhere(_.kw == "ORDER BY")
+      if (o < 0) refuse(s"($side side needs a top-level ORDER BY)")
+      val t = sub.substring(top(o).bodyStart, if (o + 1 < top.length) top(o + 1).start else sub.length).trim
       if (t.isEmpty) refuse(s"($side ORDER BY is empty)")
       if (t.matches("""[\d\s,]+""")) refuse(
         s"($side ORDER BY uses ordinals, which a window cannot re-read — name the columns)")
@@ -2269,7 +2120,7 @@ object ChSqlParser {
     }.mkString
     val repl =
       s"(SELECT * EXCEPT (${sides.indices.map(i => s"__pj_rn_$i").mkString(", ")}) FROM $joined)"
-    rewritePasteJoin(sql.substring(0, leftStart) + repl + sql.substring(rightEnd + 1))
+    rewritePasteJoin(sql.substring(0, leftStart) + repl + sql.substring(chainEnd + 1))
   }
 
   /** ClickHouse column-matcher selectors — `* APPLY(fn)` applies `fn`
@@ -2294,7 +2145,7 @@ object ChSqlParser {
         s"the executable subset is SELECT … FROM <one table/view>. $why — " +
         "write the expanded column list by hand for other shapes")
     if (!sql.trim.toUpperCase.startsWith("SELECT")) refuse("(statement does not start with SELECT)")
-    val fromIdx = topLevelFromIndex(sql)
+    val fromIdx = topLevel(sql, "FROM")
     if (fromIdx < 0) refuse("(no top-level FROM)")
     val afterFrom = sql.substring(fromIdx + 4)
     val targetM = """^\s*([A-Za-z_][\w.]*)\s*""".r.findFirstMatchIn(afterFrom)
@@ -2337,25 +2188,6 @@ object ChSqlParser {
       scala.util.matching.Regex.quoteReplacement(expansion)
     })
     head + tail
-  }
-
-  /** Index of the top-level FROM keyword (outside parens) of masked
-    * text, or -1. */
-  private def topLevelFromIndex(s: String): Int = {
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0 && (c == 'f' || c == 'F') && s.regionMatches(true, i, "from", 0, 4) &&
-               // '_' is a word char: `id_from` must not read as FROM
-               (i == 0 || (!Character.isLetterOrDigit(s.charAt(i - 1)) && s.charAt(i - 1) != '_')) &&
-               (i + 4 == s.length || (!Character.isLetterOrDigit(s.charAt(i + 4)) && s.charAt(i + 4) != '_')))
-        return i
-      i += 1
-    }
-    -1
   }
 
   private val AliasedItem = """(?is)^.*\s+AS\s+([A-Za-z_]\w*)\s*$""".r
@@ -2542,15 +2374,10 @@ object ChSqlParser {
       if (flat.map(_._1).distinct.size != flat.size) return sql
       if (flat.exists(_._1 == fillCol)) return sql
       val interp: Map[String, (String, String)] = flat.toMap
-      val fromIdx = topLevelFromIndex(body)
-      if (fromIdx < 0) sql
+      val names = selectNames(body)
+      if (names.isEmpty) sql
       else {
-        val names = topLevelSplit(body.substring(0, fromIdx)).map {
-          case AliasedItem(a) => Some(a)
-          case BareItem(a)    => Some(a)
-          case _              => None
-        }
-        val colSet = names.flatten.toSet
+        val colSet = names.get.toSet
         // an INTERPOLATE column absent from the SELECT list leaves the
         // text alone → the keyword fails loudly, never silently skips;
         // ditto prefix keys that are not named outputs, and an
@@ -2564,13 +2391,13 @@ object ChSqlParser {
         val colOperands = interp.values.collect {
           case (op, operand) if op.endsWith("col") => operand
         }.toSeq
-        if (names.exists(_.isEmpty) || !names.flatten.contains(fillCol) ||
+        if (!colSet.contains(fillCol) ||
             !interp.keySet.subsetOf(colSet) ||
             !prefix.forall(colSet.contains) || prefix.exists(interp.contains) ||
             !colOperands.forall(colSet.contains) ||
             colOperands.exists(interp.contains)) sql
         else {
-          val cols = names.flatten
+          val cols = names.get
           val affine = interp.exists(_._2._1 != "carry")
           val sel = cols.map { n =>
             if (n == fillCol) s"coalesce(gr_src__.$n, gr_axis__.gr_fill__) AS $n"
@@ -2821,10 +2648,9 @@ object ChSqlParser {
 
   /** The named outputs of a select-list body (`a, f(x) AS b FROM …`)
     * — None when any item is neither a bare ident nor aliased, or no
-    * top-level FROM exists. Shared by the multi-key fill composition
-    * (which must re-select the same columns around the inner stage). */
+    * top-level FROM exists. */
   private def selectNames(body: String): Option[Seq[String]] = {
-    val fromIdx = topLevelFromIndex(body)
+    val fromIdx = topLevel(body, "FROM")
     if (fromIdx < 0) None
     else {
       val names = topLevelSplit(body.substring(0, fromIdx)).map {
@@ -2904,6 +2730,87 @@ object ChSqlParser {
     case _ => sql
   }
 
+  // a statement naming no clause the passes below rewrite skips them
+  private val PrewhereWord = """(?i)\bPREWHERE\b""".r
+  private val ClauseTrigger = """(?i)\bQUALIFY\b|\bOFFSET\b|\bFETCH\b|\bWITH\s+(?:TIES|TOTALS)\b|\bDISTINCT\s+ON\b|\bLIMIT\s+\d+\s*(?:,|BY\b)""".r
+
+  /** A replacement of `text[from, to)` made by a clause pass. */
+  private final case class Splice(from: Int, to: Int, text: String)
+
+  /** A clause pass: the splices it makes in one query block, read off
+    * the block's clause ranges (Nil leaves the block as it is). */
+  private type BlockPass = (String, ChLexer.Tree, ChLexer.Block) => Seq[Splice]
+
+  /** Runs each pass in turn once per query block of `sql` (see
+    * [[ChLexer.Block]]), innermost block first, and rebuilds the
+    * structure after every change, so a subquery, CTE body or
+    * set-operation branch is rewritten like a whole statement. A splice
+    * of the statement's own block that reaches its end also takes the
+    * `;` terminator, and one that starts at its head with only blanks
+    * before it takes those blanks. */
+  private def perBlock(sql: String, passes: BlockPass*): String = {
+    var text = sql
+    var tree = ChLexer.tree(text)
+    for (pass <- passes) {
+      var bound = Int.MaxValue
+      // the block with the last head before `bound`: a nested block
+      // starts after its enclosing block's head, and a rewrite changes
+      // no text before the head of the block it rewrites
+      def innermost = tree.blocks.filter(_.head < bound).maxByOption(_.head)
+      var next = innermost
+      while (next.nonEmpty) {
+        val blk = next.get
+        bound = blk.head
+        val splices = pass(text, tree, blk)
+        for (sp <- splices.sortBy(-_.from)) {
+          val whole = !blk.enclosed
+          val from = if (whole && sp.from == blk.head && text.substring(0, sp.from).isBlank) 0 else sp.from
+          val to = if (whole && sp.to == blk.end) text.length else sp.to
+          text = text.substring(0, from) + sp.text + text.substring(to)
+          bound = bound min from
+        }
+        if (splices.nonEmpty) tree = ChLexer.tree(text)
+        next = innermost
+      }
+    }
+    text
+  }
+
+  /** Clause `i`'s body text. */
+  private def clauseBody(text: String, blk: ChLexer.Block, i: Int): String =
+    text.substring(blk.clauses(i).bodyStart, blk.bodyEnd(i))
+
+  /** The end of `text[a, b)` without its trailing blanks. */
+  private def trimmedEnd(text: String, a: Int, b: Int): Int = a + text.substring(a, b).stripTrailing.length
+
+  // `LIMIT [off,] n [OFFSET off]`, the bodies `n ROW[S]` of OFFSET and
+  // `FIRST|NEXT [n] ROW[S] [ONLY]` of FETCH, and `SELECT [DISTINCT [ON (]]`
+  private val LimitSpec = """(?is)LIMIT\s+(?:(\d+)\s*,\s*)?(\d+)(?:\s+OFFSET\s+(\d+))?\s*""".r
+  private val OffsetRows = """(?is)\s*(\d+)\s+ROWS?\s*""".r
+  private val FetchRows = """(?is)\s*(?:FIRST|NEXT)\s+(?:(\d+)\s+)?ROWS?(\s+ONLY)?\s*""".r
+  private val SelectHead = """(?is)SELECT\s+(DISTINCT\b\s*(ON\s*\()?)?""".r
+
+  /** `text[from, to)` as a `LIMIT` spec: (offset or null, count, OFFSET
+    * count or null). */
+  private def limitSpec(text: String, from: Int, to: Int) =
+    LimitSpec.unapplySeq(text.substring(from, to)).collect { case List(a, n, b) => (a, n, b) }
+
+  /** The block's head as `SELECT [DISTINCT [ON (]]`, when it is one. */
+  private def selectHead(text: String, blk: ChLexer.Block) =
+    SelectHead.findPrefixMatchOf(text.substring(blk.head))
+
+  /** The block's last ORDER BY: its index, its trimmed list, and the
+    * text before it (the query it orders), when there is one. */
+  private def lastOrderBy(text: String, blk: ChLexer.Block): Option[(Int, String, String)] = {
+    val o = blk.lastIndexOf("ORDER BY")
+    if (o < 0) None
+    else Some((o, clauseBody(text, blk, o).trim,
+      text.substring(blk.head, trimmedEnd(text, blk.head, blk.clauses(o).start))))
+  }
+
+  /** The keywords that may follow a QUALIFY predicate. */
+  private val TrailingKws = Set("ORDER BY", "LIMIT", "OFFSET", "FETCH", "BY", "WITH TIES")
+
   /** ClickHouse/DuckDB/Snowflake `QUALIFY <pred>` — a post-window
     * filter Spark's grammar lacks. The predicate is injected as a
     * boolean select item (lateral column aliases make select-list
@@ -2914,63 +2821,244 @@ object ChSqlParser {
     * the predicate is injected into a NON-distinct inner select (so
     * windows see pre-dedup rows, the standard QUALIFY-before-DISTINCT
     * evaluation order) and DISTINCT moves to the wrapping query,
-    * applying after the filter and after the marker is dropped.
-    * Supported subset mirrors LIMIT BY: optional paren-free trailing
-    * ORDER BY and LIMIT n. Anything else leaves the text untouched
-    * and fails loudly at parse on the QUALIFY keyword — never
-    * silently wrong. */
-  private val QualifyClause =
-    """(?is)^\s*SELECT\s+(DISTINCT\s+)?(.+?)\s+QUALIFY\s+(.+?)(\s+ORDER\s+BY\s+[^()]+?)?(\s+LIMIT\s+\d+)?\s*;?\s*$""".r
+    * applying after the filter and after the marker is dropped. The
+    * trailing ORDER BY / LIMIT / OFFSET / FETCH clauses move to the
+    * wrapper as written. */
+  private val qualifyPass: BlockPass = (text, _, blk) => {
+    val cs = blk.clauses
+    val q = blk.indexOf("QUALIFY")
+    val from = blk.indexOf("FROM")
+    if (q < 0 || from < 0 || from > q || !blk.kwsAfter(q).forall(TrailingKws.contains)) Nil
+    else selectHead(text, blk).filter(_.group(2) == null).toSeq.map { m =>
+      val distinct = if (m.group(1) != null) "DISTINCT " else ""
+      val fromAt = cs(from).start
+      val predEnd = trimmedEnd(text, cs(q).bodyStart, blk.bodyEnd(q))
+      val pred = text.substring(cs(q).bodyStart, predEnd).trim
+      val injected = ("SELECT " + text.substring(blk.head + m.end, fromAt)).trim +
+        s", ($pred) AS gr_qf__ " + text.substring(fromAt, trimmedEnd(text, fromAt, cs(q).start))
+      Splice(blk.head, blk.end, s"SELECT $distinct* EXCEPT (gr_qf__) FROM ($injected) WHERE gr_qf__" +
+        text.substring(predEnd, blk.end))
+    }
+  }
 
-  private def rewriteQualify(sql: String): String =
-    QualifyClause.findFirstMatchIn(sql).flatMap { m =>
-      val distinct = Option(m.group(1)).map(_ => "DISTINCT ").getOrElse("")
-      val head     = "SELECT " + m.group(2)
-      val fromIdx  = topLevelFromIndex(head)
-      if (fromIdx < 0) None
-      else {
-        val pred = m.group(3)
-        val ord  = Option(m.group(4)).getOrElse("")
-        val lim  = Option(m.group(5)).getOrElse("")
-        val injected =
-          head.substring(0, fromIdx).trim + s", ($pred) AS gr_qf__ " + head.substring(fromIdx)
-        Some(s"SELECT $distinct* EXCEPT (gr_qf__) FROM ($injected) WHERE gr_qf__$ord$lim")
+  /** The trailing row-count spellings Spark lacks: MySQL's `LIMIT off,
+    * n` → `LIMIT n OFFSET off`, and ANSI OFFSET/FETCH (CH accepts the
+    * standard spelling): the ROW/ROWS noise words strip and FETCH
+    * FIRST/NEXT lowers to LIMIT, an omitted count meaning 1 row
+    * (standard and CH). `FETCH … WITH TIES` without OFFSET reshapes
+    * to `LIMIT n WITH TIES` for the rank() wrap; OFFSET combined with
+    * WITH TIES stays as written, and the FETCH keyword fails loudly. */
+  private val lowerLimitPass: BlockPass = (text, _, blk) => {
+    val cs = blk.clauses
+    val k = cs.length - 1
+    def is(i: Int, kw: String) = i >= 0 && cs(i).kw == kw
+    def body(i: Int) = clauseBody(text, blk, i)
+    def lower(i: Int, to: String) = Seq(Splice(cs(i).start, blk.end, to))
+    if (is(k, "LIMIT")) limitSpec(text, cs(k).start, blk.end) match {
+      case Some((off, n, null)) if off != null => lower(k, s"LIMIT $n OFFSET $off")
+      case _ => Nil
+    } else if (is(k, "FETCH")) body(k) match {
+      case FetchRows(cnt, only) if only != null =>
+        val n = Option(cnt).getOrElse("1")
+        if (is(k - 1, "OFFSET")) body(k - 1) match {
+          case OffsetRows(off) => lower(k - 1, s"LIMIT $n OFFSET $off")
+          case _ => lower(k, s"LIMIT $n")
+        } else lower(k, s"LIMIT $n")
+      case _ => Nil
+    } else if (is(k, "WITH TIES") && is(k - 1, "FETCH") && !is(k - 2, "OFFSET") && body(k).isBlank)
+      body(k - 1) match {
+        case FetchRows(cnt, null) => lower(k - 1, s"LIMIT ${Option(cnt).getOrElse("1")} WITH TIES")
+        case _ => Nil
       }
-    }.getOrElse(sql)
+    else if (is(k, "OFFSET")) body(k) match {
+      case OffsetRows(off) => lower(k, s"OFFSET $off")
+      case _ => Nil
+    } else Nil
+  }
+
+  /** `ORDER BY … LIMIT n WITH TIES` → a rank() window wrap: every row
+    * tying with the n-th row's sort key survives. The final ORDER BY
+    * is the ties key — a caller needing a total output order selects
+    * exactly the ORDER BY columns (ties are duplicates of the key, so
+    * that order IS total). */
+  private val withTiesPass: BlockPass = (text, _, blk) => lastOrderBy(text, blk).toSeq.flatMap {
+    case (o, ord, prefix) if blk.kwsAfter(o) == Seq("LIMIT", "WITH TIES") &&
+        clauseBody(text, blk, o + 2).isBlank =>
+      limitSpec(text, blk.clauses(o + 1).start, blk.clauses(o + 2).start).collect {
+        case (null, n, null) => Splice(blk.head, blk.end,
+          s"""SELECT * EXCEPT (gr_rk__) FROM (
+             |  SELECT *, rank() OVER (ORDER BY $ord) AS gr_rk__
+             |  FROM ($prefix)
+             |) WHERE gr_rk__ <= $n ORDER BY $ord""".stripMargin)
+      }
+    case _ => None
+  }
+
+  /** `SELECT DISTINCT ON (k) … ORDER BY ord [LIMIT m]` — the Postgres
+    * idiom CH accepts as sugar for `LIMIT 1 BY k` (per CH docs they are
+    * the same operation): reshaped to that spelling for the LIMIT BY
+    * pass. Without a trailing ORDER BY the surviving row per key would
+    * be arbitrary — refused loudly. */
+  private val distinctOnPass: BlockPass = (text, tree, blk) =>
+    selectHead(text, blk).filter(_.group(2) != null).toSeq.map { m =>
+      val open = blk.head + m.end - 1
+      val close = tree.partnerOf(open)
+      val o = blk.lastIndexOf("ORDER BY")
+      val cs = blk.clauses
+      if (close < 0 || o < 0 || cs(o).start < close || text.substring(open + 1, close).isBlank)
+        throw new UnsupportedOperationException(
+          "DISTINCT ON needs a trailing ORDER BY to define which row survives per key " +
+            "(it rewrites to LIMIT 1 BY)")
+      val ordEnd = trimmedEnd(text, cs(o).bodyStart, blk.bodyEnd(o))
+      Splice(blk.head, blk.end,
+        s"SELECT ${text.substring(close + 1, cs(o).start).trim} ORDER BY " +
+          s"${text.substring(cs(o).bodyStart, ordEnd).trim} LIMIT 1 BY " +
+          text.substring(open + 1, close) + text.substring(ordEnd, blk.end))
+    }
+
+  /** ClickHouse `ORDER BY … LIMIT n BY cols [LIMIT m]` (also `LIMIT
+    * off, n BY` and `LIMIT n OFFSET off BY`) → a row_number window
+    * wrap: rows off+1 … off+n per cols-group in the given order. */
+  private val limitByPass: BlockPass = (text, _, blk) => {
+    val cs = blk.clauses
+    val by = blk.lastIndexOf("BY")
+    val outerLimit = blk.kwsAfter(by) match {
+      case Seq() => Some("")
+      case Seq("LIMIT") => limitSpec(text, cs(by + 1).start, blk.end).collect {
+        case (null, l, null) => s" LIMIT $l"
+      }
+      case _ => None
+    }
+    val shape = lastOrderBy(text, blk).filter { case (o, _, _) => by > o + 1 }
+      .flatMap { case (o, ord, prefix) =>
+        limitSpec(text, cs(o + 1).start, cs(by).start).map((o, ord, prefix, _)) }
+    (shape, outerLimit) match {
+      case (Some((o, ord, prefix, (off1, n, off2))), Some(outer)) =>
+        val cols = clauseBody(text, blk, by).trim
+        val off = Option(off1).orElse(Option(off2)).map(_.toLong).getOrElse(0L)
+        // CH allows LIMIT BY on columns the SELECT list does not carry;
+        // when every BY item is a bare identifier (and the head isn't
+        // DISTINCT, whose semantics an extra item would change), inject
+        // aliased copies into the inner projection so the partition key
+        // always resolves, then EXCEPT them back out
+        val byItems = cols.split(",").map(_.trim).toSeq
+        val from = cs.indexWhere(c => c.kw == "FROM" && c.start < cs(o).start)
+        val inject = byItems.forall(_.matches("[A-Za-z_][\\w.]*")) && from >= 0 &&
+          !selectHead(text, blk).exists(_.group(1) != null)
+        val (inner, part) =
+          if (!inject) (prefix, cols)
+          else {
+            val at = cs(from).start - blk.head
+            val aliases = byItems.zipWithIndex.map { case (c, i) => s"$c AS gr_by_${i}__" }
+            (prefix.substring(0, at) + ", " + aliases.mkString(", ") + " " + prefix.substring(at),
+              byItems.indices.map(i => s"gr_by_${i}__").mkString(", "))
+          }
+        Seq(Splice(blk.head, blk.end,
+          s"""SELECT * EXCEPT (gr_rn__${if (inject) s", $part" else ""}) FROM (
+             |  SELECT *, row_number() OVER (PARTITION BY $part ORDER BY $ord) AS gr_rn__
+             |  FROM ($inner)
+             |) WHERE gr_rn__ > $off AND gr_rn__ <= ${off + n.toLong} ORDER BY $ord$outer""".stripMargin))
+      case _ => Nil
+    }
+  }
+
+  /** `GROUP BY k WITH TOTALS` → `GROUP BY GROUPING SETS ((k), ())`:
+    * the totals row lands inline with NULL group keys (Spark's
+    * grouping-sets convention) rather than ClickHouse's separate
+    * defaults-filled block — the aggregates themselves are identical. */
+  private val withTotalsPass: BlockPass = (text, _, blk) => {
+    val cs = blk.clauses
+    cs.indices.dropRight(1).collect {
+      case i if cs(i).kw == "GROUP BY" && cs(i + 1).kw == "WITH TOTALS" &&
+          !clauseBody(text, blk, i).isBlank =>
+        Splice(cs(i).start, cs(i + 1).bodyStart,
+          s"GROUP BY GROUPING SETS ((${clauseBody(text, blk, i).trim}), ())")
+    }
+  }
+
+  /** ClickHouse PREWHERE is a storage-layer filter hint; under Spark
+    * the parquet scan already gets every pushable predicate, so the
+    * keyword maps to plain WHERE, and `PREWHERE a WHERE b` folds both
+    * predicates into one `WHERE (a) AND b`. */
+  private val prewherePass: BlockPass = (text, _, blk) => {
+    val cs = blk.clauses
+    cs.indices.collect {
+      case i if cs(i).kw == "PREWHERE" && i + 1 < cs.length && cs(i + 1).kw == "WHERE" =>
+        var to = cs(i + 1).bodyStart
+        while (to < text.length && text.charAt(to).isWhitespace) to += 1
+        Splice(cs(i).start, to, s"WHERE (${clauseBody(text, blk, i).trim}) AND ")
+      case i if cs(i).kw == "PREWHERE" => Splice(cs(i).start, cs(i).bodyStart, "WHERE")
+    }
+  }
+
+  /** Rewrites each window call `name(args) OVER (spec)` whose `head`
+    * (a pattern ending at the call's open paren) matches, last first so
+    * a call inside another's arguments is rewritten before it. `f` gets
+    * the text, the call's start and its four paren indices, and returns
+    * the call's replacement, or None to leave it. */
+  private def rewriteWindowCalls(sql: String, head: scala.util.matching.Regex)(
+      f: (String, Int, Int, Int, Int, Int) => Option[String]): String = {
+    var text = sql
+    for (m <- head.findAllMatchIn(sql).toSeq.reverse) {
+      val tree = ChLexer.tree(text)
+      val close = tree.partnerOf(m.end - 1)
+      val over = if (close < 0) None else OverSpec.findPrefixMatchOf(text.substring(close + 1))
+      over.foreach { o =>
+        val close2 = tree.partnerOf(close + o.end)
+        if (close2 > 0) f(text, m.start, m.end - 1, close, close + o.end, close2).foreach { r =>
+          text = text.substring(0, m.start) + r + text.substring(close2 + 1)
+        }
+      }
+    }
+    text
+  }
+  private val OverSpec = """(?i)\s*OVER\s*\(""".r
 
   /** ClickHouse window function `nonNegativeDerivative(metric, ts
     * [, INTERVAL n unit]) OVER (…)` → the lag-based rate expression:
     * (m − lag m) · scale / (t − lag t), clamped at 0. Spark's
     * `greatest` skips NULLs, so the frame's first row (lag = NULL)
     * and a zero time step (nullif'd denominator — ANSI division
-    * would raise) both land on 0, matching CH. Supported subset:
-    * paren-free args and window spec; anything else is left intact
-    * and fails loudly at parse on the CH name. */
-  private val NonNegDeriv =
-    """(?i)\bnonNegativeDerivative\s*\(([^()]+?)\)\s*OVER\s*(\([^()]*\))""".r
+    * would raise) both land on 0, matching CH. Any other third
+    * argument is left intact and fails loudly at parse on the CH name. */
+  private val NonNegDeriv = """(?i)\bnonNegativeDerivative\s*\(""".r
 
   private val IntervalArg = """(?i)^INTERVAL\s+(\d+)\s+(SECOND|MINUTE|HOUR|DAY)S?$""".r
   private val IntervalSeconds =
     Map("second" -> 1L, "minute" -> 60L, "hour" -> 3600L, "day" -> 86400L)
 
   private def rewriteNonNegDeriv(sql: String): String =
-    NonNegDeriv.replaceAllIn(sql, m => {
-      val parts = topLevelSplit(m.group(1)).map(_.trim)
-      val over  = m.group(2)
+    rewriteWindowCalls(sql, NonNegDeriv) { (text, _, open, close, open2, close2) =>
+      val parts = topLevelSplit(text.substring(open + 1, close)).map(_.trim)
+      val over = text.substring(open2, close2 + 1)
       val scale = parts.drop(2) match {
-        case Seq(IntervalArg(n, unit)) => (n.toLong * IntervalSeconds(unit.toLowerCase)).toString
-        case Seq()                     => "1"
-        case other                     => return sql // unsupported third arg → loud parse failure
+        case Seq(IntervalArg(n, unit)) => Some((n.toLong * IntervalSeconds(unit.toLowerCase)).toString)
+        case Seq()                     => Some("1")
+        case _                         => None
       }
-      if (parts.length < 2) return sql
-      val (mx, tx) = (parts(0), parts(1))
-      scala.util.matching.Regex.quoteReplacement(
+      scale.filter(_ => parts.length >= 2).map { sc =>
+        val (mx, tx) = (parts(0), parts(1))
         // CH requires a DateTime second arg, so epoch seconds via
         // unix_micros (NTZ-tolerant through the TIMESTAMP cast; a raw
         // CAST(ts AS DOUBLE) rejects TIMESTAMP_NTZ inputs).
-        s"greatest(CAST(0 AS DOUBLE), (CAST($mx AS DOUBLE) - lag(CAST($mx AS DOUBLE)) OVER $over) * $scale" +
-          s" / nullif((unix_micros(CAST($tx AS TIMESTAMP)) - lag(unix_micros(CAST($tx AS TIMESTAMP))) OVER $over) / 1000000.0D, CAST(0 AS DOUBLE)))")
-    })
+        s"greatest(CAST(0 AS DOUBLE), (CAST($mx AS DOUBLE) - lag(CAST($mx AS DOUBLE)) OVER $over) * $sc" +
+          s" / nullif((unix_micros(CAST($tx AS TIMESTAMP)) - lag(unix_micros(CAST($tx AS TIMESTAMP))) OVER $over) / 1000000.0D, CAST(0 AS DOUBLE)))"
+      }
+    }
+
+  /** CH documents leadInFrame/lagInFrame with an explicit
+    * UNBOUNDED..UNBOUNDED frame (where they equal plain lead/lag);
+    * Spark's lead/lag reject any frame, so that exact frame strips.
+    * Bounded frames keep failing loudly (their CH semantics differ). */
+  private val InFrameCall = """(?i)\b(?:leadInFrame|lagInFrame)\s*\(""".r
+  private val WholeFrame =
+    """(?is)\s+ROWS\s+BETWEEN\s+UNBOUNDED\s+PRECEDING\s+AND\s+UNBOUNDED\s+FOLLOWING\s*$""".r
+
+  private def rewriteInFrame(sql: String): String =
+    rewriteWindowCalls(sql, InFrameCall) { (text, start, _, _, open2, close2) =>
+      WholeFrame.findFirstMatchIn(text.substring(open2 + 1, close2))
+        .map(f => text.substring(start, open2 + 1 + f.start) + ")")
+    }
 
   private def rewriteArrayJoin(sql: String): String =
     ArrayJoinClause.replaceAllIn(sql, m => {
@@ -3097,12 +3185,7 @@ object ChSqlParser {
     // interceptCommand (round 16 — they were parse-time snapshots
     // here, the staleness class the SHOW CREATE fix closed)
     out = rewritePasteJoin(out)
-    // CH documents leadInFrame/lagInFrame with an explicit
-    // UNBOUNDED..UNBOUNDED frame (where they equal plain lead/lag);
-    // Spark's lead/lag reject any frame, so that exact frame strips.
-    // Bounded frames keep failing loudly (their CH semantics differ).
-    out = """(?is)\b((?:leadInFrame|lagInFrame)\s*\((?:[^()]|\([^()]*\))*\)\s+OVER\s*\([^()]*?)\s+ROWS\s+BETWEEN\s+UNBOUNDED\s+PRECEDING\s+AND\s+UNBOUNDED\s+FOLLOWING\s*\)""".r
-      .replaceAllIn(out, m => scala.util.matching.Regex.quoteReplacement(s"${m.group(1)})"))
+    out = rewriteInFrame(out)
     out = rewriteColumnMatchers(out, lx)
     // ALTER TABLE … DELETE/UPDATE and OPTIMIZE TABLE execute — they
     // become RunnableCommands in interceptCommand (called by
@@ -3156,9 +3239,7 @@ object ChSqlParser {
     out = rewriteStarReplace(out)
     out = Untuple.replaceAllIn(out, m =>
       scala.util.matching.Regex.quoteReplacement(s"${m.group(1)}.*"))
-    out = PrewhereCombined.replaceAllIn(out, m =>
-      scala.util.matching.Regex.quoteReplacement(s"WHERE (${m.group(1)}) AND "))
-    out = Prewhere.replaceAllIn(out, "WHERE")
+    if (PrewhereWord.findFirstIn(out).isDefined) out = perBlock(out, prewherePass)
     out = GlobalHint.replaceAllIn(out, "")
     out = rewriteTupleDot(out)
     out = NamedParam.replaceAllIn(out, m =>
@@ -3197,89 +3278,7 @@ object ChSqlParser {
       s"FROM (SELECT id AS generate_series FROM range($start, ${stop + 1}, $step))"
     })
     out = rewriteNonNegDeriv(out)
-    out = rewriteQualify(out)
-    // MySQL-style top-level `LIMIT offset, count` (the LIMIT-BY
-    // spellings carry a BY and were rewritten above) → LIMIT/OFFSET
-    out = """(?is)\bLIMIT\s+(\d+)\s*,\s*(\d+)\s*;?\s*$""".r.replaceAllIn(out, m =>
-      scala.util.matching.Regex.quoteReplacement(s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}"))
-    // ANSI OFFSET/FETCH (CH accepts the standard spelling): strip the
-    // ROW/ROWS noise words Spark's grammar lacks and lower FETCH
-    // FIRST/NEXT to LIMIT. An omitted count means 1 row (standard and
-    // CH). `FETCH … WITH TIES` (no OFFSET) reshapes to `LIMIT n WITH
-    // TIES` and rides the rank() wrap below; OFFSET combined with
-    // WITH TIES stays untouched → the FETCH keyword fails loudly.
-    out = """(?is)\bOFFSET\s+(\d+)\s+ROWS?\s+FETCH\s+(?:FIRST|NEXT)\s+(?:(\d+)\s+)?ROWS?\s+ONLY\s*;?\s*$""".r
-      .replaceAllIn(out, m => {
-        val cnt = Option(m.group(2)).getOrElse("1")
-        scala.util.matching.Regex.quoteReplacement(s"LIMIT $cnt OFFSET ${m.group(1)}")
-      })
-    out = """(?is)\bFETCH\s+(?:FIRST|NEXT)\s+(?:(\d+)\s+)?ROWS?\s+ONLY\s*;?\s*$""".r
-      .replaceAllIn(out, m =>
-        scala.util.matching.Regex.quoteReplacement(s"LIMIT ${Option(m.group(1)).getOrElse("1")}"))
-    // end-anchored so a string literal mentioning OFFSET…FETCH cannot
-    // suppress a legitimate trailing WITH TIES lowering
-    if ("""(?is)\bOFFSET\s+\d+\s+ROWS?\s+FETCH\s+(?:FIRST|NEXT)\s+(?:\d+\s+)?ROWS?\s+WITH\s+TIES\s*;?\s*$""".r
-          .findFirstIn(out).isEmpty)
-      out = """(?is)\bFETCH\s+(?:FIRST|NEXT)\s+(?:(\d+)\s+)?ROWS?\s+WITH\s+TIES\s*;?\s*$""".r
-        .replaceAllIn(out, m =>
-          scala.util.matching.Regex.quoteReplacement(s"LIMIT ${Option(m.group(1)).getOrElse("1")} WITH TIES"))
-    out = """(?is)\bOFFSET\s+(\d+)\s+ROWS?\s*;?\s*$""".r
-      .replaceAllIn(out, m => scala.util.matching.Regex.quoteReplacement(s"OFFSET ${m.group(1)}"))
-    out = LimitWithTies.replaceAllIn(out, m => {
-      val (prefix, ord, n) = (m.group(1), m.group(2), m.group(3))
-      scala.util.matching.Regex.quoteReplacement(
-        s"""SELECT * EXCEPT (gr_rk__) FROM (
-           |  SELECT *, rank() OVER (ORDER BY $ord) AS gr_rk__
-           |  FROM ($prefix)
-           |) WHERE gr_rk__ <= $n ORDER BY $ord""".stripMargin)
-    })
-    // `SELECT DISTINCT ON (k) … ORDER BY ord` — the Postgres idiom CH
-    // accepts as sugar for `LIMIT 1 BY k` (per CH docs they are the
-    // same operation): reshape to that spelling and let the LIMIT BY
-    // window wrap below do the work. Without a trailing ORDER BY the
-    // surviving row per key would be arbitrary — refuse loudly.
-    out = """(?is)^\s*SELECT\s+DISTINCT\s+ON\s*\(([^)]+)\)\s+(.*\S)\s+ORDER\s+BY\s+([^()]+?)(\s+LIMIT\s+\d+)?\s*;?\s*$""".r
-      .replaceAllIn(out, m => {
-        val lim = Option(m.group(4)).getOrElse("")
-        scala.util.matching.Regex.quoteReplacement(
-          s"SELECT ${m.group(2)} ORDER BY ${m.group(3)} LIMIT 1 BY ${m.group(1)}$lim")
-      })
-    if ("""(?is)^\s*SELECT\s+DISTINCT\s+ON\b""".r.findFirstIn(out).isDefined)
-      throw new UnsupportedOperationException(
-        "DISTINCT ON needs a trailing parenthesis-free ORDER BY to define which row " +
-          "survives per key (it rewrites to LIMIT 1 BY)")
-    out = LimitBy.replaceAllIn(out, m => {
-      val (prefix, ord, n, cols) = (m.group(1), m.group(2), m.group(4), m.group(6))
-      // both per-group offset spellings: `LIMIT off, n BY` and
-      // `LIMIT n OFFSET off BY`
-      val off = Option(m.group(3)).orElse(Option(m.group(5))).map(_.toLong).getOrElse(0L)
-      val outerLimit = Option(m.group(7)).map(l => s" LIMIT $l").getOrElse("")
-      // CH allows LIMIT BY on columns the SELECT list does not carry;
-      // when every BY item is a bare identifier (and the head isn't
-      // DISTINCT, whose semantics an extra item would change), inject
-      // aliased copies into the inner projection so the partition key
-      // always resolves, then EXCEPT them back out
-      val byItems = cols.split(",").map(_.trim).toSeq
-      val fromIdx = topLevelFromIndex(prefix)
-      val inject = byItems.forall(_.matches("[A-Za-z_][\\w.]*")) && fromIdx > 0 &&
-        """(?is)^\s*SELECT\s+DISTINCT\b""".r.findFirstIn(prefix).isEmpty
-      if (inject) {
-        val aliases = byItems.zipWithIndex.map { case (c, i) => s"$c AS gr_by_${i}__" }
-        val inner = prefix.substring(0, fromIdx) + ", " + aliases.mkString(", ") +
-          " " + prefix.substring(fromIdx)
-        val part = byItems.indices.map(i => s"gr_by_${i}__").mkString(", ")
-        scala.util.matching.Regex.quoteReplacement(
-          s"""SELECT * EXCEPT (gr_rn__, $part) FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY $part ORDER BY $ord) AS gr_rn__
-             |  FROM ($inner)
-             |) WHERE gr_rn__ > $off AND gr_rn__ <= ${off + n.toLong} ORDER BY $ord$outerLimit""".stripMargin)
-      } else scala.util.matching.Regex.quoteReplacement(
-        s"""SELECT * EXCEPT (gr_rn__) FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY $cols ORDER BY $ord) AS gr_rn__
-           |  FROM ($prefix)
-           |) WHERE gr_rn__ > $off AND gr_rn__ <= ${off + n.toLong} ORDER BY $ord$outerLimit""".stripMargin)
-    })
-    WithTotals.replaceAllIn(out, m =>
-      scala.util.matching.Regex.quoteReplacement(s"GROUP BY GROUPING SETS ((${m.group(1)}), ())"))
+    if (ClauseTrigger.findFirstIn(out).isEmpty) out
+    else perBlock(out, qualifyPass, lowerLimitPass, withTiesPass, distinctOnPass, limitByPass, withTotalsPass)
   }
 }

@@ -2020,7 +2020,7 @@ object ChFunctions {
   )
 
   /** `QUALIFY` — the post-window filter clause (CH 23.x+, DuckDB,
-    * Snowflake). [[graft.plans.ChSqlParser.rewriteQualify]] injects
+    * Snowflake). ChSqlParser's QUALIFY pass injects
     * the predicate as a boolean select item (lateral column aliases
     * resolve the `rn` reference against the select list) and wraps
     * once in `* EXCEPT` — one window, one filter, zero extra

@@ -59,6 +59,73 @@ object QueryFuzz {
     case i if i % 13 == 3 => windowFirst(i, new scala.util.Random(seed * 1000003L + i))
   }
 
+  /** The clause passes of the dialect front end — LIMIT BY, WITH TIES,
+    * WITH TOTALS, QUALIFY, DISTINCT ON, PREWHERE, OFFSET … FETCH /
+    * `LIMIT off, n` and the window-call rewrites — each with nested
+    * calls in its expression lists and inside a subquery or behind a
+    * CTE; the duck text spells the same query in ANSI SQL. Kept apart
+    * from [[shapes]], whose seeded set stays as it is. */
+  def clauseShapes(seed: Long, n: Int): Seq[Shape] = (0 until n).map { i =>
+    val r = new scala.util.Random(seed * 1000003L + i + 500009L)
+    val x = 300 + r.nextInt(4000)
+    val w = 10000 * (1 + r.nextInt(5))
+    val m = 1 + r.nextInt(3)
+    val src = s"SELECT lower(o_orderpriority) AS p, o_orderkey AS k, o_totalprice AS t FROM orders WHERE o_orderkey <= $x"
+    def shape(family: String, spark: String, duck: String) = Shape(f"fz$i%03d_clause_$family", spark, duck)
+    def ranked(fn: String, part: String, ord: String) = s"$fn() OVER (${part}ORDER BY $ord)"
+    i % 8 match {
+      case 0 =>
+        val ord = s"floor(t / $w) DESC, abs(k)"
+        shape("limit_by", s"SELECT p, k, t FROM ($src ORDER BY p, $ord LIMIT $m BY p) s ORDER BY p, k",
+          s"SELECT p, k, t FROM (SELECT *, ${ranked("row_number", "PARTITION BY p ", ord)} AS rn " +
+            s"FROM ($src) s0) s WHERE rn <= $m ORDER BY p, k")
+      case 1 =>
+        val ord = s"abs(floor(t / $w) - ${r.nextInt(5)})"
+        shape("with_ties", s"WITH b AS ($src) SELECT p, k FROM (SELECT p, k, t FROM b ORDER BY $ord " +
+          s"LIMIT $m WITH TIES) s ORDER BY p, k",
+          s"WITH b AS ($src) SELECT p, k FROM (SELECT *, ${ranked("rank", "", ord)} AS r FROM b) s " +
+            s"WHERE r <= $m ORDER BY p, k")
+      case 2 =>
+        def q(month: String, totals: String) =
+          s"SELECT m, c, s FROM (SELECT CAST($month AS DATE) AS m, count(*) AS c, round(sum(o_totalprice), 2) AS s " +
+            s"FROM orders WHERE o_orderkey <= $x GROUP BY $totals) g ORDER BY m NULLS FIRST"
+        shape("with_totals", q("toStartOfMonth(o_orderdate)", "CAST(toStartOfMonth(o_orderdate) AS DATE) WITH TOTALS"),
+          q("date_trunc('month', o_orderdate)",
+            "GROUPING SETS ((CAST(date_trunc('month', o_orderdate) AS DATE)), ())"))
+      case 3 =>
+        def q(ord: String) = s"SELECT p, k, ${ranked("row_number", "PARTITION BY lower(p) ", s"abs(t - $w), k")} AS r " +
+          s"FROM ($src) s QUALIFY r <= $m ORDER BY $ord"
+        shape("qualify", q("lower(p), abs(k)"), q("p, k"))
+      case 4 =>
+        val q = s"SELECT p, k, t FROM (SELECT DISTINCT ON (lower(p)) p, k, t FROM ($src) s " +
+          s"ORDER BY lower(p), abs(t - $w), k) d ORDER BY p"
+        shape("distinct_on", q, q)
+      case 5 =>
+        def q(pre: String) = s"SELECT o_orderpriority AS p, count(*) AS c FROM orders $pre (o_orderkey <= $x AND " +
+          s"(abs(o_totalprice - $w) < 20000 OR o_orderstatus = 'F'))"
+        shape("prewhere", q("PREWHERE") + s" WHERE o_custkey % 3 = $m - 1 GROUP BY o_orderpriority ORDER BY p",
+          q("WHERE") + s" AND o_custkey % 3 = $m - 1 GROUP BY o_orderpriority ORDER BY p")
+      case 6 =>
+        val (off, cnt) = (r.nextInt(20), 1 + r.nextInt(10))
+        val page = s"SELECT k FROM ($src) s ORDER BY abs(t - $w), k"
+        shape("offset_fetch", s"WITH f AS ($page OFFSET $off ROWS FETCH NEXT $cnt ROWS ONLY) " +
+          s"SELECT k FROM ($page LIMIT $off, $cnt) l UNION ALL SELECT k FROM f ORDER BY k",
+          s"WITH f AS ($page LIMIT $cnt OFFSET $off) " +
+            s"SELECT k FROM ($page LIMIT $cnt OFFSET $off) l UNION ALL SELECT k FROM f ORDER BY k")
+      case _ =>
+        val win = "PARTITION BY lower(event_type) ORDER BY ts, event_id"
+        def rate(micros: String) =
+          s"(abs(value) - lag(abs(value)) OVER ($win)) * 1 / nullif(($micros - lag($micros) OVER ($win)) / CAST(1000000 AS DOUBLE), 0)"
+        val e = 200 + r.nextInt(800)
+        shape("window_calls",
+          s"SELECT event_id, round(nonNegativeDerivative(abs(value), ts) OVER ($win), 6) AS d, " +
+            s"leadInFrame(event_id) OVER ($win ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS nx " +
+            s"FROM events WHERE event_id <= $e ORDER BY event_id",
+          s"SELECT event_id, round(CASE WHEN ${rate("epoch_us(ts)")} > 0 THEN ${rate("epoch_us(ts)")} ELSE 0 END, 6) " +
+            s"AS d, lead(event_id) OVER ($win) AS nx FROM events WHERE event_id <= $e ORDER BY event_id")
+    }
+  }
+
   /** WITH FILL … INTERPOLATE (v) — the carry semantics: each fill row
     * takes the previous OUTPUT row's value; before the first source
     * row the typed default (0) applies. The duck model replays the
@@ -344,7 +411,7 @@ object QueryFuzz {
     t.customer.createOrReplaceTempView("customer")
     t.lineitem.createOrReplaceTempView("lineitem")
     new java.io.File(outDir).mkdirs()
-    val all = shapes(seed, n) ++ firstShapes(seed, n)
+    val all = shapes(seed, n) ++ firstShapes(seed, n) ++ clauseShapes(seed, n)
     all.foreach { sh =>
       try sh.name.synchronized {
         spark.sql(sh.spark).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${sh.name}")
