@@ -36,9 +36,13 @@ object Bench {
       require(unknown.isEmpty,
         s"SPARK_GRAFT_BENCH_ONLY names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
     }
+    // SPARK_GRAFT_BENCH_MATERIALIZE=1: time full-result computation
+    // (hash-reduce every column) instead of count() — see the
+    // execution site below. Subset-style default-out guard applies:
+    // a materialize run must not overwrite the committed artifact.
+    val materialize = sys.env.get("SPARK_GRAFT_BENCH_MATERIALIZE").contains("1")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (only.isDefined || sys.env.get("SPARK_GRAFT_BENCH_MATERIALIZE").contains("1"))
-        "/tmp/graft_bench_subset.json"
+      if (only.isDefined || materialize) "/tmp/graft_bench_subset.json"
       else "/root/repo/BENCH_local.json")
     val spark = GraftSession.local("graft-bench")
     // Warm the JVM/codegen/parquet-reader paths so startup cost isn't
@@ -68,15 +72,7 @@ object Bench {
     // so warm-vs-cold and contended-vs-idle are self-describing.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadStart = osBean.getSystemLoadAverage
-    // min-of-two retry cutoff (seconds). Overridable so the noise-audit
-    // machinery below is exercisable at smoke scale; the committed
-    // artifacts always use the default 20 s.
-    val retryCutoff = sys.env.get("SPARK_GRAFT_BENCH_RETRY_CUTOFF").map(_.toDouble).getOrElse(20.0)
-    // SPARK_GRAFT_BENCH_MATERIALIZE=1: time full-result computation
-    // (hash-reduce every column) instead of count() — see the
-    // execution site below. Subset-style default-out guard applies:
-    // a materialize run must not overwrite the committed artifact.
-    val materialize = sys.env.get("SPARK_GRAFT_BENCH_MATERIALIZE").contains("1")
+    val retryCutoff = 20.0 // seconds
     // `setup` is the fixture-build time the DDL/streaming chain
     // queries self-report through FixtureClock (landing writes, CH
     // table loads) — work that exists only because the gate rebuilds
@@ -84,29 +80,14 @@ object Bench {
     // regression would actually show up in; by round 13 the artifact's
     // whole top-10 was fixture-dominated and a 1.62× "regression" on
     // code-unchanged q103 turned out to be landing-write noise.
+    // `work`: the run's job-group counters from the statement recorder
+    // (QueryLog, behind system.query_log); `compiles`: its system.events
+    // CompileFunction delta, the run's own since Bench runs serially.
     final case class R(sec: Double, setup: Double, err: Option[String],
-                       spillMem: Long = 0L, spillDisk: Long = 0L)
-    // Per-query spill accounting (round 17): the q16 sf100 forensics
-    // took an idle host and three scales to adjudicate because the
-    // artifact couldn't say whether a slow cell SPILLED or was merely
-    // contended. Task-end metrics accumulate here; the listener bus is
-    // drained (GraftSparkBridge) before each snapshot so a query's
-    // spill can't leak into its successor's delta.
-    val spillMemTotal = new java.util.concurrent.atomic.AtomicLong
-    val spillDiskTotal = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          spillMemTotal.addAndGet(m.memoryBytesSpilled)
-          spillDiskTotal.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
-    def spillSnapshot(): (Long, Long) = {
-      org.apache.spark.graftbridge.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-      (spillMemTotal.get, spillDiskTotal.get)
+                       work: QueryLog.Work, compiles: Long) {
+      def workSec: Double = math.max(0.0, sec - setup)
     }
+    val sc = spark.sparkContext
     // Plan fingerprint (round 16): #shuffle Exchanges, #BroadcastExchanges,
     // #Sorts, #scans parsed once per query from the executed-plan string
     // (the AQE INITIAL plan — deterministic, and exactly where a rule
@@ -132,56 +113,58 @@ object Bench {
           cnt("""WindowGroupLimit""".r)))
       } catch { case _: Throwable => None }
     final case class Q(best: R, runs: Seq[Double], fp: Option[FP])
-    val results: Seq[(String, Q)] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
-        var fp: Option[FP] = None
-        def once(takeFp: Boolean): R = {
-          FixtureClock.reset()
-          val (sm0, sd0) = spillSnapshot()
-          val t0 = System.nanoTime()
-          val err =
-            try {
-              val df = fn(spark, sfDir)
-              // fingerprint must read the plan BEFORE execution (the
-              // AQE initial plan is the deterministic one), so it
-              // cannot leave the timed window — but its stringify +
-              // regex cost is fixture-class, not plan cost, and run 2
-              // does not carry it: bracket JUST that so work-time
-              // (sec − setup, what the audit compares) stays
-              // symmetric. Plan MATERIALIZATION stays unbracketed —
-              // run 2 pays optimizer+planning inside count() too, so
-              // bracketing it would skew run 1's work-time low.
-              if (takeFp) {
-                val plan = df.queryExecution.executedPlan
-                FixtureClock.time { fp = fingerprint(plan) }
-              }
-              // Default df.count(): comparable across rounds, but a
-              // map-only query benches as scan cost — Spark prunes
-              // every column a count doesn't need, so a codegen'd
-              // kernel regression in e.g. the BPE encode path never
-              // moves the cell. The opt-in forces every output column
-              // to be COMPUTED and reduced (one xxhash64 over the
-              // row, min-aggregated — no collect, no extra shuffle)
-              // for kernel-cost profiling; committed artifacts keep
-              // the count() path for comparability.
-              if (materialize)
-                df.selectExpr("min(xxhash64(struct(*)))").collect()
-              else df.count()
-              None
-            }
-            catch { case e: Throwable =>
-              Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}")
-            }
-          val sec = (System.nanoTime() - t0) / 1e9
-          val (sm1, sd1) = spillSnapshot()
-          R(sec, FixtureClock.nanos / 1e9, err, sm1 - sm0, sd1 - sd0)
+    // One run of a registry query, under a job group of its own;
+    // `takeFp` also reads its plan fingerprint.
+    var runCount = 0
+    def once(name: String, takeFp: Boolean): (R, Option[FP]) = {
+      runCount += 1
+      val group = s"bench-$runCount-$name"
+      val compiles0 = plans.SystemViews.compiles
+      var err: Option[String] = None
+      var fp: Option[FP] = None
+      FixtureClock.reset()
+      val t0 = System.nanoTime()
+      sc.setJobGroup(group, name)
+      try {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        // fingerprint must read the plan BEFORE execution (the
+        // AQE initial plan is the deterministic one), so it
+        // cannot leave the timed window — but its stringify +
+        // regex cost is fixture-class, not plan cost, and run 2
+        // does not carry it: bracket JUST that so work-time
+        // (sec − setup, what the audit compares) stays
+        // symmetric. Plan MATERIALIZATION stays unbracketed —
+        // run 2 pays optimizer+planning inside count() too, so
+        // bracketing it would skew run 1's work-time low.
+        if (takeFp) {
+          val plan = df.queryExecution.executedPlan
+          FixtureClock.time { fp = fingerprint(plan) }
         }
-        val r1 = once(takeFp = true)
+        // Default df.count(): comparable across rounds, but a
+        // map-only query benches as scan cost — Spark prunes
+        // every column a count doesn't need, so a codegen'd
+        // kernel regression in e.g. the BPE encode path never
+        // moves the cell. The opt-in forces every output column
+        // to be COMPUTED and reduced (one xxhash64 over the
+        // row, min-aggregated — no collect, no extra shuffle)
+        // for kernel-cost profiling; committed artifacts keep
+        // the count() path for comparability.
+        if (materialize)
+          df.selectExpr("min(xxhash64(struct(*)))").collect()
+        else df.count()
+      } catch { case e: Throwable =>
+        err = Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}")
+      } finally sc.clearJobGroup()
+      val sec = (System.nanoTime() - t0) / 1e9
+      (R(sec, FixtureClock.nanos / 1e9, err, QueryLog.group(sc, group),
+        plans.SystemViews.compiles - compiles0), fp)
+    }
+    val results: Seq[(String, Q)] =
+      SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n))).map { name =>
+        val (r1, fp) = once(name, takeFp = true)
         if (r1.err.isDefined) name -> Q(r1, Seq(r1.sec), fp) // don't re-run a crash just to time it
         else if (r1.sec < retryCutoff) {
-          val r2 = once(takeFp = false)
+          val r2 = once(name, takeFp = false)._1
           name -> Q(if (r2.err.isEmpty && r2.sec < r1.sec) r2 else r1, Seq(r1.sec, r2.sec), fp)
         }
         else name -> Q(r1, Seq(r1.sec), fp)
@@ -212,53 +195,38 @@ object Bench {
         else if (math.max(0.0, isolated - setup) <= 1.5 * prev) "noise"
         else "regression"
     }
-    // Previous per-query WORK seconds (total minus the artifact's
-    // recorded fixture setup, when present). Accepts Bench's own
-    // artifact (top-level "queries"/"setup") or the driver's
-    // BENCH_r{N}.json wrapper ("parsed" → "queries").
-    val prevTimes: Map[String, Double] = sys.env.get("SPARK_GRAFT_BENCH_PREV").map { p =>
-      import org.json4s._
+    // The previous artifact: Bench's own, or a per-round
+    // BENCH_r{N}.json wrapper, which holds it under "parsed" — a
+    // wrapper input must not silently disable the audit or plan diff.
+    import org.json4s._
+    val prev: JValue = sys.env.get("SPARK_GRAFT_BENCH_PREV").map { p =>
       val root = org.json4s.jackson.JsonMethods.parse(Files.readString(Paths.get(p)))
-      def numMap(v: JValue): Map[String, Double] = v match {
-        case JObject(fields) => fields.collect {
-          case (k, JDouble(x)) => k -> x
-          case (k, JInt(x)) => k -> x.toDouble
-        }.toMap
-        case _ => Map.empty
-      }
-      val qs = root \ "queries" match {
-        case o: JObject => numMap(o)
-        case _ => numMap(root \ "parsed" \ "queries")
-      }
-      val st = numMap(root \ "setup")
-      qs.map { case (k, v) => k -> math.max(0.0, v - st.getOrElse(k, 0.0)) }
-    }.getOrElse(Map.empty)
+      if (root \ "queries" == JNothing) root \ "parsed" else root
+    }.getOrElse(JNothing)
+    def fields(v: JValue): Map[String, JValue] = v match {
+      case JObject(fs) => fs.toMap
+      case _ => Map.empty
+    }
+    def num(v: JValue): Option[Double] = v match {
+      case JDouble(x) => Some(x)
+      case JInt(x) => Some(x.toDouble)
+      case _ => None
+    }
+    // Previous per-query WORK seconds (total minus the artifact's
+    // recorded fixture setup, when present).
+    val prevTimes: Map[String, Double] = fields(prev \ "queries").flatMap { case (k, v) =>
+      num(v).map(x => k -> math.max(0.0, x - num(prev \ "setup" \ k).getOrElse(0.0)))
+    }
     // Previous plan fingerprints (absent in pre-round-16 artifacts →
     // empty diff; from round 16 on, any count change is reported).
-    val prevPlans: Map[String, (Int, Int, Int, Int, Int)] = sys.env.get("SPARK_GRAFT_BENCH_PREV").map { p =>
-      import org.json4s._
-      val root = org.json4s.jackson.JsonMethods.parse(Files.readString(Paths.get(p)))
-      def i(v: JValue): Int = v match {
-        case JInt(x) => x.toInt; case JDouble(x) => x.toInt; case _ => -1
-      }
-      // same two shapes as prevTimes: Bench's own artifact (top-level
-      // "plan") or the driver's wrapper ("parsed" → "plan") — a
-      // wrapper input must not silently disable plan-diff detection
-      // wgl reads -1 from pre-round-17 artifacts (field absent) → the
-      // diff below skips the wgl comparison for those, so adding the
-      // column doesn't flag all 208 queries as "changed" once.
-      def planMap(v: JValue): Map[String, (Int, Int, Int, Int, Int)] = v match {
-        case JObject(fields) => fields.collect {
-          case (k, o: JObject) =>
-            k -> (i(o \ "ex"), i(o \ "bex"), i(o \ "sort"), i(o \ "scan"), i(o \ "wgl"))
-        }.toMap
-        case _ => Map.empty[String, (Int, Int, Int, Int, Int)]
-      }
-      root \ "plan" match {
-        case o: JObject => planMap(o)
-        case _ => planMap(root \ "parsed" \ "plan")
-      }
-    }.getOrElse(Map.empty)
+    // wgl reads -1 from pre-round-17 artifacts (field absent) → the
+    // diff below skips the wgl comparison for those, so adding the
+    // column doesn't flag all 208 queries as "changed" once.
+    val prevPlans: Map[String, (Int, Int, Int, Int, Int)] = fields(prev \ "plan").collect {
+      case (k, o: JObject) =>
+        def i(f: String) = num(o \ f).fold(-1)(_.toInt)
+        k -> (i("ex"), i("bex"), i("sort"), i("scan"), i("wgl"))
+    }
     val planDiffs: Seq[(String, String)] = results.collect {
       case (name, q) if q.fp.isDefined && prevPlans.contains(name) && {
           val f = q.fp.get; val (pe, pb, ps, pc, pw) = prevPlans(name)
@@ -274,7 +242,7 @@ object Bench {
       if (prevTimes.isEmpty) Nil
       else results.collect {
         case (name, Q(best, runs, _)) if best.err.isEmpty && runs.size == 1 && best.sec > retryCutoff &&
-            prevTimes.get(name).exists(p => p > 0 && math.max(0.0, best.sec - best.setup) > 1.5 * p) =>
+            prevTimes.get(name).exists(p => p > 0 && best.workSec > 1.5 * p) =>
           name -> best
       }
     val audits: Seq[(String, Audit)] = auditCandidates.map { case (name, best) =>
@@ -291,33 +259,21 @@ object Bench {
           Thread.sleep(5000); waited += 5
         }
       }
-      def once(): (Double, Double, Long) = {
-        FixtureClock.reset()
-        val (_, sd0) = spillSnapshot()
-        val t0 = System.nanoTime()
-        try {
-          SparkEntry.queries(name)(spark, sfDir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val (_, sd1) = spillSnapshot()
-          (sec, FixtureClock.nanos / 1e9, sd1 - sd0)
-        }
-        catch { case _: Throwable => (-1.0, 0.0, 0L) }
-      }
       settle()
       val load = osBean.getSystemLoadAverage
       val prev = prevTimes(name)
-      var (iso, setup, isoSpill) = once()
-      if (iso >= 0 && math.max(0.0, iso - setup) > 1.5 * prev) {
+      var iso = once(name, takeFp = false)._1
+      if (iso.err.isEmpty && iso.workSec > 1.5 * prev) {
         settle() // looks regressed — confirm on a second settled run
-        val (iso2, setup2, isoSpill2) = once()
+        val iso2 = once(name, takeFp = false)._1
         // keep the better WORK time (the verdict's unit) — comparing
         // totals would let slow fixture rebuilds discard a confirm
         // run that proved the plan time is fine
-        if (iso2 >= 0 && math.max(0.0, iso2 - setup2) < math.max(0.0, iso - setup)) {
-          iso = iso2; setup = setup2; isoSpill = isoSpill2
-        }
+        if (iso2.err.isEmpty && iso2.workSec < iso.workSec) iso = iso2
       }
-      name -> Audit(best.sec, prev, iso, setup, load, best.spillDisk, isoSpill)
+      val (isoSec, isoSetup, isoSpill) =
+        if (iso.err.isEmpty) (iso.sec, iso.setup, iso.work.diskBytesSpilled) else (-1.0, 0.0, 0L)
+      name -> Audit(best.sec, prev, isoSec, isoSetup, load, best.work.diskBytesSpilled, isoSpill)
     }
 
     def ms(v: Double): String = (math.rint(v * 1000) / 1000).toString
@@ -331,71 +287,62 @@ object Bench {
       case c => c.toString
     } + "\""
 
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+
     val ok = results.filter(_._2.best.err.isEmpty)
     val errs = results.collect { case (n, Q(R(_, _, Some(e), _, _), _, _)) => n -> e }
     val total = ok.map(_._2.best.sec).sum
-    def workOf(r: R): Double = math.max(0.0, r.sec - r.setup)
-    val workTotal = ok.map(q => workOf(q._2.best)).sum
-    val allQs = results.map { case (k, v) => jstr(k) + ":" + ms(v.best.sec) }
-      .mkString("{", ",", "}")
+    val workTotal = ok.map(q => q._2.best.workSec).sum
+    val allQs = obj(results.map { case (k, v) => k -> ms(v.best.sec) })
     // fixture-build seconds self-reported by the chain queries (only
     // entries that actually reported setup) — query_s = queries - setup
-    val setupJson = results.filter(_._2.best.setup > 0.0005)
-      .map { case (k, v) => jstr(k) + ":" + ms(v.best.setup) }
-      .mkString("{", ",", "}")
+    val setupJson =
+      obj(results.collect { case (k, v) if v.best.setup > 0.0005 => k -> ms(v.best.setup) })
     // every run's seconds: a 1-element array marks a cold single run
     // (error or >20 s), a 2-element array is min-of-two
-    val runsJson = results.map { case (k, v) =>
-      jstr(k) + ":" + v.runs.map(ms).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val errJson = errs.map { case (k, e) => jstr(k) + ":" + jstr(e) }
-      .mkString("{", ",", "}")
-    val planJson = results.collect { case (k, q) if q.fp.isDefined =>
-      jstr(k) + ":" + q.fp.get.json
-    }.mkString("{", ",", "}")
-    val planDiffJson = planDiffs.map { case (k, v) => jstr(k) + ":" + v }
-      .mkString("{", ",", "}")
+    val runsJson = obj(results.map { case (k, v) => k -> v.runs.map(ms).mkString("[", ",", "]") })
+    val errJson = obj(errs.map { case (k, e) => k -> jstr(e) })
+    val planJson = obj(results.collect { case (k, q) if q.fp.isDefined => k -> q.fp.get.json })
+    val planDiffJson = obj(planDiffs)
     // the harness-generated audit table (empty when no PREV artifact
     // was supplied or nothing tripped the 20 s + 1.5× gate)
-    val auditJson = audits.map { case (k, a) =>
-      jstr(k) + s""":{"serial":${ms(a.serial)},"prev_work":${ms(a.prev)},"isolated":${ms(a.isolated)},""" +
-        s""""isolated_setup":${ms(a.setup)},"load_at_rerun":${ms(a.loadAtRerun)},""" +
-        s""""serial_spill_disk":${a.serialSpillDisk},"isolated_spill_disk":${a.isolatedSpillDisk},""" +
-        s""""verdict":${jstr(a.verdict)}}"""
-    }.mkString("{", ",", "}")
-    // spill table (round 17): only the queries that actually spilled,
-    // bytes from the KEPT run (the same run "queries" reports). A slow
-    // cell with zero spill is contention; one with gigabytes here is a
-    // memory-pressure finding — self-identifying in the artifact.
-    val spillJson = results
-      .filter { case (_, q) => q.best.spillMem > 0 || q.best.spillDisk > 0 }
-      .map { case (k, q) => jstr(k) + s""":{"mem":${q.best.spillMem},"disk":${q.best.spillDisk}}""" }
-      .mkString("{", ",", "}")
-    // "cpus" must report the CONTRACT value — the SPARK_GRAFT_CPUS core
-    // count the session's local[$cores] master was actually built with
-    // (GraftSession), not availableProcessors: the driver's low-core
-    // scaling run (SPARK_GRAFT_CPUS=8 on a 32-CPU host) previously
-    // printed "cpus":32 and its whole scaling block read as suspect.
-    // defaultParallelism is the engine-side witness of the same value.
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
-      .getOrElse(spark.sparkContext.defaultParallelism)
+    val auditJson = obj(audits.map { case (k, a) => k -> obj(Seq("serial" -> ms(a.serial),
+      "prev_work" -> ms(a.prev), "isolated" -> ms(a.isolated), "isolated_setup" -> ms(a.setup),
+      "load_at_rerun" -> ms(a.loadAtRerun), "serial_spill_disk" -> a.serialSpillDisk.toString,
+      "isolated_spill_disk" -> a.isolatedSpillDisk.toString, "verdict" -> jstr(a.verdict)))
+    })
+    // the kept run's layer split (see R); `spill` is bytes spilled to
+    // disk, `shuffle_bytes` bytes written to shuffle
+    val layersJson = obj(results.map { case (k, q) =>
+      val w = q.best.work
+      k -> obj(Seq("rewrite_s" -> ms(w.rewriteNs / 1e9), "plan_s" -> ms(w.planMs / 1e3),
+        "exec_s" -> ms(w.execMs / 1e3), "jobs" -> w.jobs.toString, "tasks" -> w.tasks.toString,
+        "cpu_s" -> ms(w.cpuNs / 1e9), "shuffle_bytes" -> w.shuffleWriteBytes.toString,
+        "spill" -> w.diskBytesSpilled.toString, "compiles" -> q.best.compiles.toString))
+    })
+    // "cpus" is the core count the session's local[N] master was built
+    // with (GraftSession reads SPARK_GRAFT_CPUS), witnessed by the
+    // engine's defaultParallelism — not availableProcessors, which a
+    // low-core scaling run on a bigger host would misreport.
+    val cpus = sc.defaultParallelism
     val cond = s""""load_avg_start":${ms(loadStart)},"load_avg_end":${ms(loadEnd)},""" +
-      s""""cpus":$cpus,"parallelism":${spark.sparkContext.defaultParallelism},""" +
+      s""""cpus":$cpus,"parallelism":$cpus,""" +
       s""""timing":"min_of_two_unless_cold""""
     val common =
       s""""metric":"total","value":${ms(total)},"unit":"sec","count":${results.size},"ok":${ok.size},"sf":${jstr(sfDir)}"""
     // Full artifact: every query, every error — the committed evidence.
     Files.writeString(Paths.get(outPath),
-      s"""{$common,$cond,"work_total":${ms(workTotal)},"queries":$allQs,"setup":$setupJson,"runs":$runsJson,"errors":$errJson,"audit":$auditJson,"plan":$planJson,"plan_diff":$planDiffJson,"spill":$spillJson}\n""")
+      s"""{$common,$cond,"work_total":${ms(workTotal)},"queries":$allQs,"setup":$setupJson,"runs":$runsJson,"errors":$errJson,"audit":$auditJson,"plan":$planJson,"plan_diff":$planDiffJson,"layers":$layersJson}\n""")
     // Stdout: driver-parseable summary that fits a bounded log tail.
     // Top-10 ranks on PLAN-dominated seconds (total minus reported
     // fixture time) so a plan regression can't hide in fixture noise.
-    val top10 = ok.sortBy(q => -workOf(q._2.best)).take(10)
-      .map { case (k, v) => jstr(k) + ":" + ms(workOf(v.best)) }.mkString("{", ",", "}")
+    val top10 = obj(ok.sortBy(q => -q._2.best.workSec).take(10)
+      .map { case (k, v) => k -> ms(v.best.workSec) })
     val auditSummary =
       if (audits.isEmpty) "0"
       else s"${audits.size}(${audits.count(_._2.verdict == "regression")} regression)"
-    val spilledCount = results.count { case (_, q) => q.best.spillMem > 0 || q.best.spillDisk > 0 }
+    val spilledCount = results.count(_._2.best.work.diskBytesSpilled > 0)
     println(s"""{$common,$cond,"work_total":${ms(workTotal)},"queries":$top10,"errors":${errs.size},"audited":${jstr(auditSummary)},"plan_diffs":${planDiffs.size},"spilled":$spilledCount,"detail":${jstr(outPath)}}""")
     spark.stop()
   }

@@ -70,13 +70,7 @@ object ExactDedupScaleRehearsal {
     // likely, but the contract should not flake on one)
     val expected = spark.range(0, docs).select(fpExpr($"id")).distinct().count()
 
-    def emit(line: String): Unit = {
-      println(line)
-      val p = java.nio.file.Paths.get(outPath)
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, line + "\n",
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    }
+    val emit = Rehearsal.emit(outPath) _
 
     for (backend <- Seq("hdfs", "rocksdb")) {
       if (backend == "rocksdb")
@@ -99,11 +93,7 @@ object ExactDedupScaleRehearsal {
       var lastUpdated = -1L
       for (p <- progs) {
         val so = p.stateOperators(0)
-        val custom = so.customMetrics
-        val sizeBytes =
-          if (backend == "rocksdb") custom.getOrDefault("rocksdbTotalMemoryUsageBytes", 0L) +
-            custom.getOrDefault("rocksdbSstFileSize", 0L)
-          else so.memoryUsedBytes
+        val sizeBytes = Rehearsal.stateBytes(backend, so)
         lastRows = so.numRowsTotal
         lastUpdated = so.numRowsUpdated
         emit(s"""{"family":"exactdedup","backend":"$backend","batch":${p.batchId},""" +

@@ -79,11 +79,13 @@ object GraftSession {
     * full cache is on the order of 10–15 MB. */
   private[graft] val codegenCacheEntries: Int = 1000
 
-  /** The parquet reader and codegen cache settings as session config;
-    * the test session applies the same map. */
-  private[graft] def readAndCodegenConf: Map[String, String] =
+  /** The parquet reader and codegen cache settings and the statement
+    * recorder ([[QueryLog]], behind `system.query_log`) as session
+    * config; the test session applies the same map. */
+  private[graft] def engineConf: Map[String, String] =
     parquetReadConf.map { case (k, v) => s"spark.hadoop.$k" -> v } +
-      ("spark.sql.codegen.cache.maxEntries" -> codegenCacheEntries.toString)
+      ("spark.sql.codegen.cache.maxEntries" -> codegenCacheEntries.toString) +
+      ("spark.extraListeners" -> classOf[QueryLog].getName)
 
   def builder(appName: String = "graft",
               master: Option[String] = None,
@@ -155,7 +157,7 @@ object GraftSession {
       // SPARK_GRAFT_IO_CODEC=zstd is the deploy-time dial.
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config(readAndCodegenConf)
+      .config(engineConf)
     master.orElse(Some(s"local[$cores]")).foldLeft(b)(_ master _)
   }
 

@@ -41,12 +41,8 @@ object LshAudit {
 
     def emit(family: String, counts: Seq[(String, Long)], sec: Double): Unit = {
       val js = counts.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-      val line = s"""{"label":"$label","family":"$family",$js,"sec":${math.rint(sec * 100) / 100}}"""
-      println(line)
-      val p = java.nio.file.Paths.get(outPath)
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, line + "\n",
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+      Rehearsal.emit(outPath)(
+        s"""{"label":"$label","family":"$family",$js,"sec":${math.rint(sec * 100) / 100}}""")
     }
 
     def timed[A](f: => A): (A, Double) = {

@@ -2,13 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** One home for the state-rehearsal env contract (round 16 review):
+/** One home for the rehearsal mains' output and the state-rehearsal
+  * env contract (round 16 review):
   * SPARK_GRAFT_STATE_BACKENDS and SPARK_GRAFT_ROCKSDB_TUNING parse
   * identically for every rehearsal main, refusing unknown backend
   * names (a typo must not silently measure hdfs under the given
   * label) and any JSON-breaking character in a tuning segment — KEY
   * or value — since the tag embeds verbatim into the JSONL lines. */
-private[graft] object StateRehearsalEnv {
+private[graft] object Rehearsal {
   def backends: Seq[String] = {
     val bs = sys.env.getOrElse("SPARK_GRAFT_STATE_BACKENDS", "hdfs,rocksdb")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
@@ -30,6 +31,22 @@ private[graft] object StateRehearsalEnv {
 
   def tuningTag(tuning: Seq[(String, String)]): String =
     tuning.map { case (k, v) => s"$k=$v" }.mkString(";")
+
+  /** Prints a JSON line and appends it to the rehearsal's JSONL file. */
+  def emit(outPath: String)(line: String): Unit = {
+    println(line)
+    val p = java.nio.file.Paths.get(outPath)
+    java.nio.file.Files.createDirectories(p.getParent)
+    java.nio.file.Files.writeString(p, line + "\n",
+      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+  }
+
+  /** A batch's state size: RocksDB's memory plus SST files, or the
+    * HDFS-backed store's memory. */
+  def stateBytes(backend: String, so: org.apache.spark.sql.streaming.StateOperatorProgress): Long =
+    if (backend == "rocksdb") so.customMetrics.getOrDefault("rocksdbTotalMemoryUsageBytes", 0L) +
+      so.customMetrics.getOrDefault("rocksdbSstFileSize", 0L)
+    else so.memoryUsedBytes
 }
 
 /** Streaming state-store rehearsal for the NEAR-dedup operator
@@ -79,9 +96,9 @@ object NearDedupScaleRehearsal {
     val docs = sys.env.getOrElse("SPARK_GRAFT_STATE_KEYS", "1000000").toLong
     val outPath = sys.env.getOrElse("SPARK_GRAFT_STATE_OUT",
       "/root/repo/docs/STATE_SCALE_r16.jsonl")
-    val backends = StateRehearsalEnv.backends
-    val tuning = StateRehearsalEnv.tuning
-    val tuningTag = StateRehearsalEnv.tuningTag(tuning)
+    val backends = Rehearsal.backends
+    val tuning = Rehearsal.tuning
+    val tuningTag = Rehearsal.tuningTag(tuning)
     val spark = GraftSession.local("graft-neardedup-scale")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
@@ -128,13 +145,7 @@ object NearDedupScaleRehearsal {
       fs.setTimes(dst, 1000000000000L + i * 60000L, -1)
     }
 
-    def emit(line: String): Unit = {
-      println(line)
-      val p = java.nio.file.Paths.get(outPath)
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, line + "\n",
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    }
+    val emit = Rehearsal.emit(outPath) _
 
     val expectedHits = 3 * (docs / 10) + (docs + 29) / 30
     val blocks = sys.env.get("SPARK_GRAFT_STATE_BLOCKS").map(_.toInt)
@@ -173,11 +184,7 @@ object NearDedupScaleRehearsal {
       val progs = q.recentProgress.filter(_.numInputRows > 0)
       for (p <- progs) {
         val so = p.stateOperators(0)
-        val custom = so.customMetrics
-        val sizeBytes =
-          if (backend == "rocksdb") custom.getOrDefault("rocksdbTotalMemoryUsageBytes", 0L) +
-            custom.getOrDefault("rocksdbSstFileSize", 0L)
-          else so.memoryUsedBytes
+        val sizeBytes = Rehearsal.stateBytes(backend, so)
         emit(s"""{"family":"neardedup","backend":"$backend","tuning":"$tuningTag","blocks":$blocks,"batch":${p.batchId},""" +
           s""""input_rows":${p.numInputRows},""" +
           s""""batch_ms":${p.durationMs.getOrDefault("triggerExecution", -1L)},""" +

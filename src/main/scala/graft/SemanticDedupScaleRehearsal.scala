@@ -46,9 +46,9 @@ object SemanticDedupScaleRehearsal {
     }
     val outPath = sys.env.getOrElse("SPARK_GRAFT_STATE_OUT",
       "/root/repo/docs/STATE_SCALE_r16.jsonl")
-    val backends = StateRehearsalEnv.backends
-    val tuning = StateRehearsalEnv.tuning
-    val tuningTag = StateRehearsalEnv.tuningTag(tuning)
+    val backends = Rehearsal.backends
+    val tuning = Rehearsal.tuning
+    val tuningTag = Rehearsal.tuningTag(tuning)
     val spark = GraftSession.local("graft-semdedup-scale")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
@@ -91,13 +91,7 @@ object SemanticDedupScaleRehearsal {
       }
     }
 
-    def emit(line: String): Unit = {
-      println(line)
-      val p = java.nio.file.Paths.get(outPath)
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, line + "\n",
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    }
+    val emit = Rehearsal.emit(outPath) _
 
     // the +10⁹ re-delivery of the PERTURBED variant (id % 30 == 0 with
     // id % 10 == 0: always a base vector) is verbatim → guaranteed hit
@@ -131,11 +125,7 @@ object SemanticDedupScaleRehearsal {
       val progs = q.recentProgress.filter(_.numInputRows > 0)
       for (p <- progs) {
         val so = p.stateOperators(0)
-        val custom = so.customMetrics
-        val sizeBytes =
-          if (backend == "rocksdb") custom.getOrDefault("rocksdbTotalMemoryUsageBytes", 0L) +
-            custom.getOrDefault("rocksdbSstFileSize", 0L)
-          else so.memoryUsedBytes
+        val sizeBytes = Rehearsal.stateBytes(backend, so)
         emit(s"""{"family":"semdedup","backend":"$backend","tuning":"$tuningTag","batch":${p.batchId},""" +
           s""""input_rows":${p.numInputRows},""" +
           s""""batch_ms":${p.durationMs.getOrDefault("triggerExecution", -1L)},""" +

@@ -62,13 +62,7 @@ object StateScaleRehearsal {
       fs.setTimes(dst, 1000000000000L + i * 60000L, -1)
     }
 
-    def emit(line: String): Unit = {
-      println(line)
-      val p = java.nio.file.Paths.get(outPath)
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, line + "\n",
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    }
+    val emit = Rehearsal.emit(outPath) _
 
     for (backend <- Seq("hdfs", "rocksdb")) {
       if (backend == "rocksdb")
@@ -91,11 +85,7 @@ object StateScaleRehearsal {
       val progs = q.recentProgress.filter(_.numInputRows > 0)
       for (p <- progs) {
         val so = p.stateOperators(0)
-        val custom = so.customMetrics
-        val sizeBytes =
-          if (backend == "rocksdb") custom.getOrDefault("rocksdbTotalMemoryUsageBytes", 0L) +
-            custom.getOrDefault("rocksdbSstFileSize", 0L)
-          else so.memoryUsedBytes
+        val sizeBytes = Rehearsal.stateBytes(backend, so)
         emit(s"""{"backend":"$backend","batch":${p.batchId},""" +
           s""""input_rows":${p.numInputRows},""" +
           s""""batch_ms":${p.durationMs.getOrDefault("triggerExecution", -1L)},""" +

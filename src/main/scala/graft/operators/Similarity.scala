@@ -430,23 +430,12 @@ object Similarity {
     * batched [[graft.plans.NearestCentroid]] sweep per row (the
     * unrolled per-cell form blows past codegen limits at the
     * [[autoNlist]] dial; see that expression's scaladoc), ties to the
-    * lowest cell id. Numerically identical to [[nearestCellUnrolled]]
-    * — the spec asserts it at two codebook sizes. */
+    * lowest cell id. Numerically identical to the compositional
+    * per-cell argmin — Round13DialSpec asserts it at three codebook
+    * sizes. */
   def nearestCell(vecCol: Column, centers: Array[Array[Double]]): Column =
     call_function("graft_nearest_cell", vecCol,
       typedLit[Seq[Seq[Double]]](centers.map(_.toSeq).toSeq))
-
-  /** The compositional argmin (one struct per cell through array_min)
-    * — kept as the independent reference the batched sweep is
-    * spec-checked against; not for large nlist. */
-  private[graft] def nearestCellUnrolled(vecCol: Column, centers: Array[Array[Double]]): Column = {
-    val scored = centers.zipWithIndex.map { case (c, i) =>
-      val c2 = c.map(x => x * x).sum
-      struct((lit(c2) - lit(2.0) * vec.dot(vecCol, lit(c))).as("d2"),
-             lit(i).as("cell"))
-    }
-    array_min(array(scored.toIndexedSeq: _*)).getField("cell")
-  }
 
   /** Land `df` with its cell assignment, partitioned by `cell` on
     * disk. The repartition-by-cell before the write keeps it to one

@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.QueryLog
+
 /** ClickHouse parametric-aggregate SQL syntax on Spark.
   *
   * ClickHouse spells parameterized aggregates as two call lists —
@@ -30,67 +32,37 @@ import org.apache.spark.sql.types.{DataType, StructType}
 class ChSqlParser(delegate: ParserInterface) extends ParserInterface {
   import ChSqlParser.rewriteParametric
 
-  override def parsePlan(sqlText: String): LogicalPlan = {
-    ChSqlParser.interceptOutfile(sqlText) match {
-      case Some(cmd) => return cmd
-      case None =>
-    }
-    ChSqlParser.interceptInfile(sqlText) match {
-      case Some(cmd) => return cmd
-      case None =>
-    }
-    val out = rewriteParametric(sqlText)
-    ChSqlParser.interceptCommand(out)
-      .orElse(ChSqlParser.interceptChCreate(sqlText, out))
-      .getOrElse(delegate.parsePlan(out))
-  }
+  override def parsePlan(sqlText: String): LogicalPlan = parse(sqlText, None)
   // `spark.sql(text, args)` enters here (NOT parsePlan) in Spark 4.1;
   // the interface's default implementation drops the parameter
   // context, so a delegating parser MUST forward it or every
   // parameterized query fails with UNBOUND_SQL_PARAMETER.
-  override def parsePlanWithParameters(sqlText: String, ctx: ParameterContext): LogicalPlan = {
-    ChSqlParser.interceptOutfile(sqlText).foreach { cmd =>
-      // the inner query re-enters the parser at run time, outside the
-      // parameter binding — same contract as the other commands
-      if (ChSqlParser.hasParameters(ctx)) throw new UnsupportedOperationException(
-        "parameterized INTO OUTFILE is not supported: the inner query re-parses at " +
-          "run time where placeholder bindings are no longer in scope — inline the values")
-      return cmd
+  override def parsePlanWithParameters(sqlText: String, ctx: ParameterContext): LogicalPlan =
+    parse(sqlText, Some(ctx))
+
+  /** Both entry points. The plan is tagged with the dialect text, and
+    * the rewrite charged to the caller's job group, for
+    * system.query_log ([[QueryLog]]). */
+  private def parse(sqlText: String, ctx: Option[ParameterContext]): LogicalPlan = {
+    // An intercepted statement re-parses its text or executes at run
+    // time, OUTSIDE the parameter binding — a `?` or `:name`
+    // placeholder would silently unbind and then mis-parse. Refuse
+    // loudly rather than mis-execute.
+    def unbound(what: String)(plan: LogicalPlan): LogicalPlan = {
+      if (ctx.exists(ChSqlParser.hasParameters)) throw new UnsupportedOperationException(
+        s"parameterized $what is not supported: the statement re-parses or executes at run " +
+          "time, where placeholder bindings are no longer in scope — inline the values")
+      plan
     }
-    ChSqlParser.interceptInfile(sqlText).foreach { cmd =>
-      // the file/payload parses at run time, outside the parameter
-      // binding — same contract as the other commands
-      if (ChSqlParser.hasParameters(ctx)) throw new UnsupportedOperationException(
-        "parameterized INSERT FROM INFILE / INSERT … FORMAT is not supported: the " +
-          "statement executes at run time where placeholder bindings are no longer " +
-          "in scope — inline the values")
-      return cmd
-    }
-    val out = rewriteParametric(sqlText)
-    ChSqlParser.interceptCommand(out) match {
-      case Some(plan) =>
-        // An intercepted maintenance command re-parses its predicate /
-        // assignment text at run time, OUTSIDE the parameter binding —
-        // a `?` or `:name` placeholder would silently unbind and then
-        // mis-parse. Refuse loudly rather than mis-execute.
-        if (ChSqlParser.hasParameters(ctx)) throw new UnsupportedOperationException(
-          "parameterized ALTER TABLE DELETE/UPDATE/OPTIMIZE is not supported: the " +
-            "command re-parses its predicate text at run time where placeholder " +
-            "bindings are no longer in scope — inline the values into the SQL text")
-        plan
-      case None =>
-        ChSqlParser.interceptChCreate(sqlText, out) match {
-          case Some(plan) =>
-            // the inner Spark DDL re-parses at run time, outside the
-            // parameter binding — same contract as the commands above
-            if (ChSqlParser.hasParameters(ctx)) throw new UnsupportedOperationException(
-              "parameterized ClickHouse CREATE TABLE is not supported: the statement " +
-                "re-parses at run time where placeholder bindings are no longer in " +
-                "scope — inline the values into the SQL text")
-            plan
-          case None => delegate.parsePlanWithParameters(out, ctx)
-        }
-    }
+    QueryLog.tagQuery(
+      ChSqlParser.interceptOutfile(sqlText).map(unbound("INTO OUTFILE"))
+        .orElse(ChSqlParser.interceptInfile(sqlText).map(unbound("INSERT FROM INFILE / INSERT … FORMAT")))
+        .getOrElse {
+          val out = QueryLog.rewrite(rewriteParametric(sqlText))
+          ChSqlParser.interceptCommand(out).map(unbound("ALTER TABLE DELETE/UPDATE/OPTIMIZE"))
+            .orElse(ChSqlParser.interceptChCreate(sqlText, out).map(unbound("ClickHouse CREATE TABLE")))
+            .getOrElse(ctx.fold(delegate.parsePlan(out))(delegate.parsePlanWithParameters(out, _)))
+        }, sqlText)
   }
   override def parseQuery(sqlText: String): LogicalPlan = delegate.parseQuery(rewriteParametric(sqlText))
   override def parseExpression(sqlText: String): Expression = delegate.parseExpression(rewriteParametric(sqlText))
@@ -2808,6 +2780,51 @@ object ChSqlParser {
       text.substring(blk.head, trimmedEnd(text, blk.head, blk.clauses(o).start))))
   }
 
+  /** Splices `items` (expression, alias) into `query` as hidden select
+    * items `expr AS alias` at `fromAt`, its FROM. ClickHouse lets LIMIT
+    * BY keys and ORDER BY items name columns the SELECT list does not
+    * carry, while a query wrapped around this one sees only its select
+    * list: the wrapper partitions or orders by the aliases and EXCEPTs
+    * them back out. */
+  private def hide(query: String, fromAt: Int, items: Seq[(String, String)]): String =
+    query.substring(0, fromAt) + items.map { case (e, a) => s", $e AS $a" }.mkString + " " +
+      query.substring(fromAt)
+
+  private val OrderItem = """(?is)(.*?)(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?""".r
+  private val ItemName = """([A-Za-z_]\w*)$""".r
+  // a name, or the qualifier of a dotted one; not a function name
+  private val NameRef = """(?<![\w.])([A-Za-z_]\w*)(?!\w|\s*\()""".r
+
+  /** The block's ORDER BY list `ord` (clause `o`), rewritten for a
+    * wrapper query: each item that refers to a name the select list
+    * does not output (its trailing identifier: alias or bare column)
+    * orders by a hidden `gr_ob_i__` item instead, kept with its
+    * direction. Returns the list and the hidden (expression, alias)
+    * items, none when every item resolves — and none under a DISTINCT
+    * head (an extra item would change what is distinct), a star in the
+    * select list (every source column passes through) or no FROM. */
+  private def orderByOverWrapper(text: String, blk: ChLexer.Block, o: Int,
+      ord: String): (String, Seq[(String, String)]) = {
+    val cs = blk.clauses
+    val from = cs.indexWhere(c => c.kw == "FROM" && c.start < cs(o).start)
+    val names = selectHead(text, blk).filter(m => m.group(1) == null && from >= 0).map { m =>
+      topLevelSplit(text.substring(blk.head + m.end, cs(from).start)).map(_.trim).map { it =>
+        if (it.startsWith("*") || it.contains(".*")) "*"
+        else ItemName.findFirstMatchIn(it).map(_.group(1).toLowerCase).getOrElse("")
+      }.toSet
+    }.filterNot(_.contains("*"))
+    val items = topLevelSplit(ord).map(_.trim).map {
+      case OrderItem(e, dir, nulls) => (e, Option(dir).getOrElse("") + Option(nulls).getOrElse(""))
+    }
+    val hidden = names.toSeq.flatMap { n =>
+      items.map(_._1).filter(e => NameRef.findAllMatchIn(e).map(_.group(1).toLowerCase)
+        .exists(r => !n.contains(r)))
+    }.distinct.zipWithIndex.map { case (e, i) => (e, s"gr_ob_${i}__") }
+    if (hidden.isEmpty) (ord, Nil)
+    else (items.map { case (e, mods) => hidden.find(_._1 == e).fold(e)(_._2) + mods }
+      .mkString(", "), hidden)
+  }
+
   /** The keywords that may follow a QUALIFY predicate. */
   private val TrailingKws = Set("ORDER BY", "LIMIT", "OFFSET", "FETCH", "BY", "WITH TIES")
 
@@ -2823,7 +2840,9 @@ object ChSqlParser {
     * evaluation order) and DISTINCT moves to the wrapping query,
     * applying after the filter and after the marker is dropped. The
     * trailing ORDER BY / LIMIT / OFFSET / FETCH clauses move to the
-    * wrapper as written. */
+    * wrapper as written, except that an ORDER BY item naming what the
+    * select list does not output orders by a hidden item
+    * ([[orderByOverWrapper]]). */
   private val qualifyPass: BlockPass = (text, _, blk) => {
     val cs = blk.clauses
     val q = blk.indexOf("QUALIFY")
@@ -2834,10 +2853,18 @@ object ChSqlParser {
       val fromAt = cs(from).start
       val predEnd = trimmedEnd(text, cs(q).bodyStart, blk.bodyEnd(q))
       val pred = text.substring(cs(q).bodyStart, predEnd).trim
-      val injected = ("SELECT " + text.substring(blk.head + m.end, fromAt)).trim +
-        s", ($pred) AS gr_qf__ " + text.substring(fromAt, trimmedEnd(text, fromAt, cs(q).start))
-      Splice(blk.head, blk.end, s"SELECT $distinct* EXCEPT (gr_qf__) FROM ($injected) WHERE gr_qf__" +
-        text.substring(predEnd, blk.end))
+      val o = blk.lastIndexOf("ORDER BY")
+      val (ord, hidden) =
+        if (o < q) ("", Nil) else orderByOverWrapper(text, blk, o, clauseBody(text, blk, o).trim)
+      val head = ("SELECT " + text.substring(blk.head + m.end, fromAt)).trim + s", ($pred) AS gr_qf__"
+      val injected =
+        hide(head + text.substring(fromAt, trimmedEnd(text, fromAt, cs(q).start)), head.length, hidden)
+      val trailing =
+        if (hidden.isEmpty) text.substring(predEnd, blk.end)
+        else text.substring(predEnd, cs(o).bodyStart) + s" $ord " + text.substring(blk.bodyEnd(o), blk.end)
+      Splice(blk.head, blk.end,
+        s"SELECT $distinct* EXCEPT (${("gr_qf__" +: hidden.map(_._2)).mkString(", ")}) " +
+          s"FROM ($injected) WHERE gr_qf__" + trailing)
     }
   }
 
@@ -2880,16 +2907,21 @@ object ChSqlParser {
     * tying with the n-th row's sort key survives. The final ORDER BY
     * is the ties key — a caller needing a total output order selects
     * exactly the ORDER BY columns (ties are duplicates of the key, so
-    * that order IS total). */
+    * that order IS total). An ORDER BY item naming what the select list
+    * does not output orders by a hidden item ([[orderByOverWrapper]]). */
   private val withTiesPass: BlockPass = (text, _, blk) => lastOrderBy(text, blk).toSeq.flatMap {
     case (o, ord, prefix) if blk.kwsAfter(o) == Seq("LIMIT", "WITH TIES") &&
         clauseBody(text, blk, o + 2).isBlank =>
       limitSpec(text, blk.clauses(o + 1).start, blk.clauses(o + 2).start).collect {
-        case (null, n, null) => Splice(blk.head, blk.end,
-          s"""SELECT * EXCEPT (gr_rk__) FROM (
-             |  SELECT *, rank() OVER (ORDER BY $ord) AS gr_rk__
-             |  FROM ($prefix)
-             |) WHERE gr_rk__ <= $n ORDER BY $ord""".stripMargin)
+        case (null, n, null) =>
+          val (key, hidden) = orderByOverWrapper(text, blk, o, ord)
+          val from = blk.clauses.indexWhere(c => c.kw == "FROM" && c.start < blk.clauses(o).start)
+          val inner = if (hidden.isEmpty) prefix else hide(prefix, blk.clauses(from).start - blk.head, hidden)
+          Splice(blk.head, blk.end,
+            s"""SELECT * EXCEPT (${("gr_rk__" +: hidden.map(_._2)).mkString(", ")}) FROM (
+               |  SELECT *, rank() OVER (ORDER BY $key) AS gr_rk__
+               |  FROM ($inner)
+               |) WHERE gr_rk__ <= $n ORDER BY $key""".stripMargin)
       }
     case _ => None
   }
@@ -2918,7 +2950,9 @@ object ChSqlParser {
 
   /** ClickHouse `ORDER BY … LIMIT n BY cols [LIMIT m]` (also `LIMIT
     * off, n BY` and `LIMIT n OFFSET off BY`) → a row_number window
-    * wrap: rows off+1 … off+n per cols-group in the given order. */
+    * wrap: rows off+1 … off+n per cols-group in the given order. BY
+    * keys and ORDER BY items the select list does not output reach
+    * the window as hidden items ([[hide]]). */
   private val limitByPass: BlockPass = (text, _, blk) => {
     val cs = blk.clauses
     val by = blk.lastIndexOf("BY")
@@ -2945,19 +2979,17 @@ object ChSqlParser {
         val from = cs.indexWhere(c => c.kw == "FROM" && c.start < cs(o).start)
         val inject = byItems.forall(_.matches("[A-Za-z_][\\w.]*")) && from >= 0 &&
           !selectHead(text, blk).exists(_.group(1) != null)
-        val (inner, part) =
-          if (!inject) (prefix, cols)
-          else {
-            val at = cs(from).start - blk.head
-            val aliases = byItems.zipWithIndex.map { case (c, i) => s"$c AS gr_by_${i}__" }
-            (prefix.substring(0, at) + ", " + aliases.mkString(", ") + " " + prefix.substring(at),
-              byItems.indices.map(i => s"gr_by_${i}__").mkString(", "))
-          }
+        val byHidden =
+          if (!inject) Nil else byItems.zipWithIndex.map { case (c, i) => (c, s"gr_by_${i}__") }
+        val part = if (inject) byHidden.map(_._2).mkString(", ") else cols
+        val (key, obHidden) = orderByOverWrapper(text, blk, o, ord)
+        val hidden = byHidden ++ obHidden
+        val inner = if (hidden.isEmpty) prefix else hide(prefix, cs(from).start - blk.head, hidden)
         Seq(Splice(blk.head, blk.end,
-          s"""SELECT * EXCEPT (gr_rn__${if (inject) s", $part" else ""}) FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY $part ORDER BY $ord) AS gr_rn__
+          s"""SELECT * EXCEPT (${("gr_rn__" +: hidden.map(_._2)).mkString(", ")}) FROM (
+             |  SELECT *, row_number() OVER (PARTITION BY $part ORDER BY $key) AS gr_rn__
              |  FROM ($inner)
-             |) WHERE gr_rn__ > $off AND gr_rn__ <= ${off + n.toLong} ORDER BY $ord$outer""".stripMargin))
+             |) WHERE gr_rn__ > $off AND gr_rn__ <= ${off + n.toLong} ORDER BY $key$outer""".stripMargin))
       case _ => Nil
     }
   }

@@ -14,7 +14,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** The ClickHouse `system` database as a DataSourceV2 catalog:
   * `FROM system.tables` / `system.columns` / `system.parts` /
   * `system.databases` / `system.functions` / `system.dictionaries` /
-  * `system.data_skipping_indices` / `system.events` resolve through
+  * `system.data_skipping_indices` / `system.events` /
+  * `system.query_log` resolve through
   * Spark's catalog manager (registered by
   * [[graft.GraftSession]] as `spark.sql.catalog.system`) to
   * driver-local scans whose rows compute AT EXECUTION from the live
@@ -42,7 +43,7 @@ class GraftSystemCatalog extends TableCatalog {
 
   private val viewNames: Seq[String] =
     Seq("databases", "tables", "functions", "dictionaries", "parts", "columns",
-      "data_skipping_indices", "events")
+      "data_skipping_indices", "events", "query_log")
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     // Spark's own error for SHOW TABLES IN system.sub — a raw

@@ -52,7 +52,17 @@ object SystemViews {
     // (see `events`)
     "events" -> StructType(Seq(
       StructField("event", StringType), StructField("value", LongType),
-      StructField("description", StringType))))
+      StructField("description", StringType))),
+    // one row per finished SQL execution, from the statement recorder
+    // (graft.QueryLog); ClickHouse's column names where one maps
+    "query_log" -> StructType(
+      Seq(StructField("type", StringType), StructField("event_time", TimestampType),
+        StructField("query_duration_ms", LongType)) ++
+      Seq("query_id", "query", "exception", "job_group").map(StructField(_, StringType)) ++
+      Seq("parsing_ms", "analysis_ms", "optimization_ms", "planning_ms", "read_rows",
+        "read_bytes", "jobs", "stages", "tasks", "executor_cpu_ms", "shuffle_read_bytes",
+        "shuffle_write_bytes", "memory_bytes_spilled", "disk_bytes_spilled")
+        .map(StructField(_, LongType))))
 
   /** Optional pruning hints from pushed-down EqualTo filters on the
     * (database, table) columns — Spark re-applies every filter above
@@ -74,6 +84,7 @@ object SystemViews {
     case "columns"      => columns(spark, r)
     case "data_skipping_indices" => dataSkippingIndices(spark, r)
     case "events"       => events()
+    case "query_log"    => queryLog(spark)
     case other => throw new IllegalArgumentException(s"unknown system view '$other'")
   }
 
@@ -154,12 +165,32 @@ object SystemViews {
     * expressions: the count from `CodegenMetrics`, the time from
     * `CodeGenerator.compileTime`. */
   private def events(): Seq[Seq[Any]] = Seq(
-    Seq("CompileFunction",
-      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    Seq("CompileFunction", compiles,
       "Number of generated classes compiled (codegen cache misses)."),
     Seq("CompileExpressionsMicroseconds",
       org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1000,
       "Total time spent compiling generated classes, in microseconds."))
+
+  /** The `CompileFunction` event: generated classes compiled so far. */
+  private[graft] def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** system.query_log — the recorder's entries, oldest first. `type`
+    * is ClickHouse's QueryFinish or ExceptionWhileProcessing, and
+    * `exception` is empty for a statement that finished.
+    * `query_duration_ms` runs from execution start, after physical
+    * planning; the planning phases have their own columns. */
+  private def queryLog(spark: SparkSession): Seq[Seq[Any]] =
+    graft.QueryLog.entries(spark.sparkContext).map { e =>
+      val w = e.work
+      def phase(p: String): Long = e.phasesMs.getOrElse(p, 0L)
+      Seq[Any](if (e.exception.isDefined) "ExceptionWhileProcessing" else "QueryFinish",
+        new java.sql.Timestamp(e.eventTimeMs), w.execMs, e.executionId.toString, e.query,
+        e.exception.getOrElse(""), e.jobGroup.orNull,
+        phase("parsing"), phase("analysis"), phase("optimization"), phase("planning"),
+        w.readRows, w.readBytes, w.jobs, w.stages, w.tasks, w.cpuNs / 1000000,
+        w.shuffleReadBytes, w.shuffleWriteBytes, w.memoryBytesSpilled, w.diskBytesSpilled)
+    }
 
   private def dictionaries(): Seq[Seq[Any]] =
     graft.operators.Dictionaries.list.map { case (n, k, h) =>

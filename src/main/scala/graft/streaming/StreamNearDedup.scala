@@ -210,15 +210,18 @@ object StreamNearDedup {
     val offsets = widths.scanLeft(0)(_ + _)
     val combos = (0 until b).combinations(b - maxHamming).toSeq
     require(combos.size <= 4096, s"C($b, ${b - maxHamming}) = ${combos.size} keys per doc — lower blocks")
-    val comboBits = comboIndexBits(b, maxHamming)
-    df.select(explode(array(combos.zipWithIndex.map { case (sel, ci) =>
-        val packed = sel.foldLeft(lit(ci.toLong): org.apache.spark.sql.Column) { (acc, blk) =>
-          shiftleft(acc, widths(blk)).bitwiseOR(
-            shiftright(col("fp"), offsets(blk)).bitwiseAND(lit((1L << widths(blk)) - 1)))
-        }
-        struct(packed.as("ck"), col("id"), col("fp"))
-      }: _*)).as("x"))
-      .select(col("x.ck"), col("x.id"), col("x.fp"))
+    // One row per combination (its index; per chosen block the width,
+    // offset and mask that pack it), folded into the key by one lambda:
+    // code size does not grow with the combination count, which passed
+    // Janino's 64 KB method limit at the autoBlocks dials when unrolled.
+    val table = typedLit(combos.zipWithIndex.map { case (sel, ci) =>
+      (ci.toLong, sel.map(blk => (widths(blk), offsets(blk), (1L << widths(blk)) - 1)))
+    })
+    df.select(explode(transform(table, c =>
+        aggregate(c("_2"), c("_1"), (acc, blk) =>
+          call_function("shiftleft", acc, blk("_1")).bitwiseOR(
+            call_function("shiftright", col("fp"), blk("_2")).bitwiseAND(blk("_3")))))).as("ck"),
+      col("id"), col("fp"))
       .as[ChunkDoc]
   }
 

@@ -108,6 +108,31 @@ class ClauseRewriteSpec extends SparkSpec {
       spark.sql(s"SELECT DISTINCT ON (lower(p)) p, k FROM ($orderCols)"))
   }
 
+  test("ORDER BY a column the query does not select: LIMIT BY, WITH TIES, QUALIFY, DISTINCT ON") {
+    same("SELECT o_orderkey AS k FROM cr_orders ORDER BY o_totalprice LIMIT 1 BY o_orderpriority",
+      """SELECT k FROM (SELECT o_orderkey AS k, row_number() OVER (PARTITION BY o_orderpriority
+        |  ORDER BY o_totalprice) AS rn FROM cr_orders) WHERE rn = 1""".stripMargin)
+    same("SELECT o_orderkey AS k FROM cr_orders ORDER BY abs(o_totalprice) DESC, k LIMIT 2 BY o_orderpriority",
+      """SELECT k FROM (SELECT o_orderkey AS k, row_number() OVER (PARTITION BY o_orderpriority
+        |  ORDER BY abs(o_totalprice) DESC, o_orderkey) AS rn FROM cr_orders) WHERE rn <= 2""".stripMargin)
+    val ties = "SELECT o_orderkey AS k FROM cr_orders ORDER BY o_totalprice LIMIT 2 WITH TIES"
+    val ranked = """SELECT k FROM (SELECT o_orderkey AS k, o_totalprice AS t, rank() OVER (
+                   |  ORDER BY o_totalprice) AS r FROM cr_orders) WHERE r <= 2 ORDER BY t""".stripMargin
+    same(ties, ranked)
+    assert(rows(ties) == rows(ranked))
+    val numbered = """SELECT o_orderkey AS k, row_number() OVER (PARTITION BY o_orderpriority
+                     |  ORDER BY o_orderkey) AS r FROM cr_orders""".stripMargin
+    val qualified = s"$numbered QUALIFY r <= 2 ORDER BY o_totalprice"
+    val filtered = """SELECT k, r FROM (SELECT o_orderkey AS k, o_totalprice AS t, row_number() OVER (
+                     |  PARTITION BY o_orderpriority ORDER BY o_orderkey) AS r FROM cr_orders)
+                     |WHERE r <= 2 ORDER BY t""".stripMargin
+    same(qualified, filtered)
+    assert(rows(qualified) == rows(filtered))
+    same("SELECT DISTINCT ON (o_orderpriority) o_orderkey FROM cr_orders ORDER BY o_orderpriority, o_totalprice",
+      """SELECT o_orderkey FROM (SELECT o_orderkey, row_number() OVER (PARTITION BY o_orderpriority
+        |  ORDER BY o_totalprice) AS rn FROM cr_orders) WHERE rn = 1""".stripMargin)
+  }
+
   test("PREWHERE: a nested predicate before WHERE, behind a CTE, inside a subquery") {
     same(
       """SELECT count(*) FROM cr_orders

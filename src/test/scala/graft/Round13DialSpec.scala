@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Round 13: the last hand-pinned scale dial (q53's nlist=16) moves to
@@ -22,36 +22,19 @@ class Round13DialSpec extends SparkSpec {
       .write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
 
-    @volatile var jobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // settle: run a marker job and spin until its start event lands,
-      // so the async listener queue is drained up to this point
-      def settle(): Unit = {
-        val before = jobs
-        spark.sparkContext.parallelize(Seq(1), 1).count() // exactly ONE job (no AQE stages)
-        val deadline = System.nanoTime() + 30_000_000_000L
-        while (jobs <= before && System.nanoTime() < deadline) Thread.sleep(10)
-        assert(jobs > before, "marker job event never arrived")
-      }
-      settle()
-      val baseline = jobs
-      val counted = Similarity.statsRowCount(df)
+    var counted, viaView: Option[Long] = None
+    val jobs = jobsOf {
+      counted = Similarity.statsRowCount(df)
       // a temp view over the same files (spark.table keeps a View node)
       df.createOrReplaceTempView("r13_statcount_view")
-      val viaView = Similarity.statsRowCount(spark.table("r13_statcount_view"))
-      settle() // any job statsRowCount ran would be ordered before the marker
-      assert(counted.contains(n.toLong))
-      assert(viaView.contains(n.toLong))
-      assert(jobs == baseline + 1,
-        s"footer path must run no Spark job, saw ${jobs - baseline - 1} extra")
-      // row-preserving nodes above the scan keep the fast path
-      assert(Similarity.statsRowCount(df.select("id")).contains(n.toLong))
-      assert(Similarity.statsRowCount(df.alias("t").select(col("v") + 1)).contains(n.toLong))
-    } finally spark.sparkContext.removeSparkListener(listener)
+      viaView = Similarity.statsRowCount(spark.table("r13_statcount_view"))
+    }
+    assert(counted.contains(n.toLong))
+    assert(viaView.contains(n.toLong))
+    assert(jobs == 0, s"footer path must run no Spark job, saw $jobs")
+    // row-preserving nodes above the scan keep the fast path
+    assert(Similarity.statsRowCount(df.select("id")).contains(n.toLong))
+    assert(Similarity.statsRowCount(df.alias("t").select(col("v") + 1)).contains(n.toLong))
     assert(Similarity.corpusCount(df) == n.toLong)
   }
 
@@ -82,6 +65,18 @@ class Round13DialSpec extends SparkSpec {
 
   // ------------------------------------------------- batched nearest cell
 
+  /** The compositional argmin (one struct per cell through array_min):
+    * the independent reference the batched sweep is checked against;
+    * not for large nlist. */
+  private def nearestCellUnrolled(vecCol: Column, centers: Array[Array[Double]]): Column = {
+    val scored = centers.zipWithIndex.map { case (c, i) =>
+      val c2 = c.map(x => x * x).sum
+      struct((lit(c2) - lit(2.0) * graft.functions.vec.dot(vecCol, lit(c))).as("d2"),
+             lit(i).as("cell"))
+    }
+    array_min(array(scored.toIndexedSeq: _*)).getField("cell")
+  }
+
   test("nearestCell (batched sweep) is bit-identical to the unrolled argmin") {
     val rnd = new scala.util.Random(13L)
     for (nlist <- Seq(4, 16, 100)) {
@@ -91,7 +86,7 @@ class Round13DialSpec extends SparkSpec {
       }.toDF("vec_id", "embedding")
       val got = df.select(col("vec_id"),
           Similarity.nearestCell(col("embedding"), centers).as("c"),
-          Similarity.nearestCellUnrolled(col("embedding"), centers).as("c0"))
+          nearestCellUnrolled(col("embedding"), centers).as("c0"))
         .collect()
       got.foreach { r =>
         assert(r.getInt(1) == r.getInt(2), s"vec ${r.getLong(0)} at nlist=$nlist")
@@ -107,7 +102,7 @@ class Round13DialSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val got = df.select(col("vec_id"),
         Similarity.nearestCell(col("embedding"), centers).as("c"),
-        Similarity.nearestCellUnrolled(col("embedding"), centers).as("c0"))
+        nearestCellUnrolled(col("embedding"), centers).as("c0"))
       .orderBy("vec_id").collect()
     assert(got(0).getInt(1) == 0 && got(0).getInt(2) == 0) // tie -> cell 0
     assert(got(1).getInt(1) == 2 && got(1).getInt(2) == 2)
@@ -121,7 +116,7 @@ class Round13DialSpec extends SparkSpec {
       (2L, Array.fill(5)(rnd.nextFloat())),  // shorter than the centroid dim
     ).toDF("vec_id", "embedding")
     df.select(Similarity.nearestCell(col("embedding"), centers).as("c"),
-        Similarity.nearestCellUnrolled(col("embedding"), centers).as("c0"))
+        nearestCellUnrolled(col("embedding"), centers).as("c0"))
       .collect().foreach(r => assert(r.getInt(0) == r.getInt(1)))
   }
 

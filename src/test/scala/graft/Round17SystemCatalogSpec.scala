@@ -65,7 +65,7 @@ class Round17SystemCatalogSpec extends SparkSpec {
     val names = spark.sql("SHOW TABLES IN system").collect()
       .map(_.getString(1)).toSet
     assert(names == Set("databases", "tables", "functions", "dictionaries", "parts", "columns",
-      "data_skipping_indices", "events")) // data_skipping_indices joined in round 19
+      "data_skipping_indices", "events", "query_log")) // data_skipping_indices joined in round 19
   }
 
   test("EqualTo(table) pushdown prunes the metadata walk (residual-safe)") {
@@ -105,7 +105,7 @@ class Round17SystemCatalogSpec extends SparkSpec {
       java.util.Collections.emptyMap()))
     val names = cat.listTables(Array.empty).map(_.name).toSet
     assert(names == Set("databases", "tables", "functions", "dictionaries", "parts", "columns",
-      "data_skipping_indices", "events")) // data_skipping_indices joined in round 19
+      "data_skipping_indices", "events", "query_log")) // data_skipping_indices joined in round 19
     assert(cat.loadTable(Identifier.of(Array.empty, "parts")).schema().fieldNames.toSeq ==
       Seq("database", "table", "partition", "part_count", "bytes_on_disk", "rows"))
   }

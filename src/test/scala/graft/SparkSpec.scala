@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session —
   * getOrCreate — so suites don't pay repeated startup): local[4] with
-  * 4 shuffle partitions, and `GraftSession`'s parquet and codegen
-  * cache settings. */
+  * 4 shuffle partitions, and `GraftSession`'s parquet, codegen cache
+  * and statement recorder settings. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -20,33 +19,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
-  /** Jobs started by `body`, counted by job group; a marker job after
-    * it drains the listener queue up to that point. */
+  /** Jobs started by `body`: the statement recorder's count for a job
+    * group of its own. */
   def jobsOf(body: => Unit): Int = {
-    val group = s"jobs-${System.nanoTime()}"
-    val marker = group + "-marker"
-    @volatile var jobs = 0
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs += 1
-          case Some(`marker`) => markerSeen = true
-          case _ =>
-        }
-    }
     val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30_000_000_000L
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "marker job event never arrived")
-      jobs
-    } finally sc.removeSparkListener(listener)
+    val group = s"jobs-${System.nanoTime()}"
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    QueryLog.group(sc, group).jobs.toInt
   }
 
   /** DROP TABLE plus managed-location (and sibling-dir) cleanup: a
@@ -79,9 +59,9 @@ object SparkSpec {
       .config("spark.sql.catalog.system", "graft.plans.GraftSystemCatalog")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // the engine's parquet reader and codegen cache settings; the
-      // cache size is static, so this first session fixes it per JVM
-      .config(GraftSession.readAndCodegenConf)
+      // the engine's parquet reader, codegen cache and statement
+      // recorder; all are static, so this first session fixes them per JVM
+      .config(GraftSession.engineConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

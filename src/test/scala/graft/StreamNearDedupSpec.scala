@@ -127,6 +127,33 @@ class StreamNearDedupSpec extends SparkSpec {
     assert(graft.streaming.StreamSemanticDedup.autoPlanes(256L * 64L) == 8)
   }
 
+  test("combination keys equal the per-combination packing formula at every autoBlocks dial") {
+    // 60-bit fingerprints plus a negative one (shiftright is arithmetic)
+    val docs = Seq(1L -> 0x0123456789ABCL, 2L -> 0x0FFFFFFFFFFFFFFFL, 3L -> 0L,
+      4L -> 0x0FEDCBA987654321L, 5L -> -0x123456789L)
+    // the key of combination `ci` over blocks `sel`: ci, then each
+    // block's bits, packed at the block's own width (scheme v2)
+    def expected(d: Int, b: Int): Seq[(Long, Long)] = {
+      val widths = (0 until b).map(c => 60 / b + (if (c < 60 % b) 1 else 0))
+      val offsets = widths.scanLeft(0)(_ + _)
+      for ((id, fp) <- docs; (sel, ci) <- (0 until b).combinations(b - d).toSeq.zipWithIndex)
+        yield id -> sel.foldLeft(ci.toLong)((acc, k) =>
+          (acc << widths(k)) | ((fp >> offsets(k)) & ((1L << widths(k)) - 1)))
+    }
+    val dials = (for (d <- 1 to 6; n <- Seq(1000L, 1000000000L, 100000000000L))
+      yield d -> StreamNearDedup.autoBlocks(n, maxHamming = d)).distinct :+ (2 -> 7)
+    assert(dials.map { case (d, b) => StreamNearDedup.combinations(b, d) }.max > 200)
+    assert(StreamNearDedup.KeyScheme == "v2")
+    // a generated method past 64 KB fails here instead of falling back
+    withConf("spark.sql.codegen.fallback" -> "false") {
+      for ((d, b) <- dials) {
+        val got = StreamNearDedup.explodeChunks(docs.toDF("id", "fp"), d, blocks = b)
+          .collect().toSeq.map(c => c.id -> c.ck)
+        assert(got.sorted == expected(d, b).sorted, s"maxHamming=$d blocks=$b")
+      }
+    }
+  }
+
   test("whale cap bounds state; capped docs still verify against the first entries") {
     implicit val sqlCtx = spark.sqlContext
     val fp = 0x1111L
