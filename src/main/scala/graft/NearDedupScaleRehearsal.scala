@@ -32,6 +32,13 @@ private[graft] object Rehearsal {
   def tuningTag(tuning: Seq[(String, String)]): String =
     tuning.map { case (k, v) => s"$k=$v" }.mkString(";")
 
+  /** The part file a one-task write of batch `batch` left in `dir`. An
+    * empty batch that left none fails naming the batch. */
+  def landedPart(fs: org.apache.hadoop.fs.FileSystem, dir: String, batch: String): org.apache.hadoop.fs.Path =
+    Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir, "part-*.parquet")))
+      .flatMap(_.headOption).map(_.getPath)
+      .getOrElse(throw new IllegalStateException(s"batch $batch wrote no parquet file to $dir: is it empty?"))
+
   /** Prints a JSON line and appends it to the rehearsal's JSONL file. */
   def emit(outPath: String)(line: String): Unit = {
     println(line)
@@ -139,7 +146,7 @@ object NearDedupScaleRehearsal {
         else ids.select($"id", fpExpr.as("fp"))
       val t = s"$base/tmp/$i"
       df.coalesce(1).write.mode("overwrite").parquet(t)
-      val part = fs.globStatus(new org.apache.hadoop.fs.Path(t, "part-*.parquet"))(0).getPath
+      val part = Rehearsal.landedPart(fs, t, s"$i")
       val dst = new org.apache.hadoop.fs.Path(landing, f"$i%02d.parquet")
       fs.rename(part, dst)
       fs.setTimes(dst, 1000000000000L + i * 60000L, -1)

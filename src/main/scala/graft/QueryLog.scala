@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
-import org.apache.spark.sql.graftbridge.GraftSparkBridge
+import org.apache.spark.sql.graftbridge.{GraftSparkBridge, PartitionGroupedScanExec}
 
 /** The statement recorder behind `system.query_log`: what each SQL
   * execution did and where its time went. One listener per SparkContext
@@ -83,6 +83,7 @@ class QueryLog extends SparkListener with AdaptiveSparkPlanHelper {
       m.get(k).fold(0L)(_.value)
     val scans = collectWithSubqueries(qe.executedPlan) {
       case f: FileSourceScanExec => (v(f.metrics, "numOutputRows"), v(f.metrics, "filesSize"))
+      case g: PartitionGroupedScanExec => (v(g.metrics, "numOutputRows"), v(g.metrics, "filesSize"))
       case b: BatchScanExec => (v(b.metrics, "numOutputRows"), 0L)
     }
     (scans.map(_._1).sum, scans.map(_._2).sum)

@@ -56,7 +56,7 @@ object StateScaleRehearsal {
         slice(5, 3L, deleted = true, 3L)).zipWithIndex.foreach { case (df, i) =>
       val t = s"$base/tmp/$i"
       df.coalesce(1).write.mode("overwrite").parquet(t)
-      val part = fs.globStatus(new org.apache.hadoop.fs.Path(t, "part-*.parquet"))(0).getPath
+      val part = Rehearsal.landedPart(fs, t, s"$i")
       val dst = new org.apache.hadoop.fs.Path(landing, f"$i%02d.parquet")
       fs.rename(part, dst)
       fs.setTimes(dst, 1000000000000L + i * 60000L, -1)

@@ -59,12 +59,15 @@ object Mutate {
     * `transform` applied to their rows; everything else stays on disk
     * untouched. Core of delete/update.
     *
-    * A mutation is exactly two jobs, stats + write (guide §1.2: remove
-    * passes before tuning anything else). One narrow aggregate over
+    * A mutation is two passes, stats + write (guide §1.2: remove
+    * passes before tuning anything else), three Spark jobs: one for
+    * the stats and two for the write. One narrow aggregate over
     * (partition column, predicate) yields per-partition match/keep
     * counts, from which affected, changed and emptied all follow; it
     * reads only the partition column and the predicate's input
-    * columns. Only partitions with a TRUE match reach the driver, so
+    * columns, and, grouped on the partition column, runs in one stage
+    * with no shuffle ([[graft.plans.PartitionWiseAggregate]]). Only
+    * partitions with a TRUE match reach the driver, so
     * the collect is bounded by the AFFECTED partitions on every table,
     * however many partitions it has. `partitionsTotal` is the
     * partition count the scan's file index already lists — driver

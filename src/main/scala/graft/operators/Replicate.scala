@@ -20,7 +20,11 @@ import org.apache.spark.sql.functions._
   * fixed-width (map-side partial aggregation, at most one row per key
   * per task shuffled, nothing sorted), else the bounded-heap
   * ObjectHashAggregate. Either way it is one shuffle on the key, where
-  * a self-join on max(version) needs two; AQE handles key skew. With
+  * a self-join on max(version) needs two; AQE handles key skew. When
+  * the key holds every partition column of a partitioned file table
+  * (ReplacingMergeTree never merges across partitions, so a FINAL key
+  * does), [[graft.plans.PartitionWiseAggregate]] reads whole partition
+  * directories per task and there is no shuffle at all. With
   * the rewrite off it is a key-partitioned window that sorts its
   * input. scd2 reuses the same partitioning for both windows, so
   * Catalyst plans a single Exchange.

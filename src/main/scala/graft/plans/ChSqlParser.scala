@@ -515,8 +515,11 @@ object ChSqlParser {
       }
       val spark = org.apache.spark.sql.SparkSession.active
       val pat = java.util.regex.Pattern.compile(rx)
-      val names = spark.catalog.listTables().collect().map(_.name)
-        .filter(n => pat.matcher(n).find()).sorted.toSeq
+      // names only (the current database's tables and the temp views):
+      // Catalog.listTables would look up every table's metadata
+      val catalog = spark.sessionState.catalog
+      val names = catalog.listTables(catalog.getCurrentDatabase).map(_.table)
+        .filter(n => pat.matcher(n).find()).sorted
       if (names.isEmpty) throw new IllegalArgumentException(
         s"merge(): no catalog table name matches '$rx'")
       // CH's Merge engine takes the structure of the first table; a

@@ -10,10 +10,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * It also installs the dialect parser and graft's plan rules:
   * resolution (dictGet), optimizer (projection use, top-k, the
-  * null-filter rewrite [[NotNullOfInput]]) and AQE query-stage prep
-  * ([[SmallSortCoalesce]], and [[ParamLiterals]], which keeps
-  * comparison constants out of generated source so a plan shape
-  * compiles once for any constants).
+  * null-filter rewrite [[NotNullOfInput]]), planning
+  * ([[PartitionWiseAggregate]], which runs an aggregate grouped on
+  * every partition column of a file table without a shuffle) and AQE
+  * query-stage prep ([[SmallSortCoalesce]], and [[ParamLiterals]],
+  * which keeps comparison constants out of generated source so a plan
+  * shape compiles once for any constants).
   *
   * Activate with `.config("spark.sql.extensions",
   * "graft.plans.GraftExtensions")` — done by [[graft.GraftSession]],
@@ -63,6 +65,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // isnotnull(lower(trim(regexp_replace(x, …)))) → isnotnull(x), so a
     // null filter on normalized text does not normalize it a second time
     ext.injectOptimizerRule(_ => NotNullOfInput)
+    // GROUP BY over every partition column of a partitioned file table:
+    // whole directories per task, partial and final aggregate in one stage
+    ext.injectPlannerStrategy(session => PartitionWiseAggregate(session))
     // small GROUP BY … ORDER BY: sort in the final task, no range shuffle
     ext.injectQueryStagePrepRule(session => SmallSortCoalesce(session))
     // comparison constants read from `references`, not written into the

@@ -1465,8 +1465,7 @@ object DataPipeline {
         val t = s"$base/tmp"
         ranked.coalesce(1).write.mode("overwrite").partitionBy("__b").parquet(t)
         (1 to 3).foreach { i =>
-          val part = fs.globStatus(
-            new org.apache.hadoop.fs.Path(s"$t/__b=$i", "part-*.parquet"))(0).getPath
+          val part = graft.Rehearsal.landedPart(fs, s"$t/__b=$i", s"$i")
           val dst = new org.apache.hadoop.fs.Path(landing, f"$i%02d.parquet")
           fs.rename(part, dst)
           fs.setTimes(dst, 1000000000000L + i * 60000L, -1) // pin replay order

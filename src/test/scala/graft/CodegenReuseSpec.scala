@@ -6,15 +6,17 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PartitionGroupedScanExec
 import org.apache.spark.sql.types.IntegerType
 
-import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.operators.{Dedup, Replicate, Similarity, TextAnalysis}
 import graft.plans.{ParamLiteral, ParamLiterals}
 
 /** Generated classes compile once per plan shape: `system.events`
   * counts the compiles, a repeated pipeline pass and a dashboard
-  * statement with new constants compile none, and [[ParamLiterals]]
-  * plans return the rows their literal plans return. */
+  * statement with new constants compile none, nor does a FINAL read
+  * after an insert, and [[ParamLiterals]] plans return the rows their
+  * literal plans return. */
 class CodegenReuseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -112,6 +114,30 @@ class CodegenReuseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     var second: Seq[Any] = Nil
     assert(compiles { second = pass() } == 0)
     assert(second == first)
+  }
+
+  test("a FINAL read after an insert into a ReplacingMergeTree table compiles nothing") {
+    dropWithLocation("cgr_rmt")
+    spark.sql("""CREATE TABLE cgr_rmt (id UInt64, version UInt64, is_deleted UInt8, v Float64, p UInt32)
+      ENGINE = ReplacingMergeTree(version, is_deleted) PARTITION BY p ORDER BY id""")
+    def insert(from: Long): Unit = {
+      spark.range(from, from + 3000).selectExpr("id % 700 AS id", "id AS version",
+        "CAST(id % 11 = 0 AS TINYINT) AS is_deleted", "(id % 50) * 0.5D AS v", "CAST(id % 5 AS INT) AS p")
+        .createOrReplaceTempView("cgr_batch")
+      spark.sql("INSERT INTO cgr_rmt SELECT id, version, is_deleted, v, p FROM cgr_batch")
+      // registerWithFinal over the table as it is now, as a CDC reader does
+      Replicate.registerWithFinal(spark.table("cgr_rmt"), "cgr_cdc", Seq("p", "id"), Seq(col("version")))
+    }
+    val read = "SELECT count() AS n, sum(v) AS sv, sum(version) AS sver FROM cgr_cdc FINAL WHERE is_deleted = 0"
+    try {
+      insert(0)
+      spark.sql(read).collect()
+      insert(3000)
+      val df = spark.sql(read)
+      assert(compiles(df.collect()) == 0)
+      assert(collect(df.queryExecution.executedPlan) { case g: PartitionGroupedScanExec => g }.nonEmpty,
+        df.queryExecution.executedPlan)
+    } finally dropWithLocation("cgr_rmt")
   }
 
   test("ParamLiterals plans return the rows of their literal plans, bounds included") {

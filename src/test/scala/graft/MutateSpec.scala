@@ -49,6 +49,12 @@ class MutateSpec extends SparkSpec {
     assert(before.keys.filter(_.contains("p=1")).forall(k => after.get(k) != Some(before(k))))
   }
 
+  test("a delete runs three jobs: the per-partition stats aggregate is one, with no shuffle") {
+    val path = freshTable("jobs")
+    // stats (one job; two with a shuffle on the partition column) + write (two)
+    assert(jobsOf(Mutate.delete(spark, path, "p", $"p" === 2 && $"id" < 200)) == 3)
+  }
+
   test("timestamp partition column: full-partition delete removes the directory (writer-format path)") {
     // java.sql.Timestamp.toString ends in ".0" where Spark's writer
     // formats the directory from Cast(v, String) — a toString-built
